@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,8 +40,8 @@ def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
     MEASURED CAVEAT: at dim=64 the unrolled tree is SLOWER than the
     zip_with/aggregate fold (the generated method blows past JIT/codegen
     size limits); the fold is the right default. For genuinely hot
-    pair-tables use ``cosine_pairs_udf`` (Arrow + per-dim sequential
-    accumulation — bit-identical results, vectorized over rows).
+    pair-tables use ``cosine_pairs_udf`` (Arrow + :func:`pair_scores` —
+    bit-identical results, vectorized over rows).
     """
     if dim is None:
         return F.aggregate(
@@ -86,21 +87,33 @@ def euclidean_distance(a: Column, b: Column, dim: int | None = None) -> Column:
     return F.sqrt(_sum_terms([d * d for d in diffs]))
 
 
+def pair_scores(a: np.ndarray, b: np.ndarray, metric: str = "cosine") -> np.ndarray:
+    """Dot, cosine or euclidean over the last axis of float64 arrays that
+    broadcast: (n, d) pairs row by row, (n, d) against a (1, d) query, or
+    (m, 1, d) against (1, n, d) for all pairs. Sequential over dimensions,
+    the fold's IEEE order, so bit-identical to the expressions above
+    (``np.dot`` sums pairwise, float32 rounds each product: both move scores)."""
+    acc = np.zeros(np.broadcast_shapes(a.shape, b.shape)[:-1])
+    na = np.zeros(a.shape[:-1])
+    nb = np.zeros(b.shape[:-1])
+    # dimension-major copies, so each step reads contiguous rows
+    for x, y in zip(np.moveaxis(a, -1, 0).copy(), np.moveaxis(b, -1, 0).copy()):
+        if metric == "euclidean":
+            acc += (x - y) * (x - y)
+        else:
+            acc += x * y
+            na += x * x
+            nb += y * y
+    if metric == "euclidean":
+        return np.sqrt(acc)
+    return acc if metric == "dot" else acc / (np.sqrt(na) * np.sqrt(nb))
+
+
 def cosine_pairs_udf():
     """Arrow-batched cosine over a pair table — bit-identical to the fold.
 
-    For O(pairs) tables (band joins, LSH candidates) the per-row
-    interpreted fold dominates runtime. This pandas UDF vectorizes over
-    the BATCH while accumulating over DIMENSIONS sequentially::
-
-        for i in range(dim): acc += a[:, i] * b[:, i]
-
-    — the same left-associated IEEE summation as the aggregate fold and
-    DuckDB's ``list_dot_product``, so oracle hash comparisons still agree
-    to the last bit (a plain ``np.dot`` uses pairwise summation and
-    would not).
-    """
-    import numpy as np
+    For O(pairs) tables (band joins, LSH candidates) the per-row interpreted
+    fold dominates runtime; this pandas UDF runs :func:`pair_scores` per batch."""
     import pandas as pd
 
     # no type hints: `from __future__ import annotations` stringifies them
@@ -111,19 +124,6 @@ def cosine_pairs_udf():
             return pd.Series([], dtype="float64")
         ma = np.stack([np.asarray(v, dtype=np.float64) for v in a])
         mb = np.stack([np.asarray(v, dtype=np.float64) for v in b])
-        dot = np.zeros(len(a))
-        na = np.zeros(len(a))
-        nb = np.zeros(len(a))
-        for i in range(ma.shape[1]):  # sequential over dims = fold order
-            dot += ma[:, i] * mb[:, i]
-            na += ma[:, i] * ma[:, i]
-            nb += mb[:, i] * mb[:, i]
-        return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
+        return pd.Series(pair_scores(ma, mb))
 
     return cos
-
-
-def infer_dim(df, vec_col: str) -> int | None:
-    """Probe the embedding width from one row (tiny job, once per query)."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    return None if row is None else row.d

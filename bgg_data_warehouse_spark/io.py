@@ -78,8 +78,8 @@ LAYOUTS: dict[str, Layout] = {
     ),
     "game_profile": Layout(["game_id_bucket"], ["game_id"]),
     # mirrors the reference's clusterBy ["profile", "game_id"]
-    # (`definitions/game_neighbors.sqlx:6-8`): the untuned get_similar
-    # lookup prunes to one profile directory, then in-file game_id sort
+    # (`definitions/game_neighbors.sqlx:6-8`): a Spark read of one
+    # profile prunes to one directory, then in-file game_id sort
     "game_neighbors": Layout(["profile"], ["game_id"]),
 }
 

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.vector import pair_scores
+
 
 def band_self_join(
     df: DataFrame,
@@ -154,14 +156,7 @@ def banded_cosine_pairs(
             return pd.DataFrame({"s_id": [], "t_id": [], "cos": []})
         S = np.stack([np.asarray(v, dtype=np.float64) for v in left["s_vec"]])
         T = np.stack([np.asarray(v, dtype=np.float64) for v in right["t_vec"]])
-        dot = np.zeros((len(left), len(right)))
-        ns = np.zeros(len(left))
-        nt = np.zeros(len(right))
-        for i in range(S.shape[1]):  # sequential over dims = fold order
-            dot += np.outer(S[:, i], T[:, i])
-            ns += S[:, i] * S[:, i]
-            nt += T[:, i] * T[:, i]
-        cos = dot / np.outer(np.sqrt(ns), np.sqrt(nt))
+        cos = pair_scores(S[:, None, :], T[None, :, :])  # every (s, t) pair
         s_band = left["s_band"].to_numpy()
         t_band = right["t_band"].to_numpy()
         s_id = left["s_id"].to_numpy()

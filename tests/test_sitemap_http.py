@@ -190,6 +190,77 @@ def test_http_reader_exception_maps_to_500_json():
         srv.shutdown()
 
 
+def test_http_timestamp_body_is_iso_8601():
+    """A body holding datetime/date values (every profile, prediction,
+    embedding and provenance document) is encoded as ISO-8601, not a
+    dropped connection."""
+    from datetime import date, datetime
+
+    from bgg_data_warehouse_spark.service_http import serve
+
+    pred = {"score_ts": datetime(2026, 1, 2, 3, 4, 5, 6), "score_date": date(2026, 1, 2)}
+    srv = serve(FakeReader(get_predictions=pred), port=0)
+    try:
+        assert _get(srv, "/games/13/predictions") == (
+            200, {"score_ts": "2026-01-02T03:04:05.000006", "score_date": "2026-01-02"}
+        )
+    finally:
+        srv.shutdown()
+
+
+def test_http_unencodable_body_maps_to_500_json():
+    """A body the encoder cannot handle answers a 500 JSON error body."""
+    from bgg_data_warehouse_spark.service_http import serve
+
+    srv = serve(FakeReader(get_predictions={"x": object()}), port=0)
+    try:
+        status, body = _get(srv, "/games/13/predictions")
+        assert status == 500 and "internal error" in body["detail"]
+    finally:
+        srv.shutdown()
+
+
+def test_http_reader_swap_under_load_serves_whole_snapshots():
+    """Publishing ``srv.reader`` while requests are in flight: every
+    request gets a whole answer from one of the two readers, and the
+    last one published is served once the swaps stop."""
+    import sys
+    import threading
+
+    from bgg_data_warehouse_spark.service_http import serve
+
+    old, new = FakeReader(get_game={"v": "old"}), FakeReader(get_game={"v": "new"})
+    srv = serve(old, port=0)
+    seen, errors = [], []
+
+    def client():
+        for _ in range(25):
+            try:
+                seen.append(_get(srv, "/games/1"))
+            except Exception as exc:  # a dropped connection fails the test
+                errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for i in range(500):
+            srv.reader = (new, old)[i % 2]
+        srv.reader = new
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        assert errors == [] and len(seen) == 16 * 25
+        assert {status for status, _ in seen} == {200}
+        assert {body["v"] for _, body in seen} <= {"old", "new"}
+        assert _get(srv, "/games/1") == (200, {"v": "new"})
+    finally:
+        sys.setswitchinterval(interval)
+        srv.shutdown()
+
+
 def _raw_http(srv, payload: bytes) -> bytes:
     import socket
 
@@ -279,10 +350,9 @@ def test_chunked_drain_consumes_trailers_and_negative_size(http_srv):
     malformed framing and stops the drain instead of spinning."""
     import io
 
-    from bgg_data_warehouse_spark.service_http import _make_handler
+    from bgg_data_warehouse_spark.service_http import _Handler
 
-    handler_cls = _make_handler(FakeReader())
-    h = object.__new__(handler_cls)
+    h = object.__new__(_Handler)
     h.headers = {"Transfer-Encoding": "chunked"}
     nxt = b"GET /next HTTP/1.1\r\nHost: x\r\n\r\n"
     h.rfile = io.BytesIO(
