@@ -39,9 +39,9 @@ def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
     With ``dim`` given, the sum unrolls into fixed getItem products.
     MEASURED CAVEAT: at dim=64 the unrolled tree is SLOWER than the
     zip_with/aggregate fold (the generated method blows past JIT/codegen
-    size limits); the fold is the right default. For genuinely hot
-    pair-tables use ``cosine_pairs_udf`` (Arrow + :func:`pair_scores` —
-    bit-identical results, vectorized over rows).
+    size limits); the fold is the right default. Hot pair tables are
+    scored on the driver or per Arrow batch with :func:`pair_scores`
+    (bit-identical results; ``operators/band_join.py``).
     """
     if dim is None:
         return F.aggregate(
@@ -107,23 +107,3 @@ def pair_scores(a: np.ndarray, b: np.ndarray, metric: str = "cosine") -> np.ndar
     if metric == "euclidean":
         return np.sqrt(acc)
     return acc if metric == "dot" else acc / (np.sqrt(na) * np.sqrt(nb))
-
-
-def cosine_pairs_udf():
-    """Arrow-batched cosine over a pair table — bit-identical to the fold.
-
-    For O(pairs) tables (band joins, LSH candidates) the per-row interpreted
-    fold dominates runtime; this pandas UDF runs :func:`pair_scores` per batch."""
-    import pandas as pd
-
-    # no type hints: `from __future__ import annotations` stringifies them
-    # and pandas_udf can't resolve pd.* imported function-locally
-    @F.pandas_udf("double")
-    def cos(a, b):
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        ma = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        mb = np.stack([np.asarray(v, dtype=np.float64) for v in b])
-        return pd.Series(pair_scores(ma, mb))
-
-    return cos

@@ -380,11 +380,8 @@ def _log_store_path(root: str, name: str) -> str:
 # |probe values| x rows-per-file, so the bound stays DELTA-sized only
 # while file count tracks data (r15 optimization round, guide §6 —
 # closes the "row-group granularity floor" residual the r15 scaling
-# curves measured at a FIXED local file count). Default 96 MiB target
-# per clustered file; deployments override via env.
-LAYOUT_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LAYOUT_TARGET_BYTES", 96 * 1024 * 1024)
-)
+# curves measured at a FIXED local file count): 96 MiB per clustered file.
+LAYOUT_TARGET_BYTES = 96 * 1024 * 1024
 
 
 def layout_file_count(spark: SparkSession, store_bytes: int | None) -> int:
@@ -393,12 +390,7 @@ def layout_file_count(spark: SparkSession, store_bytes: int | None) -> int:
     stores (AQE would otherwise fold the tiny range shuffle to ONE
     file), and above ``LAYOUT_TARGET_BYTES`` per file the count grows
     with the store so rows-per-file — and with it the literal probe's
-    read bound — stays constant as the corpus grows.
-    ``SPARK_GRAFT_LAYOUT_FILES`` still overrides outright (granularity
-    experiments, tools/scaling_curve.py)."""
-    n_override = os.environ.get("SPARK_GRAFT_LAYOUT_FILES")
-    if n_override:
-        return int(n_override)
+    read bound — stays constant as the corpus grows."""
     floor_n = max(spark.sparkContext.defaultParallelism * 4, 16)
     if store_bytes and store_bytes > 0:
         return max(floor_n, -(-store_bytes // LAYOUT_TARGET_BYTES))
@@ -622,16 +614,6 @@ def refresh_additive_mv_logged(
         )
 
 
-def read_mv_logged(
-    spark: SparkSession, root: str, name: str, keys: list[str]
-) -> DataFrame:
-    """Current MV state (generational merge; base-only after
-    compaction)."""
-    from .log_store import read_log_store
-
-    return read_log_store(spark, root, name, keys)
-
-
 def archive_old_rows(
     spark: SparkSession,
     root: str,
@@ -654,192 +636,6 @@ def archive_old_rows(
     old.write.mode("overwrite").parquet(os.path.join(root, archive_dir, f"{name}_{stamp}"))
     _rewrite(df.where(F.col(ts_col) >= cutoff), root, name)
     return n
-
-
-def compact_table(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files: int = 2,
-) -> int:
-    """Small-file compaction: rewrite the table into files of roughly
-    ``target_file_bytes``, preserving the table's layout (partition
-    columns, in-file sort).
-
-    Streaming/incremental appends (S4/S8) accrete one small file per
-    micro-batch; at 100 TB a scan of millions of KB-sized files is
-    throttled by file-open overhead and footer reads, not I/O. BigQuery
-    repacks storage internally — on Spark the engine owns it. Sizing
-    uses the CURRENT on-disk byte size (compression-realistic, no row
-    sampling); the rewrite is one ``repartition`` (round-robin shuffle)
-    into the staging dir and an atomic swap, so concurrent lazy readers
-    of the old files are never corrupted. Returns the new file count
-    (0 = table absent or already compact).
-    """
-    recover_table(root, name)  # crashed-swap table must not read as "nothing to compact"
-    if not table_exists(root, name):
-        return 0
-    path = _path(root, name)
-    total = 0
-    n_files = 0
-    for dirpath, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(dirpath, f))
-                n_files += 1
-    want = max(1, -(-total // target_file_bytes))  # ceil div
-    if n_files <= max(want, min_files - 1):
-        return 0
-    df = read_table(spark, root, name)
-    layout = LAYOUTS.get(name, Layout())
-    if layout.partition_cols:
-        # spread within each partition dir; partitionBy re-splits files
-        out = df.repartition(want, *layout.partition_cols)
-    else:
-        out = df.repartition(want)
-    _rewrite(out, root, name)
-    n_new = 0
-    for dirpath, _dirs, files in os.walk(path):
-        n_new += sum(1 for f in files if f.endswith(".parquet"))
-    return n_new
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    root: str,
-    name: str,
-    *,
-    buckets: int,
-    key_cols: list[str],
-    database: str = "bucketed",
-) -> str:
-    """Write a hash-bucketed, in-bucket-sorted table; joins and
-    aggregations between tables bucketed the same way on the same keys
-    plan with ZERO Exchange (the scan's bucketing satisfies the
-    distribution requirement).
-
-    This is the co-located-join discipline for 100 TB fact⋈fact joins
-    where neither side broadcasts: pay the bucketing shuffle ONCE at
-    write time, then every downstream join/groupBy on the bucket keys is
-    shuffle-free (`test_plan_audit.py::test_bucketed_join_is_exchange_free`).
-    Bucket metadata lives in the session catalog (``bucketBy`` requires
-    ``saveAsTable``); the parquet files land under ``root/name`` like
-    every other table. Returns the qualified table name to read back
-    with ``spark.table(...)``.
-    """
-    spark = df.sparkSession
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {database} "
-        f"LOCATION '{os.path.join(root, '_bucket_db')}'"
-    )
-    qualified = f"{database}.{name}"
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, *key_cols)
-        .sortBy(*key_cols)
-        .option("path", _path(root, name))
-        .saveAsTable(qualified)
-    )
-    return qualified
-
-
-def optimize_table_zorder(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    x_col: str,
-    y_col: str,
-    *,
-    bits: int = 16,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    min_files_per_split: int = 1,
-) -> int:
-    """OPTIMIZE ... ZORDER BY (x, y): compact a table AND rewrite it in
-    Morton order in one pass — the periodic maintenance command a
-    Delta/Iceberg warehouse runs so that two-dimensional point/range
-    predicates keep pruning as appends accrete (operators/zorder.py owns
-    the code math; compact_table owns plain size-only repacking).
-
-    Sizing mirrors ``compact_table`` (current on-disk bytes →
-    ceil(bytes / target)); the rewrite is ``repartitionByRange`` over
-    the z-value + an in-file sort, staged and atomically swapped so
-    concurrent readers never see a half-written table. The transient
-    ``zval`` column is dropped before writing — layout is an on-disk
-    property, not a schema change. Returns the new file count (0 =
-    table absent).
-    """
-    from .operators.zorder import zvalue
-
-    if not table_exists(root, name):
-        return 0
-    path = _path(root, name)
-    total = 0
-    for dirpath, _dirs, files in os.walk(path):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(dirpath, f))
-    want = max(min_files_per_split, -(-total // target_file_bytes))  # ceil
-    df = read_table(spark, root, name)
-    coded = df.withColumn("_zval", zvalue(F.col(x_col), F.col(y_col), bits=bits))
-    out = (
-        coded.repartitionByRange(want, "_zval")
-        .sortWithinPartitions("_zval")
-        .drop("_zval")
-    )
-    _rewrite(out, root, name)
-    n_new = 0
-    for dirpath, _dirs, files in os.walk(path):
-        n_new += sum(1 for f in files if f.endswith(".parquet"))
-    return n_new
-
-
-def maintain_components_table(
-    spark: SparkSession,
-    root: str,
-    labels_name: str,
-    delta_edges: DataFrame,
-    src: str,
-    dst: str,
-    *,
-    deleted: bool = False,
-    edges_name: str | None = None,
-    canonical_col: str | None = None,
-) -> int:
-    """End-to-end incremental CC maintenance against STORED state: read
-    the label table, absorb the delta (additions by default; with
-    ``deleted=True`` the splitting case, which reads the stored edge
-    table ``edges_name`` — pass ``canonical_col`` when that table is
-    component-annotated so the rescan partition-prunes), and atomically
-    swap the updated labels in via the S9 staging machinery
-    (:func:`_rewrite` — concurrent readers never see a half-written
-    table, crash windows heal via :func:`recover_table`). Returns the
-    updated row count. The storage-integration wrapper for
-    ``operators.components.incremental_components_update`` /
-    ``incremental_components_delete`` — the reference's 8-second
-    incremental refresh (docs/dataform_operations.md:15) realized for
-    graph state."""
-    from .operators.components import (
-        incremental_components_delete,
-        incremental_components_update,
-    )
-
-    labels = read_table(spark, root, labels_name)
-    if deleted:
-        if edges_name is None:
-            raise ValueError("deletion maintenance needs the stored edge table")
-        edges = read_table(spark, root, edges_name)
-        updated = incremental_components_delete(
-            labels, edges, delta_edges, src, dst, canonical_col=canonical_col
-        )
-    else:
-        updated = incremental_components_update(labels, delta_edges, src, dst)
-    # the update plans read the CURRENT label files; materialize before
-    # the swap renames them out from under the scan
-    updated = updated.localCheckpoint(eager=True)
-    _rewrite(updated, root, labels_name)
-    return updated.count()
 
 
 def _canon_edge_frame(df: DataFrame, src: str, dst: str) -> DataFrame:
@@ -911,8 +707,6 @@ def components_log_layouts(
     # cores-proportional floor (:func:`layout_file_count`,
     # LAYOUT_TARGET_BYTES per clustered file; base + pending
     # generations at fold time proxy the folded size).
-    # SPARK_GRAFT_LAYOUT_FILES overrides for granularity experiments
-    # (tools/scaling_curve.py validates the bound by scaling it).
     from .log_store import _dir_bytes, _store_path
 
     store = _store_path(root, name)
@@ -978,9 +772,9 @@ def maintain_components_log(
     annotate_on_compact: bool = False,
 ) -> int:
     """Log-structured CC maintenance (r13 VERDICT #5) — the delta-sized
-    WRITE answer to :func:`maintain_components_table`'s snapshot-sized
-    staged rewrite (the r13 scaling curves show that rewrite's twin
-    shuffling 86-100x across a 100x base step): one epoch of edge
+    WRITE answer to a snapshot-sized staged rewrite of the label table
+    (the r13 scaling curves show that rewrite shuffling 86-100x across
+    a 100x base step): one epoch of edge
     additions (or, with ``deleted=True``, deletions) lands as ONE
     generation of the paired store holding only the CHANGE SET —
     relabeled/new label rows plus tombstones for isolated nodes
@@ -991,13 +785,11 @@ def maintain_components_log(
     epoch; ``log_store.compact_pair_if_needed`` folds on the amortized
     cadence (count / relative / ABSOLUTE byte triggers). Read the
     current labeling with ``log_store.read_pair_store(spark, root,
-    name, "labels", "node")``. Trade-off vs the snapshot maintainer:
-    the logged layout keeps no per-component edge annotation, so
-    deletion localization uses the broadcast semi-join path
-    (canonical_col=None) instead of annotated scan-prune — the epoch
-    still only SHUFFLES affected-component data, and the prune layout
-    can be reinstated as a compaction-time rewrite property if a
-    deployment's delete rate warrants it. Returns generations folded
+    name, "labels", "node")``. Generations keep no per-component edge
+    annotation, so a delete epoch uses the annotated scan-prune only
+    while the store is fully folded with :func:`components_log_layouts`
+    and the broadcast semi-join path otherwise — either way it only
+    SHUFFLES affected-component data. Returns generations folded
     by auto-compaction (0 = append only). Hash-gated end-to-end
     (generational and compacted reads vs a full-recompute oracle) by
     ``cc_log_maintenance``."""
@@ -1076,192 +868,3 @@ def maintain_components_log(
             ),
         )
     return 0
-
-
-def maintain_postings_table(
-    spark: SparkSession,
-    root: str,
-    postings_name: str,
-    delta_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    deleted_ids: DataFrame | None = None,
-) -> int:
-    """End-to-end incremental inverted-index maintenance against STORED
-    state (r11 VERDICT #3 — the postings twin of
-    :func:`maintain_components_table`): read the postings table, absorb
-    re-ingested documents and tombstones via
-    ``operators.inverted_index.update_postings`` (broadcast-anti,
-    map-side), and atomically swap the updated index in through the S9
-    staging machinery — concurrent term lookups never see a
-    half-written index, and a crash between the two swap renames heals
-    via :func:`recover_table`. Returns the updated posting-row count.
-    The index the serving path scans is now the same table the
-    maintenance path updates."""
-    from .operators.inverted_index import update_postings
-
-    postings = read_table(spark, root, postings_name)
-    updated = update_postings(
-        postings, delta_docs, id_col, text_col, deleted_ids=deleted_ids
-    )
-    # the update plan reads the CURRENT posting files; materialize
-    # before the swap renames them out from under the scan
-    updated = updated.localCheckpoint(eager=True)
-    _rewrite(updated, root, postings_name)
-    return updated.count()
-
-
-def maintain_minhash_index_table(
-    spark: SparkSession,
-    root: str,
-    index_name: str,
-    delta_docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    deleted_ids: DataFrame | None = None,
-    shingle_k: int = 3,
-    num_hashes: int = 16,
-    verify_tokens: bool = False,
-) -> int:
-    """Stored-table wrapper for the MinHash dedup index (r11 VERDICT
-    #2/#3): read the persisted (doc, shingles, sig) sketch table, absorb
-    re-ingests/tombstones via ``operators.dedup.update_minhash_index``,
-    and atomically swap — same staging/recovery contract as
-    :func:`maintain_postings_table`. Returns the updated sketch-row
-    count."""
-    from .operators.dedup import update_minhash_index
-
-    index = read_table(spark, root, index_name)
-    updated = update_minhash_index(
-        index,
-        delta_docs,
-        id_col,
-        text_col,
-        shingle_k=shingle_k,
-        num_hashes=num_hashes,
-        verify_tokens=verify_tokens,
-        deleted_ids=deleted_ids,
-    )
-    updated = updated.localCheckpoint(eager=True)
-    _rewrite(updated, root, index_name)
-    return updated.count()
-
-
-def _neighbors_topk(
-    corpus: DataFrame, id_col: str, band_col: str, vec_col: str, band: float, k: int
-) -> DataFrame:
-    """The canonical (query_id, nbr_id, cosine_sim, rank) build the
-    neighbors store keeps — the same rendering every k-NN gate uses."""
-    from .operators.band_join import banded_cosine_pairs
-    from .operators.latest import topk_per_key
-
-    pairs = banded_cosine_pairs(corpus, id_col, band_col, vec_col, band)
-    return topk_per_key(
-        pairs, ["s_id"], [F.col("cos").desc(), F.col("t_id").asc()], k=k
-    ).select(
-        F.col("s_id").alias("query_id"),
-        F.col("t_id").alias("nbr_id"),
-        F.round("cos", 6).alias("cosine_sim"),
-        "rank",
-    )
-
-
-def init_neighbors_store(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    corpus: DataFrame,
-    id_col: str,
-    band_col: str,
-    vec_col: str,
-    *,
-    band: float,
-    k: int,
-) -> None:
-    """Create the paired neighbors store ``root/name/{vectors,
-    neighbors}``: the vector corpus AND the k-NN table built from it
-    live under ONE directory and every maintenance call swaps the pair
-    atomically — the store can never publish a corpus inconsistent with
-    its index (r12 VERDICT #4: the old wrapper took the corpus as a
-    caller argument, and a caller passing one inconsistent with the
-    stored table got silently wrong pass-through rows)."""
-    store = _path(root, name)
-    shutil.rmtree(store, ignore_errors=True)
-    corpus.write.mode("overwrite").parquet(os.path.join(store, "vectors"))
-    _neighbors_topk(corpus, id_col, band_col, vec_col, band, k).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(store, "neighbors"))
-
-
-def read_neighbors_table(spark: SparkSession, root: str, name: str) -> DataFrame:
-    """The store's current neighbors table (serving path). Heals a
-    crashed pair swap first so 'store missing' can never read as empty
-    mid-swap."""
-    recover_table(root, name)
-    return spark.read.parquet(os.path.join(_path(root, name), "neighbors"))
-
-
-def read_neighbors_corpus(spark: SparkSession, root: str, name: str) -> DataFrame:
-    recover_table(root, name)
-    return spark.read.parquet(os.path.join(_path(root, name), "vectors"))
-
-
-def maintain_neighbors_table(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    delta: DataFrame,
-    id_col: str,
-    band_col: str,
-    vec_col: str,
-    *,
-    band: float,
-    k: int,
-    deleted_ids: DataFrame | None = None,
-) -> int:
-    """Stored-store wrapper for the incremental k-NN refresh (r11
-    VERDICT #5, contract closed per r12 VERDICT #4): read the corpus
-    AND the precomputed neighbors table from the store
-    (:func:`init_neighbors_store`'s paired layout — no caller-supplied
-    base, so the refresh provably runs against the corpus the stored
-    table was built from), absorb the arriving vector batch via
-    ``operators.band_join.incremental_neighbors`` (delta-scoped probe,
-    unaffected rows passed through), and swap corpus' + neighbors' in
-    as ONE atomic unit (:func:`_staged_swap` on the parent dir — a
-    crash between two separate table swaps could otherwise publish a
-    new corpus with a stale index). ``delta`` carries vector upserts
-    (new or re-embedded ids); ``deleted_ids`` tombstones, deletion
-    winning on conflict. Returns the refreshed neighbor row count."""
-    from .operators.band_join import incremental_neighbors
-
-    recover_table(root, name)  # crashed pair swap must heal before reads
-    store = _path(root, name)
-    base = spark.read.parquet(os.path.join(store, "vectors"))
-    stored = spark.read.parquet(os.path.join(store, "neighbors"))
-    removed = delta.select(id_col).distinct()
-    if deleted_ids is not None:
-        tomb = deleted_ids.select(
-            F.col(deleted_ids.columns[0]).alias(id_col)
-        ).distinct()
-        removed = removed.unionByName(tomb).distinct()
-        delta = delta.join(F.broadcast(tomb), id_col, "left_anti")
-    new_corpus = base.join(F.broadcast(removed), id_col, "left_anti").unionByName(
-        delta.select(*base.columns)
-    )
-    updated = incremental_neighbors(
-        stored, base, delta, id_col, band_col, vec_col, band, k,
-        deleted_ids=deleted_ids,
-    )
-    # both plans read the CURRENT store files; materialize before the
-    # swap renames them out from under the scans
-    new_corpus = new_corpus.localCheckpoint(eager=True)
-    updated = updated.localCheckpoint(eager=True)
-
-    def build(staging: str) -> None:
-        new_corpus.write.mode("overwrite").parquet(os.path.join(staging, "vectors"))
-        updated.write.mode("overwrite").parquet(os.path.join(staging, "neighbors"))
-
-    _staged_swap(root, name, build)
-    return updated.count()

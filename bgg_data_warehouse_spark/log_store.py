@@ -1,14 +1,13 @@
 """Log-structured generational store — delta-sized writes for stored
 indexes (r12 VERDICT #3).
 
-The batch index maintainers (io.maintain_postings_table and kin) and the
-streaming epoch appliers (streaming/index_maintenance.py) keep a stored
-index fresh with delta-bounded COMPUTE, but every application ends in a
-staged rewrite of the whole table — at 100 TB that write makes per-epoch
-maintenance index-sized again, the honest floor those modules' docstrings
-name. This module is the named alternative, for any relation keyed by a
-replacement key (one column or a composite — postings by doc, sketches
-by doc, CDC state by primary key): a BASE parquet table plus an ordered
+A maintainer with delta-bounded COMPUTE that ends every application in a
+staged rewrite of the whole table (io.rewrite_table) pays a table-sized
+write per epoch — at 100 TB that makes per-epoch maintenance table-sized
+again. This module is the alternative, for any relation keyed by a
+replacement key (one column or a composite — loader tables by their
+merge key, MV partials by group key, CDC state by primary key, component
+labels by node): a BASE parquet table plus an ordered
 chain of DELTA GENERATIONS, each holding the epoch's fresh rows and its
 tombstoned keys. Appending an epoch writes ONLY the generation (delta-sized);
 reading merges base + generations relationally; a COMPACTION op folds
@@ -130,9 +129,7 @@ BROADCAST_TOUCHED_MAX_ROWS = 8_000_000
 # genuinely large delta — a backfill epoch at deployment scale. The
 # same bytes-growth rule as io.layout_file_count, driven by the plan's
 # size estimate since the delta hasn't been written yet.
-GEN_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_GEN_TARGET_BYTES", 128 * 1024 * 1024)
-)
+GEN_TARGET_BYTES = 128 * 1024 * 1024
 # Plan-size estimates above this are join-product artifacts (Catalyst
 # multiplies child sizes for inner joins without CBO), not real byte
 # counts — treat them as unknown and keep the single-file default
@@ -164,11 +161,7 @@ def _gen_write_files(df: DataFrame | None = None) -> int:
     one-file layout. Estimates from scans, checkpoints, filters and
     semi/anti joins are grounded in real file bytes (measured); the
     sanity ceiling discards join-product artifacts rather than letting
-    them fan a KB-sized delta across max-width files.
-    ``SPARK_GRAFT_GEN_FILES`` still overrides outright."""
-    n_override = os.environ.get("SPARK_GRAFT_GEN_FILES")
-    if n_override:
-        return max(1, int(n_override))
+    them fan a KB-sized delta across max-width files."""
     if df is None:
         return 1
     try:
@@ -396,9 +389,7 @@ _TOUCHED_ISIN_MAX = 8192
 # envelope as the maintainers' driver_solve_max — and far under the
 # 128 MiB broadcast bound, so the fast path only ever replaces merges
 # whose frames were already broadcast-sized.
-DRIVER_MERGE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_MERGE_BYTES", str(8 * 1024 * 1024))
-)
+DRIVER_MERGE_MAX_BYTES = 8 * 1024 * 1024
 
 
 def _read_dir_arrow(d: str, columns: list[str] | None = None):
@@ -443,7 +434,12 @@ def _driver_merge_parts(spark: SparkSession, gen_dirs: list[str], key_cols):
     re-enter the session-timezone conversion the relational path never
     does); NULL key values bail (SQL join equality drops null-keyed
     fresh rows, dict equality would not — preserve the engine
-    semantics exactly by not replicating them in Python)."""
+    semantics exactly by not replicating them in Python); floating-point
+    key columns bail (Spark's joins and grouping treat NaN = NaN, a dict
+    of tuples does not); a column whose arrow type differs between
+    generations bails (the relational union coerces it, while the
+    driver relation's schema would be the first generation's and fail
+    at action time)."""
     if os.environ.get("SPARK_GRAFT_DRIVER_MERGE", "1") != "1":
         return None
     try:
@@ -462,7 +458,7 @@ def _driver_merge_parts(spark: SparkSession, gen_dirs: list[str], key_cols):
         winner: dict = {}
         gens_rows: list[list[dict]] = []
         fields: list = []
-        seen: set[str] = set()
+        seen: dict = {}  # column -> first-seen arrow type
         for i, g in enumerate(gen_dirs):
             rows_tbl = _read_dir_arrow(os.path.join(g, "rows"))
             tomb_tbl = _read_dir_arrow(
@@ -471,6 +467,12 @@ def _driver_merge_parts(spark: SparkSession, gen_dirs: list[str], key_cols):
             if rows_tbl is None or tomb_tbl is None:
                 return None
             if "timestamp" in str(rows_tbl.schema).lower():
+                return None
+            if any(
+                pa.types.is_floating(t.schema.field(c).type)
+                for t in (rows_tbl, tomb_tbl)
+                for c in key_cols
+            ):
                 return None
             rows_list = rows_tbl.to_pylist()
             for r in rows_list:
@@ -485,8 +487,10 @@ def _driver_merge_parts(spark: SparkSession, gen_dirs: list[str], key_cols):
                 winner[k] = i
             for f in rows_tbl.schema:
                 if f.name not in seen:
-                    seen.add(f.name)
+                    seen[f.name] = f.type
                     fields.append(f)
+                elif seen[f.name] != f.type:
+                    return None
             gens_rows.append(rows_list)
         live = [
             tuple(r.get(f.name) for f in fields)
@@ -897,13 +901,12 @@ def compact_log_store(
 
 # ---------------------------------------------------------------------------
 # Paired store: N keyed relations sharing ONE generation commit and ONE
-# base swap — the log-structured form of io.py's corpus+neighbors pair
-# store. A generation dir holds one {rows, tombstones} pair PER PART
+# base swap. A generation dir holds one {rows, tombstones} pair PER PART
 # under the part's subdirectory, committed by a single marker, so the
 # r12 #4 pair-atomicity contract survives delta-sizing: no crash window
-# can publish a vector corpus inconsistent with the neighbors built
-# from it, because both parts become visible (or fold, or heal) as one
-# unit at every stage.
+# can publish component labels inconsistent with the edges they were
+# built from (io.maintain_components_log), because every part becomes
+# visible (or folds, or heals) as one unit at every stage.
 # ---------------------------------------------------------------------------
 
 

@@ -297,8 +297,8 @@ def update_minhash_index(
     Contract: ``delta_docs`` carries ONE row per re-ingested id (the
     sketch aggregate groups by doc, so two text versions of one id
     would blend into a single nonsense sketch). An ordered feed
-    collapses to the newest image first —
-    ``streaming/index_maintenance.py`` does exactly that per epoch.
+    collapses to the newest image per id first
+    (``operators.latest.latest_per_key`` on the feed's sequence).
     """
     removed = delta_docs.select(F.col(id_col).alias("doc"))
     fresh = minhash_sketch(

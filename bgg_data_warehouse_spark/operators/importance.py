@@ -62,25 +62,6 @@ def md5_fold_sql(expr: str, n: int) -> str:
     return f"({acc} % {n})"
 
 
-def hashed_bucket_counts(
-    df: DataFrame, id_col: str, text_col: str, *, num_buckets: int
-) -> DataFrame:
-    """(doc, bkt, m) — per-document hashed-token bucket counts.
-
-    The explode is map-side; the groupBy is the only shuffle over token
-    volume and its key cardinality per doc is ≤ num_buckets.
-    """
-    toks = df.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_tokens(F.col(text_col))).alias("tok"),
-    )
-    return (
-        toks.select("doc", md5_fold(F.col("tok"), num_buckets).alias("bkt"))
-        .groupBy("doc", "bkt")
-        .agg(F.count("*").alias("m"))
-    )
-
-
 def bucket_log_probs(
     counts: DataFrame, *, num_buckets: int, micro: int = MICRO
 ) -> DataFrame:
@@ -88,7 +69,7 @@ def bucket_log_probs(
     micro-nats, over the FULL bucket spine 0..num_buckets-1 (absent
     buckets get the smoothed floor, so scoring never misses a key).
 
-    ``counts`` is (doc, bkt, m) from ``hashed_bucket_counts``; the model
+    ``counts`` is (doc, bkt, m) per-document bucket counts; the model
     marginalizes docs out. Both aggregates are integer; the single
     float step is one ln() per bucket over an exactly-representable
     rational, rounded to a micro-nat."""

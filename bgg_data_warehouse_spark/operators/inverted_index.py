@@ -53,8 +53,8 @@ def index_summary(postings: DataFrame) -> DataFrame:
 
 def term_lookup(postings: DataFrame, terms: list[str]) -> DataFrame:
     """Serve path: posting rows for a term set — a BUCKET-PRUNED scan
-    when the postings table is stored bucketed by ``tok``
-    (io.write_bucketed_table): the IN-predicate selects only the
+    when the postings table is stored bucketed by ``tok`` (a
+    ``bucketBy`` + ``saveAsTable`` write): the IN-predicate selects only the
     matching bucket file groups (SelectedBucketsCount in the plan).
 
     Operational note, pinned by the plan audit: Spark's
@@ -100,8 +100,8 @@ def update_postings(
 
     Contract: ``delta_docs`` carries ONE row per re-ingested id (two
     versions of the same doc in one delta would both index). An ordered
-    feed collapses to the newest image first —
-    ``streaming/index_maintenance.py`` does exactly that per epoch.
+    feed collapses to the newest image per id first
+    (``operators.latest.latest_per_key`` on the feed's sequence).
     """
     removed = delta_docs.select(F.col(id_col).alias("doc"))
     fresh = inverted_postings(delta_docs, id_col, text_col)

@@ -28,19 +28,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .importance import md5_fold, md5_fold_sql
+from .importance import md5_fold
 
 
 def _bucket(d: int, key, width: int):
     return md5_fold(
         F.concat_ws(":", F.lit(d).cast("string"), key.cast("string")), width
-    )
-
-
-def cms_bucket_sql(d: str, key_expr: str, width: int) -> str:
-    """DuckDB rendering of the (depth, key) -> bucket hash."""
-    return md5_fold_sql(
-        f"concat(CAST({d} AS VARCHAR), ':', CAST({key_expr} AS VARCHAR))", width
     )
 
 

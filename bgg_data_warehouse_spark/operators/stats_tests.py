@@ -165,8 +165,8 @@ def ks_from_grids(
 ) -> DataFrame:
     """KS distance between two HISTOGRAM GRIDS (``operators/sketches.py
     histogram_sketch`` outputs) — the drift check a streaming ingest
-    runs between a frozen reference window and the live merged sketch
-    (streaming/sketches.py). Over bin-granular data the statistic is
+    runs between a frozen reference window and the live merged sketch.
+    Over bin-granular data the statistic is
     EXACT (a grid is just a pre-aggregated value column); over raw
     doubles it is the KS of the binned distributions — the resolution
     the sketch was built at, which is the honest streaming contract
@@ -238,7 +238,7 @@ def mwu_from_grids(
 ) -> DataFrame:
     """Mann-Whitney 2U + tie-corrected z between two HISTOGRAM GRIDS —
     the location-shift drift check that complements :func:`ks_from_grids`'
-    shape test in a streaming monitor (streaming/sketches.read_mwu_drift):
+    shape test in a streaming monitor:
     KS asks "did the distribution change anywhere", MWU asks "did it
     systematically move up or down", and a binned stream answers both
     from the same sketch state. Over bin-granular data the statistic is

@@ -72,7 +72,6 @@ __all__ = [
     "read_cdc_state",
     "apply_cdc_batch",
     "apply_cdc_log_batch",
-    "start_streaming_cdc_logged",
     "read_cdc_state_logged",
 ]
 
@@ -220,38 +219,6 @@ def apply_cdc_log_batch(
     else:
         # first epoch: state = the surviving images
         init_log_store(upserts, root, name)
-
-
-def start_streaming_cdc_logged(
-    stream: DataFrame,
-    root: str,
-    name: str,
-    checkpoint_dir: str,
-    *,
-    keys: Sequence[str],
-    seq_cols: Sequence[str],
-    op_col: str = "op",
-    auto_compact: bool = True,
-):
-    """Consume a change stream into a log-structured state store
-    (delta-sized epochs); returns the StreamingQuery."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        apply_cdc_log_batch(
-            batch_df,
-            root,
-            name,
-            keys=keys,
-            seq_cols=seq_cols,
-            op_col=op_col,
-            auto_compact=auto_compact,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
 
 
 def read_cdc_state_logged(

@@ -2065,8 +2065,8 @@ def cc_incremental_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cc_log_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-structured CC maintenance end-to-end (io.py::
     maintain_components_log over the PAIRED log store, r13 VERDICT #5 —
-    the delta-sized-write answer to maintain_components_table's
-    snapshot-sized label+edge rewrite, whose rebuild twin the r13
+    the delta-sized-write answer to a snapshot-sized label+edge
+    rewrite, whose rebuild twin the r13
     scaling curves showed shuffling 86-100x across a 100x base step):
     a stored labeling+edge pair for the per-customer order chains
     (components_star_chains' graph) absorbs TWO epochs as generations —

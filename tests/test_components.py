@@ -254,64 +254,6 @@ def test_incremental_delete_matches_full_recompute_and_splits(spark):
         assert got_ann == want, solve_max
 
 
-def test_maintain_components_table_roundtrip_through_storage(spark, tmp_path):
-    """Storage-integrated CC maintenance: stored labels absorb an
-    addition batch, then a deletion batch against a stored edge table,
-    each via atomic swap — after both, the table equals the full
-    recompute, and the swap left exactly one live table directory."""
-    import os
-
-    from bgg_data_warehouse_spark.io import (
-        maintain_components_table,
-        read_table,
-        write_table,
-    )
-    from bgg_data_warehouse_spark.operators.components import (
-        connected_components_star,
-    )
-
-    root = str(tmp_path)
-    base = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], "src long, dst long"
-    )
-    write_table(
-        connected_components_star(base, "src", "dst"), root, "cc_labels"
-    )
-    adds = spark.createDataFrame([(3, 10), (30, 31)], "src long, dst long")
-    n = maintain_components_table(
-        spark, root, "cc_labels", adds, "src", "dst"
-    )
-    all_edges = base.unionByName(adds)
-    write_table(all_edges, root, "cc_edges")
-    want_add = {
-        (r.node, r.canonical)
-        for r in connected_components_star(all_edges, "src", "dst").collect()
-    }
-    got_add = {
-        (r.node, r.canonical)
-        for r in read_table(spark, root, "cc_labels").collect()
-    }
-    assert got_add == want_add and n == len(want_add)
-
-    dels = spark.createDataFrame([(2, 3), (3, 10)], "src long, dst long")
-    maintain_components_table(
-        spark, root, "cc_labels", dels, "src", "dst",
-        deleted=True, edges_name="cc_edges",
-    )
-    remaining = all_edges.join(dels, ["src", "dst"], "left_anti")
-    want_del = {
-        (r.node, r.canonical)
-        for r in connected_components_star(remaining, "src", "dst").collect()
-    }
-    got_del = {
-        (r.node, r.canonical)
-        for r in read_table(spark, root, "cc_labels").collect()
-    }
-    assert got_del == want_del
-    live = [d for d in os.listdir(root) if d == "cc_labels"]
-    assert live == ["cc_labels"]
-
-
 def test_update_delta_emits_exactly_the_change_set(spark):
     """incremental_components_update_delta returns ONLY relabeled /
     new rows — applying them replace-by-key over the stored labels

@@ -164,10 +164,8 @@ def test_refresh_additive_mv_logged_matches_full_recompute(spark, tmp_path):
     equal the full aggregate (decimal-exact), appends never touch base,
     and the stored-prior point-read is a broadcast semi (no corpus
     shuffle)."""
-    from bgg_data_warehouse_spark.io import (
-        read_mv_logged,
-        refresh_additive_mv_logged,
-    )
+    from bgg_data_warehouse_spark.io import refresh_additive_mv_logged
+    from bgg_data_warehouse_spark.log_store import read_log_store
 
     root = str(tmp_path)
     batches = [
@@ -201,7 +199,7 @@ def test_refresh_additive_mv_logged_matches_full_recompute(spark, tmp_path):
     }
     got = {
         (r.k, str(r.total), r.n)
-        for r in read_mv_logged(spark, root, "mv", ["k"]).collect()
+        for r in read_log_store(spark, root, "mv", ["k"]).collect()
     }
     assert got == want
     # epoch 2/3 appends never rewrote base (epoch 1 initialized it)
@@ -242,13 +240,12 @@ def test_mv_logged_prior_point_read_is_broadcast(spark, tmp_path):
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
 
 
-def test_layout_file_count_tracks_store_bytes(spark, monkeypatch):
+def test_layout_file_count_tracks_store_bytes(spark):
     """The compaction-layout partition count keeps its cores-proportional
     floor on small stores (pruning granularity despite AQE's one-file
     coalesce) and grows with store bytes past LAYOUT_TARGET_BYTES per
     file, so rows-per-file — the literal probe's read bound — stays
-    constant as the corpus grows. SPARK_GRAFT_LAYOUT_FILES overrides
-    outright."""
+    constant as the corpus grows."""
     import bgg_data_warehouse_spark.io as io_mod
 
     floor_n = max(spark.sparkContext.defaultParallelism * 4, 16)
@@ -263,8 +260,6 @@ def test_layout_file_count_tracks_store_bytes(spark, monkeypatch):
     assert io_mod.layout_file_count(spark, 1000 * target + 1) == max(
         floor_n, 1001
     )
-    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_FILES", "7")
-    assert io_mod.layout_file_count(spark, 1000 * target) == 7
 
 
 def test_key_clustered_layout_uses_store_size(spark, tmp_path, monkeypatch):
@@ -294,8 +289,7 @@ def test_key_clustered_layout_uses_store_size(spark, tmp_path, monkeypatch):
     )
     store = _store_path(root, "d")
     # tiny target -> the store's on-disk bytes demand MORE than the
-    # cores floor; monkeypatch the module constant (env is read at
-    # import time)
+    # cores floor; monkeypatch the module constant
     monkeypatch.setattr(io_mod, "LAYOUT_TARGET_BYTES", 64)
     floor_n = max(spark.sparkContext.defaultParallelism * 4, 16)
     expected = io_mod.layout_file_count(spark, _dir_bytes(store))

@@ -302,167 +302,6 @@ def test_delta_only_first_epoch_then_exists(spark, tmp_path):
     assert log_store_exists(root, "idx")
 
 
-# ---------------------------------------------------------------------------
-# streaming face (apply_postings_log_batch / start_streaming_index_logged)
-# — same epochs as test_streaming_index.py, landed as generations
-# ---------------------------------------------------------------------------
-
-SCHEMA = "doc_id long, seq long, op string, text string"
-
-
-def _epochs():
-    from tests.test_streaming_index import _epochs as e
-
-    return e()
-
-
-def _final_corpus(spark):
-    from tests.test_streaming_index import _final_corpus as f
-
-    return f(spark)
-
-
-def test_streaming_logged_postings_matches_full_rebuild(spark, tmp_path):
-    from bgg_data_warehouse_spark.operators.inverted_index import (
-        inverted_postings,
-    )
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        read_index_logged,
-        start_streaming_index_logged,
-    )
-
-    landing = str(tmp_path / "landing")
-    root = str(tmp_path / "tables")
-    epochs = _epochs()
-
-    def write_epoch(i):
-        spark.createDataFrame(epochs[i], SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-
-    write_epoch(0)
-    q = start_streaming_index_logged(
-        spark.readStream.schema(SCHEMA).parquet(landing),
-        root,
-        "postings",
-        str(tmp_path / "ckpt"),
-        id_col="doc_id",
-        text_col="text",
-        seq_cols=["seq"],
-        auto_compact=False,  # generation-landing assertion below
-    )
-    try:
-        q.processAllAvailable()
-        write_epoch(1)
-        q.processAllAvailable()
-        write_epoch(2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = {
-        (r.tok, r.doc, r.tf)
-        for r in read_index_logged(spark, root, "postings").collect()
-    }
-    want = {
-        (r.tok, r.doc, r.tf)
-        for r in inverted_postings(
-            _final_corpus(spark), "doc_id", "text"
-        ).collect()
-    }
-    assert got == want
-    # epochs 2 and 3 landed as generations, not base rewrites
-    assert len(_delta_dirs(_store_path(root, "postings"), committed=True)) == 2
-
-
-def test_streaming_logged_auto_compaction_folds(spark, tmp_path):
-    """The default sink runs compact_if_needed per epoch: tiny-base
-    epochs cross the byte-fraction threshold, so generations fold and
-    the read result is unchanged."""
-    from bgg_data_warehouse_spark.operators.inverted_index import (
-        inverted_postings,
-    )
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        read_index_logged,
-        start_streaming_index_logged,
-    )
-
-    landing = str(tmp_path / "landing")
-    root = str(tmp_path / "tables")
-    epochs = _epochs()
-    for i in range(len(epochs)):
-        spark.createDataFrame(epochs[i], SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-    q = start_streaming_index_logged(
-        # one file per trigger => the three epochs arrive as three
-        # batches (otherwise one batch LWW-collapses them and nothing
-        # ever becomes a generation)
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(landing),
-        root,
-        "postings",
-        str(tmp_path / "ckpt"),
-        id_col="doc_id",
-        text_col="text",
-        seq_cols=["seq"],
-        max_generations=1,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    assert _delta_dirs(_store_path(root, "postings"), committed=True) == []
-    got = {
-        (r.tok, r.doc, r.tf)
-        for r in read_index_logged(spark, root, "postings").collect()
-    }
-    want = {
-        (r.tok, r.doc, r.tf)
-        for r in inverted_postings(
-            _final_corpus(spark), "doc_id", "text"
-        ).collect()
-    }
-    assert got == want
-
-
-def test_minhash_log_store_matches_fresh_sketch(spark, tmp_path):
-    """The generic store carries the MinHash sketch index too (keyed by
-    doc like the postings): drained logged epochs == a fresh sketch of
-    the final corpus, pair-for-pair, before AND after compaction."""
-    from bgg_data_warehouse_spark.log_store import read_log_store
-    from bgg_data_warehouse_spark.operators.dedup import (
-        minhash_sketch,
-        sketch_pairs,
-    )
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        apply_minhash_log_batch,
-    )
-
-    root = str(tmp_path / "tables")
-    conf = dict(shingle_k=1, num_hashes=16)
-    kw = dict(id_col="doc_id", text_col="text", seq_cols=["seq"], **conf)
-    for e in _epochs():
-        apply_minhash_log_batch(
-            spark.createDataFrame(e, SCHEMA), root, "mh", **kw
-        )
-    pconf = dict(num_hashes=16, bands=2, jaccard_threshold=0.9)
-
-    def pairs(df):
-        return {
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in sketch_pairs(df, **pconf).collect()
-        }
-
-    want = pairs(minhash_sketch(_final_corpus(spark), "doc_id", "text", **conf))
-    stored = read_log_store(spark, root, "mh", "doc")
-    assert {r.doc for r in stored.select("doc").collect()} == {1, 2, 4, 5}
-    assert pairs(stored) == want
-    compact_log_store(spark, root, "mh", "doc")
-    assert pairs(read_log_store(spark, root, "mh", "doc")) == want
-
-
 def test_compact_if_needed_policy(spark, tmp_path):
     """Below both thresholds: no fold (per-epoch cost stays delta-sized);
     past the generation-count threshold: folds."""
@@ -487,144 +326,132 @@ def test_compact_if_needed_policy(spark, tmp_path):
     assert _delta_dirs(_store_path(root, "idx"), committed=True) == []
 
 
-def test_logged_epoch_replay_and_compaction(spark, tmp_path):
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        apply_postings_log_batch,
-        read_index_logged,
-    )
-
-    root = str(tmp_path / "tables")
-    epochs = _epochs()
-    kw = dict(id_col="doc_id", text_col="text", seq_cols=["seq"])
-    for e in epochs:
-        apply_postings_log_batch(
-            spark.createDataFrame(e, SCHEMA), root, "postings", **kw
-        )
-    before = {
-        (r.tok, r.doc, r.tf)
-        for r in read_index_logged(spark, root, "postings").collect()
-    }
-    # foreachBatch replay of the last epoch: appends a duplicate
-    # generation whose rows replace their identical older copies
-    apply_postings_log_batch(
-        spark.createDataFrame(epochs[-1], SCHEMA), root, "postings", **kw
-    )
-    assert {
-        (r.tok, r.doc, r.tf)
-        for r in read_index_logged(spark, root, "postings").collect()
-    } == before
-    compact_log_store(spark, root, "postings", "doc")
-    assert {
-        (r.tok, r.doc, r.tf)
-        for r in read_index_logged(spark, root, "postings").collect()
-    } == before
-
-
 # ---------------------------------------------------------------------------
-# paired log store: the corpus+neighbors pair with delta-sized writes —
+# paired log store: a vectors + neighbours pair with delta-sized writes —
 # both parts share one generation commit and one base swap
 # ---------------------------------------------------------------------------
 
 
-def _vec_epochs():
-    from tests.test_streaming_index import _vec_epochs as e
-
-    return e()
-
-
-def _vec_final_corpus(spark):
-    from tests.test_streaming_index import _vec_final_corpus as f
-
-    return f(spark)
-
-
-VEC_SCHEMA = "vec_id long, label double, vec array<double>, seq long, op string"
-VEC_KW = dict(
-    id_col="vec_id", band_col="label", vec_col="vec",
-    seq_cols=["seq"], band=1.0, k=3,
+VEC_SCHEMA = "vec_id long, label double, vec array<double>"
+NBR_SCHEMA = "query_id long, nbr_id long, cosine_sim double, rank int"
+PAIR_KEYS = {"vectors": "vec_id", "neighbors": "query_id"}
+VEC_BASE = [
+    (1, 0.0, [1.0, 0.0]), (2, 0.0, [0.0, 1.0]),
+    (3, 1.0, [1.0, 1.0]), (4, 1.0, [1.0, 2.0]),
+]
+NBR_BASE = [(1, 2, 0.0, 1), (2, 1, 0.0, 1), (3, 4, 0.948683, 1), (4, 3, 0.948683, 1)]
+# per epoch: (vector rows, deleted vec_ids, neighbour rows, deleted query_ids)
+PAIR_EPOCHS = [
+    # vector 4 leaves, vector 5 arrives next to 3
+    ([(5, 1.0, [2.0, 2.0])], [4], [(3, 5, 1.0, 1), (5, 3, 1.0, 1)], [4]),
+    # vector 2 moves towards 1
+    ([(2, 0.0, [1.0, 0.1])], [], [(1, 2, 0.995037, 1), (2, 1, 0.995037, 1)], []),
+]
+PAIR_FINAL = (
+    {(1, (1.0, 0.0)), (2, (1.0, 0.1)), (3, (1.0, 1.0)), (5, (2.0, 2.0))},
+    {(1, 2, 0.995037, 1), (2, 1, 0.995037, 1), (3, 5, 1.0, 1), (5, 3, 1.0, 1)},
 )
 
 
-def _nbr_set(df):
-    return {
-        (r.query_id, r.nbr_id, r.cosine_sim, r.rank) for r in df.collect()
-    }
+def _pair_append(spark, root, epoch):
+    from bgg_data_warehouse_spark.log_store import append_pair_delta
+
+    vec_rows, vec_del, nbr_rows, nbr_del = epoch
+
+    def ids(values, col):
+        if not values:
+            return None
+        return spark.createDataFrame([(v,) for v in values], f"{col} long")
+
+    return append_pair_delta(
+        root,
+        "nbr",
+        {
+            "vectors": (
+                spark.createDataFrame(vec_rows, VEC_SCHEMA),
+                ids(vec_del, "vec_id"),
+                "vec_id",
+            ),
+            "neighbors": (
+                spark.createDataFrame(nbr_rows, NBR_SCHEMA),
+                ids(nbr_del, "query_id"),
+                "query_id",
+            ),
+        },
+    )
 
 
-def test_neighbors_pair_log_matches_full_rebuild(spark, tmp_path):
-    from bgg_data_warehouse_spark.io import _neighbors_topk
+def _pair_store(spark, root):
+    """A vectors + neighbours pair store: base plus the two epochs."""
+    from bgg_data_warehouse_spark.log_store import init_pair_store
+
+    init_pair_store(
+        root,
+        "nbr",
+        {
+            "vectors": spark.createDataFrame(VEC_BASE, VEC_SCHEMA),
+            "neighbors": spark.createDataFrame(NBR_BASE, NBR_SCHEMA),
+        },
+    )
+    for epoch in PAIR_EPOCHS:
+        _pair_append(spark, root, epoch)
+
+
+def _pair_read(spark, root):
     from bgg_data_warehouse_spark.log_store import read_pair_store
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        apply_neighbors_log_batch,
+
+    vectors = read_pair_store(spark, root, "nbr", "vectors", "vec_id")
+    neighbors = read_pair_store(spark, root, "nbr", "neighbors", "query_id")
+    return (
+        {(r.vec_id, tuple(r.vec)) for r in vectors.collect()},
+        {(r.query_id, r.nbr_id, r.cosine_sim, r.rank) for r in neighbors.collect()},
     )
 
-    root = str(tmp_path / "tables")
-    for e in _vec_epochs():
-        apply_neighbors_log_batch(
-            spark.createDataFrame(e, VEC_SCHEMA), root, "nbr",
-            auto_compact=False, **VEC_KW,
-        )
-    got = _nbr_set(read_pair_store(spark, root, "nbr", "neighbors", "query_id"))
-    want = _nbr_set(
-        _neighbors_topk(_vec_final_corpus(spark), "vec_id", "label", "vec", 1.0, 3)
+
+def test_logged_epoch_replay_and_compaction(spark, tmp_path):
+    """A replayed epoch (foreachBatch re-runs the last uncommitted
+    batch) appends a duplicate generation whose rows replace their
+    identical older copies: reads are unchanged, before and after the
+    fold."""
+    root = str(tmp_path)
+    want = _store(spark, root)
+    append_log_delta(
+        root, "idx", _df(spark, [(2, "y", 7), (5, "z", 1)]), "doc",
+        tombstones=_keys(spark, [3]),
     )
-    assert got == want
-    # the corpus part tracked the changes under the SAME commits
-    corpus = read_pair_store(spark, root, "nbr", "vectors", "vec_id")
-    assert {r.vec_id for r in corpus.select("vec_id").collect()} == {1, 2, 3, 5}
+    assert _contents(read_log_store(spark, root, "idx", "doc")) == want
+    compact_log_store(spark, root, "idx", "doc")
+    assert _contents(read_log_store(spark, root, "idx", "doc")) == want
 
 
 def test_neighbors_pair_log_replay_and_compaction(spark, tmp_path):
-    from bgg_data_warehouse_spark.io import _neighbors_topk
-    from bgg_data_warehouse_spark.log_store import (
-        compact_pair_store,
-        read_pair_store,
-    )
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        apply_neighbors_log_batch,
-    )
+    """Both parts read back base + generations by key; a replayed epoch
+    leaves them unchanged; one swap folds both parts, results unchanged."""
+    from bgg_data_warehouse_spark.log_store import compact_pair_store
 
     root = str(tmp_path / "tables")
-    epochs = _vec_epochs()
-    for e in epochs:
-        apply_neighbors_log_batch(
-            spark.createDataFrame(e, VEC_SCHEMA), root, "nbr",
-            auto_compact=False, **VEC_KW,
-        )
-    want = _nbr_set(
-        _neighbors_topk(_vec_final_corpus(spark), "vec_id", "label", "vec", 1.0, 3)
-    )
-    # foreachBatch replay of the last epoch: state unchanged
-    apply_neighbors_log_batch(
-        spark.createDataFrame(epochs[-1], VEC_SCHEMA), root, "nbr",
-        auto_compact=False, **VEC_KW,
-    )
-    assert _nbr_set(
-        read_pair_store(spark, root, "nbr", "neighbors", "query_id")
-    ) == want
-    # fold both parts in one swap; results unchanged, store is base-only
-    n = compact_pair_store(
-        spark, root, "nbr", {"vectors": "vec_id", "neighbors": "query_id"}
-    )
-    assert n >= 2
+    _pair_store(spark, root)
+    assert _pair_read(spark, root) == PAIR_FINAL
+    _pair_append(spark, root, PAIR_EPOCHS[-1])
+    assert _pair_read(spark, root) == PAIR_FINAL
+    assert compact_pair_store(spark, root, "nbr", PAIR_KEYS) == 3
     assert _delta_dirs(_store_path(root, "nbr"), committed=True) == []
-    assert _nbr_set(
-        read_pair_store(spark, root, "nbr", "neighbors", "query_id")
-    ) == want
+    assert _pair_read(spark, root) == PAIR_FINAL
 
 
 def test_neighbors_pair_log_epoch_writes_are_delta_sized(spark, tmp_path):
-    """The whole point vs the snapshot pair store: an epoch append
-    leaves base's file set bit-identical for BOTH parts."""
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        apply_neighbors_log_batch,
-    )
+    """An epoch append leaves base's file set bit-identical for BOTH
+    parts."""
+    from bgg_data_warehouse_spark.log_store import init_pair_store
 
     root = str(tmp_path / "tables")
-    epochs = _vec_epochs()
-    apply_neighbors_log_batch(
-        spark.createDataFrame(epochs[0], VEC_SCHEMA), root, "nbr",
-        auto_compact=False, **VEC_KW,
+    init_pair_store(
+        root,
+        "nbr",
+        {
+            "vectors": spark.createDataFrame(VEC_BASE, VEC_SCHEMA),
+            "neighbors": spark.createDataFrame(NBR_BASE, NBR_SCHEMA),
+        },
     )
     base_dir = _base_path(_store_path(root, "nbr"))
 
@@ -638,52 +465,26 @@ def test_neighbors_pair_log_epoch_writes_are_delta_sized(spark, tmp_path):
         return out
 
     before = snapshot(base_dir)
-    apply_neighbors_log_batch(
-        spark.createDataFrame(epochs[1], VEC_SCHEMA), root, "nbr",
-        auto_compact=False, **VEC_KW,
+    assert {os.path.relpath(p, base_dir).split(os.sep)[0] for p in before} == set(
+        PAIR_KEYS
     )
+    for epoch in PAIR_EPOCHS:
+        _pair_append(spark, root, epoch)
     assert snapshot(base_dir) == before
-    assert len(_delta_dirs(_store_path(root, "nbr"), committed=True)) == 1
+    assert len(_delta_dirs(_store_path(root, "nbr"), committed=True)) == 2
 
 
 def test_pair_torn_generation_invisible_to_both_parts(spark, tmp_path):
     """A crash mid-append (no commit marker) must hide the generation
     from BOTH parts — the pair-atomicity contract in log form."""
-    import shutil
-
-    from bgg_data_warehouse_spark.log_store import (
-        read_pair_store,
-        recover_log_store,
-    )
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        apply_neighbors_log_batch,
-    )
-
     root = str(tmp_path / "tables")
-    epochs = _vec_epochs()
-    for e in epochs:
-        apply_neighbors_log_batch(
-            spark.createDataFrame(e, VEC_SCHEMA), root, "nbr",
-            auto_compact=False, **VEC_KW,
-        )
-    store = _store_path(root, "nbr")
-    nbr_before = _nbr_set(read_pair_store(spark, root, "nbr", "neighbors", "query_id"))
-    vec_before = {
-        r.vec_id
-        for r in read_pair_store(spark, root, "nbr", "vectors", "vec_id").collect()
-    }
-    # tear: copy a committed generation to a new name WITHOUT its marker
-    gens = _delta_dirs(store, committed=True)
-    torn = os.path.join(store, "delta_99999999999999999999_torn")
-    shutil.copytree(gens[-1], torn)
+    _pair_store(spark, root)
+    # tear: a newer generation that would delete vector 1 and rewrite
+    # query 3's neighbours, with its commit marker gone
+    gen = _pair_append(spark, root, ([], [1], [(3, 1, 0.7, 1)], [1]))
+    torn = os.path.join(_store_path(root, "nbr"), gen)
     os.remove(os.path.join(torn, "_COMMITTED"))
-    assert _nbr_set(
-        read_pair_store(spark, root, "nbr", "neighbors", "query_id")
-    ) == nbr_before
-    assert {
-        r.vec_id
-        for r in read_pair_store(spark, root, "nbr", "vectors", "vec_id").collect()
-    } == vec_before
+    assert _pair_read(spark, root) == PAIR_FINAL
     recover_log_store(root, "nbr")
     assert not os.path.isdir(torn)
 
@@ -782,46 +583,6 @@ def test_term_filter_pushes_into_generational_scans(
         for ln in plan_fast.splitlines()
     ), plan_fast[:3000]
     assert {(r.doc, r.tok, r.tf) for r in df_fast.collect()} == {(1, "x", 9)}
-
-
-def test_streaming_neighbors_logged_wiring(spark, tmp_path):
-    """start_streaming_neighbors_logged drains a vector change stream
-    into the paired log store and equals the full rebuild."""
-    from bgg_data_warehouse_spark.io import _neighbors_topk
-    from bgg_data_warehouse_spark.log_store import read_pair_store
-    from bgg_data_warehouse_spark.streaming.index_maintenance import (
-        start_streaming_neighbors_logged,
-    )
-
-    landing = str(tmp_path / "landing")
-    root = str(tmp_path / "tables")
-    epochs = _vec_epochs()
-
-    def write_epoch(i):
-        spark.createDataFrame(epochs[i], VEC_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-
-    write_epoch(0)
-    q = start_streaming_neighbors_logged(
-        spark.readStream.schema(VEC_SCHEMA).parquet(landing),
-        root,
-        "nbr",
-        str(tmp_path / "ckpt"),
-        auto_compact=False,
-        **VEC_KW,
-    )
-    try:
-        q.processAllAvailable()
-        write_epoch(1)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = _nbr_set(read_pair_store(spark, root, "nbr", "neighbors", "query_id"))
-    want = _nbr_set(
-        _neighbors_topk(_vec_final_corpus(spark), "vec_id", "label", "vec", 1.0, 3)
-    )
-    assert got == want
 
 
 def test_compaction_layout_hook_clusters_base(spark, tmp_path):
@@ -1156,6 +917,49 @@ def test_driver_merge_guards_fall_back(spark, tmp_path, monkeypatch):
     assert (
         "LogicalRDD" not in df3._jdf.queryExecution().optimizedPlan().toString()
     )
+
+
+def test_driver_merge_float_keys_keep_nan_equality(spark, tmp_path):
+    """A floating-point key takes the distributed merge: Spark's joins
+    and grouping treat NaN = NaN, so a newer generation's NaN-keyed row
+    replaces an older one, where a driver dict of tuples would keep
+    both."""
+    import math
+
+    schema = "k double, v string"
+    root = str(tmp_path)
+    init_log_store(
+        spark.createDataFrame([(1.0, "base")], schema), root, "fstore"
+    )
+    for v in ("old", "new"):
+        append_log_delta(
+            root, "fstore",
+            spark.createDataFrame([(float("nan"), v)], schema),
+            "k",
+        )
+    df = read_log_store(spark, root, "fstore", "k")
+    assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+    got = {("nan" if math.isnan(r.k) else r.k, r.v) for r in df.collect()}
+    assert got == {(1.0, "base"), ("nan", "new")}
+
+
+def test_driver_merge_type_drift_falls_back(spark, tmp_path):
+    """Generations that disagree on a column's arrow type take the
+    distributed merge, whose union widens the type; the driver relation
+    would carry the first generation's type and fail at action time."""
+    root = str(tmp_path)
+    init_log_store(_df(spark, BASE_ROWS), root, "idx")
+    append_log_delta(root, "idx", _df(spark, [(1, "x", 9)]), "doc")
+    append_log_delta(
+        root, "idx",
+        spark.createDataFrame([(2, "y", 2.5)], "doc long, tok string, tf double"),
+        "doc",
+    )
+    df = read_log_store(spark, root, "idx", "doc")
+    assert "LogicalRDD" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert {(r.doc, r.tok, r.tf) for r in df.collect()} == {
+        (1, "x", 9.0), (2, "y", 2.5), (3, "d", 4.0), (4, "e", 1.0)
+    }
 
 
 def test_gen_write_file_count_tracks_delta_size(spark, tmp_path, monkeypatch):

@@ -52,31 +52,6 @@ def test_write_strategies_roundtrip(spark, tmp_path):
     assert rows == {(1, 99), (2, 10)}
 
 
-def test_compact_table_merges_small_files(spark, tmp_path):
-    root = str(tmp_path)
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(1000)], "category_id long, name string"
-    )
-    # simulate micro-batch accretion: 20 tiny appends -> >=20 files
-    for i in range(20):
-        io.append_table(df.where(F.col("category_id") % 20 == i), root, "categories")
-    path = f"{root}/categories"
-    import os
-
-    n_before = sum(
-        f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-    )
-    assert n_before >= 20
-    n_after = io.compact_table(
-        spark, root, "categories", target_file_bytes=1 << 30
-    )
-    assert 0 < n_after < n_before
-    got = {r.category_id for r in io.read_table(spark, root, "categories").collect()}
-    assert got == set(range(1000))  # data identical after the swap
-    # already compact -> no-op
-    assert io.compact_table(spark, root, "categories", target_file_bytes=1 << 30) == 0
-
-
 def test_partitioned_layout_and_pruning(spark, tmp_path):
     root = str(tmp_path)
     rows = [

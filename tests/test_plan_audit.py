@@ -236,33 +236,6 @@ def test_salted_join_keys_include_salt(spark):
     assert "NestedLoopJoin" not in plan
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    """Two tables bucketed on the join key: the join must contain NO
-    Exchange — the write-time bucketing shuffle is reused by every
-    downstream join (the 100 TB fact⋈fact co-location discipline)."""
-    from pyspark.sql import functions as F2
-
-    from bgg_data_warehouse_spark import io
-
-    root = str(tmp_path)
-    a = spark.range(2000).select(F2.col("id").alias("k"), (F2.col("id") * 2).alias("v"))
-    b = spark.range(900).select(F2.col("id").alias("k"), (F2.col("id") * 3).alias("w"))
-    ta = io.write_bucketed_table(a, root, "fact_a", buckets=8, key_cols=["k"])
-    tb = io.write_bucketed_table(b, root, "fact_b", buckets=8, key_cols=["k"])
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        j = spark.table(ta).join(spark.table(tb), "k")
-        plan = executed_plan(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan[:1500]
-        assert j.count() == 900
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bucketed.fact_a")
-        spark.sql("DROP TABLE IF EXISTS bucketed.fact_b")
-
-
 def test_vocab_encode_plans_takeordered_cut_and_broadcast_join(spark):
     """The vocabulary cut must be a per-partition top-k (TakeOrdered),
     never a global sort of the token counts, and the encode join must
@@ -1024,7 +997,6 @@ def test_term_lookup_bucket_prunes_on_stored_postings(spark, tmp_path):
     term-AND that follows joins only the pruned posting lists."""
     from pyspark.sql import functions as F
 
-    from bgg_data_warehouse_spark import io
     from bgg_data_warehouse_spark.operators.inverted_index import (
         inverted_postings,
         term_lookup,
@@ -1033,8 +1005,13 @@ def test_term_lookup_bucket_prunes_on_stored_postings(spark, tmp_path):
 
     docs = load_table(spark, SF_SMALL, "documents")
     postings = inverted_postings(docs, "doc_id", "text")
-    qualified = io.write_bucketed_table(
-        postings, str(tmp_path), "postings_b", buckets=8, key_cols=["tok"]
+    qualified = "default.postings_b"
+    (
+        postings.write.mode("overwrite")
+        .bucketBy(8, "tok")
+        .sortBy("tok")
+        .option("path", str(tmp_path / "postings_b"))
+        .saveAsTable(qualified)
     )
     prev = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
     try:
@@ -1068,7 +1045,7 @@ def test_term_lookup_bucket_prunes_on_stored_postings(spark, tmp_path):
         spark.conf.set(
             "spark.sql.sources.bucketing.autoBucketedScan.enabled", prev
         )
-        spark.sql("DROP TABLE IF EXISTS bucketed.postings_b")
+        spark.sql(f"DROP TABLE IF EXISTS {qualified}")
 
 
 def test_minhash_index_maintenance_map_side_band_bucket_only(spark):

@@ -4,17 +4,11 @@
   update_minhash_index / sketch_pairs — r11 VERDICT #2)
 - deletion precedence in both incremental index maintainers (ADVICE r11:
   a doc both re-ingested and deleted must end absent)
-- postings / sketch maintenance wired through STORED tables with the
-  io.py atomic-swap machinery, surviving an injected mid-swap crash
-  (r11 VERDICT #3)
 - incremental neighbors refresh (r11 VERDICT #5)
 """
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from bgg_data_warehouse_spark.operators.dedup import (
@@ -120,117 +114,6 @@ def test_update_postings_deletion_wins(spark):
     assert _postings_set(merged) == want
 
 
-def test_maintain_postings_table_roundtrip(spark, tmp_path):
-    """ingest -> re-ingest -> delete through STORED postings tables ==
-    a full rebuild on the final corpus (r11 VERDICT #3)."""
-    from bgg_data_warehouse_spark.io import (
-        maintain_postings_table,
-        read_table,
-        write_table,
-    )
-
-    root = str(tmp_path)
-    docs = _docs(spark)
-    stale = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") == 4, F.lit("stale placeholder"))
-        .otherwise(F.col("text")),
-    )
-    write_table(inverted_postings(stale, "doc_id", "text"), root, "postings")
-    # round 1: replace doc 4's stale postings
-    n = maintain_postings_table(
-        spark, root, "postings", docs.where(F.col("doc_id") == 4),
-        "doc_id", "text",
-    )
-    assert n > 0
-    # round 2: delete docs 2 and 6 (empty delta)
-    maintain_postings_table(
-        spark, root, "postings",
-        docs.where(F.lit(False)), "doc_id", "text",
-        deleted_ids=docs.where(F.col("doc_id").isin(2, 6)).select("doc_id"),
-    )
-    final = docs.where(~F.col("doc_id").isin(2, 6))
-    want = _postings_set(inverted_postings(final, "doc_id", "text"))
-    assert _postings_set(read_table(spark, root, "postings")) == want
-
-
-def test_maintain_postings_table_crash_recovery(spark, tmp_path, monkeypatch):
-    """An injected crash between the two swap renames leaves a backup
-    that recover_table heals; the maintenance then completes."""
-    import bgg_data_warehouse_spark.io as io
-
-    root = str(tmp_path)
-    docs = _docs(spark)
-    io.write_table(inverted_postings(docs, "doc_id", "text"), root, "postings")
-
-    real_rename = os.rename
-    state = {"n": 0}
-
-    def crashing_rename(src, dst):
-        state["n"] += 1
-        if state["n"] == 2:  # after final->backup, before staging->final
-            raise RuntimeError("injected crash mid-swap")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(io.os, "rename", crashing_rename)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        io.maintain_postings_table(
-            spark, root, "postings",
-            docs.where(F.lit(False)), "doc_id", "text",
-            deleted_ids=docs.where(F.col("doc_id") == 1).select("doc_id"),
-        )
-    monkeypatch.setattr(io.os, "rename", real_rename)
-    assert io.recover_table(root, "postings")
-    # pre-crash state intact
-    want_pre = _postings_set(inverted_postings(docs, "doc_id", "text"))
-    assert _postings_set(io.read_table(spark, root, "postings")) == want_pre
-    # redo the maintenance cleanly
-    io.maintain_postings_table(
-        spark, root, "postings",
-        docs.where(F.lit(False)), "doc_id", "text",
-        deleted_ids=docs.where(F.col("doc_id") == 1).select("doc_id"),
-    )
-    want = _postings_set(
-        inverted_postings(docs.where(F.col("doc_id") != 1), "doc_id", "text")
-    )
-    assert _postings_set(io.read_table(spark, root, "postings")) == want
-
-
-def test_maintain_minhash_index_table_roundtrip(spark, tmp_path):
-    """The sketch-index twin: stored (doc, shingles, sig) maintenance
-    through the atomic swap equals a fresh sketch of the final corpus."""
-    from bgg_data_warehouse_spark.io import (
-        maintain_minhash_index_table,
-        read_table,
-        write_table,
-    )
-
-    root = str(tmp_path)
-    docs = _docs(spark)
-    stale = docs.withColumn(
-        "text",
-        F.when(F.col("doc_id") == 2, F.lit("stale")).otherwise(F.col("text")),
-    )
-    write_table(
-        minhash_sketch(stale, "doc_id", "text", **CONF), root, "mh_index"
-    )
-    maintain_minhash_index_table(
-        spark, root, "mh_index", docs.where(F.col("doc_id") == 2),
-        "doc_id", "text",
-        deleted_ids=docs.where(F.col("doc_id") == 5).select("doc_id"),
-        **CONF,
-    )
-    stored = read_table(spark, root, "mh_index")
-    rebuilt = minhash_sketch(
-        docs.where(F.col("doc_id") != 5), "doc_id", "text", **CONF
-    )
-    got = _pairs_set(sketch_pairs(stored, num_hashes=16, bands=2,
-                                  jaccard_threshold=0.9))
-    want = _pairs_set(sketch_pairs(rebuilt, num_hashes=16, bands=2,
-                                   jaccard_threshold=0.9))
-    assert got == want
-
-
 def _knn_set(df):
     return {(r.query_id, r.nbr_id, r.cosine_sim, r.rank) for r in df.collect()}
 
@@ -311,64 +194,3 @@ def test_incremental_neighbors_probe_scoped_to_affected(spark):
     assert labels <= {8, 9}
     n_corpus = emb.count()
     assert len(allowed) < n_corpus // 2, (len(allowed), n_corpus)
-
-
-def test_maintain_neighbors_store_roundtrip_survives_midswap_crash(
-    spark, tmp_path
-):
-    """The paired corpus+neighbors store (r12 VERDICT #4): ingest →
-    upsert batch → injected mid-swap crash → delete batch equals the
-    full rebuild from the STORED corpus — the wrapper no longer accepts
-    a caller-supplied base, so the refresh provably runs against the
-    corpus the stored table was built from, and the pair swaps as one
-    atomic unit."""
-    import os
-
-    from bgg_data_warehouse_spark.io import (
-        _neighbors_topk,
-        init_neighbors_store,
-        maintain_neighbors_table,
-        read_neighbors_corpus,
-        read_neighbors_table,
-    )
-    from bgg_data_warehouse_spark.sources.tables import load_table
-
-    root = str(tmp_path)
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    is_add = (F.col("label") == 9) & (F.col("vec_id") % 5 == 0)
-    is_del = (F.col("label") == 7) & (F.col("vec_id") % 9 == 0)
-    kw = dict(band=1.0, k=5)
-    init_neighbors_store(
-        spark, root, "nbr", emb.where(~is_add),
-        "vec_id", "label", "embedding", **kw,
-    )
-    n = maintain_neighbors_table(
-        spark, root, "nbr", emb.where(is_add),
-        "vec_id", "label", "embedding", **kw,
-    )
-    assert n > 0
-    # inject a crash between the pair swap's two renames: the live
-    # store vanishes, only the backup remains — exactly the window
-    # io._staged_swap leaves if the process dies mid-swap
-    store = os.path.join(root, "nbr")
-    os.rename(store, store + "__old_00000000000000000009_x")
-    # the next read heals the PAIR (corpus and neighbors together —
-    # never one without the other)
-    assert read_neighbors_table(spark, root, "nbr").count() == n
-    assert os.path.isdir(os.path.join(store, "vectors"))
-    # delete batch: no base argument anywhere — the stored corpus is
-    # the only corpus
-    maintain_neighbors_table(
-        spark, root, "nbr",
-        emb.where(is_add).limit(0),
-        "vec_id", "label", "embedding",
-        deleted_ids=emb.where(is_del).select("vec_id"), **kw,
-    )
-    final_corpus = emb.where(~is_del)
-    got = _knn_set(read_neighbors_table(spark, root, "nbr"))
-    want = _knn_set(
-        _neighbors_topk(final_corpus, "vec_id", "label", "embedding", 1.0, 5)
-    )
-    assert got == want
-    # the stored corpus tracked the changes too
-    assert read_neighbors_corpus(spark, root, "nbr").count() == final_corpus.count()

@@ -321,56 +321,3 @@ def test_hll_alpha_covers_tabulated_and_closed_form():
     assert math.isclose(hll_alpha(1024), 0.7213 / (1 + 1.079 / 1024))
     with pytest.raises(ValueError, match="m must be"):
         hll_alpha(8)
-
-
-def test_optimize_table_zorder_compacts_and_orders(spark, tmp_path):
-    """OPTIMIZE-ZORDER must (a) shrink many small appended files into
-    the size-targeted count, (b) preserve the exact row multiset, and
-    (c) leave files whose per-file (x, y) zone maps are tight enough
-    that a 2-D point predicate prunes most files."""
-    from pyspark.sql import functions as F
-
-    from bgg_data_warehouse_spark.io import optimize_table_zorder
-    from bgg_data_warehouse_spark.operators.zorder import zvalue
-
-    root = str(tmp_path)
-    path = f"{root}/grid"
-    # 8 tiny appends -> 8+ small files
-    for i in range(8):
-        spark.range(i * 512, (i + 1) * 512).select(
-            (F.col("id") % 64).alias("x"),
-            ((F.col("id") * 7) % 64).alias("y"),
-            F.col("id").alias("payload"),
-        ).coalesce(1).write.mode("append").parquet(path)
-    before = spark.read.parquet(path)
-    rows_before = sorted((r.x, r.y, r.payload) for r in before.collect())
-    import glob
-
-    n_before = len(glob.glob(f"{path}/*.parquet"))
-    assert n_before >= 8
-    n_after = optimize_table_zorder(
-        spark, root, "grid", "x", "y", bits=6, target_file_bytes=1 << 30
-    )
-    assert 0 < n_after < n_before
-    after = spark.read.parquet(path)
-    assert sorted((r.x, r.y, r.payload) for r in after.collect()) == rows_before
-    assert "_zval" not in after.columns
-    # zone-map tightness: per input file, the z-range must cover only a
-    # fraction of the full z-space (files are range-sliced on zval)
-    import pyarrow.parquet as pq
-
-    spans = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        t = pq.read_table(f, columns=["x", "y"])
-        xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
-        zs = [
-            int("".join(a + b for a, b in zip(
-                format(x, "06b"), format(y, "06b"))), 2)
-            for x, y in zip(xs, ys)
-        ]
-        spans.append((min(zs), max(zs)))
-    spans.sort()
-    # ranges must be (near-)disjoint: each subsequent file starts at or
-    # after the previous file's max (repartitionByRange guarantee)
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert lo2 >= hi1 - 0, (spans,)

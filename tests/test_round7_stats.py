@@ -484,70 +484,6 @@ def test_ks_statistic_argmax_breaks_ties_to_smallest_value(spark):
     assert row["at_bin"] == 0
 
 
-def test_streaming_histogram_drift_equals_batch_ks(spark, tmp_path):
-    """Drain a 3-epoch value stream into histogram partials; the KS
-    drift of the merged live grid vs a frozen reference equals the
-    batch ks_from_grids over single-pass grids of the same rows — and
-    detects the injected location shift in the final epoch."""
-    from bgg_data_warehouse_spark.operators.sketches import histogram_sketch
-    from bgg_data_warehouse_spark.operators.stats_tests import ks_from_grids
-    from bgg_data_warehouse_spark.streaming.sketches import (
-        read_ks_drift,
-        start_streaming_histogram,
-    )
-    from pyspark.sql import types as T
-
-    import random
-
-    rng = random.Random(11)
-    ref_rows = [(float(rng.uniform(0, 50)),) for _ in range(600)]
-    live_chunks = [
-        [(float(rng.uniform(0, 50)),) for _ in range(200)],
-        [(float(rng.uniform(0, 50)),) for _ in range(200)],
-        [(float(rng.uniform(30, 80)),) for _ in range(200)],  # drifted
-    ]
-    landing = str(tmp_path / "landing")
-    sketch_dir = str(tmp_path / "hist")
-    schema = T.StructType([T.StructField("value", T.DoubleType())])
-
-    def write_chunk(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-
-    write_chunk(live_chunks[0])
-    q = start_streaming_histogram(
-        spark.readStream.schema(schema).parquet(landing),
-        sketch_dir,
-        str(tmp_path / "ckpt"),
-        value_col="value",
-        width=5.0,
-    )
-    try:
-        q.processAllAvailable()
-        write_chunk(live_chunks[1])
-        q.processAllAvailable()
-        write_chunk(live_chunks[2])
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    ref_grid = histogram_sketch(
-        spark.createDataFrame(ref_rows, schema), "value", width=5.0
-    )
-    got = read_ks_drift(spark, sketch_dir, ref_grid).collect()[0]
-
-    all_live = [r for c in live_chunks for r in c]
-    batch_grid = histogram_sketch(
-        spark.createDataFrame(all_live, schema), "value", width=5.0
-    )
-    want = ks_from_grids(ref_grid, batch_grid).collect()[0]
-    assert got.asDict() == want.asDict()
-    assert got["n_a"] == 600 and got["n_b"] == 600
-    # a third of live mass moved right: D must clear 10% comfortably
-    assert got["d_permyriad"] > 1000
-
-
 def test_two_sample_spine_windows_ride_buckets_not_a_global_sort(spark):
     """The oracle's bare ORDER BY window must never appear on the Spark
     side. The gates' summaries hide the spine behind its pin, so audit

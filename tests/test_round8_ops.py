@@ -275,7 +275,7 @@ def test_weighted_sssp_pins_edges_no_parquet_rescans(spark):
 
 
 # ---------------------------------------------------------------------------
-# mwu_from_grids + streaming MWU drift (round-8 streaming twin)
+# mwu_from_grids
 # ---------------------------------------------------------------------------
 
 
@@ -310,47 +310,6 @@ def test_mwu_from_grids_matches_hand_math(spark):
     z = 1_000_000 * ((52 / 2.0 - n_a * n_b / 2.0) / sqrt(var))
     assert abs(row["z_x1e6"] - round(z)) <= 1
     assert row["z_x1e6"] < 0  # A sits below B
-
-
-def test_streaming_mwu_drift_equals_batch_and_detects_shift(spark, tmp_path):
-    """read_mwu_drift over manually-landed epoch partials equals the
-    batch mwu_from_grids on a single-pass grid of the same rows, and
-    the z sign flags the injected upward location shift."""
-    import random
-
-    from pyspark.sql import types as T
-
-    from bgg_data_warehouse_spark.operators.sketches import histogram_sketch
-    from bgg_data_warehouse_spark.operators.stats_tests import mwu_from_grids
-    from bgg_data_warehouse_spark.streaming.sketches import read_mwu_drift
-
-    rng = random.Random(23)
-    schema = T.StructType([T.StructField("value", T.DoubleType())])
-    ref_rows = [(float(rng.uniform(0, 50)),) for _ in range(400)]
-    live_chunks = [
-        [(float(rng.uniform(0, 50)),) for _ in range(200)],
-        [(float(rng.uniform(25, 75)),) for _ in range(200)],  # shifted up
-    ]
-    sketch_dir = tmp_path / "hist"
-    for i, chunk in enumerate(live_chunks):
-        histogram_sketch(
-            spark.createDataFrame(chunk, schema), "value", width=5.0
-        ).write.mode("overwrite").parquet(str(sketch_dir / f"batch-{i}"))
-
-    ref_grid = histogram_sketch(
-        spark.createDataFrame(ref_rows, schema), "value", width=5.0
-    )
-    got = read_mwu_drift(spark, str(sketch_dir), ref_grid).collect()[0]
-
-    all_live = [r for c in live_chunks for r in c]
-    batch_grid = histogram_sketch(
-        spark.createDataFrame(all_live, schema), "value", width=5.0
-    )
-    want = mwu_from_grids(ref_grid, batch_grid).collect()[0]
-    assert got.asDict() == want.asDict()
-    assert got["n_a"] == 400 and got["n_b"] == 400
-    # live mass moved up vs the reference: A (reference) ranks lower
-    assert got["z_x1e6"] < -1_000_000
 
 
 # ---------------------------------------------------------------------------

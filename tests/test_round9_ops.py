@@ -7,9 +7,8 @@ Round-8 ADVICE items (all three were `low`):
 - recover_table: the final dir can exist while table_exists is False
   (only underscore-prefixed entries, e.g. a bare _SUCCESS); restoring a
   backup over it must not die on ENOTEMPTY.
-- archive_old_rows / compact_table: the two maintenance entry points
-  gated on table_exists must heal a crashed swap first, like every
-  other first-write site.
+- archive_old_rows: a maintenance entry point gated on table_exists
+  must heal a crashed swap first, like every other first-write site.
 """
 
 from __future__ import annotations
@@ -21,7 +20,6 @@ from pyspark.sql import functions as F
 
 from bgg_data_warehouse_spark.io import (
     archive_old_rows,
-    compact_table,
     read_table,
     recover_table,
     table_exists,
@@ -144,19 +142,3 @@ def test_game_neighbors_layout_prunes_by_profile(spark, tmp_path):
     write_table(df, root, "game_neighbors")
     dirs = sorted(os.listdir(os.path.join(root, "game_neighbors")))
     assert "profile=alt" in dirs and "profile=default" in dirs
-
-
-def test_compact_table_heals_crashed_swap_first(spark, tmp_path):
-    """compact_table is the other table_exists-gated maintenance entry
-    point; it gets the same recover-first treatment."""
-    root = str(tmp_path / "tables")
-    os.makedirs(root)
-    write_table(
-        spark.createDataFrame([Row(v=i) for i in range(4)]),
-        root,
-        "t__old_00000000000000000001_aa",
-    )
-    assert not table_exists(root, "t")
-    compact_table(spark, root, "t")
-    assert table_exists(root, "t")
-    assert read_table(spark, root, "t").count() == 4

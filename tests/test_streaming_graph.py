@@ -1,8 +1,9 @@
-"""Streaming graph maintenance (streaming/graph.py): the drained edge
-change stream's labeling must equal full CC on the final edge set,
+"""Edge-change epochs on the logged components store
+(io.maintain_components_log over the paired labels+edges log store):
+epochs landed deletions-first must equal full CC on the final edge set,
 epoch replay must be a no-op (adds contract to nothing, deletes
-recompute identically), and within-epoch LWW must resolve add/delete
-conflicts per edge before anything applies."""
+recompute identically), and the annotated compaction layout must keep
+the delete path correct while it prunes."""
 
 from __future__ import annotations
 
@@ -10,10 +11,9 @@ import os
 
 from pyspark.sql import functions as F
 
-SCHEMA = "src long, dst long, seq long, op string"
-
-# e0 bootstraps: chain 1-2-3-4, pair 10-11 (one edge arrives reversed —
-# orientation-normalized into the same key space)
+# (src, dst, seq, op) change images. e0 bootstraps: chain 1-2-3-4, pair
+# 10-11 (one edge arrives reversed — orientation-normalized into the
+# same key space)
 E0 = [
     (1, 2, 1, "U"), (3, 2, 2, "U"), (3, 4, 3, "U"), (11, 10, 4, "U"),
 ]
@@ -29,25 +29,76 @@ E2 = [
 EPOCHS = [E0, E1, E2]
 
 
+def _lww(epoch):
+    """Newest op per orientation-normalized edge:
+    {edge: (seq, op, edge as it arrived)}."""
+    latest = {}
+    for s, d, q, op in epoch:
+        k = (min(s, d), max(s, d))
+        if k not in latest or q > latest[k][0]:
+            latest[k] = (q, op, (s, d))
+    return latest
+
+
 def _final_edges(epochs):
     e = set()
     for ep in epochs:
-        latest = {}
-        for s, d, q, op in ep:
-            k = (min(s, d), max(s, d))
-            if k not in latest or q > latest[k][0]:
-                latest[k] = (q, op)
-        e -= {k for k, (_, op) in latest.items() if op == "D"}
-        e |= {k for k, (_, op) in latest.items() if op == "U"}
+        latest = _lww(ep)
+        e -= {k for k, (_, op, _) in latest.items() if op == "D"}
+        e |= {k for k, (_, op, _) in latest.items() if op == "U"}
     return e
 
 
+def _apply_epoch(spark, root, epoch, **kw):
+    """Land one epoch the way a change-feed consumer does: the newest op
+    per orientation-normalized edge wins, deletions apply before
+    additions, and the first epoch bootstraps the store."""
+    from bgg_data_warehouse_spark.io import (
+        init_components_log,
+        maintain_components_log,
+    )
+    from bgg_data_warehouse_spark.log_store import log_store_exists
+    from bgg_data_warehouse_spark.operators.components import (
+        connected_components_star,
+    )
+
+    latest = _lww(epoch)
+
+    def edges(op):
+        # as they arrived: the store normalizes orientation itself
+        rows = sorted(e for _, o, e in latest.values() if o == op)
+        return spark.createDataFrame(rows, "src long, dst long") if rows else None
+
+    adds, dels = edges("U"), edges("D")
+    if not log_store_exists(root, "cc"):
+        labels = connected_components_star(adds, "src", "dst")
+        init_components_log(root, "cc", labels, adds, "src", "dst")
+        return
+    if dels is not None:
+        maintain_components_log(
+            spark, root, "cc", dels, "src", "dst", deleted=True, **kw
+        )
+    if adds is not None:
+        maintain_components_log(spark, root, "cc", adds, "src", "dst", **kw)
+
+
 def _labels(spark, root, name):
-    from bgg_data_warehouse_spark.streaming.graph import read_components_labels
+    from bgg_data_warehouse_spark.log_store import read_pair_store
 
     return {
         (r.node, r.canonical)
-        for r in read_components_labels(spark, root, name).collect()
+        for r in read_pair_store(spark, root, name, "labels", "node").collect()
+    }
+
+
+def _edges(spark, root, name):
+    from bgg_data_warehouse_spark.log_store import read_pair_store
+
+    return {
+        (r.src, r.dst)
+        for r in read_pair_store(spark, root, name, "edges", ["src", "dst"])
+        .select("src", "dst")
+        .collect()
     }
 
 
@@ -66,37 +117,11 @@ def _want(spark, edges):
 
 
 def test_streaming_components_matches_full_recompute(spark, tmp_path):
-    from bgg_data_warehouse_spark.streaming.graph import (
-        start_streaming_components_logged,
-    )
-
-    landing = str(tmp_path / "landing")
+    """Three epochs as generations equal full CC on the final edge set;
+    reversed edges normalise into one key."""
     root = str(tmp_path / "stores")
-
-    def write_epoch(i):
-        spark.createDataFrame(EPOCHS[i], SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-
-    write_epoch(0)
-    q = start_streaming_components_logged(
-        spark.readStream.schema(SCHEMA).parquet(landing),
-        root,
-        "cc",
-        str(tmp_path / "ckpt"),
-        src="src",
-        dst="dst",
-        seq_cols=["seq"],
-        auto_compact=False,
-    )
-    try:
-        q.processAllAvailable()
-        write_epoch(1)
-        q.processAllAvailable()
-        write_epoch(2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    for epoch in EPOCHS:
+        _apply_epoch(spark, root, epoch, auto_compact=False)
 
     final = _final_edges(EPOCHS)
     assert _labels(spark, root, "cc") == _want(spark, final)
@@ -106,37 +131,23 @@ def test_streaming_components_matches_full_recompute(spark, tmp_path):
     got_nodes = {n for n, _ in _labels(spark, root, "cc")}
     assert 11 not in got_nodes and 10 in got_nodes
     # and the edges part reads back exactly the final set
-    from bgg_data_warehouse_spark.streaming.graph import read_components_edges
-
-    got_edges = {
-        (r.src, r.dst)
-        for r in read_components_edges(spark, root, "cc", "src", "dst").collect()
-    }
-    assert got_edges == final
+    assert _edges(spark, root, "cc") == final
 
 
 def test_components_epoch_replay_is_noop_and_add_replay_writes_no_labels(
     spark, tmp_path
 ):
     from bgg_data_warehouse_spark.log_store import _delta_dirs, _store_path
-    from bgg_data_warehouse_spark.streaming.graph import (
-        apply_components_log_batch,
-    )
 
     root = str(tmp_path)
-    kw = dict(src="src", dst="dst", seq_cols=["seq"], auto_compact=False)
     for i in (0, 1):
-        apply_components_log_batch(
-            spark.createDataFrame(EPOCHS[i], SCHEMA), root, "cc", **kw
-        )
+        _apply_epoch(spark, root, EPOCHS[i], auto_compact=False)
     before = _labels(spark, root, "cc")
     assert before == _want(spark, _final_edges(EPOCHS[:2]))
     # replay epoch 1 (delete + add passes): labeling is unchanged, and
     # the replayed ADD generation carries zero label rows — every
     # endpoint already contracted to one canonical
-    apply_components_log_batch(
-        spark.createDataFrame(EPOCHS[1], SCHEMA), root, "cc", **kw
-    )
+    _apply_epoch(spark, root, EPOCHS[1], auto_compact=False)
     assert _labels(spark, root, "cc") == before
     gens = _delta_dirs(_store_path(root, "cc"), committed=True)
     add_gen_labels = spark.read.parquet(
@@ -149,60 +160,12 @@ def test_components_stream_with_compaction_every_epoch(spark, tmp_path):
     """auto-compacting on every epoch (max_generations=0) folds the pair
     after each batch and converges to the same labeling."""
     from bgg_data_warehouse_spark.log_store import _delta_dirs, _store_path
-    from bgg_data_warehouse_spark.streaming.graph import (
-        apply_components_log_batch,
-    )
 
     root = str(tmp_path)
-    for i in range(3):
-        apply_components_log_batch(
-            spark.createDataFrame(EPOCHS[i], SCHEMA),
-            root,
-            "cc",
-            src="src",
-            dst="dst",
-            seq_cols=["seq"],
-            auto_compact=True,
-            max_generations=0,
-        )
+    for epoch in EPOCHS:
+        _apply_epoch(spark, root, epoch, auto_compact=True, max_generations=0)
     assert _labels(spark, root, "cc") == _want(spark, _final_edges(EPOCHS))
     assert _delta_dirs(_store_path(root, "cc"), committed=True) == []
-
-
-def test_components_first_epoch_lww_conflict(spark, tmp_path):
-    """A first-epoch edge both added and deleted resolves by LWW before
-    the bootstrap CC runs."""
-    from bgg_data_warehouse_spark.streaming.graph import (
-        apply_components_log_batch,
-    )
-
-    batch = [(1, 2, 1, "U"), (2, 3, 2, "U"), (2, 1, 3, "D")]
-    apply_components_log_batch(
-        spark.createDataFrame(batch, SCHEMA), root := str(tmp_path), "cc",
-        src="src", dst="dst", seq_cols=["seq"],
-    )
-    assert _labels(spark, root, "cc") == {(2, 2), (3, 2)}
-
-
-def test_components_first_epoch_all_deletes_bootstraps_empty(spark, tmp_path):
-    """A first epoch whose survivors are all 'D' bootstraps an EMPTY
-    store (a delete can only target a same-epoch add, which LWW already
-    resolved); a later add epoch then lands normally."""
-    from bgg_data_warehouse_spark.streaming.graph import (
-        apply_components_log_batch,
-    )
-
-    root = str(tmp_path)
-    kw = dict(src="src", dst="dst", seq_cols=["seq"])
-    apply_components_log_batch(
-        spark.createDataFrame([(1, 2, 1, "D"), (3, 4, 2, "D")], SCHEMA),
-        root, "cc", **kw,
-    )
-    assert _labels(spark, root, "cc") == set()
-    apply_components_log_batch(
-        spark.createDataFrame([(1, 2, 3, "U")], SCHEMA), root, "cc", **kw
-    )
-    assert _labels(spark, root, "cc") == {(1, 1), (2, 1)}
 
 
 def _canon_edges(rows):
@@ -215,8 +178,7 @@ def test_annotated_compaction_prunes_and_stays_correct(spark, tmp_path):
     both parts; the NEXT delete epoch on the folded store runs the
     canonical_col prune path and must match a full recompute. A second
     delete epoch (generations now present — annotations no longer
-    trusted) must fall back and STILL match. Consumers never see
-    _comp."""
+    trusted) must fall back and STILL match."""
     from bgg_data_warehouse_spark.io import (
         compact_components_log,
         init_components_log,
@@ -225,10 +187,6 @@ def test_annotated_compaction_prunes_and_stays_correct(spark, tmp_path):
     from bgg_data_warehouse_spark.operators.components import (
         connected_components_star,
     )
-    from bgg_data_warehouse_spark.streaming.graph import (
-        read_components_edges,
-    )
-
     root = str(tmp_path)
     # chains {1-2-3-4-5}, {10-11-12}, {20-21}
     edges0 = [(i, i + 1) for i in range(1, 5)] + [
@@ -246,13 +204,11 @@ def test_annotated_compaction_prunes_and_stays_correct(spark, tmp_path):
         spark, root, "cc", add, "src", "dst", auto_compact=False
     )
     assert compact_components_log(spark, root, "cc", "src", "dst") >= 1
-    # base now annotated; consumer read hides it
+    # base now annotated
     base_edges = spark.read.parquet(os.path.join(root, "cc", "base", "edges"))
     assert "_comp" in base_edges.columns
-    got_edges = read_components_edges(spark, root, "cc", "src", "dst")
-    assert "_comp" not in got_edges.columns
     cur = _canon_edges(edges0 + [(5, 10)])
-    assert {(r.src, r.dst) for r in got_edges.collect()} == cur
+    assert _edges(spark, root, "cc") == cur
     # delete on the FOLDED store: the pruned canonical_col path
     d1 = spark.createDataFrame([(3, 4)], "src long, dst long")
     maintain_components_log(
@@ -271,8 +227,7 @@ def test_annotated_compaction_prunes_and_stays_correct(spark, tmp_path):
     # verify the edge set and labels both survive the second fold
     assert compact_components_log(spark, root, "cc", "src", "dst") >= 1
     assert _labels(spark, root, "cc") == _want(spark, cur)
-    got_edges = read_components_edges(spark, root, "cc", "src", "dst")
-    assert {(r.src, r.dst) for r in got_edges.collect()} == cur
+    assert _edges(spark, root, "cc") == cur
 
 
 def test_annotated_scan_prune_reaches_parquet(spark, tmp_path):

@@ -1,0 +1,339 @@
+"""Which top-level definitions of the engine package can run.
+
+A static, AST-only walk (nothing is imported). It starts from the code
+the warehouse and its harnesses actually run:
+
+- whole files: ``__spark_entry__.py``, ``bench.py``, every
+  ``perfbench/*.py`` and every ``tools/*.py``;
+- every definition in the served and ingest modules (``ROOT_MODULES``);
+- every ``@query``-registered function of a module that is imported.
+
+From there it follows names: a local name or an imported alias that
+resolves to a top-level ``def``/``class`` of an engine module reaches
+it, and ``mod.attr`` does the same through a module alias. Attribute
+names passed as string literals to ``getattr(x, "name")`` or
+``tracer.wrap(x, "name", ...)`` count too (also when the string comes
+from a ``for name in ("a", "b")`` loop), because perfbench wraps engine
+layers by name. A module's top-level statements, and the decorators
+and default values of its definitions, run when the module is
+imported, so they are reached as soon as anything imports the module.
+
+It also reports *missing* names: an import, attribute or wrapped name
+that points into the engine at something the engine no longer defines.
+
+Usage:
+    python tools/reachability.py        # prints unreached defs and
+                                        # missing names; exit 1 if any
+"""
+
+from __future__ import annotations
+
+import ast
+import sys
+from dataclasses import dataclass, field
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parents[1]
+PACKAGE = "bgg_data_warehouse_spark"
+
+# modules whose every definition is an entry point: the ingest
+# pipeline, the model DAG, the incremental refresh and the read path
+ROOT_MODULES = (
+    "pipeline",
+    "plans",
+    "readers",
+    "service",
+    "service_http",
+    "streaming.incremental",
+)
+ROOT_GLOBS = ("__spark_entry__.py", "bench.py", "perfbench/*.py", "tools/*.py")
+REGISTERING_DECORATORS = {"query"}
+DEF_NODES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+@dataclass
+class Module:
+    name: str  # dotted, e.g. "bgg_data_warehouse_spark.io"; a path for roots
+    tree: ast.Module
+    is_package: bool = False
+    defs: dict[str, ast.AST] = field(default_factory=dict)
+    bound: set[str] = field(default_factory=set)
+    # alias -> targets: ("mod", module) or ("attr", module, name)
+    aliases: dict[str, set[tuple]] = field(default_factory=dict)
+
+
+def _module_name(path: Path, root: Path) -> tuple[str, bool]:
+    parts = list(path.relative_to(root).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        return ".".join(parts[:-1]), True
+    return ".".join(parts), False
+
+
+def _bindings(mod: "Module", stmts) -> set[str]:
+    """Names a block of module-level statements binds (not descending
+    into function or class bodies)."""
+    out: set[str] = set()
+    for node in stmts:
+        if isinstance(node, DEF_NODES):
+            out.add(node.name)
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            out.update(alias for _, alias in _import_targets(mod, node))
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            for t in getattr(node, "targets", None) or [node.target]:
+                out.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        for block in ("body", "orelse", "finalbody", "handlers"):
+            out |= _bindings(mod, getattr(node, block, []))
+    return out
+
+
+def _load(path: Path, name: str, is_package: bool = False) -> Module:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    mod = Module(name, tree, is_package)
+    mod.defs = {n.name: n for n in tree.body if isinstance(n, DEF_NODES)}
+    # one alias table per module, function-local imports included
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for target, alias in _import_targets(mod, node):
+                mod.aliases.setdefault(alias, set()).add(target)
+    mod.bound = _bindings(mod, tree.body)
+    return mod
+
+
+def _import_targets(mod: Module, node) -> list[tuple[tuple, str]]:
+    """(target, bound alias) pairs of one import statement."""
+    out = []
+    if isinstance(node, ast.Import):
+        for a in node.names:
+            if a.asname:
+                out.append((("mod", a.name), a.asname))
+            else:  # "import a.b" binds "a"
+                out.append((("mod", a.name.split(".")[0]), a.name.split(".")[0]))
+        return out
+    base = node.module or ""
+    if node.level:
+        pkg = mod.name.split(".")
+        if not mod.is_package:
+            pkg = pkg[:-1]
+        pkg = pkg[: len(pkg) - (node.level - 1)]
+        base = ".".join(pkg + ([base] if base else []))
+    for a in node.names:
+        out.append((("attr", base, a.name), a.asname or a.name))
+    return out
+
+
+class Graph:
+    """Reachability over the engine package of the checkout at ``root``."""
+
+    def __init__(self, root: Path = REPO):
+        self.modules: dict[str, Module] = {}
+        for path in sorted((root / PACKAGE).rglob("*.py")):
+            name, is_pkg = _module_name(path, root)
+            self.modules[name] = _load(path, name, is_pkg)
+        self.roots = [
+            _load(p, str(p.relative_to(root)))
+            for pat in ROOT_GLOBS
+            for p in sorted(root.glob(pat))
+        ]
+        self.loaded: set[str] = set()
+        self.reached: set[tuple[str, str]] = set()
+        self.missing: set[str] = set()
+        self._todo: list[tuple[Module, ast.AST]] = []
+
+    # -- resolution -------------------------------------------------------
+    def _target_refs(self, target: tuple) -> list[tuple]:
+        """Normalise an alias target to ("mod", m) / ("attr", m, n)."""
+        if target[0] == "attr":
+            _, m, n = target
+            if f"{m}.{n}" in self.modules:
+                return [("mod", f"{m}.{n}")]
+        return [target]
+
+    def _resolve(self, mod: Module, node) -> list[tuple]:
+        if isinstance(node, ast.Name):
+            if node.id in mod.defs and mod.name in self.modules:
+                return [("attr", mod.name, node.id)]
+            return [
+                r
+                for t in mod.aliases.get(node.id, ())
+                for r in self._target_refs(t)
+            ]
+        if isinstance(node, ast.Attribute):
+            out = []
+            for t in self._resolve(mod, node.value):
+                if t[0] == "mod":
+                    out += self._target_refs(("attr", t[1], node.attr))
+                elif t[0] == "attr" and t[1] in self.modules:
+                    out.append(("member", t[1], t[2], node.attr))
+            return out
+        return []
+
+    def _ref(self, target: tuple, where: Module) -> None:
+        kind, m = target[0], target[1]
+        if m.split(".")[0] != PACKAGE:
+            return
+        if kind == "mod":
+            if m not in self.modules:
+                self.missing.add(f"{where.name}: module {m}")
+            self._load_module(m)
+            return
+        if m not in self.modules:
+            self.missing.add(f"{where.name}: module {m}")
+            return
+        self._load_module(m)
+        owner, name = self.modules[m], target[2]
+        if kind == "member":  # an attribute of a top-level name
+            node = owner.defs.get(name)
+            if node is None:
+                return self._ref(("attr", m, name), where)
+            member = target[3]
+            if (
+                isinstance(node, ast.ClassDef)
+                and not member.startswith("__")
+                and member not in _class_members(node)
+            ):
+                self.missing.add(f"{where.name}: {m}.{name}.{member}")
+            self._reach(m, name)
+            return
+        if name in owner.defs:
+            self._reach(m, name)
+        elif name in owner.aliases:  # a re-export: follow it
+            for t in owner.aliases[name]:
+                for r in self._target_refs(t):
+                    self._ref(r, owner)
+        elif name not in owner.bound:
+            self.missing.add(f"{where.name}: {m}.{name}")
+
+    # -- traversal --------------------------------------------------------
+    def _load_module(self, name: str) -> None:
+        parts = name.split(".")
+        for i in range(1, len(parts) + 1):
+            m = ".".join(parts[:i])
+            if m in self.loaded or m not in self.modules:
+                continue
+            self.loaded.add(m)
+            mod = self.modules[m]
+            for node in mod.tree.body:
+                if isinstance(node, DEF_NODES):
+                    for d in node.decorator_list:
+                        self._todo.append((mod, d))
+                        if _decorator_name(d) in REGISTERING_DECORATORS:
+                            self._reach(m, node.name)
+                    if not isinstance(node, ast.ClassDef):
+                        for d in node.args.defaults + node.args.kw_defaults:
+                            if d is not None:
+                                self._todo.append((mod, d))
+                else:
+                    self._todo.append((mod, node))
+
+    def _reach(self, module: str, name: str) -> None:
+        if (module, name) in self.reached:
+            return
+        self.reached.add((module, name))
+        mod = self.modules[module]
+        self._todo.append((mod, mod.defs[name]))
+
+    def _visit(self, mod: Module, unit: ast.AST) -> None:
+        loops: dict[str, list[str]] = {}
+        for node in ast.walk(unit):
+            if (
+                isinstance(node, ast.For)
+                and isinstance(node.target, ast.Name)
+                and isinstance(node.iter, (ast.Tuple, ast.List))
+            ):
+                loops[node.target.id] = [
+                    e.value for e in node.iter.elts if isinstance(e, ast.Constant)
+                ]
+        for node in ast.walk(unit):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    self._ref(("mod", a.name), mod)
+            elif isinstance(node, ast.ImportFrom):
+                # an import uses the name: it fails once the name is gone
+                for target, _ in _import_targets(mod, node):
+                    for r in self._target_refs(target):
+                        self._ref(r, mod)
+            elif isinstance(node, (ast.Name, ast.Attribute)) and isinstance(
+                getattr(node, "ctx", None), ast.Load
+            ):
+                for r in self._resolve(mod, node):
+                    self._ref(r, mod)
+            elif isinstance(node, ast.Call) and len(node.args) >= 2:
+                fn = node.func
+                by_name = (isinstance(fn, ast.Name) and fn.id == "getattr") or (
+                    isinstance(fn, ast.Attribute) and fn.attr == "wrap"
+                )
+                if not by_name:
+                    continue
+                arg = node.args[1]
+                if isinstance(arg, ast.Constant) and isinstance(arg.value, str):
+                    names = [arg.value]
+                elif isinstance(arg, ast.Name):
+                    names = loops.get(arg.id, [])
+                else:
+                    names = []
+                for t in self._resolve(mod, node.args[0]):
+                    for n in names:
+                        if t[0] == "mod":
+                            self._ref(("attr", t[1], n), mod)
+                        elif t[0] == "attr":
+                            self._ref(("member", t[1], t[2], n), mod)
+
+    def run(self) -> "Graph":
+        for root in self.roots:
+            self._todo.append((root, root.tree))
+        for name in ROOT_MODULES:
+            full = f"{PACKAGE}.{name}"
+            for m in self.modules:
+                if m == full or m.startswith(full + "."):
+                    self._load_module(m)
+                    for d in self.modules[m].defs:
+                        self._reach(m, d)
+        while self._todo:
+            self._visit(*self._todo.pop())
+        return self
+
+    def unreached(self) -> list[str]:
+        """``module.def`` names (package prefix dropped) nothing reaches."""
+        out = []
+        for m, mod in self.modules.items():
+            for d in mod.defs:
+                if (m, d) not in self.reached:
+                    out.append(f"{m[len(PACKAGE) + 1:]}.{d}" if m != PACKAGE else d)
+        return sorted(out)
+
+
+def _class_members(node: ast.ClassDef) -> set[str]:
+    out = set()
+    for sub in node.body:
+        if isinstance(sub, DEF_NODES):
+            out.add(sub.name)
+        for t in getattr(sub, "targets", []) + [getattr(sub, "target", None)]:
+            if isinstance(t, ast.Name):
+                out.add(t.id)
+    return out
+
+
+def _decorator_name(d: ast.AST) -> str | None:
+    if isinstance(d, ast.Call):
+        d = d.func
+    if isinstance(d, ast.Name):
+        return d.id
+    if isinstance(d, ast.Attribute):
+        return d.attr
+    return None
+
+
+def main() -> int:
+    g = Graph().run()
+    unreached = g.unreached()
+    for name in unreached:
+        print(f"unreached {name}")
+    for name in sorted(g.missing):
+        print(f"missing   {name}")
+    print(f"{len(unreached)} unreached, {len(g.missing)} missing")
+    return 1 if unreached or g.missing else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -755,139 +755,6 @@ def incremental_main() -> None:
             lambda: _topk(emb),
         )
 
-    def fam_neighbors_logged(sf_dir, tag):
-        """The r13 paired log store in the operator's DESIGNED regime —
-        band-sparse arrivals (50 bands, the 10-vector epoch confined to
-        one): the epoch lands the delta and the k-NN change set as one
-        generation, so reads scale with the affected 3-of-50 bands'
-        population and writes with the change set, while the full
-        rebuild re-matmuls and rewrites everything. (On the raw
-        10-band testdata the delta touches most of the band space and
-        the probe rightly degrades to near-corpus — the caveat the r12
-        notes already record; this fixture measures the win the
-        operator exists for.)"""
-        from bgg_data_warehouse_spark.io import _neighbors_topk
-        from bgg_data_warehouse_spark.log_store import init_pair_store
-        from bgg_data_warehouse_spark.streaming.index_maintenance import (
-            apply_neighbors_log_batch,
-        )
-
-        emb = tbl(sf_dir, "embeddings").select(
-            "vec_id",
-            F.pmod(F.col("vec_id"), F.lit(50)).cast("double").alias("band50"),
-            "embedding",
-        )
-        delta_ids = [
-            r[0]
-            for r in emb.where(F.col("band50") == 7.0)
-            .select("vec_id")
-            .orderBy("vec_id")
-            .limit(10)
-            .collect()
-        ]
-        base = emb.where(~F.col("vec_id").isin(delta_ids))
-        name = f"nlog_{tag}"
-        init_pair_store(
-            store_root,
-            name,
-            {
-                "vectors": base,
-                "neighbors": _neighbors_topk(
-                    base, "vec_id", "band50", "embedding", 1.0, 5
-                ),
-            },
-        )
-        batch = store(
-            emb.where(F.col("vec_id").isin(delta_ids)).select(
-                "vec_id",
-                "band50",
-                "embedding",
-                F.col("vec_id").alias("seq"),
-                F.lit("U").alias("op"),
-            ),
-            f"nlog_batch_{tag}",
-        )
-        kw = dict(
-            id_col="vec_id", band_col="band50", vec_col="embedding",
-            seq_cols=["seq"], band=1.0, k=5, auto_compact=False,
-        )
-        return (
-            lambda: apply_neighbors_log_batch(
-                batch, store_root, name, **kw
-            ),
-            lambda: _neighbors_topk(emb, "vec_id", "band50", "embedding", 1.0, 5),
-        )
-
-    def fam_neighbors_density(sf_dir, tag):
-        """r14 VERDICT #5: the neighbors epoch's 3.7-3.9x shuffle slope
-        on the raw testdata tracks BUCKET OCCUPANCY, not plan growth —
-        the embeddings fixture grows 4x in rows (500 -> 2000) across
-        the sf step while its band space stays FIXED (10 labels / 50
-        band50 buckets), so the probe-reachable candidate set densifies
-        exactly in step. This twin HOLDS occupancy: the band column is
-        derived with bands = rows/40 (~40 vectors per band at EVERY
-        sf — how a real deployment sizes its LSH band space to its
-        corpus), same 10-vector single-band epoch as
-        fam_neighbors_logged. A flat epoch slope here pins the raw
-        fixture's slope as densification: per-candidate work does not
-        grow with the corpus."""
-        from bgg_data_warehouse_spark.io import _neighbors_topk
-        from bgg_data_warehouse_spark.log_store import init_pair_store
-        from bgg_data_warehouse_spark.streaming.index_maintenance import (
-            apply_neighbors_log_batch,
-        )
-
-        emb0 = tbl(sf_dir, "embeddings")
-        n_bands = max(emb0.count() // 40, 10)
-        emb = store(
-            emb0.select(
-                "vec_id",
-                F.pmod(F.xxhash64("vec_id"), F.lit(n_bands))
-                .cast("double")
-                .alias("bandd"),
-                "embedding",
-            ),
-            f"nden_emb_{tag}",
-        )
-        delta_ids = [
-            r[0]
-            for r in emb.where(F.col("bandd") == 7.0)
-            .select("vec_id")
-            .orderBy("vec_id")
-            .limit(10)
-            .collect()
-        ]
-        base = emb.where(~F.col("vec_id").isin(delta_ids))
-        name = f"nden_{tag}"
-        init_pair_store(
-            store_root,
-            name,
-            {
-                "vectors": base,
-                "neighbors": _neighbors_topk(
-                    base, "vec_id", "bandd", "embedding", 1.0, 5
-                ),
-            },
-        )
-        batch = store(
-            emb.where(F.col("vec_id").isin(delta_ids)).select(
-                "vec_id",
-                "bandd",
-                "embedding",
-                F.col("vec_id").alias("seq"),
-                F.lit("U").alias("op"),
-            ),
-            f"nden_batch_{tag}",
-        )
-        kw = dict(
-            id_col="vec_id", band_col="bandd", vec_col="embedding",
-            seq_cols=["seq"], band=1.0, k=5, auto_compact=False,
-        )
-        return (
-            lambda: apply_neighbors_log_batch(batch, store_root, name, **kw),
-            lambda: _neighbors_topk(emb, "vec_id", "bandd", "embedding", 1.0, 5),
-        )
-
     def fam_cdc_logged(sf_dir, tag):
         """The r13 logged CDC state store (streaming/cdc.py::
         apply_cdc_log_batch): one 50-row change epoch lands as a
@@ -1323,8 +1190,6 @@ def incremental_main() -> None:
         "cdc_logged_epoch": fam_cdc_logged,
         "inverted_index_incremental": fam_postings,
         "inverted_index_logged_append": fam_postings_logged,
-        "neighbors_logged_epoch": fam_neighbors_logged,
-        "neighbors_density_held": fam_neighbors_density,
         "dedup_minhash_incremental": fam_minhash,
         "dedup_minhash_delete": fam_minhash_delete,
         "merkle_incremental_update": fam_merkle,
