@@ -3,9 +3,9 @@
 Layout policy mirrors `/root/reference/terraform/bigquery.tf` (SURVEY §1.4):
 
 - time-series facts (games, rankings, raw_responses): DAY partition on the
-  load/fetch timestamp + sort by game_id within partitions (partition
-  pruning ≈ BigQuery DAY partitioning; parquet min/max row-group stats on
-  the sorted key ≈ clustering);
+  UTC date of the load/fetch timestamp + sort by game_id within
+  partitions (partition pruning ≈ BigQuery DAY partitioning; parquet
+  min/max row-group stats on the sorted key ≈ clustering);
 - game_profile: integer-range partition ``game_id_bucket = game_id div
   1000`` (`definitions/game_profile.sqlx:6-17`) — point lookups touch one
   bucket directory instead of the full table (the 273.5 MB → 1.9 MB
@@ -18,6 +18,15 @@ transactional MERGE without a table format, so the merge strategies
 rebuild into a staging directory and atomically swap — single-runner
 assumption, exactly the reference's operating model (its lease table is
 best-effort too; SURVEY §7 "genuinely hard" (a)).
+
+One writer per table class. Raw and core tables (``INGEST_TABLES``) are
+written on the driver with pyarrow: an ingest batch is bounded (at most
+100 games), so an append is one file per partition and an S6/S7 step is
+a read-modify-write of one small table, and neither starts a Spark job.
+Model tables are written by Spark. Both use the same layouts and the
+same staged swap, so :func:`recover_table` heals either. A driver read
+casts every file to the declared schema: a table directory may hold
+Spark's INT96 timestamps next to the driver's UTC microseconds.
 """
 
 from __future__ import annotations
@@ -28,10 +37,14 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.merge import delete_insert, merge_insert_missing
+from . import schemas
 
 
 def storage_pin(base_dir: str):
@@ -64,18 +77,15 @@ def storage_pin(base_dir: str):
 class Layout:
     partition_cols: list[str] = field(default_factory=list)
     sort_cols: list[str] = field(default_factory=list)
-    derive: dict[str, str] = field(default_factory=dict)  # col -> SQL expr
+    # derived partition col -> the timestamp col whose UTC date it is
+    day_of: dict[str, str] = field(default_factory=dict)
 
 
 LAYOUTS: dict[str, Layout] = {
-    "games": Layout(["load_date"], ["game_id"], {"load_date": "to_date(load_timestamp)"}),
-    "rankings": Layout(["load_date"], ["game_id"], {"load_date": "to_date(load_timestamp)"}),
-    "raw_responses": Layout(
-        ["fetch_date"], ["game_id"], {"fetch_date": "to_date(fetch_timestamp)"}
-    ),
-    "request_log": Layout(
-        ["request_date"], [], {"request_date": "to_date(request_timestamp)"}
-    ),
+    "games": Layout(["load_date"], ["game_id"], {"load_date": "load_timestamp"}),
+    "rankings": Layout(["load_date"], ["game_id"], {"load_date": "load_timestamp"}),
+    "raw_responses": Layout(["fetch_date"], ["game_id"], {"fetch_date": "fetch_timestamp"}),
+    "request_log": Layout(["request_date"], [], {"request_date": "request_timestamp"}),
     "game_profile": Layout(["game_id_bucket"], ["game_id"]),
     # mirrors the reference's clusterBy ["profile", "game_id"]
     # (`definitions/game_neighbors.sqlx:6-8`): a Spark read of one
@@ -88,16 +98,23 @@ def _path(root: str, name: str) -> str:
     return os.path.join(root, name)
 
 
+# tables the driver writer owns; reads of them pass the declared schema
+INGEST_TABLES = {**schemas.CORE_TABLES, **schemas.RAW_TABLES}
+
+
 def _apply_layout(df: DataFrame, layout: Layout) -> DataFrame:
-    for col, expr in layout.derive.items():
+    for col, ts_col in layout.day_of.items():
         if col not in df.columns:
-            df = df.withColumn(col, F.expr(expr))
+            df = df.withColumn(col, F.to_date(ts_col))  # session time zone: UTC
     if layout.sort_cols:
         df = df.sortWithinPartitions(*layout.sort_cols)
     return df
 
 
 def write_table(df: DataFrame, root: str, name: str, mode: str = "overwrite") -> None:
+    if name in INGEST_TABLES:
+        _land(_as_arrow(df, name), root, name, append=mode == "append")
+        return
     layout = LAYOUTS.get(name, Layout())
     out = _apply_layout(df, layout)
     writer = out.write.mode(mode)
@@ -112,7 +129,13 @@ def append_table(df: DataFrame, root: str, name: str) -> None:
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
-    return spark.read.parquet(_path(root, name))
+    """A table as a DataFrame. Ingest tables are read with their declared
+    schema, so the read starts no schema-inference job; the partition
+    column (``load_date``, ``fetch_date``) is still appended last."""
+    reader = spark.read
+    if name in INGEST_TABLES:
+        reader = reader.schema(INGEST_TABLES[name])
+    return reader.parquet(_path(root, name))
 
 
 def table_exists(root: str, name: str) -> bool:
@@ -253,37 +276,173 @@ def _rewrite(df: DataFrame, root: str, name: str) -> None:
     _staged_swap(root, name, build)
 
 
-def rewrite_table(df: DataFrame, root: str, name: str) -> None:
+def rewrite_table(df: DataFrame | pa.Table, root: str, name: str) -> None:
     """Overwrite a table whose new contents READ from the old contents.
 
     ``write_table(mode="overwrite")`` would delete the files the lazy plan
-    is still scanning; this stages + swaps instead.
+    is still scanning; this stages + swaps instead. An ingest table's new
+    contents are materialized on the driver first.
     """
-    _rewrite(df, root, name)
+    if name in INGEST_TABLES:
+        _land(_as_arrow(df, name), root, name, append=False)
+    else:
+        _rewrite(df, root, name)
+
+
+# ---------------------------------------------------------------------------
+# Driver writer: raw and core tables as pyarrow files.
+# ---------------------------------------------------------------------------
+
+
+def _data_files(path: str) -> list[str]:
+    """Parquet files of a table directory, skipping the hidden and
+    underscore-prefixed entries Spark and the driver writer leave."""
+    out = []
+    for base, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [
+            os.path.join(base, f)
+            for f in sorted(files)
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return out
+
+
+def _held_schema(name: str, schema: pa.Schema) -> pa.Schema:
+    """The schema a table's rows are held in on the driver: the declared
+    one for an ingest table, else ``schema`` with nullable fields and
+    timestamps as UTC microseconds (Spark's INT96 files read as naive
+    nanoseconds)."""
+    if name in INGEST_TABLES:
+        return schemas.arrow_schema(INGEST_TABLES[name])
+    return pa.schema(
+        pa.field(f.name, pa.timestamp("us", tz="UTC") if pa.types.is_timestamp(f.type) else f.type)
+        for f in schema
+    )
+
+
+def _conform(table: pa.Table, schema: pa.Schema) -> pa.Table:
+    """Select and cast ``table``'s columns to ``schema``, by name; an
+    absent column reads as nulls."""
+    cols = [
+        table[f.name].cast(f.type, safe=False) if f.name in table.column_names
+        else pa.nulls(table.num_rows, f.type)
+        for f in schema
+    ]
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _as_arrow(data: DataFrame | pa.Table, name: str, like: pa.Table | None = None) -> pa.Table:
+    """``data`` as an Arrow table in the schema its target holds: the
+    declared one for an ingest table, else ``like``'s (the stored rows),
+    else its own."""
+    if isinstance(data, DataFrame):
+        data = data.toArrow()
+    return _conform(data, _held_schema(name, (like if like is not None else data).schema))
+
+
+def read_arrow(root: str, name: str) -> pa.Table | None:
+    """A table read on the driver, or None when it has no data file.
+    Every file is cast to one schema (the declared one for an ingest
+    table, else the first file's), so Spark-written and driver-written
+    files of one table concatenate. Partition columns are not read: the
+    writer derives them again."""
+    files = _data_files(_path(root, name))
+    if not files:
+        return None
+    parts = [pq.ParquetFile(f).read() for f in files]
+    schema = _held_schema(name, parts[0].schema)
+    return pa.concat_tables([_conform(p, schema) for p in parts])
+
+
+def _write_files(table: pa.Table, directory: str, name: str) -> None:
+    """Write ``table`` under ``directory`` in the table's layout: rows
+    sorted by its sort columns, one file per partition value. Each file
+    is written under a hidden name and renamed into place, so no reader
+    sees a partial file."""
+    layout = LAYOUTS.get(name, Layout())
+    os.makedirs(directory, exist_ok=True)
+    if layout.sort_cols and table.num_rows:
+        table = table.sort_by([(c, "ascending") for c in layout.sort_cols])
+    groups = [("", table)]
+    if layout.partition_cols:
+        (col,) = layout.partition_cols
+        days = pc.cast(table[layout.day_of[col]], pa.date32())  # UTC date
+        groups = [
+            (f"{col}={day}", table.filter(pc.equal(days, pa.scalar(day, pa.date32()))))
+            for day in pc.unique(days).to_pylist()
+            if day is not None
+        ]
+        if days.null_count:
+            groups.append((f"{col}=__HIVE_DEFAULT_PARTITION__", table.filter(pc.is_null(days))))
+    for sub, part in groups:
+        out = os.path.join(directory, sub)
+        os.makedirs(out, exist_ok=True)
+        fname = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(part, os.path.join(out, "." + fname))
+        os.rename(os.path.join(out, "." + fname), os.path.join(out, fname))
+
+
+def _land(table: pa.Table, root: str, name: str, *, append: bool) -> None:
+    """Land an Arrow table: an append (S4) adds files in place; otherwise
+    the table is rebuilt in a staging dir and swapped in."""
+    if not append:
+        _staged_swap(root, name, lambda staging: _write_files(table, staging, name))
+        return
+    recover_table(root, name)  # a crashed swap must not read as "first write"
+    if table.num_rows or not table_exists(root, name):
+        _write_files(table, _path(root, name), name)
+
+
+def _row_numbers(table: pa.Table, keys: list[str]) -> pa.Table:
+    return table.select(keys).append_column("_row", pa.array(np.arange(table.num_rows)))
+
+
+def _first_per_key(table: pa.Table, keys: list[str]) -> pa.Table:
+    """``dropDuplicates(keys)``, keeping each key's first row."""
+    firsts = _row_numbers(table, keys).group_by(keys).aggregate([("_row", "min")])
+    return table.take(np.sort(firsts["_row_min"].to_numpy()))
+
+
+def _without_keys(table: pa.Table, keys: list[str], other: pa.Table) -> pa.Table:
+    """Rows of ``table`` whose key is not in ``other`` (a left anti join:
+    a null key matches nothing), in their stored order."""
+    if not other.num_rows:
+        return table
+    kept = _row_numbers(table, keys).join(other.select(keys), keys, join_type="left anti")
+    return table.take(np.sort(kept["_row"].to_numpy()))
 
 
 def merge_insert_missing_table(
-    spark: SparkSession, incoming: DataFrame, root: str, name: str, keys: list[str]
+    spark: SparkSession, incoming: DataFrame | pa.Table, root: str, name: str, keys: list[str]
 ) -> None:
-    """S6 — dimension MERGE: insert keys never seen, never update."""
+    """S6 — dimension MERGE: insert keys never seen, never update. A
+    driver read-modify-write; a batch with no new key writes nothing."""
     recover_table(root, name)  # crashed-swap table must not read as "first write"
-    if not table_exists(root, name):
-        write_table(incoming.dropDuplicates(keys), root, name)
+    existing = read_arrow(root, name)
+    fresh = _first_per_key(_as_arrow(incoming, name, existing), keys)
+    if existing is None:
+        _land(fresh, root, name, append=False)
         return
-    existing = read_table(spark, root, name)
-    _rewrite(merge_insert_missing(existing, incoming, keys), root, name)
+    fresh = _without_keys(fresh, keys, existing)
+    if fresh.num_rows:
+        _land(pa.concat_tables([existing, fresh]), root, name, append=False)
 
 
 def delete_insert_table(
-    spark: SparkSession, replacement: DataFrame, root: str, name: str, keys: list[str]
+    spark: SparkSession, replacement: DataFrame | pa.Table, root: str, name: str, keys: list[str]
 ) -> None:
-    """S7 — bridge/detail refresh: replace all rows for the incoming keys."""
+    """S7 — bridge/detail refresh: replace all rows for the incoming keys.
+    A driver read-modify-write; an empty replacement writes nothing."""
     recover_table(root, name)  # crashed-swap table must not read as "first write"
-    if not table_exists(root, name):
-        write_table(replacement, root, name)
+    existing = read_arrow(root, name)
+    replacement = _as_arrow(replacement, name, existing)
+    if existing is None:
+        _land(replacement, root, name, append=False)
         return
-    existing = read_table(spark, root, name)
-    _rewrite(delete_insert(existing, replacement, keys), root, name)
+    if replacement.num_rows:
+        kept = _without_keys(existing, keys, replacement)
+        _land(pa.concat_tables([kept, replacement]), root, name, append=False)
 
 
 # ---------------------------------------------------------------------------
@@ -634,7 +793,7 @@ def archive_old_rows(
         return 0
     stamp = uuid.uuid4().hex[:8]
     old.write.mode("overwrite").parquet(os.path.join(root, archive_dir, f"{name}_{stamp}"))
-    _rewrite(df.where(F.col(ts_col) >= cutoff), root, name)
+    rewrite_table(df.where(F.col(ts_col) >= cutoff), root, name)
     return n
 
 

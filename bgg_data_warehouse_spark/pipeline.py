@@ -7,26 +7,34 @@ sequential stages) with the loop semantics of
 
 fetch stage:   candidates (anti-joins + retry policy) → claim leases →
                rate-limited batched HTTP → land raw + status rows →
-               release leases; loop until the queue drains.
+               release leases; loop until a batch comes back short.
 process stage: pending responses (latest-per-game, success-only, not yet
-               processed) → flatten → 22-table fan-out → per-table-class
+               processed) → flatten → 20-table fan-out → per-table-class
                write strategy (dims MERGE S6, bridges/details
                delete+insert S7, time-series append S4) → record status;
                loop in batches.
 
-Where the reference round-trips Python↔BigQuery per step, here each batch
-is one Spark lineage: landing scan → parse → 22 derived frames → writes.
+Where the reference round-trips Python↔BigQuery per step, here each
+stage runs one Spark query per batch: the candidate query over the raw
+layer, collected in one action. The batch itself is bounded (at most
+``PROCESS_BATCH`` games), so everything after that runs on the driver
+and starts no Spark job: parsing and fan-out (``bgg_xml.fan_out``), the
+lease and status updates (``tracking``), and every write (``io``'s
+driver writer). The status write comes last, so a crash mid-batch
+leaves the batch pending and the next run processes it again.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
 
 from . import io, schemas
 from .sources import bgg_xml
-from .sources.api_client import BGGApiClient, land_responses
+from .sources.api_client import BGGApiClient, land_batch
 from .streaming import tracking
 
 DIM_TABLES = {name: [sch.fields[0].name] for name, sch in schemas.DIMENSIONS.items()}
@@ -45,6 +53,14 @@ def _read_or_empty(spark: SparkSession, root: str, name: str):
     return spark.createDataFrame([], schemas.RAW_TABLES[name])
 
 
+def _driver_table(root: str, name: str) -> pa.Table:
+    """A tracking table read on the driver (empty when absent), after
+    healing a crashed swap so that no history reads as missing."""
+    io.recover_table(root, name)
+    table = io.read_arrow(root, name)
+    return table if table is not None else schemas.arrow_schema(schemas.RAW_TABLES[name]).empty_table()
+
+
 def _fetch_id_batch(
     spark: SparkSession,
     root: str,
@@ -54,25 +70,22 @@ def _fetch_id_batch(
     now: datetime | None = None,
 ) -> int:
     """Claim → rate-limited fetch → land raw+status → release, for an
-    explicit id list. The shared inner step of every fetch-side command."""
+    explicit id list. The shared inner step of every fetch-side command;
+    it runs on the driver and starts no Spark job."""
     if not ids:
         return 0
-    leases = _read_or_empty(spark, root, "fetch_in_progress")
-    cand_df = spark.createDataFrame([(int(i),) for i in ids], "game_id long")
-    claimed = tracking.claim(tracking.expire_leases(leases, now=now), cand_df, now=now)
-    io.rewrite_table(claimed, root, "fetch_in_progress")
+    leases = tracking.claim(_driver_table(root, "fetch_in_progress"), ids, now=now)
+    io.rewrite_table(leases, root, "fetch_in_progress")
 
     ts = now or datetime.now(timezone.utc).replace(tzinfo=None)
     payloads = client.fetch_all(ids)
     # ids with no item in the response still get a status row
     payloads = {gid: payloads.get(gid, "") for gid in ids}
-    raw, status = land_responses(spark, payloads, ts)
-    io.append_table(raw.where("response_data <> ''"), root, "raw_responses")
+    raw, status = land_batch(payloads, ts)
+    io.append_table(raw.filter(pc.not_equal(raw["response_data"], "")), root, "raw_responses")
     io.append_table(status, root, "fetched_responses")
 
-    remaining = tracking.release(
-        io.read_table(spark, root, "fetch_in_progress"), cand_df
-    )
+    remaining = tracking.release(_driver_table(root, "fetch_in_progress"), ids)
     io.rewrite_table(remaining, root, "fetch_in_progress")
     return len(ids)
 
@@ -101,6 +114,8 @@ def fetch_stage(
         if not ids:
             break
         total += _fetch_id_batch(spark, root, client, ids, now=now)
+        if len(ids) < batch:  # the queue is drained
+            break
     return total
 
 
@@ -119,27 +134,25 @@ def process_stage(
         fetched = _read_or_empty(spark, root, "fetched_responses")
         processed = _read_or_empty(spark, root, "processed_responses")
         pending = tracking.unprocessed_responses(raw, fetched, processed, batch=batch)
-        pending_rows = pending.select("record_id", "game_id").collect()
-        if not pending_rows:
+        # the batch's one Spark action; the writes below swap files the
+        # lazy plan scans, so nothing may re-execute it
+        rows = pending.select("record_id", "game_id", "response_data").collect()
+        if not rows:
             break
         ts = load_timestamp or datetime.now(timezone.utc).replace(tzinfo=None)
-        # cache: the 22-table fan-out triggers one write per table; without
-        # this the Arrow parse pass would re-run per write
-        parsed = bgg_xml.parse_responses(pending).cache()
-        tables = bgg_xml.normalize(parsed, ts)
-
-        ok_ids = {r.game_id for r in tables["games"].select("game_id").collect()}
+        parsed = [game for r in rows for game in bgg_xml.parse_payload(r.response_data)]
+        tables = bgg_xml.fan_out(parsed, ts)
+        ok_ids = set(tables["games"]["game_id"].to_pylist())
 
         # per-table-class write strategies (loader.py:199-265)
         io.append_table(tables["games"], root, "games")
         io.append_table(tables["rankings"], root, "rankings")
         for dim, keys in DIM_TABLES.items():
             io.merge_insert_missing_table(spark, tables[dim], root, dim, keys)
-        for name in list(BRIDGE_TABLES) + list(DETAIL_TABLES):
-            keys = (BRIDGE_TABLES | DETAIL_TABLES)[name]
+        for name, keys in (BRIDGE_TABLES | DETAIL_TABLES).items():
             io.delete_insert_table(spark, tables[name], root, name, keys)
 
-        results = spark.createDataFrame(
+        results = pa.Table.from_pylist(
             [
                 {
                     "record_id": r.record_id,
@@ -148,14 +161,17 @@ def process_stage(
                     "process_attempt": 0,  # renumbered by record_process_results
                     "error_message": None if r.game_id in ok_ids else "unparseable payload",
                 }
-                for r in pending_rows
+                for r in rows
             ],
-            schemas.PROCESSED_RESPONSES,
+            schema=schemas.arrow_schema(schemas.PROCESSED_RESPONSES),
         )
-        updated = tracking.record_process_results(processed, results)
+        updated = tracking.record_process_results(_driver_table(root, "processed_responses"), results)
         io.rewrite_table(updated, root, "processed_responses")
-        parsed.unpersist()
-        total += len(pending_rows)
+        total += len(rows)
+        # a short batch drained the queue, unless a parse_error record
+        # is due for a retry
+        if len(rows) < batch and all(r.game_id in ok_ids for r in rows):
+            break
     return total
 
 

@@ -10,6 +10,7 @@ the one registry replacing all three. Layer = namespace prefix
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -274,6 +275,22 @@ LANDING_TABLES: dict[str, T.StructType] = {
     "collection_predictions_landing": COLLECTION_PREDICTIONS_LANDING,
     "collection_models_registry": COLLECTION_MODELS_REGISTRY,
 }
+
+
+_ARROW_TYPES = {
+    T.LongType: pa.int64(),
+    T.DoubleType: pa.float64(),
+    T.StringType: pa.string(),
+    T.BooleanType: pa.bool_(),
+    T.TimestampType: pa.timestamp("us", tz="UTC"),
+}
+
+
+def arrow_schema(schema: T.StructType) -> pa.Schema:
+    """The Arrow form of a flat (raw/core) table schema, as the driver
+    writer lands it: timestamps are UTC microseconds, and every field is
+    nullable, as Spark's parquet reader reports every column."""
+    return pa.schema([pa.field(f.name, _ARROW_TYPES[type(f.dataType)]) for f in schema.fields])
 
 
 def conform(df, schema: T.StructType, *, extras: str = "error"):

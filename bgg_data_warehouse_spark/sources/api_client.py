@@ -7,7 +7,7 @@ request-log row per call (`:110`). The HTTP transport is injected so the
 engine stays hermetic — tests drive a fake; production wires requests/
 urllib. Fetching is driver-side (the ceiling is the remote API at 2 req/s,
 not compute — parallelizing fetches across executors would only DDoS the
-rate limiter), landing results into DataFrames for the raw layer.
+rate limiter), landing results as Arrow tables for the raw layer.
 """
 
 from __future__ import annotations
@@ -17,6 +17,10 @@ import time
 import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+
+import pyarrow as pa
+
+from .. import schemas
 
 Transport = Callable[[str], tuple[int, str]]
 
@@ -142,11 +146,10 @@ class BGGApiClient:
         )
 
 
-def land_responses(spark, payloads: dict[int, str], fetch_timestamp) -> tuple:
-    """payloads → (raw_responses df, fetched_responses df) with generated
-    record_ids (F11 uuid defaults) and success/no_response statuses."""
-    from .. import schemas
-
+def land_batch(payloads: dict[int, str], fetch_timestamp) -> tuple[pa.Table, pa.Table]:
+    """payloads → (raw_responses, fetched_responses) Arrow tables with
+    generated record_ids (F11 uuid defaults) and success/no_response
+    statuses."""
     raw_rows, status_rows = [], []
     for gid, payload in payloads.items():
         rid = str(uuid.uuid4())
@@ -166,6 +169,13 @@ def land_responses(spark, payloads: dict[int, str], fetch_timestamp) -> tuple:
                 "fetch_status": "success" if payload else "no_response",
             }
         )
-    raw = spark.createDataFrame(raw_rows, schemas.RAW_RESPONSES)
-    fetched = spark.createDataFrame(status_rows, schemas.FETCHED_RESPONSES)
-    return raw, fetched
+    return (
+        pa.Table.from_pylist(raw_rows, schema=schemas.arrow_schema(schemas.RAW_RESPONSES)),
+        pa.Table.from_pylist(status_rows, schema=schemas.arrow_schema(schemas.FETCHED_RESPONSES)),
+    )
+
+
+def land_responses(spark, payloads: dict[int, str], fetch_timestamp) -> tuple:
+    """DataFrame adapter over :func:`land_batch`."""
+    raw, fetched = land_batch(payloads, fetch_timestamp)
+    return spark.createDataFrame(raw), spark.createDataFrame(fetched)

@@ -1,4 +1,4 @@
-"""BGG XML-response flattener: raw payload strings → 22 normalized tables.
+"""BGG XML-response flattener: raw payload strings → the 20 core tables.
 
 Reference semantics: `/root/reference/src/data_processor/processor.py` —
 `process_game` (`:300-398`) flattens one xmltodict payload to a typed flat
@@ -18,25 +18,29 @@ PK uniqueness. Value-parsing rules mirrored here:
 - payloads are JSON or python-literal dict strings; empty/unparseable
   payloads produce no rows (`response_processor.py:255-265`).
 
-Spark shape: ONE ``mapInPandas`` pass normalizes the semi-structured
-variants into a wide typed row per game (Python is unavoidable for
-dict-vs-list variant handling; it crosses once, Arrow-batched). Every
-downstream table is then a pure-Column explode/projection — the
-multi-output fan-out (A9) stays declarative and shuffle-free, and the 22
-extractions share the single parsed scan.
+Shape: a process batch is bounded (at most ``PROCESS_BATCH`` = 100
+games), so it is flattened on the driver. :func:`parse_payload`
+normalizes one payload's semi-structured variants into a wide row per
+game (Python is unavoidable for dict-vs-list variant handling), and
+:func:`fan_out` is the one multi-output fan-out (A9): the wide rows of a
+batch become the 20 core tables as Arrow tables in their declared
+schemas (``schemas.CORE_TABLES``), deduplicated on each table's key,
+first row wins. No Spark job runs for either step. ``parse_responses``
+and ``normalize`` are DataFrame adapters over the same two functions.
 """
 
 from __future__ import annotations
 
 import ast
 import json
-from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import schemas
 
 LINK_TYPE_TO_BRIDGE = {
     "boardgamecategory": ("game_categories", "category_id", "categories"),
@@ -252,121 +256,76 @@ def _parse_item(item: dict) -> dict:
     }
 
 
+# the key the fan-out deduplicates each core table on (first row wins);
+# a batch shares one load_timestamp, so game_id alone keys a games row
+FAN_OUT_KEYS = {
+    "games": ["game_id"],
+    **{name: [sch.fields[0].name] for name, sch in schemas.DIMENSIONS.items()},
+    **{name: [sch.fields[0].name, sch.fields[1].name] for name, sch in schemas.BRIDGES.items()},
+    "player_counts": ["game_id", "player_count"],
+    "alternate_names": ["game_id", "name"],
+    "language_dependence": ["game_id", "level"],
+    "suggested_ages": ["game_id", "age"],
+    "rankings": ["game_id", "ranking_type", "ranking_name"],
+}
+_GAME_SCALARS = [f.name for f in schemas.GAMES.fields if f.name != "load_timestamp"]
+
+
+def fan_out(parsed: list[dict], load_timestamp) -> dict[str, pa.Table]:
+    """The multi-output fan-out (A9): wide parsed rows → the 20 core
+    tables, each an Arrow table in its declared schema. A batch may hold
+    the same game twice (a re-fetch) and games share entities, so every
+    table keeps the first row per key (processor set-dedup `:490-522`)."""
+    rows: dict[str, list[dict]] = {name: [] for name in FAN_OUT_KEYS}
+    for g in parsed:
+        gid = g["game_id"]
+        rows["games"].append({**{c: g[c] for c in _GAME_SCALARS}, "load_timestamp": load_timestamp})
+        for ln in g["links"]:
+            if ln["link_type"] not in LINK_TYPE_TO_BRIDGE:
+                continue
+            bridge, other_id, dim = LINK_TYPE_TO_BRIDGE[ln["link_type"]]
+            if not (bridge == "game_implementations" and ln["inbound"]):  # outbound only
+                rows[bridge].append({"game_id": gid, other_id: ln["link_id"]})
+            if dim is not None:
+                rows[dim].append({other_id: ln["link_id"], "name": ln["value"]})
+        for table in ("player_counts", "language_dependence", "suggested_ages"):
+            rows[table] += [{"game_id": gid, **x} for x in g[table]]
+        rows["alternate_names"] += [
+            {"game_id": gid, "name": n["value"], "sort_index": n["sort_index"]}
+            for n in g["names"]
+            if n["name_type"] == "alternate"
+        ]
+        rows["rankings"] += [{"game_id": gid, **rk, "load_timestamp": load_timestamp} for rk in g["ranks"]]
+    out = {}
+    for name, keys in FAN_OUT_KEYS.items():
+        seen, kept = set(), []
+        for r in rows[name]:
+            key = tuple(r[k] for k in keys)
+            if key not in seen:
+                seen.add(key)
+                kept.append(r)
+        out[name] = pa.Table.from_pylist(kept, schema=schemas.arrow_schema(schemas.CORE_TABLES[name]))
+    return out
+
+
 def parse_responses(raw_responses: DataFrame) -> DataFrame:
-    """raw_responses(response_data, ...) → one wide parsed row per game."""
-
-    cols = [
-        "game_id", "type", "primary_name", "year_published", "min_players",
-        "max_players", "playing_time", "min_playtime", "max_playtime",
-        "min_age", "description", "thumbnail", "image", "users_rated",
-        "average_rating", "bayes_average", "standard_deviation",
-        "median_rating", "owned_count", "trading_count", "wanting_count",
-        "wishing_count", "num_comments", "num_weights", "average_weight",
-        "names", "links", "player_counts", "language_dependence",
-        "suggested_ages", "ranks",
+    """raw_responses(response_data, ...) → one wide parsed row per game:
+    a DataFrame adapter that collects the payloads and parses them on
+    the driver with :func:`parse_payload`."""
+    rows = [
+        game
+        for r in raw_responses.select("response_data").collect()
+        for game in parse_payload(r.response_data)
     ]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for payload in pdf["response_data"]:
-                rows.extend(parse_payload(payload))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return raw_responses.select("response_data").mapInPandas(batches, PARSED_SCHEMA)
-
-
-# --- multi-output fan-out (A9): parsed wide rows → normalized tables ------
-
-
-def games_table(parsed: DataFrame, load_timestamp) -> DataFrame:
-    scalar_cols = [
-        "game_id", "type", "primary_name", "year_published", "min_players",
-        "max_players", "playing_time", "min_playtime", "max_playtime",
-        "min_age", "description", "thumbnail", "image", "users_rated",
-        "average_rating", "bayes_average", "standard_deviation",
-        "median_rating", "owned_count", "trading_count", "wanting_count",
-        "wishing_count", "num_comments", "num_weights", "average_weight",
-    ]
-    return (
-        parsed.select(*scalar_cols)
-        # a batch may contain the same game twice (re-fetch); the PK is
-        # (game_id, load_timestamp) and the batch shares one load ts, so
-        # keep a single row per game per batch
-        .dropDuplicates(["game_id"])
-        .withColumn("load_timestamp", F.lit(load_timestamp).cast("timestamp"))
-    )
-
-
-def _links_of(parsed: DataFrame, link_type: str) -> DataFrame:
-    return parsed.select(
-        "game_id", F.explode("links").alias("ln")
-    ).where(F.col("ln.link_type") == link_type)
-
-
-def dimension_table(parsed: DataFrame, link_type: str, id_col: str) -> DataFrame:
-    """Entity dedup across games (processor set-dedup `:490-522`)."""
-    return (
-        _links_of(parsed, link_type)
-        .select(F.col("ln.link_id").alias(id_col), F.col("ln.value").alias("name"))
-        .dropDuplicates([id_col])
-    )
-
-
-def bridge_table(parsed: DataFrame, link_type: str, other_id: str) -> DataFrame:
-    df = _links_of(parsed, link_type)
-    if link_type == "boardgameimplementation":
-        df = df.where(~F.col("ln.inbound"))  # outbound only
-    return df.select(
-        "game_id", F.col("ln.link_id").alias(other_id)
-    ).dropDuplicates(["game_id", other_id])
-
-
-def _exploded(parsed: DataFrame, arr: str, fields: list[str]) -> DataFrame:
-    return parsed.select("game_id", F.explode(arr).alias("x")).select(
-        "game_id", *[F.col(f"x.{f}").alias(f) for f in fields]
-    )
+    return raw_responses.sparkSession.createDataFrame(rows, PARSED_SCHEMA)
 
 
 def normalize(parsed: DataFrame, load_timestamp) -> dict[str, DataFrame]:
-    """The 22-table fan-out from one parsed scan."""
-    out: dict[str, DataFrame] = {"games": games_table(parsed, load_timestamp)}
-    for link_type, (bridge, other_id, dim) in LINK_TYPE_TO_BRIDGE.items():
-        out[bridge] = bridge_table(parsed, link_type, other_id)
-        if dim is not None:
-            id_col = other_id
-            out[dim] = dimension_table(parsed, link_type, id_col)
-    out["player_counts"] = _exploded(
-        parsed,
-        "player_counts",
-        ["player_count", "best_votes", "recommended_votes", "not_recommended_votes"],
-    ).dropDuplicates(["game_id", "player_count"])
-    out["language_dependence"] = _exploded(
-        parsed, "language_dependence", ["level", "description", "votes"]
-    ).dropDuplicates(["game_id", "level"])
-    out["suggested_ages"] = _exploded(
-        parsed, "suggested_ages", ["age", "votes"]
-    ).dropDuplicates(["game_id", "age"])
-    out["alternate_names"] = (
-        parsed.select("game_id", F.explode("names").alias("n"))
-        .where(F.col("n.name_type") == "alternate")
-        .select(
-            "game_id",
-            F.col("n.value").alias("name"),
-            F.col("n.sort_index").alias("sort_index"),
-        )
-        .dropDuplicates(["game_id", "name"])
-    )
-    out["rankings"] = (
-        _exploded(
-            parsed,
-            "ranks",
-            ["ranking_type", "ranking_name", "friendly_name", "value", "bayes_average"],
-        )
-        .withColumn("load_timestamp", F.lit(load_timestamp).cast("timestamp"))
-        .dropDuplicates(["game_id", "ranking_type", "ranking_name"])
-    )
-    return out
+    """DataFrame adapter over :func:`fan_out`: parsed wide rows → one
+    DataFrame per core table."""
+    spark = parsed.sparkSession
+    tables = fan_out(parsed.toArrow().to_pylist(), load_timestamp)
+    return {name: spark.createDataFrame(t) for name, t in tables.items()}
 
 
 def validate_pk_unique(df: DataFrame, keys: list[str]) -> bool:

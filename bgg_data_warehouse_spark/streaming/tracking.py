@@ -2,16 +2,25 @@
 
 The reference's at-least-once fetch / exactly-once-ish process machinery
 (`/root/reference/src/modules/response_fetcher.py:49-180`,
-`response_processor.py:156-209`) re-expressed as pure DataFrame
-transforms: each function takes the tracking tables and returns the work
-set / updated table, so the semantics are unit-testable without any HTTP
-or storage. The anti-join shapes (J4/J5), retry policy (I4), lease expiry
-(I3) and priority ordering (O3) match the cited SQL line-for-line in
-behavior.
+`response_processor.py:156-209`) re-expressed as pure transforms: each
+function takes the tracking tables and returns the work set / updated
+table, so the semantics are unit-testable without any HTTP or storage.
+The candidate queries (`unfetched_ids`, `unprocessed_responses`) are
+DataFrame transforms, because they scan the whole raw layer. The lease
+and status updates of one batch (`claim`, `release`,
+`record_process_results`) are Arrow transforms run on the driver, which
+the pipeline's driver writer lands. The anti-join shapes (J4/J5), retry
+policy (I4), lease expiry (I3) and priority ordering (O3) match the
+cited SQL line-for-line in behavior.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from datetime import datetime, timedelta, timezone
+
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -74,18 +83,24 @@ def expire_leases(fetch_in_progress: DataFrame, *, now=None) -> DataFrame:
     )
 
 
-def claim(fetch_in_progress: DataFrame, candidate_ids: DataFrame, *, now=None) -> DataFrame:
-    """Insert leases for the candidate batch (`response_fetcher.py:155-168`)."""
-    now_expr = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
-    leases = candidate_ids.select(
-        "game_id", now_expr.alias("fetch_start_timestamp")
+def claim(fetch_in_progress: pa.Table, game_ids: list[int], *, now=None) -> pa.Table:
+    """Insert leases for the candidate batch (`response_fetcher.py:155-168`),
+    dropping the expired ones (I3) on the way."""
+    now = now if now is not None else datetime.now(timezone.utc).replace(tzinfo=None)
+    ts = fetch_in_progress.schema.field("fetch_start_timestamp").type
+    cutoff = pa.scalar(now - timedelta(minutes=LEASE_TIMEOUT_MINUTES), type=ts)
+    live = fetch_in_progress.filter(pc.greater_equal(fetch_in_progress["fetch_start_timestamp"], cutoff))
+    leases = pa.table(
+        [pa.array(game_ids, pa.int64()), pa.array([now] * len(game_ids), ts)],
+        schema=fetch_in_progress.schema,
     )
-    return fetch_in_progress.unionByName(leases)
+    return pa.concat_tables([live, leases])
 
 
-def release(fetch_in_progress: DataFrame, done_ids: DataFrame) -> DataFrame:
+def release(fetch_in_progress: pa.Table, done_ids: list[int]) -> pa.Table:
     """Delete-on-complete (`response_fetcher.py:321-331`)."""
-    return fetch_in_progress.join(done_ids.select("game_id"), "game_id", "left_anti")
+    done = pc.is_in(fetch_in_progress["game_id"], value_set=pa.array(done_ids, pa.int64()))
+    return fetch_in_progress.filter(pc.invert(done))
 
 
 def unprocessed_responses(
@@ -133,18 +148,11 @@ def unprocessed_responses(
     )
 
 
-def record_process_results(
-    processed_responses: DataFrame,
-    results: DataFrame,
-) -> DataFrame:
+def record_process_results(processed_responses: pa.Table, results: pa.Table) -> pa.Table:
     """Append status rows with attempt numbering
     (`response_processor.py:429-476`): attempt = prior attempts + 1."""
-    prior = processed_responses.groupBy("record_id").agg(
-        F.count("*").alias("_prior")
-    )
-    stamped = (
-        results.join(prior, "record_id", "left")
-        .withColumn("process_attempt", F.coalesce(F.col("_prior"), F.lit(0)) + 1)
-        .drop("_prior")
-    )
-    return processed_responses.unionByName(stamped.select(*processed_responses.columns))
+    prior = Counter(processed_responses["record_id"].to_pylist())
+    attempts = [prior[rid] + 1 for rid in results["record_id"].to_pylist()]
+    col = results.schema.get_field_index("process_attempt")
+    stamped = results.set_column(col, "process_attempt", pa.array(attempts, pa.int64()))
+    return pa.concat_tables([processed_responses, stamped.cast(processed_responses.schema)])

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 from datetime import datetime, timedelta
 
+import pyarrow as pa
 import pytest
 
 from pyspark.sql import functions as F
@@ -79,6 +80,43 @@ def test_partitioned_layout_and_pruning(spark, tmp_path):
         (F.col("game_id_bucket") == 1) & (F.col("game_id") == 1005)
     ).collect()
     assert [r.name for r in got] == ["G1005"]
+
+
+def _jobs_in_group(spark, group, fn):
+    """Spark jobs ``fn`` starts, counted in one job group."""
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(group, group)
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_ingest_table_reads_start_no_job(spark, tmp_path):
+    """A read of an ingest table passes the declared schema: no
+    schema-inference job, declared column order, and the DAY partition
+    column still appended last."""
+    from bgg_data_warehouse_spark.sources import bgg_xml
+    from bgg_data_warehouse_spark.sources.api_client import land_batch
+
+    root = str(tmp_path)
+    tables = bgg_xml.fan_out(bgg_xml.parse_payload(json.dumps(CATAN)), T0)
+    io.append_table(tables["games"], root, "games")
+    raw, _ = land_batch({13: json.dumps(CATAN)}, T0)
+    io.append_table(raw, root, "raw_responses")
+    frames = {}
+
+    def read():
+        frames["games"] = io.read_table(spark, root, "games")
+        frames["raw_responses"] = io.read_table(spark, root, "raw_responses")
+
+    assert _jobs_in_group(spark, "ingest-reads", read) == 0
+    for name, part in (("games", "load_date"), ("raw_responses", "fetch_date")):
+        df = frames[name]
+        assert df.columns == [f.name for f in io.INGEST_TABLES[name].fields] + [part]
+        assert dict(df.dtypes)[part] == "date"
+        assert [tuple(r) for r in df.select("game_id", part).collect()] == [(13, T0.date())]
 
 
 # --------------------------------------------------- incremental (I1)
@@ -180,10 +218,11 @@ def test_lease_lifecycle(spark, tracking_tables):
     thing_ids, fetched, in_progress = tracking_tables
     live = tracking.expire_leases(in_progress, now=T0)
     assert [r.game_id for r in live.collect()] == [5]
-    claimed = tracking.claim(live, spark.createDataFrame([(7,)], "game_id long"), now=T0)
-    assert sorted(r.game_id for r in claimed.collect()) == [5, 7]
-    released = tracking.release(claimed, spark.createDataFrame([(5,)], "game_id long"))
-    assert [r.game_id for r in released.collect()] == [7]
+    # the driver-side claim drops the expired lease (6) on the way
+    claimed = tracking.claim(in_progress.toArrow(), [7], now=T0)
+    assert sorted(claimed["game_id"].to_pylist()) == [5, 7]
+    released = tracking.release(claimed, [5])
+    assert released["game_id"].to_pylist() == [7]
 
 
 def test_unprocessed_responses_dedups_and_orders(spark):
@@ -214,6 +253,10 @@ def test_unprocessed_responses_dedups_and_orders(spark):
     assert [r.record_id for r in got] == ["d", "b"]
 
 
+def _status_rows(rows):
+    return pa.Table.from_pylist(rows, schema=schemas.arrow_schema(schemas.PROCESSED_RESPONSES))
+
+
 def test_unprocessed_responses_caps_attempts(spark):
     # A payload that fails parsing forever (status 'parse_error', never in the
     # done set) must leave the queue once MAX_ATTEMPTS status rows exist —
@@ -226,38 +269,36 @@ def test_unprocessed_responses_caps_attempts(spark):
         [{"record_id": "a", "game_id": 1, "fetch_timestamp": T0, "fetch_status": "success"}],
         schemas.FETCHED_RESPONSES,
     )
-    processed = spark.createDataFrame([], schemas.PROCESSED_RESPONSES)
+    processed = _status_rows([])
     for attempt in range(1, tracking.MAX_ATTEMPTS + 1):
-        assert tracking.unprocessed_responses(raw, fetched, processed).count() == 1
-        failure = spark.createDataFrame(
+        pending = tracking.unprocessed_responses(raw, fetched, spark.createDataFrame(processed))
+        assert pending.count() == 1
+        failure = _status_rows(
             [{"record_id": "a", "process_timestamp": T0 + timedelta(hours=attempt),
               "process_status": "parse_error", "process_attempt": 0,
-              "error_message": "boom"}],
-            schemas.PROCESSED_RESPONSES,
+              "error_message": "boom"}]
         )
         processed = tracking.record_process_results(processed, failure)
-    assert tracking.unprocessed_responses(raw, fetched, processed).count() == 0
+    assert processed["process_attempt"].to_pylist() == [1, 2, 3]
+    pending = tracking.unprocessed_responses(raw, fetched, spark.createDataFrame(processed))
+    assert pending.count() == 0
 
 
-def test_record_process_results_attempt_numbering(spark):
-    processed = spark.createDataFrame(
+def test_record_process_results_attempt_numbering():
+    processed = _status_rows(
         [{"record_id": "x", "process_timestamp": T0, "process_status": "error",
-          "process_attempt": 1, "error_message": "boom"}],
-        schemas.PROCESSED_RESPONSES,
+          "process_attempt": 1, "error_message": "boom"}]
     )
-    results = spark.createDataFrame(
+    results = _status_rows(
         [
             {"record_id": "x", "process_timestamp": T0 + timedelta(hours=1),
              "process_status": "success", "process_attempt": 0, "error_message": None},
             {"record_id": "y", "process_timestamp": T0 + timedelta(hours=1),
              "process_status": "success", "process_attempt": 0, "error_message": None},
-        ],
-        schemas.PROCESSED_RESPONSES,
+        ]
     )
-    out = tracking.record_process_results(processed, results)
-    attempts = {
-        (r.record_id, r.process_status): r.process_attempt for r in out.collect()
-    }
+    out = tracking.record_process_results(processed, results).to_pylist()
+    attempts = {(r["record_id"], r["process_status"]): r["process_attempt"] for r in out}
     assert attempts[("x", "success")] == 2  # second attempt
     assert attempts[("y", "success")] == 1
 
@@ -318,6 +359,103 @@ def test_land_responses_and_flatten_roundtrip(spark):
     assert {r.fetch_status for r in fetched.collect()} == {"success", "no_response"}
     parsed = bgg_xml.parse_responses(raw)
     assert [r.game_id for r in parsed.collect()] == [13]
+
+
+# ------------------------------------------------ pipeline job floor
+
+
+def _canned_client(served: dict[int, dict]):
+    """Fake BGG transport serving ``served[id]``'s item under each id."""
+
+    def transport(url):
+        ids = url.split("id=")[1].split("&")[0].split(",")
+        items = [
+            {**served[int(g)]["items"]["item"], "@id": g} for g in ids if int(g) in served
+        ]
+        return 200, json.dumps({"items": {"item": items}})
+
+    return BGGApiClient(
+        transport=transport,
+        rate_limiter=RateLimiter(clock=lambda: 0.0, sleep=lambda s: None),
+        sleep=lambda s: None,
+    )
+
+
+@pytest.fixture(scope="module")
+def built_root(spark, tmp_path_factory):
+    """A warehouse the pipeline built from three fetched games."""
+    from bgg_data_warehouse_spark import pipeline
+
+    root = str(tmp_path_factory.mktemp("built"))
+    thing_ids = [
+        {"game_id": g, "type": "boardgame", "processed": False,
+         "process_timestamp": None, "source": "test", "load_timestamp": T0}
+        for g in (13, 14, 15)
+    ]
+    io.write_table(spark.createDataFrame(thing_ids, schemas.THING_IDS), root, "thing_ids")
+    client = _canned_client({13: CATAN, 14: CATAN, 15: CATAN})
+    assert pipeline.fetch_new_games(spark, root, client, now=T0) == (3, 3)
+    return root
+
+
+@pytest.fixture()
+def refetched(built_root, tmp_path):
+    import shutil
+
+    root = str(tmp_path / "root")
+    shutil.copytree(built_root, root)
+    return root, _canned_client({13: CATAN, 14: CATAN}), T0 + timedelta(days=1)
+
+
+def test_process_batch_job_floor(spark, refetched):
+    """One refetch batch runs at most 1 Spark job, and one process batch
+    at most 15: the candidate query is the only Spark work; parsing,
+    fan-out and every core-table write run on the driver."""
+    from bgg_data_warehouse_spark import pipeline
+
+    root, client, t1 = refetched
+    fetch_jobs = _jobs_in_group(
+        spark, "fetch-batch", lambda: pipeline._fetch_id_batch(spark, root, client, [13, 14], now=t1)
+    )
+    assert fetch_jobs <= 1
+    done = {}
+    process_jobs = _jobs_in_group(
+        spark, "process-batch",
+        lambda: done.update(n=pipeline.process_stage(spark, root, load_timestamp=t1)),
+    )
+    assert done["n"] == 2
+    assert process_jobs <= 15
+    games = io.read_table(spark, root, "games")
+    assert games.where(F.col("load_timestamp") == F.lit(t1)).count() == 2
+    assert io.read_table(spark, root, "fetch_in_progress").count() == 0
+
+
+def test_crash_mid_batch_leaves_the_batch_pending(spark, refetched, monkeypatch):
+    """The status write is the batch's last write: a failure in the
+    fan-out writes records nothing, and the next run processes the
+    whole batch again."""
+    from bgg_data_warehouse_spark import pipeline
+
+    root, client, t1 = refetched
+    pipeline._fetch_id_batch(spark, root, client, [13, 14], now=t1)
+    statuses = io.read_arrow(root, "processed_responses").num_rows
+    real = io.delete_insert_table
+
+    def crash(spark, df, root, name, keys):
+        if name == "player_counts":
+            raise OSError("disk gone")
+        real(spark, df, root, name, keys)
+
+    monkeypatch.setattr(io, "delete_insert_table", crash)
+    with pytest.raises(OSError):
+        pipeline.process_stage(spark, root, load_timestamp=t1)
+    assert io.read_arrow(root, "processed_responses").num_rows == statuses
+    monkeypatch.setattr(io, "delete_insert_table", real)
+    assert pipeline.process_stage(spark, root, load_timestamp=t1) == 2
+    status = io.read_table(spark, root, "processed_responses")
+    assert status.where("process_status = 'success'").count() == statuses + 2
+    pc = io.read_table(spark, root, "player_counts")
+    assert pc.where("game_id = 13").count() == 2  # replaced, not doubled
 
 
 # ------------------------------------------------------------- readers
