@@ -1,29 +1,20 @@
-from .vector import cosine_similarity, cosine_distance, dot_product, euclidean_distance, l2_norm
+from .vector import cosine_similarity, dot_product, euclidean_distance, l2_norm
 from .text import (
     whitespace_tokens,
     word_tokens,
     token_count_bpeish,
-    stopword_ratio,
     quality_score_cols,
-    char_shingles,
-    word_shingles,
 )
-from .hashing import content_fingerprint, minhash_signature, simhash64
+from .hashing import content_fingerprint
 
 __all__ = [
     "cosine_similarity",
-    "cosine_distance",
     "dot_product",
     "euclidean_distance",
     "l2_norm",
     "whitespace_tokens",
     "word_tokens",
     "token_count_bpeish",
-    "stopword_ratio",
     "quality_score_cols",
-    "char_shingles",
-    "word_shingles",
     "content_fingerprint",
-    "minhash_signature",
-    "simhash64",
 ]

@@ -7,15 +7,13 @@ Reference parity: the 64-bit feature-change hash
 values intentionally engine-local (the reference only ever compares the
 hash to itself: `game_features_hash.sqlx:36-46`).
 
-MinHash/SimHash are the LLM-pipeline near-dup sketches. Both are pure
-Catalyst expressions over token/shingle arrays (xxhash64 + higher-order
-functions) — no Python in the hot path, so a 1000-executor cluster
-computes signatures at parquet-scan speed.
+MinHash banding and SimHash chunking are the LSH steps of the
+LLM-pipeline near-dup joins (operators/dedup.py). Both are pure Catalyst
+expressions (xxhash64 + higher-order functions) — no Python in the hot
+path, so a 1000-executor cluster computes them at parquet-scan speed.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -42,29 +40,6 @@ def portable_fingerprint(*cols: Column | str) -> Column:
     return F.md5(F.concat_ws("\x1f", *rendered))
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """MinHash signature: array<long> of length ``num_hashes``.
-
-    hash_j(doc) = min over shingles of xxhash64(shingle, j). Documents with
-    no shingles get a per-slot sentinel (max long) so they never collide
-    with real signatures.
-    """
-    def hasher(seed: int):
-        # NB: closure, NOT a default arg — PySpark counts default args in
-        # lambda arity and would bind the 2nd transform arg (the element
-        # INDEX) instead of the seed.
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    mins = [
-        F.coalesce(
-            F.array_min(F.transform(shingles, hasher(j))),
-            F.lit(2**63 - 1),
-        )
-        for j in range(num_hashes)
-    ]
-    return F.array(*mins)
-
-
 def minhash_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
     """LSH banding: hash each band of the signature to one long.
 
@@ -78,26 +53,6 @@ def minhash_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
         bucket = F.xxhash64(F.concat_ws(",", F.transform(band_slice, lambda x: x.cast("string"))))
         entries.append(F.struct(F.lit(b).alias("band"), bucket.alias("bucket")))
     return F.array(*entries)
-
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash over a token array.
-
-    Classic Charikar sketch: each token hashes to 64 bits; bit i of the
-    sketch is the sign of sum over tokens of (+1 if bit i set else -1).
-    Near-duplicate docs differ in few bits (small Hamming distance).
-    """
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-
-    def bit_merger(m):
-        return lambda acc, h: acc + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)
-
-    bit_cols = []
-    for i in range(64):
-        mask = F.shiftleft(F.lit(1).cast("long"), i)
-        bit_sum = F.aggregate(hashes, F.lit(0), bit_merger(mask))
-        bit_cols.append(F.when(bit_sum > 0, mask).otherwise(F.lit(0).cast("long")))
-    return reduce(lambda a, b: a.bitwiseOR(b), bit_cols)
 
 
 def hamming64(a: Column, b: Column) -> Column:

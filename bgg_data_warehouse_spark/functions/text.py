@@ -45,14 +45,6 @@ def stopword_count(tokens: Column, lang: str) -> Column:
     return F.size(F.filter(tokens, lambda t: t.isin(*words)))
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = word_tokens(text)
-    n = F.size(toks)
-    return F.when(n == 0, F.lit(0.0)).otherwise(
-        stopword_count(toks, lang).cast("double") / n.cast("double")
-    )
-
-
 def lang_scores(text: Column, tokens: Column | None = None) -> dict[str, Column]:
     """Stopword-hit count per candidate language (the lang-ID signal)."""
     toks = tokens if tokens is not None else word_tokens(text)
@@ -127,18 +119,6 @@ def quality_score_cols(text: Column, tokens: Column | None = None) -> dict[str, 
     }
 
 
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles as strings; empty array when fewer than k tokens."""
-    toks = word_tokens(text)
-    n = F.size(toks)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        )
-    )
-
-
 # PII patterns shared with the DuckDB oracle. Kept to the syntax subset
 # that Java regex (Spark) and RE2 (DuckDB) interpret identically:
 # character classes, bounded repetition, ASCII \b word boundaries — no
@@ -168,14 +148,3 @@ def pii_redact_cols(text: Column) -> dict[str, Column]:
         "n_idnum": F.regexp_count(text, F.lit(PII_IDNUM)).cast("long"),
         "redacted": redacted,
     }
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """k-character shingles of the lowercased text."""
-    t = F.lower(text)
-    n = F.length(t)
-    return F.when(n < k, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)), lambda i: F.substring(t, i, k)
-        )
-    )

@@ -67,11 +67,6 @@ def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
     return dot_product(a, b, dim) / (l2_norm(a, dim) * l2_norm(b, dim))
 
 
-def cosine_distance(a: Column, b: Column, dim: int | None = None) -> Column:
-    """1 - cosine similarity, matching BigQuery ML.DISTANCE(..., 'COSINE')."""
-    return F.lit(1.0) - cosine_similarity(a, b, dim)
-
-
 def euclidean_distance(a: Column, b: Column, dim: int | None = None) -> Column:
     if dim is None:
         return F.sqrt(

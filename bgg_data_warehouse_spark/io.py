@@ -31,6 +31,7 @@ Spark's INT96 timestamps next to the driver's UTC microseconds.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import time
@@ -45,32 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import schemas
-
-
-def storage_pin(base_dir: str):
-    """Parquet round-trip ``Pin`` (operators/dedup.py): materialize a
-    multiply-read intermediate to storage and read it back, instead of
-    executor-memory cache / localCheckpoint.
-
-    This is the documented 100 TB swap for every iterative/multi-read
-    operator here: the pinned set survives executor loss, truncates
-    lineage exactly like a reliable checkpoint, and its memory footprint
-    is the page cache's problem instead of the block manager's. Each
-    pinned frame gets a unique subdirectory under ``base_dir``; the
-    caller owns the lifecycle of ``base_dir`` (delete it after the
-    consuming job finishes — on a cluster point it at scratch object
-    storage with a TTL policy).
-    """
-    import itertools
-
-    counter = itertools.count()
-
-    def pin(df: DataFrame) -> DataFrame:
-        path = os.path.join(base_dir, f"pin-{next(counter):04d}-{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
-    return pin
 
 
 @dataclass
@@ -240,11 +215,8 @@ def _staged_swap(root: str, name: str, build) -> None:
     """Build new contents into a staging dir (``build(staging_path)``
     writes them — one table or several subtables), then atomically swap
     the whole dir into place with the two-rename protocol
-    :func:`recover_table` heals. Factoring the swap out of
-    :func:`_rewrite` lets MULTI-table state (the neighbors store's
-    corpus + neighbors pair) change in ONE atomic unit — both subtables
-    land or neither does, so no crash window can publish a corpus
-    inconsistent with the index built from it."""
+    :func:`recover_table` heals. Spark's :func:`_rewrite` and the
+    driver writer both land through it."""
     final = _path(root, name)
     staging = f"{final}__stage_{uuid.uuid4().hex[:8]}"
     build(staging)
@@ -359,7 +331,14 @@ def _write_files(table: pa.Table, directory: str, name: str) -> None:
     """Write ``table`` under ``directory`` in the table's layout: rows
     sorted by its sort columns, one file per partition value. Each file
     is written under a hidden name and renamed into place, so no reader
-    sees a partial file."""
+    sees a partial file.
+
+    A file is named by the sha256 of its bytes (pyarrow writes equal
+    tables byte for byte), so an append replayed after a crash replaces
+    its own file instead of landing its rows twice. A retry at a new
+    load time is different rows and still appends a second load; a batch
+    that lands in all of its tables or none waits for a multi-part
+    generation (ROADMAP Direction 1)."""
     layout = LAYOUTS.get(name, Layout())
     os.makedirs(directory, exist_ok=True)
     if layout.sort_cols and table.num_rows:
@@ -378,8 +357,12 @@ def _write_files(table: pa.Table, directory: str, name: str) -> None:
     for sub, part in groups:
         out = os.path.join(directory, sub)
         os.makedirs(out, exist_ok=True)
-        fname = f"part-{uuid.uuid4().hex}.parquet"
-        pq.write_table(part, os.path.join(out, "." + fname))
+        buf = pa.BufferOutputStream()
+        pq.write_table(part, buf)
+        data = buf.getvalue().to_pybytes()
+        fname = f"part-{hashlib.sha256(data).hexdigest()}.parquet"
+        with open(os.path.join(out, "." + fname), "wb") as fh:
+            fh.write(data)
         os.rename(os.path.join(out, "." + fname), os.path.join(out, fname))
 
 

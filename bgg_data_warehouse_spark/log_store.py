@@ -390,6 +390,8 @@ _TOUCHED_ISIN_MAX = 8192
 # 128 MiB broadcast bound, so the fast path only ever replaces merges
 # whose frames were already broadcast-sized.
 DRIVER_MERGE_MAX_BYTES = 8 * 1024 * 1024
+# False forces the distributed merge (tests compare the two paths)
+DRIVER_MERGE = True
 
 
 def _read_dir_arrow(d: str, columns: list[str] | None = None):
@@ -440,7 +442,7 @@ def _driver_merge_parts(spark: SparkSession, gen_dirs: list[str], key_cols):
     generations bails (the relational union coerces it, while the
     driver relation's schema would be the first generation's and fail
     at action time)."""
-    if os.environ.get("SPARK_GRAFT_DRIVER_MERGE", "1") != "1":
+    if not DRIVER_MERGE:
         return None
     try:
         # only where the relational path would have BROADCAST the

@@ -42,11 +42,6 @@ ASSET_SCHEMA = T.StructType(
     ]
 )
 
-IMAGE_FEATURES_SCHEMA = (
-    "asset_id long, media_type string, n_bytes long, format string, "
-    "width int, height int, mean_byte double"
-)
-
 FRAME_SAMPLE_SCHEMA = (
     "asset_id long, frame_index int, frame_offset_bytes long, frame_md5 string"
 )
@@ -300,7 +295,7 @@ def attach_ppm_payload(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     can compute the decoded statistics analytically from the text alone
     — which is what upgrades ``multimodal_features`` from rows-only to an
     exact hash gate. The synthesis itself is fixture plumbing; the graded
-    operator is the DECODE path (``extract_image_features`` →
+    operator is the DECODE path (``extract_decoded_features`` →
     ``decode_image``).
     """
 
@@ -707,47 +702,6 @@ def extract_video_frames(assets: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return assets.mapInPandas(batches, schema=VIDEO_FRAMES_SCHEMA)
-
-
-def _fake_dims(first: int, n: int) -> tuple[int, int]:
-    # deterministic fake decode: dimensions derived from payload bytes
-    return (first % 64 + 1, n % 64 + 1)
-
-
-def extract_image_features(assets: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over the payload column.
-
-    ``mapInPandas`` is the right shape for codec work: whole Arrow batches
-    cross into Python once, the codec loop stays in C-backed pandas/numpy,
-    and the 100 TB scan parallelism is the parquet split count. The decode
-    itself is the deterministic stub documented above.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            n_bytes = payloads.map(lambda b: 0 if b is None else len(b))
-            first = payloads.map(lambda b: b[0] if b else 0)
-            dims = [
-                _fake_dims(f, n) for f, n in zip(first.tolist(), n_bytes.tolist())
-            ]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "format": pdf["meta"].map(
-                        lambda m: None if m is None else m["format"]
-                    ),
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "mean_byte": payloads.map(
-                        lambda b: float(sum(b)) / len(b) if b else 0.0
-                    ),
-                }
-            )
-
-    return assets.mapInPandas(batches, schema=IMAGE_FEATURES_SCHEMA)
 
 
 def sample_frames(assets: DataFrame, every_n_bytes: int = 64) -> DataFrame:

@@ -1,11 +1,9 @@
 from .latest import latest_per_key, topk_per_key
 from .merge import merge_insert_missing, delete_insert
-from .band_join import band_self_join
 
 __all__ = [
     "latest_per_key",
     "topk_per_key",
     "merge_insert_missing",
     "delete_insert",
-    "band_self_join",
 ]

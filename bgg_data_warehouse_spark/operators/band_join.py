@@ -15,58 +15,10 @@ restores exact semantics. Cost drops from O(n²) to O(n · avg_bin_pop).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vector import pair_scores
-
-
-def band_self_join(
-    df: DataFrame,
-    id_col: str,
-    band_col: str,
-    band: float,
-    left_prefix: str = "s_",
-    right_prefix: str = "t_",
-) -> DataFrame:
-    """All pairs (s, t) with s.id != t.id and |s.band_col - t.band_col| <= band.
-
-    Returns both sides' columns prefixed. Exact band semantics (the bucket
-    join is only the pruning step).
-    """
-    bucket = F.floor(F.col(band_col) / F.lit(band)).cast("long")
-
-    left = df.select(
-        *[F.col(c).alias(f"{left_prefix}{c}") for c in df.columns]
-    ).withColumn(
-        "_bucket",
-        F.explode(
-            F.array(
-                bucket_expr(band_col, band, left_prefix, -1),
-                bucket_expr(band_col, band, left_prefix, 0),
-                bucket_expr(band_col, band, left_prefix, 1),
-            )
-        ),
-    )
-    right = df.select(
-        *[F.col(c).alias(f"{right_prefix}{c}") for c in df.columns]
-    ).withColumn("_bucket", F.floor(F.col(f"{right_prefix}{band_col}") / F.lit(band)).cast("long"))
-
-    sl, tl = f"{left_prefix}{band_col}", f"{right_prefix}{band_col}"
-    pairs = (
-        left.join(right, "_bucket")
-        .where(F.col(f"{left_prefix}{id_col}") != F.col(f"{right_prefix}{id_col}"))
-        .where(F.col(tl).between(F.col(sl) - band, F.col(sl) + band))
-        .drop("_bucket")
-        # the probe side carries each row 3× (3 buckets); a candidate pair
-        # can match in at most one of the right side's single buckets, so
-        # no dedup is needed — each (s, t) pair appears exactly once.
-    )
-    return pairs
-
-
-def bucket_expr(band_col: str, band: float, prefix: str, offset: int) -> Column:
-    return (F.floor(F.col(f"{prefix}{band_col}") / F.lit(band)) + offset).cast("long")
 
 
 def banded_cosine_pairs(

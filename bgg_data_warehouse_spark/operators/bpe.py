@@ -27,7 +27,8 @@ Shape at 100 TB — the industrial-trainer decomposition:
   ``localCheckpoint(eager=True)`` — the same idiom as the other
   iterative operators (components.py, pagerank.py) — and each round
   runs as a small eager job under an iteration-sized shuffle width;
-  swap in ``io.storage_pin`` at 100 TB for fault-tolerant state.
+  at 100 TB, pass a pin that round-trips through storage for
+  fault-tolerant state.
 - **Exact by construction**: merge choice is an argmax over INTEGER
   counts with a total deterministic tie-break (count DESC, pair ASC),
   and the greedy left-to-right merge application is a deterministic
@@ -255,8 +256,7 @@ def encode_bpe(
     table is vocabulary-bounded; AQE broadcasts it when small), and
     reassemble in position order with one aggregate — no per-doc window.
     Tokens outside the trained vocabulary are dropped by the inner join
-    (train-on-corpus encodes its own corpus totally; for unseen text
-    apply ``apply_merges_to_words`` first and union).
+    (train-on-corpus encodes its own corpus totally).
     """
     toks = df.select(
         F.col(id_col).alias("doc"),
@@ -275,16 +275,3 @@ def encode_bpe(
             )
         ).alias("pieces_json"),
     )
-
-
-def apply_merges_to_words(
-    words: DataFrame, merges: list[tuple[str, str]], word_col: str = "word"
-) -> DataFrame:
-    """Encode UNSEEN word forms with an already-learned merge list (the
-    tokenizer-model artifact, tiny by construction — collect it once,
-    ship it in the plan): replay each merge in rank order as a static
-    fold chain. Adds a ``syms`` column."""
-    syms = _char_syms(F.col(word_col))
-    for a, b in merges:
-        syms = _apply_merge(syms, F.lit(a), F.lit(b))
-    return words.withColumn("syms", syms)

@@ -84,10 +84,11 @@ def connected_components(
 
     ``pin`` is the per-round materialization hook (same contract as
     ``operators.dedup.Pin``): default ``localCheckpoint(eager=True)`` —
-    right for single-node runs — or pass ``io.storage_pin(dir)`` so
-    iteration state lives on reliable storage instead of executor block
-    managers, the swap a 100 TB cluster run needs (state survives
-    executor loss; lineage truncated identically).
+    right for single-node runs — or pass a pin that writes the frame to
+    reliable storage and reads it back, so iteration state lives there
+    instead of in executor block managers, the swap a 100 TB cluster
+    run needs (state survives executor loss; lineage truncated
+    identically).
     """
     default_pin = pin is None
     if pin is None:
@@ -139,7 +140,7 @@ def connected_components(
             # rejected: the stopping rule then overshoots by a full
             # extra round of |E|-sized work, which cost more than the
             # saved job floor on the fast-converging dup-blob graphs).
-            # A caller-supplied pin (the 100 TB storage_pin swap) is
+            # A caller-supplied pin (a storage round-trip at 100 TB) is
             # honored unchanged.
             # labels are monotonically non-increasing, so the fixed
             # point is reached exactly when the label sum stops falling

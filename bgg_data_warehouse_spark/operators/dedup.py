@@ -474,12 +474,13 @@ def _simhash_sketches(
 ) -> DataFrame:
     """(doc, sketch) via explode → hash-once → single-pass n-bit-sum agg.
 
-    Equivalent to functions.hashing.simhash64 (same sign convention) but
-    shaped for scale: tokens explode into a codegen'd hash aggregate with
-    ``n_bits`` conditional sums — one shuffle on doc id, each token hashed
-    exactly once — instead of evaluating 64 interpreted array folds per
-    row. Documents with zero tokens drop out (they have no meaningful
-    sketch and would otherwise all collide on sketch 0). ``hash_fn``
+    Charikar SimHash: bit i of the sketch is the sign of the sum over
+    tokens of +1/-1 by bit i of the token's hash. Shaped for scale:
+    tokens explode into a codegen'd hash aggregate with ``n_bits``
+    conditional sums — one shuffle on doc id, each token hashed exactly
+    once — instead of 64 interpreted array folds per row. Documents with
+    zero tokens drop out (they have no meaningful sketch and would
+    otherwise all collide on sketch 0). ``hash_fn``
     swaps the token hash (default xxhash64; ``md5_bucket_hash`` for the
     SQL-portable 32-bit variant).
     """

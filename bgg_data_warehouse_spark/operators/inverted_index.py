@@ -6,14 +6,9 @@ search: build once as a table, serve term lookups without touching the
 corpus).
 
 ``inverted_postings`` is the RELATIONAL index — (tok, doc, tf) — which
-is the form that actually ships at 100 TB: written bucketed by ``tok``
-(io.py bucketed tables), a term lookup is a BUCKET-PRUNED scan
-(equality/IN on the bucket column opens 1-of-N bucket files —
-plan-audited via SelectedBucketsCount in tests/test_plan_audit.py),
-and a term-AND then joins only the already-pruned posting lists on
-``doc`` — the exchange it pays is posting-list-sized, never
-index-sized; a hot stopword's posting list is millions of ROWS, which
-Spark spreads across tasks, not a single giant array cell. ``index_summary`` collapses it to one row per
+is the form that actually ships at 100 TB: a hot stopword's posting
+list is millions of ROWS, which Spark spreads across tasks, not a
+single giant array cell. ``index_summary`` collapses it to one row per
 term (df, cf, position-sorted postings rendered as JSON) — the compact
 artifact shape for small vocabularies and the graded rendering.
 """
@@ -49,22 +44,6 @@ def index_summary(postings: DataFrame) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("doc", "tf")))
         ).alias("postings_json"),
     )
-
-
-def term_lookup(postings: DataFrame, terms: list[str]) -> DataFrame:
-    """Serve path: posting rows for a term set — a BUCKET-PRUNED scan
-    when the postings table is stored bucketed by ``tok`` (a
-    ``bucketBy`` + ``saveAsTable`` write): the IN-predicate selects only the
-    matching bucket file groups (SelectedBucketsCount in the plan).
-
-    Operational note, pinned by the plan audit: Spark's
-    DisableUnnecessaryBucketedScan rule turns the bucketed scan off for
-    scan-only plans (nothing downstream consumes the distribution),
-    which ALSO forfeits bucket pruning — a serving tier doing point
-    term lookups should run with
-    ``spark.sql.sources.bucketing.autoBucketedScan.enabled=false`` so
-    the 1-of-N file-group read survives."""
-    return postings.where(F.col("tok").isin(*terms))
 
 
 def update_postings(

@@ -259,7 +259,7 @@ def bigram_perplexity(
     # pin it once; it feeds the model build and the scoring join. The
     # Pin hook (same contract as dedup.py) keeps lifetime with the
     # CALLER — the default cache() is released by clearCache()/unpersist
-    # or a storage_pin swap, instead of a per-invocation persist() leak
+    # or a storage round-trip pin, instead of a per-invocation persist() leak
     # (ADVICE r04 #2).
     doc_bi = pin(doc_bi)
     model = doc_bi.groupBy("a", "b").agg(F.sum("m").alias("cnt"))

@@ -37,13 +37,7 @@ from pyspark.sql import functions as F
 
 from .prefix import running_sums
 
-__all__ = [
-    "two_sample_cum_counts",
-    "ks_statistic",
-    "ks_from_grids",
-    "mwu_from_grids",
-    "MWU_Z_X1E6_SQL",
-]
+__all__ = ["two_sample_cum_counts", "ks_statistic"]
 
 
 def two_sample_cum_counts(
@@ -104,8 +98,7 @@ def ks_statistic(
     at_name: str = "at_value",
 ) -> DataFrame:
     """One-row KS summary from a cumulative-count spine (the output of
-    :func:`two_sample_cum_counts` or :func:`ks_from_grids`' internal
-    grid spine): sample sizes, the EXACT integer fraction
+    :func:`two_sample_cum_counts`): sample sizes, the EXACT integer fraction
     d_num/d_den = max_v |ca·n_b − cb·n_a| / (n_a·n_b), its permyriad
     rendering, and the smallest ``value_col`` attaining the max (a
     deterministic argmax tie-break).
@@ -154,156 +147,3 @@ def ks_statistic(
         )
     )
 
-
-def ks_from_grids(
-    grid_a: DataFrame,
-    grid_b: DataFrame,
-    *,
-    bin_col: str = "bin",
-    count_col: str = "n",
-    at_name: str = "at_bin",
-) -> DataFrame:
-    """KS distance between two HISTOGRAM GRIDS (``operators/sketches.py
-    histogram_sketch`` outputs) — the drift check a streaming ingest
-    runs between a frozen reference window and the live merged sketch.
-    Over bin-granular data the statistic is
-    EXACT (a grid is just a pre-aggregated value column); over raw
-    doubles it is the KS of the binned distributions — the resolution
-    the sketch was built at, which is the honest streaming contract
-    (bounded state can't hold every distinct double).
-
-    Inputs are grid-sized, so every stage here is sketch-bounded:
-    union + re-sum to one row per bin, the bucketed two-pass running
-    sums (no single-task window even for a very fine grid), then the
-    1-row summary.
-    """
-    cum = _grids_to_cum(grid_a, grid_b, bin_col, count_col)
-    return ks_statistic(cum, "_v", at_name=at_name)
-
-
-def _grids_to_cum(
-    grid_a: DataFrame, grid_b: DataFrame, bin_col: str, count_col: str
-) -> DataFrame:
-    """Two histogram grids -> the shared two-sample cumulative spine
-    (_v, ca0, cb0, ca, cb) — union + re-sum to one row per bin, then
-    the bucketed two-pass running sums (no single-task window even for
-    a very fine grid). The pinned spine feeds both the KS max/argmax
-    pair and the MWU aggregate."""
-    a = grid_a.select(
-        F.col(bin_col).alias("_v"),
-        F.col(count_col).cast("long").alias("ca0"),
-        F.lit(0).cast("long").alias("cb0"),
-    )
-    b = grid_b.select(
-        F.col(bin_col).alias("_v"),
-        F.lit(0).cast("long").alias("ca0"),
-        F.col(count_col).cast("long").alias("cb0"),
-    )
-    g = (
-        a.unionByName(b)
-        .groupBy("_v")
-        .agg(
-            F.sum("ca0").cast("long").alias("ca0"),
-            F.sum("cb0").cast("long").alias("cb0"),
-        )
-    )
-    return running_sums(
-        g,
-        ["ca0", "cb0"],
-        F.floor(F.col("_v") / 1024),
-        ["_v"],
-        out_cols=["ca", "cb"],
-    ).localCheckpoint(eager=False)
-
-
-# Micro-scaled normal-approximation z for the Mann-Whitney summary —
-# ONE shared expression string evaluated on identical integers by both
-# engines, so even the double arithmetic is bit-reproducible. The
-# workload gate (workload._MWU_Z) carries the same string; a test pins
-# the two byte-identical so they cannot drift apart.
-MWU_Z_X1E6_SQL = (
-    "CAST(ROUND(1000000 * ((u2_a / 2.0 - CAST(n_a AS DOUBLE) * n_b / 2.0) / "
-    "sqrt((CAST(n_a AS DOUBLE) * n_b / 12.0) * ((n_a + n_b + 1) - "
-    "CAST(tie_term AS DOUBLE) / (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1)))"
-    "))) AS BIGINT) AS z_x1e6"
-)
-
-
-def mwu_from_grids(
-    grid_a: DataFrame,
-    grid_b: DataFrame,
-    *,
-    bin_col: str = "bin",
-    count_col: str = "n",
-) -> DataFrame:
-    """Mann-Whitney 2U + tie-corrected z between two HISTOGRAM GRIDS —
-    the location-shift drift check that complements :func:`ks_from_grids`'
-    shape test in a streaming monitor:
-    KS asks "did the distribution change anywhere", MWU asks "did it
-    systematically move up or down", and a binned stream answers both
-    from the same sketch state. Over bin-granular data the statistic is
-    exact; over raw doubles it is the MWU of the binned distributions —
-    the sketch's resolution, the honest streaming contract.
-
-    Same integer conventions as the ``mannwhitney_u`` gate (each A
-    counts 2 per B below, 1 per tied B — bins ARE tie groups here),
-    but the accumulations run in DECIMAL(38,0), not int64: a streamed
-    sketch can pool BILLIONS of rows into one bin, where a single
-    t^3 term already passes 2^63 (t > ~2.1M) — and even modest bins
-    overflow the SUM long before the per-term bound (sum(t^3) <=
-    max_t^2 * total_rows, so 1M-row bins cap an int64 SUM at ~9e6
-    total rows). Decimal keeps every term and the sum exact through
-    t ~ 4.6e12 per bin.
-
-    z_x1e6 is the gate's shared expression with one guard the raw-data
-    gate does not need: a constant stream puts ALL mass in one pooled
-    bin, making tie_term = n^3 - n and the tie-corrected variance
-    exactly zero — z is then undefined, so the guard emits NULL
-    instead of letting 0/0's NaN cast to a silent 0 ("no shift,
-    perfectly measured").
-
-    Every stage is sketch-bounded: the shared cumulative spine is
-    grid-sized and the summary is one map-side-combinable aggregate.
-    """
-    cum = _grids_to_cum(grid_a, grid_b, bin_col, count_col)
-    dec = 'CAST({} AS DECIMAL(38,0))'
-    agg = cum.agg(
-        F.max("ca").cast("long").alias("n_a"),
-        F.max("cb").cast("long").alias("n_b"),
-        F.sum(
-            F.expr(dec.format("ca0")) * (2 * (F.col("cb") - F.col("cb0")) + F.col("cb0"))
-        )
-        .cast("decimal(38,0)")
-        .alias("u2_a"),
-        F.sum(
-            F.expr(dec.format("ca0 + cb0"))
-            * F.expr(dec.format("ca0 + cb0"))
-            * F.expr(dec.format("ca0 + cb0"))
-            - (F.col("ca0") + F.col("cb0"))
-        )
-        .cast("decimal(38,0)")
-        .alias("tie_term"),
-    )
-    # variance == 0 <=> one side empty (n_a*n_b factor) OR every row
-    # pooled into tie groups: tie_term == (n_a+n_b)^3 - (n_a+n_b),
-    # exactly. The empty-side case must be guarded SEPARATELY — with
-    # one grid empty and the other spread over several bins, tie_term
-    # stays below n^3-n while the n_a*n_b factor still zeroes the
-    # variance, and 0/0's NaN would cast to a silent 0 z.
-    guarded_z = (
-        "CASE WHEN n_a = 0 OR n_b = 0"
-        " OR tie_term = CAST(n_a + n_b AS DECIMAL(38,0))"
-        " * (n_a + n_b - 1) * (n_a + n_b + 1)"
-        " THEN CAST(NULL AS BIGINT) ELSE "
-        + MWU_Z_X1E6_SQL.removesuffix(" AS z_x1e6")
-        + " END AS z_x1e6"
-    )
-    return agg.selectExpr(
-        "n_a",
-        "n_b",
-        "u2_a",
-        "CAST(CAST(2 AS DECIMAL(38,0)) * n_a * n_b - u2_a"
-        " AS DECIMAL(38,0)) AS u2_b",
-        "tie_term",
-        guarded_z,
-    )

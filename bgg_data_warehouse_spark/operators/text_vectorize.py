@@ -1,11 +1,9 @@
 """Deterministic text vectorization: hashing-trick count vectors.
 
 Bridges the text and vector halves of the pipeline without any model:
-tokens hash into ``dim`` buckets (feature hashing / "hashing trick"),
-counts accumulate per bucket, and the L2-normalized result feeds the same
-ANN / near-dup operators the float-embedding column uses. All JVM-side:
-explode → hash → pivot-free aggregation → array assembly, one shuffle on
-the doc id.
+tokens hash into ``dim`` buckets (feature hashing / "hashing trick") and
+counts accumulate per bucket. All JVM-side: explode → hash → pivot-free
+aggregation, one shuffle on the doc id.
 """
 
 from __future__ import annotations
@@ -46,8 +44,7 @@ def hashed_count_sparse(
     consume when it can: a dot product over sparse counts is a
     bucket-equi-join + hash aggregate (O(nnz), all JVM codegen), versus
     O(dim) higher-order-function lambda evaluations per pair on the
-    densified array. ``hashed_count_vectors`` densifies this same
-    output for consumers that genuinely need fixed-width arrays.
+    densified array.
     """
     toks = df.select(
         F.col(id_col).alias("doc"),
@@ -75,50 +72,6 @@ def hashed_count_sparse(
         "bucket", F.pmod(F.xxhash64("tok"), F.lit(dim)).cast("int")
     )
     return toks.groupBy("doc", "bucket").agg(F.count("*").alias("n"))
-
-
-def hashed_count_vectors(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    dim: int = 64,
-    normalize: bool = True,
-    portable: bool = False,
-) -> DataFrame:
-    """(doc, vector: array<double>) — hashed token counts, optionally L2-normed.
-
-    Bucket = xxhash64(token) mod dim (or the SQL-portable rolling hash
-    with ``portable=True``). The per-doc aggregation builds a
-    bucket→count map (partial aggregation keeps the shuffle at
-    O(docs·distinct_buckets)), then densifies to a fixed-width array.
-    """
-    counts = hashed_count_sparse(
-        df, id_col, text_col, dim=dim, portable=portable
-    )
-    per_doc = counts.groupBy("doc").agg(
-        F.map_from_entries(F.collect_list(F.struct("bucket", "n"))).alias("m")
-    )
-    vec = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.coalesce(F.element_at(F.col("m"), i.cast("int")), F.lit(0)).cast("double"),
-    )
-    out = per_doc.withColumn("vector", vec).drop("m")
-    if normalize:
-        # norm materialized as a column: referenced once per element in the
-        # transform below — as a raw expression it would re-run the whole
-        # fold per element (the HOF-inlining trap)
-        out = out.withColumn(
-            "_norm",
-            F.sqrt(F.aggregate(F.col("vector"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-        out = out.withColumn(
-            "vector",
-            F.when(F.col("_norm") == 0, F.col("vector")).otherwise(
-                F.transform(F.col("vector"), lambda x: x / F.col("_norm"))
-            ),
-        ).drop("_norm")
-    return out
 
 
 def build_vocab(df: DataFrame, text_col: str, *, size: int) -> DataFrame:

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -49,19 +49,3 @@ def zvalue_sql(x: str, y: str, *, bits: int = 16) -> str:
         terms.append(f"(((CAST({x} AS BIGINT) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((CAST({y} AS BIGINT) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"
-
-
-def zorder_layout(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    *,
-    bits: int = 16,
-    num_files: int = 32,
-) -> DataFrame:
-    """Attach the Morton code and range-partition on it — the write-side
-    layout step. Files then carry tight z min/max zone maps; a reader's
-    x- or y-predicate maps to a z-range and prunes files on either
-    dimension."""
-    coded = df.withColumn("zval", zvalue(F.col(x_col), F.col(y_col), bits=bits))
-    return coded.repartitionByRange(num_files, "zval").sortWithinPartitions("zval")

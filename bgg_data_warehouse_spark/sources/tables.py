@@ -161,14 +161,3 @@ def load_events_after(spark: SparkSession, sf_dir: str, watermark_utc: str) -> D
     if isinstance(ts_type, T.TimestampNTZType):
         out = out.withColumn("ts", F.col("ts").cast("timestamp"))
     return out
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    use = names or TESTDATA_TABLES
-    return {n: load_table(spark, sf_dir, n) for n in use}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register testdata tables as temp views for the SQL API."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)

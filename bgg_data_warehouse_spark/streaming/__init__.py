@@ -1,4 +1,4 @@
-from .incremental import high_watermark, merge_by_unique_key, incremental_refresh
+from .incremental import high_watermark
 from . import tracking
 
-__all__ = ["high_watermark", "merge_by_unique_key", "incremental_refresh", "tracking"]
+__all__ = ["high_watermark", "tracking"]

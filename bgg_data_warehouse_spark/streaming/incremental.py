@@ -1,10 +1,12 @@
-"""Incremental-model machinery (I1): watermark + MERGE-by-uniqueKey.
+"""Incremental-model machinery (I1): the watermark and the changed-key
+set one incremental DAG run is scoped to.
 
 Dataform semantics being mirrored (`/root/reference/definitions/
 games_features.sqlx:2-11,99`): on an incremental run the model body sees
 only source rows past ``(SELECT MAX(ts) FROM self)`` and the output is
-MERGEd into the existing table on ``uniqueKey``. The watermark lives IN
-the target table (no side-store), exactly like the reference — and the
+MERGEd into the existing table on ``uniqueKey`` (the merge itself is
+``ModelDag.run_persisted``'s delete+insert). The watermark lives IN the
+target table (no side-store), exactly like the reference — and the
 8 s-vs-4 h lesson (BASELINE.md item 3) is preserved: the source filter
 happens before any join/aggregate.
 
@@ -15,12 +17,11 @@ the target silently degrades to a full scan (`docs/dataform_operations.md:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.latest import latest_per_key
 from .. import io
 
 
@@ -47,28 +48,6 @@ def changed_key_set(source: DataFrame, ts_col: str, wm, key_cols: Sequence[str])
     return watermark_filter(source, ts_col, wm).select(*key_cols).distinct()
 
 
-def merge_by_unique_key(
-    existing: DataFrame,
-    fresh: DataFrame,
-    unique_key: Sequence[str],
-    order_by: Sequence[Column],
-) -> DataFrame:
-    """Dataform incremental MERGE: fresh rows replace same-key rows.
-
-    union + latest-per-key with fresh rows winning ties — equivalent to
-    ``MERGE WHEN MATCHED UPDATE / NOT MATCHED INSERT`` for whole-row
-    updates. ``order_by`` must rank fresher rows first.
-    """
-    tagged_old = existing.withColumn("_src", F.lit(0))
-    tagged_new = fresh.select(*existing.columns).withColumn("_src", F.lit(1))
-    merged = latest_per_key(
-        tagged_old.unionByName(tagged_new),
-        list(unique_key),
-        [*order_by, F.col("_src").desc()],
-    )
-    return merged.drop("_src")
-
-
 def incremental_dag_cycle(
     spark: SparkSession,
     dag,
@@ -93,35 +72,3 @@ def incremental_dag_cycle(
     return dag.run_persisted(
         spark, tables, root, list(targets) if targets else None, changed_keys=changed
     )
-
-
-def incremental_refresh(
-    spark: SparkSession,
-    root: str,
-    name: str,
-    build: Callable[[DataFrame], DataFrame],
-    source: DataFrame,
-    source_ts_col: str,
-    target_ts_col: str,
-    unique_key: Sequence[str],
-) -> DataFrame:
-    """Run one incremental cycle against a persisted target table.
-
-    build() receives the watermark-scoped source slice (I1) and returns
-    rows to merge; for the DAG-wide J6 changed-keys scoping see
-    ``ModelDag.run_persisted(changed_keys=...)`` + ``changed_key_set``.
-    First run = full refresh.
-    """
-    io.recover_table(root, name)  # crashed swap must not read as "first run"
-    if not io.table_exists(root, name):
-        out = build(source)
-        io.write_table(out, root, name)
-        return out
-    target = io.read_table(spark, root, name)
-    wm = high_watermark(target, target_ts_col)
-    fresh = build(watermark_filter(source, source_ts_col, wm))
-    merged = merge_by_unique_key(
-        target, fresh, unique_key, [F.col(target_ts_col).desc()]
-    )
-    io._rewrite(merged, root, name)
-    return io.read_table(spark, root, name)

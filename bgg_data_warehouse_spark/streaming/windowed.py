@@ -1,80 +1,19 @@
-"""Watermarked windowed aggregation — the streaming twin of
-``hourly_event_rollup``.
+"""Watermarked session windows — the streaming twin of the batch
+``sessionize`` query.
 
-``readStream → withWatermark → window-groupBy → writeStream`` is the
-canonical Structured Streaming shape for event-time rollups with
-bounded state: the watermark lets the engine (a) finalize and emit a
-window once event time passes its end + delay (append mode), and (b)
-EVICT that window's state, so a 100 TB/day stream holds only
-``delay / window`` windows of state per key instead of growing forever.
-Rows arriving later than the watermark are dropped — both behaviors are
-pinned by tests/test_streaming_windowed.py (batch-equivalence under
-``complete`` mode, late-row eviction under ``append`` with per-file
-triggers).
-
-Reference parity: the reference's streaming row inserts
-(src/services/live ingest, SURVEY §2 S8) feed the same hourly rollup
-this computes; the watermark/eviction machinery is the Spark-native
-replacement for its cron-driven re-aggregation.
+``readStream → withWatermark → session_window-groupBy → writeStream``
+is the Structured Streaming shape for event-time sessions with bounded
+state: the watermark lets the engine (a) finalize and emit a session
+once event time passes its end + delay (append mode), and (b) EVICT
+that session's state, so a stream holds only the open sessions inside
+the watermark horizon instead of growing forever. Both behaviours are
+pinned by tests/test_streaming_windowed.py.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def windowed_event_rollup(
-    stream: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
-    """Event-time windowed counts/sums with a late-data watermark.
-
-    Works on a streaming OR batch DataFrame (the plan is identical —
-    ``withWatermark`` is a no-op in batch), which is what the
-    equivalence test exploits."""
-    return (
-        stream.withWatermark(ts_col, watermark_delay)
-        .groupBy(F.window(ts_col, window).alias("w"), key_col)
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-            ).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            key_col,
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def enrich_stream(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
-    """Stream-static enrichment join: each micro-batch joins against the
-    CURRENT state of the static (or slowly-refreshed) dimension — the
-    standard serving-side pattern for attaching features to a live
-    stream. Spark plans the static side as a broadcast per micro-batch
-    when small; no stream-side state is kept."""
-    return stream.join(dim, on, "left")
-
-
-def dedup_stream_exact(
-    stream: DataFrame, id_cols: list[str], *, ts_col: str, delay: str
-) -> DataFrame:
-    """Exact streaming deduplication with BOUNDED state:
-    ``dropDuplicatesWithinWatermark`` keeps each key only until the
-    watermark passes its event time + delay, so state size tracks the
-    delay window, not the stream's lifetime — the streaming twin of
-    ``dedup_exact`` (a plain dropDuplicates would grow state forever)."""
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(
-        id_cols
-    )
 
 
 def session_rollup(
@@ -114,37 +53,3 @@ def session_rollup(
             "session_end",
         )
     )
-
-
-def interval_join_streams(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    within: str = "1 hour",
-    watermark_delay: str = "2 hours",
-) -> DataFrame:
-    """Stream-STREAM inner join on a key within a time interval —
-    right-side events joined to each left event they follow within
-    ``within`` (click -> purchase attribution). Both sides carry
-    watermarks and the join condition time-bounds right against left,
-    which is exactly what lets Structured Streaming EVICT buffered rows:
-    a left row leaves state once the right watermark passes
-    left_ts + within; a right row once the left watermark passes its
-    own ts. Without the time bound, stream-stream state grows forever —
-    the condition is a correctness-of-scale requirement, not an
-    optimization. Works identically on batch frames (the equivalence
-    test runs both)."""
-    l = left.withWatermark(left_ts, watermark_delay)
-    r = right.withWatermark(right_ts, watermark_delay)
-    cond = (
-        (l[key] == r[key])
-        & (r[right_ts] >= l[left_ts])
-        & (r[right_ts] <= l[left_ts] + F.expr(f"interval {within}"))
-    )
-    # expression-condition joins keep BOTH sides' key columns; drop the
-    # right one so callers can select the key by name without hitting an
-    # ambiguous-column error (the values are equal by the join condition)
-    return l.join(r, cond, "inner").drop(r[key])

@@ -6334,11 +6334,11 @@ def cdc_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdc_log_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LOGGED CDC state store end-to-end (streaming/cdc.py::
-    apply_cdc_log_batch over log_store.py, r13 VERDICT #2 — the
-    delta-sized-write answer to apply_cdc_batch's snapshot-rewrite
-    floor): the cdc_upsert changelog (events keyed into customer's key
-    space, 'error' rows as deletes, LWW on (ts, event_id)) is split
-    into THREE epochs by thirds of its timestamp span and applied to a
+    apply_cdc_log_batch over log_store.py, r13 VERDICT #2 — a
+    delta-sized write instead of a snapshot rewrite per epoch): the
+    cdc_upsert changelog (events keyed into customer's key space,
+    'error' rows as deletes, LWW on (ts, event_id)) is split into
+    THREE epochs by thirds of its timestamp span and applied to a
     stored customer snapshot as parquet GENERATIONS — each epoch lands
     only its per-key LWW survivors ('U' images as rows, 'D' keys as
     tombstones), never reading or rewriting the snapshot. Because the
@@ -9032,7 +9032,6 @@ from .operators.label_prop import (  # noqa: E402
     basket_sets,
     canonical_pairs_from_baskets,
     cooccurrence_edges,
-    label_propagation,
     label_propagation_from_baskets,
     lpa_oracle_sql,
 )
@@ -11412,10 +11411,8 @@ def mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-term cube: e.g. 1M-row tie groups cap N at ~9.2e6, and a
     single group past ~2.1M rows overflows alone), and u2_a while
     n_a*n_b < ~4.6e18; past either bound the 100-TB form lifts the
-    accumulation to DECIMAL(38,0) exactly as
-    operators/stats_tests.mwu_from_grids does for sketch bins — at
-    this gate's scales both bounds are satisfied by orders of
-    magnitude.
+    accumulation to DECIMAL(38,0) — at this gate's scales both bounds
+    are satisfied by orders of magnitude.
 
     Same distributed spine as ks_two_sample (bucketed two-pass
     cumulative counts, operators/stats_tests.py): the oracle's bare

@@ -72,22 +72,6 @@ def test_learn_bpe_hand_case(spark):
     assert enc[2].n_pieces == 7
 
 
-def test_apply_merge_is_greedy_left_to_right(spark):
-    """Overlapping occurrences: 'aaaa' under (a,a) must become
-    ['aa','aa'], 'aaa' must become ['aa','a'] — never re-merge into the
-    freshly created symbol."""
-    from bgg_data_warehouse_spark.operators.bpe import apply_merges_to_words
-
-    df = spark.createDataFrame([("aaa",), ("aaaa",), ("ab",)], "word string")
-    out = {
-        r.word: r.syms
-        for r in apply_merges_to_words(df, [("a", "a")]).collect()
-    }
-    assert out["aaa"] == ["aa", "a"]
-    assert out["aaaa"] == ["aa", "aa"]
-    assert out["ab"] == ["a", "b"]
-
-
 def test_learn_bpe_exhausted_pairs_is_safe(spark):
     """A corpus of single-character words has no pairs: zero merge rows,
     and the word table must survive untouched (the empty-argmax round

@@ -109,58 +109,6 @@ def test_star_variant_matches_hash_min_on_chain_and_random(spark):
                 assert got[n] == c, (edges, n, contract)
 
 
-def test_storage_pin_swap_runs_and_matches(spark, tmp_path):
-    """The documented 100-TB swap actually runs: connected_components and
-    minhash_lsh_pairs with io.storage_pin (parquet round-trip instead of
-    localCheckpoint/cache) produce byte-identical results to the default
-    in-memory pin, and the pinned state demonstrably lives on storage."""
-    import os
-
-    from bgg_data_warehouse_spark.io import storage_pin
-    from bgg_data_warehouse_spark.operators.dedup import minhash_lsh_pairs
-
-    rng = random.Random(17)
-    edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(40)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "src: long, dst: long")
-    pin_dir = str(tmp_path / "cc_pins")
-    got = {
-        (r.node, r.canonical)
-        for r in connected_components(
-            df, "src", "dst", pin=storage_pin(pin_dir)
-        ).collect()
-    }
-    want = {
-        (r.node, r.canonical)
-        for r in connected_components(df, "src", "dst").collect()
-    }
-    assert got == want
-    # state really went through storage: one subdir per pinned frame
-    assert len(os.listdir(pin_dir)) >= 3  # edges + init labels + >=1 round
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy dog"),
-            (3, "a completely different document body here"),
-        ],
-        "doc_id long, text string",
-    )
-    mh_dir = str(tmp_path / "mh_pins")
-    got_pairs = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(
-            docs, "doc_id", "text", pin=storage_pin(mh_dir)
-        ).collect()
-    }
-    want_pairs = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs(docs, "doc_id", "text").collect()
-    }
-    assert got_pairs == want_pairs and (1, 2, 1.0) in got_pairs
-    assert len(os.listdir(mh_dir)) >= 1
-
-
 def test_incremental_update_matches_full_recompute_both_solve_paths(spark):
     """incremental_components_update == CC(base ∪ delta) on a mixed
     delta: segment-merging edges, an intra-component no-op edge, and

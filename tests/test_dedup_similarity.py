@@ -221,27 +221,6 @@ def test_brute_force_excludes_self_and_ranks_desc(spark):
     assert sims == sorted(sims, reverse=True)
 
 
-def test_hashed_count_vectors_deterministic_and_normalized(spark):
-    from bgg_data_warehouse_spark.operators.text_vectorize import hashed_count_vectors
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma alpha"), (2, "alpha beta gamma alpha"), (3, "zeta eta")],
-        "doc_id long, text string",
-    )
-    vecs = {r.doc: r.vector for r in hashed_count_vectors(docs, "doc_id", "text", dim=16).collect()}
-    assert vecs[1] == vecs[2]  # identical text → identical vector
-    assert vecs[1] != vecs[3]
-    for v in vecs.values():
-        assert abs(sum(x * x for x in v) - 1.0) < 1e-9  # unit norm
-    # unnormalized counts: 'alpha' appears twice → some bucket holds 2.0
-    raw = {
-        r.doc: r.vector
-        for r in hashed_count_vectors(docs, "doc_id", "text", dim=16, normalize=False).collect()
-    }
-    assert 2.0 in raw[1]
-    assert sum(raw[1]) == 4.0  # 4 tokens total
-
-
 def test_substring_dedup_removes_later_spans_only(spark):
     from bgg_data_warehouse_spark.operators.dedup import substring_dedup
 

@@ -182,9 +182,9 @@ def test_incremental_curation_cycle(spark, tmp_path):
         quality_score_cols,
         word_tokens,
     )
+    from bgg_data_warehouse_spark.operators.merge import delete_insert
     from bgg_data_warehouse_spark.streaming.incremental import (
         high_watermark,
-        merge_by_unique_key,
         watermark_filter,
     )
 
@@ -219,9 +219,7 @@ def test_incremental_curation_cycle(spark, tmp_path):
     assert wm == t1
     fresh_in = watermark_filter(all_docs, "ts", wm)
     assert fresh_in.count() == 15  # ONLY the new batch is curated
-    merged = merge_by_unique_key(
-        curated, curate(fresh_in), ["doc_id"], [F.col("ts").desc()]
-    )
+    merged = delete_insert(curated, curate(fresh_in), ["doc_id"])
     io.rewrite_table(merged, root, "curated_docs")
 
     got = io.read_table(spark, root, "curated_docs")

@@ -50,7 +50,6 @@ def test_tokenizers_and_shingles(spark):
     from bgg_data_warehouse_spark.functions.text import (
         token_count_bpeish,
         whitespace_tokens,
-        word_shingles,
         word_tokens,
     )
 
@@ -60,24 +59,11 @@ def test_tokenizers_and_shingles(spark):
             whitespace_tokens(F.col("text")).alias("ws"),
             word_tokens(F.col("text")).alias("words"),
             token_count_bpeish(F.col("text")).alias("bpe"),
-            word_shingles(F.col("text"), 3).alias("sh3"),
         )
     )
     assert row.ws == ["Hello", "World,", "nice", "day", "today"]
     assert row.words == ["hello", "world,", "nice", "day", "today"]
     assert row.bpe == 6  # 5 words + 1 comma
-    assert row.sh3 == [
-        "hello world, nice",
-        "world, nice day",
-        "nice day today",
-    ]
-    # fewer tokens than k -> empty array
-    short = _one(
-        spark.createDataFrame([("one two",)], "text string").select(
-            word_shingles(F.col("text"), 3).alias("sh")
-        )
-    )
-    assert short.sh == []
 
 
 def test_predict_lang_stopword_argmax(spark):
@@ -109,35 +95,16 @@ def test_content_fingerprint_change_detection(spark):
     assert rows[0].h != rows[2].h  # any field change flips the hash
 
 
-def test_minhash_identical_docs_identical_signatures(spark):
-    from bgg_data_warehouse_spark.functions.hashing import minhash_signature
-    from bgg_data_warehouse_spark.functions.text import word_shingles
-
-    text = "spark engine window join filter aggregate shuffle partition"
-    df = spark.createDataFrame([(1, text), (2, text), (3, "totally different words here now")],
-                               "id long, text string")
-    sigs = df.select(
-        "id", minhash_signature(word_shingles(F.col("text"), 3), 16).alias("sig")
-    ).collect()
-    by_id = {r.id: r.sig for r in sigs}
-    assert by_id[1] == by_id[2]
-    assert by_id[1] != by_id[3]
-    assert len(by_id[1]) == 16
-    # 16 slots use 16 distinct seeds — a signature of identical values
-    # would mean the seed is being ignored (the default-arg lambda bug)
-    assert len(set(by_id[1])) > 1
-
-
 def test_simhash_near_duplicates_have_small_hamming(spark):
-    from bgg_data_warehouse_spark.functions.hashing import hamming64, simhash64
-    from bgg_data_warehouse_spark.functions.text import word_tokens
+    from bgg_data_warehouse_spark.functions.hashing import hamming64
+    from bgg_data_warehouse_spark.operators.dedup import _simhash_sketches
 
     base = "the quick brown fox jumps over the lazy dog near the river bank " * 4
     near = base.replace("river", "creek")
     far = "completely unrelated content about database query optimizers and planners"
     df = spark.createDataFrame([(1, base), (2, near), (3, far)], "id long, text string")
-    sk = df.select("id", simhash64(word_tokens(F.col("text"))).alias("s"))
-    a, b, c = [r.s for r in sk.orderBy("id").collect()]
+    sk = _simhash_sketches(df, "id", "text")
+    a, b, c = [r.sketch for r in sk.orderBy("doc").collect()]
     dist = spark.createDataFrame([(a, b), (a, c)], "x long, y long").select(
         hamming64(F.col("x"), F.col("y")).alias("d")
     ).collect()

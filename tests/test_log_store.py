@@ -11,6 +11,7 @@ import os
 
 from pyspark.sql import functions as F
 
+from bgg_data_warehouse_spark import log_store
 from bgg_data_warehouse_spark.log_store import (
     _base_path,
     _delta_dirs,
@@ -179,7 +180,7 @@ def test_read_merge_base_anti_is_broadcast(spark, tmp_path, monkeypatch):
     # fast path: filter exit, no join of base at all
     assert "LeftAnti" not in plan and "SortMergeJoin" not in plan
     assert "NOT doc" in plan or "isnull" in plan.lower()
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MERGE", "0")
+    monkeypatch.setattr(log_store, "DRIVER_MERGE", False)
     plan_dist = (
         read_log_store(spark, root, "idx", "doc")
         ._jdf.queryExecution()
@@ -209,7 +210,7 @@ def test_merge_broadcast_hint_has_absolute_bound(spark, tmp_path, monkeypatch):
 
     # the hint pin concerns the DISTRIBUTED merge (the r16 driver-merge
     # fast path has no join to hint — pinned elsewhere)
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MERGE", "0")
+    monkeypatch.setattr(log_store, "DRIVER_MERGE", False)
     assert anti_hinted(read_log_store(spark, root, "idx", "doc"))
     monkeypatch.setattr(ls, "BROADCAST_TOUCHED_MAX_BYTES", 0)
     over = read_log_store(spark, root, "idx", "doc")
@@ -559,7 +560,7 @@ def test_term_filter_pushes_into_generational_scans(
     too) is the only one that touches real files."""
     root = str(tmp_path)
     _store(spark, root)
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MERGE", "0")
+    monkeypatch.setattr(log_store, "DRIVER_MERGE", False)
     df = read_log_store(spark, root, "idx", "doc").where(F.col("tok") == "x")
     plan = df._jdf.queryExecution().executedPlan().toString()
     # every parquet scan of rows data carries the pushed tok filter
@@ -571,7 +572,7 @@ def test_term_filter_pushes_into_generational_scans(
     assert {(r.doc, r.tok, r.tf) for r in df.collect()} == {(1, "x", 9)}
     # driver-merge path: identical contents, and the BASE scan still
     # carries the pushed filter (the generation side is driver-held)
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MERGE", "1")
+    monkeypatch.setattr(log_store, "DRIVER_MERGE", True)
     df_fast = read_log_store(spark, root, "idx", "doc").where(
         F.col("tok") == "x"
     )
@@ -826,7 +827,7 @@ def test_merge_broadcast_hint_has_row_bound(spark, tmp_path, monkeypatch):
 
     # the hint pin concerns the DISTRIBUTED merge (the r16 driver-merge
     # fast path has no join to hint)
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MERGE", "0")
+    monkeypatch.setattr(log_store, "DRIVER_MERGE", False)
     assert anti_hinted(read_log_store(spark, root, "idx", "doc"))
     # rows over the (monkeypatched) row bound, bytes far under the
     # byte bound — exactly the tombstone-only inversion
@@ -863,7 +864,7 @@ def test_driver_merge_matches_distributed_merge(spark, tmp_path, monkeypatch):
     fast = read_log_store(spark, root, "idx", "doc")
     assert "LogicalRDD" in fast._jdf.queryExecution().optimizedPlan().toString()
     assert _contents(fast) == want
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MERGE", "0")
+    monkeypatch.setattr(log_store, "DRIVER_MERGE", False)
     slow = read_log_store(spark, root, "idx", "doc")
     assert (
         "LogicalRDD" not in slow._jdf.queryExecution().optimizedPlan().toString()

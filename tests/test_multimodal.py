@@ -28,20 +28,6 @@ def test_asset_schema(assets):
     assert row.meta.n_bytes == 180
 
 
-def test_extract_image_features_deterministic(spark, assets):
-    from bgg_data_warehouse_spark.multimodal import extract_image_features
-
-    out1 = {r.asset_id: r for r in extract_image_features(assets).collect()}
-    out2 = {r.asset_id: r for r in extract_image_features(assets).collect()}
-    assert out1.keys() == {1, 2, 3}
-    for k in out1:
-        assert out1[k] == out2[k]
-    r = out1[1]
-    assert r.n_bytes == 180
-    assert 1 <= r.width <= 64 and 1 <= r.height <= 64
-    assert r.mean_byte == sum(b"abcdef" * 30) / 180
-
-
 def test_real_decode_unsupported_format_raises():
     from bgg_data_warehouse_spark.multimodal import decode_image
 

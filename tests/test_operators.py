@@ -68,31 +68,6 @@ def test_delete_insert_replaces_all_rows_for_key(spark):
     assert got == {(1, 9, "r"), (2, 1, "z")}
 
 
-def test_band_self_join_matches_naive_theta_join(spark):
-    from bgg_data_warehouse_spark.operators.band_join import band_self_join
-
-    df = spark.createDataFrame(
-        [(i, float(v)) for i, v in enumerate([1.0, 1.5, 2.1, 3.9, 4.0, 10.0])],
-        "id long, cx double",
-    )
-    band = 0.75
-    got = {
-        (r.s_id, r.t_id)
-        for r in band_self_join(df, "id", "cx", band).collect()
-    }
-    rows = df.collect()
-    expect = {
-        (a.id, b.id)
-        for a in rows
-        for b in rows
-        if a.id != b.id and abs(a.cx - b.cx) <= band
-    }
-    assert got == expect
-    # no duplicate pairs from the 3-bucket explode
-    pairs = [(r.s_id, r.t_id) for r in band_self_join(df, "id", "cx", band).collect()]
-    assert len(pairs) == len(set(pairs))
-
-
 def test_salted_join_row_identical_to_plain_join(spark):
     from bgg_data_warehouse_spark.operators.skew import salted_join
 
@@ -174,13 +149,12 @@ def test_validity_intervals_tile_without_overlap(spark):
 
 def test_inverted_index_postings_and_lookup(spark):
     """Postings carry exact tf per (term, doc); the summary's JSON list
-    is doc-sorted; term_lookup returns only the asked terms."""
+    is doc-sorted."""
     import json
 
     from bgg_data_warehouse_spark.operators.inverted_index import (
         index_summary,
         inverted_postings,
-        term_lookup,
     )
 
     df = spark.createDataFrame(
@@ -197,8 +171,6 @@ def test_inverted_index_postings_and_lookup(spark):
     assert json.loads(summ["c"].postings_json) == [
         {"doc": 2, "tf": 1}, {"doc": 3, "tf": 2},
     ]
-    hits = term_lookup(postings, ["a"]).collect()
-    assert {r.tok for r in hits} == {"a"} and len(hits) == 2
 
 
 def test_profile_columns_single_pass_and_nulls(spark):

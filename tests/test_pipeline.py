@@ -122,38 +122,6 @@ def test_ingest_table_reads_start_no_job(spark, tmp_path):
 # --------------------------------------------------- incremental (I1)
 
 
-def test_incremental_refresh_merges_and_scopes(spark, tmp_path):
-    root = str(tmp_path)
-    s1 = spark.createDataFrame(
-        [(1, "a", T0), (2, "b", T0)], "id long, v string, ts timestamp"
-    )
-
-    seen_rows = []
-
-    def build(src):
-        seen_rows.append({(r.id, r.v) for r in src.collect()})
-        return src
-
-    out1 = incremental.incremental_refresh(
-        spark, root, "t", build, s1, "ts", "ts", ["id"]
-    )
-    assert {(r.id, r.v) for r in out1.collect()} == {(1, "a"), (2, "b")}
-
-    s2 = s1.unionByName(
-        spark.createDataFrame(
-            [(2, "b2", T0 + timedelta(days=1)), (3, "c", T0 + timedelta(days=1))],
-            "id long, v string, ts timestamp",
-        )
-    )
-    out2 = incremental.incremental_refresh(
-        spark, root, "t", build, s2, "ts", "ts", ["id"]
-    )
-    # second build saw ONLY the post-watermark slice (the 8s-vs-4h lesson)
-    assert seen_rows[1] == {(2, "b2"), (3, "c")}
-    got = {(r.id, r.v) for r in out2.collect()}
-    assert got == {(1, "a"), (2, "b2"), (3, "c")}  # MERGE: 2 updated, 3 inserted
-
-
 def test_watermark_missing_column_is_loud(spark):
     df = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(ValueError, match="watermark column"):
@@ -433,7 +401,8 @@ def test_process_batch_job_floor(spark, refetched):
 def test_crash_mid_batch_leaves_the_batch_pending(spark, refetched, monkeypatch):
     """The status write is the batch's last write: a failure in the
     fan-out writes records nothing, and the next run processes the
-    whole batch again."""
+    whole batch again. The retry's S4 appends replace the crashed run's
+    files, so each game has one row per append table at the load time."""
     from bgg_data_warehouse_spark import pipeline
 
     root, client, t1 = refetched
@@ -456,6 +425,9 @@ def test_crash_mid_batch_leaves_the_batch_pending(spark, refetched, monkeypatch)
     assert status.where("process_status = 'success'").count() == statuses + 2
     pc = io.read_table(spark, root, "player_counts")
     assert pc.where("game_id = 13").count() == 2  # replaced, not doubled
+    for name in ("games", "rankings"):
+        at_t1 = io.read_table(spark, root, name).where(F.col("load_timestamp") == F.lit(t1))
+        assert sorted(r.game_id for r in at_t1.collect()) == [13, 14], name
 
 
 # ------------------------------------------------------------- readers

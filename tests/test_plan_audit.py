@@ -858,48 +858,6 @@ def _scan_output_rows(df) -> int:
     return total
 
 
-def test_zorder_rewrite_prunes_row_groups_on_2d_range(spark, tmp_path):
-    """Zone-map skipping audit (r10 VERDICT #5): after an OPTIMIZE-ZORDER
-    rewrite, a 2-D range predicate must actually READ less data — the
-    Spark analog of the reference's 85.8% clustering-prune measurement
-    (BASELINE.md, spec :35-36). `zorder_layout` gates the Morton codes;
-    this pins the LAYOUT EFFECT: parquet min/max stats per file/row-group
-    are tight under z-order, so the scan materializes a small fraction
-    of rows for a small 2-D box, while the same predicate over the same
-    rows in insertion order materializes nearly everything. Red test if
-    pruning stops firing (stats dropped, pushdown disabled, or the
-    rewrite stops clustering)."""
-    from bgg_data_warehouse_spark.operators.zorder import zorder_layout
-    from pyspark.sql import functions as F
-
-    n = 300_000
-    base = spark.range(n).select(
-        F.col("id"),
-        F.pmod(F.xxhash64("id"), F.lit(1024)).alias("x"),
-        F.pmod(F.xxhash64("id", F.lit(7)), F.lit(1024)).alias("y"),
-    )
-    z_dir = str(tmp_path / "zordered")
-    lin_dir = str(tmp_path / "linear")
-    zorder_layout(base, "x", "y", bits=10, num_files=64).write.parquet(z_dir)
-    base.repartition(64, "id").write.parquet(lin_dir)
-
-    pred = "x BETWEEN 100 AND 131 AND y BETWEEN 200 AND 231"
-    z_df = spark.read.parquet(z_dir).where(pred)
-    lin_df = spark.read.parquet(lin_dir).where(pred)
-    n_match = z_df.count()
-    assert n_match == lin_df.count()  # same rows either way
-
-    z_df.collect()
-    lin_df.collect()
-    z_read = _scan_output_rows(z_df)
-    lin_read = _scan_output_rows(lin_df)
-    # the 32x32 box is ~0.1% of the 1024x1024 domain; z-order must keep
-    # the materialized fraction small while the linear layout reads ~all
-    assert z_read <= n // 4, (z_read, n)
-    assert lin_read >= n * 9 // 10, (lin_read, n)
-    assert z_read * 4 <= lin_read, (z_read, lin_read)
-
-
 def test_cc_incremental_delete_prunes_unaffected_component_partitions(spark, tmp_path):
     """The delete-side localization contract (r10 VERDICT #4): with the
     production layout — stored edges PARTITIONED by their component id
@@ -987,65 +945,6 @@ def test_inverted_index_update_tombstones_map_side(spark):
     anti = [l for l in plan.splitlines() if "LeftAnti" in l]
     assert anti, plan[:2000]
     assert all("BroadcastHashJoin" in l for l in anti), anti
-
-
-def test_term_lookup_bucket_prunes_on_stored_postings(spark, tmp_path):
-    """The serve-path claim in operators/inverted_index.py: postings
-    stored bucketed by tok make a term lookup a BUCKET-PRUNED scan —
-    the equality/IN predicate selects 1-of-N bucket file groups
-    (SelectedBucketsCount) instead of scanning the index, and the
-    term-AND that follows joins only the pruned posting lists."""
-    from pyspark.sql import functions as F
-
-    from bgg_data_warehouse_spark.operators.inverted_index import (
-        inverted_postings,
-        term_lookup,
-    )
-    from bgg_data_warehouse_spark.sources.tables import load_table
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    postings = inverted_postings(docs, "doc_id", "text")
-    qualified = "default.postings_b"
-    (
-        postings.write.mode("overwrite")
-        .bucketBy(8, "tok")
-        .sortBy("tok")
-        .option("path", str(tmp_path / "postings_b"))
-        .saveAsTable(qualified)
-    )
-    prev = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    try:
-        # the planner's DisableUnnecessaryBucketedScan rule turns the
-        # bucketed scan OFF for scan-only plans (no join/agg consumes
-        # the distribution), which also forfeits bucket PRUNING — a
-        # point term lookup must pin the bucketed scan on to get its
-        # 1-of-N file-group read (documented in term_lookup)
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
-        )
-        stored = spark.table(qualified)
-        hit = term_lookup(stored, ["spark"])
-        assert hit.count() > 0  # the term exists — pruning isn't vacuous
-        plan = executed_plan(hit)
-        m = [l for l in plan.splitlines() if "SelectedBucketsCount" in l]
-        assert m, plan[:2500]
-        import re as _re
-
-        sel, total = map(
-            int, _re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", m[0]).groups()
-        )
-        assert sel < total, m[0]
-        # term-AND over two pruned lists: both scans pruned
-        a = term_lookup(stored, ["spark"]).select(F.col("doc"))
-        b = term_lookup(stored, ["join"]).select(F.col("doc"))
-        both = a.join(b, "doc")
-        plan2 = executed_plan(both)
-        assert plan2.count("SelectedBucketsCount") == 2, plan2[:2500]
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", prev
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {qualified}")
 
 
 def test_minhash_index_maintenance_map_side_band_bucket_only(spark):

@@ -37,33 +37,6 @@ rows_strategy = st.lists(
 )
 
 
-@given(old=rows_strategy, new=rows_strategy)
-@settings(**SETTINGS_HEAVY)
-def test_merge_by_unique_key_semantics(spark, old, new):
-    """MERGE: per key, the best row under order_by wins across BOTH sides,
-    with fresh beating existing on exact order ties (in DAG use order_by
-    is the freshness timestamp, so fresh rows win outright); no key
-    appears twice and no key disappears."""
-    from bgg_data_warehouse_spark.streaming.incremental import merge_by_unique_key
-
-    schema = "k long, v long, payload string"
-    existing = spark.createDataFrame(old, schema)
-    fresh = spark.createDataFrame(new, schema)
-    merged = {
-        r.k: (r.v, r.payload)
-        for r in merge_by_unique_key(
-            existing, fresh, ["k"], [F.col("v").desc(), F.col("payload").desc()]
-        ).collect()
-    }
-
-    expect: dict[int, tuple] = {}
-    for src, rows in ((0, old), (1, new)):
-        for k, v, p in rows:
-            if k not in expect or (v, p, src) > expect[k]:
-                expect[k] = (v, p, src)
-    assert merged == {k: (v, p) for k, (v, p, _) in expect.items()}
-
-
 @given(
     toks=st.lists(st.integers(min_value=0, max_value=300), min_size=1, max_size=40),
     budget=st.integers(min_value=1, max_value=512),
@@ -719,53 +692,6 @@ def test_sssp_bounded_rounds_matches_bellman_ford(spark, pairs, rounds):
         for r in sssp_labels(edges, seed_df, rounds=rounds).collect()
     }
     assert got == dist
-
-
-@given(
-    ha=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=6),
-            st.integers(min_value=1, max_value=30),
-        ),
-        min_size=1,
-        max_size=7,
-        unique_by=lambda t: t[0],
-    ),
-    hb=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=6),
-            st.integers(min_value=1, max_value=30),
-        ),
-        min_size=1,
-        max_size=7,
-        unique_by=lambda t: t[0],
-    ),
-)
-@settings(**SETTINGS_HEAVY)
-def test_mwu_from_grids_matches_bruteforce_ranks(spark, ha, hb):
-    """For ANY two histograms, the grid 2U equals the brute-force
-    pairwise count (2 per A>B... i.e. per B strictly below an A, plus
-    1 per tie), tie_term equals the pooled-bin cube sum, and u2_a +
-    u2_b = 2*n_a*n_b."""
-    from bgg_data_warehouse_spark.operators.stats_tests import mwu_from_grids
-
-    ga = spark.createDataFrame(sorted(ha), "bin long, n long")
-    gb = spark.createDataFrame(sorted(hb), "bin long, n long")
-    row = mwu_from_grids(ga, gb).collect()[0]
-
-    a_vals = [b for b, n in ha for _ in range(n)]
-    b_vals = [b for b, n in hb for _ in range(n)]
-    u2 = sum(
-        2 if x > y else (1 if x == y else 0) for x in a_vals for y in b_vals
-    )
-    pooled: dict[int, int] = {}
-    for v in a_vals + b_vals:
-        pooled[v] = pooled.get(v, 0) + 1
-    tie = sum(t**3 - t for t in pooled.values())
-    assert (row["n_a"], row["n_b"]) == (len(a_vals), len(b_vals))
-    assert int(row["u2_a"]) == u2
-    assert int(row["tie_term"]) == tie
-    assert int(row["u2_a"]) + int(row["u2_b"]) == 2 * len(a_vals) * len(b_vals)
 
 
 @given(

@@ -22,12 +22,15 @@ REPO = Path(__file__).resolve().parents[1]
 
 # Unreached definitions that stay. A SURVEY §2 row (or §1.3 for schema
 # validation) means the definition reproduces the reference even though
-# only tests call it. "Extension" entries serve neither the warehouse
-# nor the registry and are queued for deletion (ROADMAP Direction 5);
-# each has its own tests, which go with it.
-_EXT = "extension, own tests; queued for deletion"
+# only tests call it. A "test reference" is the independent form a
+# remaining test checks a reached definition against.
 KEEP = {
+    "functions.vector.cosine_similarity": "test reference for readers.GameReader live /similar",
+    "functions.vector.euclidean_distance": "test reference for readers.GameReader live /similar",
     "io.archive_old_rows": "S10 archive sink",
+    "operators.label_prop.label_propagation": (
+        "test reference for label_prop.lpa_oracle_sql and label_propagation_from_baskets"
+    ),
     "schemas.conform": "A10 / §1.3 pre-write conformance",
     "schemas.validate_no_all_null_columns": "A10 / §1.3 all-null guard",
     "sources.sitemap.ids_from_sitemap": "S3 sitemap scrape source",
@@ -39,24 +42,6 @@ KEEP = {
     "streaming.ingest.run_foreach_batch": "S8/I3 streaming ingest",
     "streaming.ingest.run_to_memory": "S8/I3 streaming ingest",
     "streaming.ingest.windowed_counts": "S8/I3 streaming ingest",
-    "io.storage_pin": _EXT,
-    "multimodal._fake_dims": _EXT,
-    "multimodal.extract_image_features": _EXT,
-    "operators.bpe.apply_merges_to_words": _EXT,
-    "operators.inverted_index.term_lookup": _EXT,
-    "operators.stats_tests._grids_to_cum": _EXT,
-    "operators.stats_tests.ks_from_grids": _EXT,
-    "operators.stats_tests.mwu_from_grids": _EXT,
-    "operators.text_vectorize.hashed_count_vectors": _EXT,
-    "operators.zorder.zorder_layout": _EXT,
-    "streaming.cdc.apply_cdc_batch": _EXT,
-    "streaming.cdc.read_cdc_state": _EXT,
-    "streaming.cdc.read_cdc_state_logged": _EXT,
-    "streaming.cdc.start_streaming_cdc": _EXT,
-    "streaming.windowed.dedup_stream_exact": _EXT,
-    "streaming.windowed.enrich_stream": _EXT,
-    "streaming.windowed.interval_join_streams": _EXT,
-    "streaming.windowed.windowed_event_rollup": _EXT,
 }
 
 
@@ -117,3 +102,23 @@ def test_check_fails_on_a_restored_def_without_a_caller(tmp_path):
     with open(root / reachability.PACKAGE / "io.py", "a") as fh:
         fh.write("\n\ndef maintain_neighbors_table(spark, root, name):\n    return None\n")
     assert "io.maintain_neighbors_table" in reachability.Graph(root).run().unreached()
+
+
+def test_a_package_re_export_is_not_a_use(tmp_path):
+    root = _copy_checkout(tmp_path)
+    pkg = root / reachability.PACKAGE / "functions"
+    with open(pkg / "vector.py", "a") as fh:
+        fh.write("\n\ndef manhattan_distance(a, b):\n    return None\n")
+    with open(pkg / "__init__.py", "a") as fh:
+        fh.write("from .vector import manhattan_distance\n")
+    g = reachability.Graph(root).run()
+    assert "functions.vector.manhattan_distance" in g.unreached()
+    assert g.missing == set()
+
+
+def test_incremental_module_defs_need_a_caller(tmp_path):
+    root = _copy_checkout(tmp_path)
+    path = root / reachability.PACKAGE / "streaming" / "incremental.py"
+    with open(path, "a") as fh:
+        fh.write("\n\ndef merge_by_unique_key(existing, fresh, keys):\n    return None\n")
+    assert "streaming.incremental.merge_by_unique_key" in reachability.Graph(root).run().unreached()

@@ -119,24 +119,6 @@ def test_zvalue_interleave_roundtrip(spark):
         assert deinterleave(r.z) == (r.x, r.y)
 
 
-def test_zorder_layout_gives_monotone_file_ranges(spark):
-    """Range-partitioned z-values must yield non-overlapping per-file
-    [min, max] zone maps — the property file skipping relies on."""
-    from bgg_data_warehouse_spark.operators.zorder import zorder_layout
-
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    laid = zorder_layout(ev, "user_id", "event_id", bits=16, num_files=8)
-    ranges = (
-        laid.select(F.spark_partition_id().alias("p"), "zval")
-        .groupBy("p")
-        .agg(F.min("zval").alias("lo"), F.max("zval").alias("hi"))
-        .orderBy("lo")
-        .collect()
-    )
-    for prev, cur in zip(ranges, ranges[1:]):
-        assert prev.hi <= cur.lo
-
-
 def test_token_budget_report_sums_to_one(spark):
     from bgg_data_warehouse_spark.workload import QUERIES
 

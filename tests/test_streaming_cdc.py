@@ -1,7 +1,7 @@
-"""Streaming CDC apply (streaming/cdc.py): the drained change stream's
-snapshot must equal ONE batch apply_changelog over the concatenated
-log, same-epoch replay must be a bit-level no-op, and deletes must
-actually remove state."""
+"""CDC apply (streaming/cdc.py) and staged-swap crash recovery
+(io.recover_table): the logged state must equal ONE batch
+apply_changelog over the concatenated log, same-epoch replay must be a
+no-op, and deletes must actually remove state."""
 
 from __future__ import annotations
 
@@ -32,173 +32,11 @@ def _epochs():
 
 
 def _state(spark, root, name):
-    from bgg_data_warehouse_spark.streaming.cdc import read_cdc_state
+    from bgg_data_warehouse_spark.io import read_table
 
     return sorted(
-        (r.k, r.val, r.qty) for r in read_cdc_state(spark, root, name).collect()
+        (r.k, r.val, r.qty) for r in read_table(spark, root, name).collect()
     )
-
-
-def test_streaming_cdc_matches_single_batch_apply(spark, tmp_path):
-    from bgg_data_warehouse_spark.operators.merge import apply_changelog
-    from bgg_data_warehouse_spark.streaming.cdc import start_streaming_cdc
-
-    landing = str(tmp_path / "landing")
-    root = str(tmp_path / "tables")
-    epochs = _epochs()
-
-    def write_epoch(i):
-        spark.createDataFrame(epochs[i], SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-
-    write_epoch(0)
-    q = start_streaming_cdc(
-        spark.readStream.schema(SCHEMA).parquet(landing),
-        root,
-        "cdc_state",
-        str(tmp_path / "ckpt"),
-        keys=["k"],
-        seq_cols=["seq"],
-    )
-    try:
-        q.processAllAvailable()
-        write_epoch(1)
-        q.processAllAvailable()
-        write_epoch(2)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = _state(spark, root, "cdc_state")
-    all_changes = spark.createDataFrame(
-        [r for e in epochs for r in e], SCHEMA
-    )
-    base = all_changes.drop("op", "seq").limit(0)
-    want = sorted(
-        (r.k, r.val, r.qty)
-        for r in apply_changelog(
-            base, all_changes, ["k"], ["seq"]
-        ).collect()
-    )
-    assert got == want
-    # spot-check the semantics end-state: 1 updated in-epoch, 2 updated,
-    # 3 deleted-then-reinserted, 4 inserted-then-deleted
-    assert got == [(1, "a2", 11), (2, "b2", 21), (3, "c-back", 31)]
-
-
-def test_cdc_same_epoch_replay_is_noop(spark, tmp_path):
-    """The crash window foreachBatch actually replays: the swap landed
-    but the checkpoint commit did not. Re-applying the SAME batch must
-    reproduce the snapshot bit-for-bit (LWW of identical images)."""
-    from bgg_data_warehouse_spark.streaming.cdc import apply_cdc_batch
-
-    root = str(tmp_path / "tables")
-    epochs = _epochs()
-    for e in epochs[:2]:
-        apply_cdc_batch(
-            spark.createDataFrame(e, SCHEMA),
-            root,
-            "cdc_state",
-            keys=["k"],
-            seq_cols=["seq"],
-        )
-    before = _state(spark, root, "cdc_state")
-    # replay epoch 1 against state that already includes it
-    apply_cdc_batch(
-        spark.createDataFrame(epochs[1], SCHEMA),
-        root,
-        "cdc_state",
-        keys=["k"],
-        seq_cols=["seq"],
-    )
-    assert _state(spark, root, "cdc_state") == before
-
-
-def test_cdc_empty_batch_is_skipped(spark, tmp_path):
-    from bgg_data_warehouse_spark.streaming.cdc import apply_cdc_batch
-
-    root = str(tmp_path / "tables")
-    apply_cdc_batch(
-        spark.createDataFrame(_epochs()[0], SCHEMA),
-        root,
-        "cdc_state",
-        keys=["k"],
-        seq_cols=["seq"],
-    )
-    before = _state(spark, root, "cdc_state")
-    apply_cdc_batch(
-        spark.createDataFrame([], SCHEMA),
-        root,
-        "cdc_state",
-        keys=["k"],
-        seq_cols=["seq"],
-    )
-    assert _state(spark, root, "cdc_state") == before
-
-
-def test_cdc_first_batch_creates_state_without_log_columns(spark, tmp_path):
-    from bgg_data_warehouse_spark.streaming.cdc import (
-        apply_cdc_batch,
-        read_cdc_state,
-    )
-
-    root = str(tmp_path / "tables")
-    apply_cdc_batch(
-        spark.createDataFrame(_epochs()[0], SCHEMA),
-        root,
-        "cdc_state",
-        keys=["k"],
-        seq_cols=["seq"],
-    )
-    st = read_cdc_state(spark, root, "cdc_state")
-    assert sorted(st.columns) == ["k", "qty", "val"]
-    assert _state(spark, root, "cdc_state") == [
-        (1, "a2", 11),
-        (2, "b", 20),
-        (3, "c", 30),
-    ]
-
-
-def test_cdc_replay_after_crash_mid_swap_recovers_full_state(spark, tmp_path):
-    """The deadliest crash window: between _rewrite's two renames the
-    live table dir does not exist — only the __old_ backup. A naive
-    'table missing => first batch' replay would silently re-found the
-    snapshot from ONE epoch, losing every earlier key. apply_cdc_batch
-    must restore the backup first and merge the replayed epoch into
-    full state."""
-    import os
-
-    from bgg_data_warehouse_spark.streaming.cdc import apply_cdc_batch
-
-    root = str(tmp_path / "tables")
-    epochs = _epochs()
-    for e in epochs[:2]:
-        apply_cdc_batch(
-            spark.createDataFrame(e, SCHEMA),
-            root,
-            "cdc_state",
-            keys=["k"],
-            seq_cols=["seq"],
-        )
-    want = _state(spark, root, "cdc_state")
-
-    # simulate the crash: swap started (old moved aside), never finished
-    final = os.path.join(root, "cdc_state")
-    os.rename(final, final + "__old_deadbeef")
-    os.makedirs(final + "__stage_feedface")  # incomplete staging leftovers
-
-    # foreachBatch replays the last epoch against the broken layout
-    apply_cdc_batch(
-        spark.createDataFrame(epochs[1], SCHEMA),
-        root,
-        "cdc_state",
-        keys=["k"],
-        seq_cols=["seq"],
-    )
-    assert _state(spark, root, "cdc_state") == want
-    assert not os.path.exists(final + "__old_deadbeef")
-    assert not os.path.exists(final + "__stage_feedface")
 
 
 def test_recover_table_live_cleans_stale_leftovers(spark, tmp_path):
@@ -208,16 +46,13 @@ def test_recover_table_live_cleans_stale_leftovers(spark, tmp_path):
     snapshot-sized directory per crash."""
     import os
 
-    from bgg_data_warehouse_spark.io import recover_table
-    from bgg_data_warehouse_spark.streaming.cdc import apply_cdc_batch
+    from bgg_data_warehouse_spark.io import recover_table, rewrite_table
 
     root = str(tmp_path / "tables")
-    apply_cdc_batch(
-        spark.createDataFrame(_epochs()[0], SCHEMA),
+    rewrite_table(
+        spark.createDataFrame(_epochs()[0], SCHEMA).drop("op", "seq"),
         root,
         "cdc_state",
-        keys=["k"],
-        seq_cols=["seq"],
     )
     before = _state(spark, root, "cdc_state")
     stale_old = os.path.join(root, "cdc_state__old_cafe")
@@ -285,24 +120,18 @@ def test_s6_s7_wrappers_recover_before_first_write_branch(spark, tmp_path):
 
 
 def test_cdc_logged_matches_snapshot_applier_and_replays(spark, tmp_path):
-    """The log-structured CDC face (r13): drained epochs through
-    apply_cdc_log_batch equal the snapshot applier's state; replay of
-    the last epoch is a no-op; compaction folds to the same state. The
-    composite (k) key exercises the store's key-list form."""
-    from bgg_data_warehouse_spark.log_store import compact_log_store
-    from bgg_data_warehouse_spark.streaming.cdc import (
-        apply_cdc_batch,
-        apply_cdc_log_batch,
-        read_cdc_state,
-        read_cdc_state_logged,
-    )
+    """The log-structured CDC state (r13): drained epochs through
+    apply_cdc_log_batch equal ONE batch apply_changelog over the
+    concatenated log; replay of the last epoch is a no-op; compaction
+    folds to the same state. The composite (k) key exercises the
+    store's key-list form."""
+    from bgg_data_warehouse_spark.log_store import compact_log_store, read_log_store
+    from bgg_data_warehouse_spark.operators.merge import apply_changelog
+    from bgg_data_warehouse_spark.streaming.cdc import apply_cdc_log_batch
 
     root = str(tmp_path / "tables")
     kw = dict(keys=["k"], seq_cols=["seq"])
     for e in _epochs():
-        apply_cdc_batch(
-            spark.createDataFrame(e, SCHEMA), root, "snap", **kw
-        )
         apply_cdc_log_batch(
             spark.createDataFrame(e, SCHEMA), root, "logged",
             auto_compact=False, **kw,
@@ -311,12 +140,20 @@ def test_cdc_logged_matches_snapshot_applier_and_replays(spark, tmp_path):
     def logged_state():
         return sorted(
             (r.k, r.val, r.qty)
-            for r in read_cdc_state_logged(spark, root, "logged", ["k"]).collect()
+            for r in read_log_store(spark, root, "logged", ["k"]).collect()
         )
 
-    want = sorted(
-        (r.k, r.val, r.qty) for r in read_cdc_state(spark, root, "snap").collect()
+    all_changes = spark.createDataFrame(
+        [r for e in _epochs() for r in e], SCHEMA
     )
+    base = all_changes.drop("op", "seq").limit(0)
+    want = sorted(
+        (r.k, r.val, r.qty)
+        for r in apply_changelog(base, all_changes, ["k"], ["seq"]).collect()
+    )
+    # 1 updated in-epoch, 2 updated, 3 deleted-then-reinserted,
+    # 4 inserted-then-deleted
+    assert want == [(1, "a2", 11), (2, "b2", 21), (3, "c-back", 31)]
     assert logged_state() == want
     # replay the final epoch: duplicate generation, identical state
     apply_cdc_log_batch(

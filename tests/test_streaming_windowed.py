@@ -1,163 +1,13 @@
-"""Watermarked windowed rollup (streaming/windowed.py): the streaming
-plan must reproduce the batch hourly rollup, and the watermark must
-actually DROP rows that arrive later than the delay (the state-eviction
-contract a 100 TB/day stream depends on)."""
+"""Watermarked session windows (streaming/windowed.py): the streaming
+plan must reproduce the batch sessionize formulations, and append mode
+must emit a session only once the watermark closes it (the
+state-eviction contract a 100 TB/day stream depends on)."""
 
 from __future__ import annotations
-
-from datetime import datetime
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
-
-
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    from bgg_data_warehouse_spark.sources.tables import load_table
-    from bgg_data_warehouse_spark.streaming.windowed import windowed_event_rollup
-
-    ev = load_table(spark, SF_SMALL, "events").select(
-        "ts", "event_type", "value"
-    )
-    landing = str(tmp_path / "landing")
-    ev.write.parquet(landing)
-
-    stream = spark.readStream.schema(
-        "ts timestamp, event_type string, value double"
-    ).parquet(landing)
-    out = windowed_event_rollup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rollup_complete")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in spark.table("rollup_complete").collect()
-    }
-    want = {
-        (r.window_start, r.event_type): (r.n_events, r.total_value)
-        for r in windowed_event_rollup(ev).collect()  # batch: same plan
-    }
-    assert got == want
-    assert len(want) > 0
-
-
-def test_watermark_drops_too_late_rows(spark, tmp_path):
-    """Two files, one trigger each: file 1 advances the watermark to
-    12:00-2h=10:00; file 2's 05:00 row is beyond the delay and must be
-    dropped, while its 11:30 row (late but inside the delay) counts."""
-    from bgg_data_warehouse_spark.streaming.windowed import windowed_event_rollup
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-
-    def write_file(name, rows):
-        spark.createDataFrame(
-            rows, "ts timestamp, event_type string, value double"
-        ).coalesce(1).write.mode("append").parquet(str(landing / name))
-
-    d = datetime
-    write_file(
-        "f1",
-        [
-            (d(2024, 1, 1, 9, 15), "click", 1.0),
-            (d(2024, 1, 1, 12, 0), "click", 1.0),  # watermark -> 10:00
-        ],
-    )
-    stream = (
-        spark.readStream.schema("ts timestamp, event_type string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(landing / "*"))
-    )
-    out = windowed_event_rollup(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("rollup_late")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        write_file(
-            "f2",
-            [
-                (d(2024, 1, 1, 5, 0), "click", 1.0),  # too late: dropped
-                (d(2024, 1, 1, 11, 30), "click", 1.0),  # in-delay: kept
-            ],
-        )
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    rows = spark.sql(
-        "SELECT window_start, sum(n_events) AS n FROM rollup_late GROUP BY 1"
-    ).collect()
-    by_start = {r.window_start: r.n for r in rows}
-    assert d(2024, 1, 1, 5, 0) not in by_start  # too-late row dropped
-    assert by_start.get(d(2024, 1, 1, 11, 0)) == 1  # in-delay row kept
-    assert by_start.get(d(2024, 1, 1, 9, 0)) == 1
-    assert by_start.get(d(2024, 1, 1, 12, 0)) == 1
-
-
-def test_stream_static_enrichment_join(spark, tmp_path):
-    from bgg_data_warehouse_spark.streaming.windowed import enrich_stream
-
-    landing = str(tmp_path / "landing")
-    spark.createDataFrame(
-        [(1, 10.0), (2, 20.0), (3, 30.0)], "user_id long, value double"
-    ).write.parquet(landing)
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "user_id long, tier string"
-    )
-    stream = spark.readStream.schema("user_id long, value double").parquet(landing)
-    q = (
-        enrich_stream(stream, dim, "user_id")
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r.user_id: r.tier for r in spark.table("enriched").collect()}
-    assert got == {1: "gold", 2: "silver", 3: None}
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    from datetime import datetime as d
-
-    from bgg_data_warehouse_spark.streaming.windowed import dedup_stream_exact
-
-    landing = str(tmp_path / "landing")
-    spark.createDataFrame(
-        [
-            (1, d(2024, 1, 1, 9, 0)),
-            (1, d(2024, 1, 1, 9, 5)),  # dup within delay: dropped
-            (2, d(2024, 1, 1, 9, 1)),
-        ],
-        "k long, ts timestamp",
-    ).write.parquet(landing)
-    stream = spark.readStream.schema("k long, ts timestamp").parquet(landing)
-    q = (
-        dedup_stream_exact(stream, ["k"], ts_col="ts", delay="1 hour")
-        .writeStream.format("memory")
-        .queryName("dedup_wm")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.table("dedup_wm").collect()
-    assert sorted(r.k for r in rows) == [1, 2]
 
 
 def test_session_rollup_matches_batch_and_lag_formulation(spark, tmp_path):
@@ -294,62 +144,3 @@ def test_session_rollup_append_finalizes_closed_sessions(spark, tmp_path):
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in rows
     ] == [(1, d(2024, 1, 1, 9, 0), d(2024, 1, 1, 9, 10), 2)]
-
-
-def test_interval_join_streams_matches_batch(spark, tmp_path):
-    """Stream-stream click->purchase attribution (1h window) must equal
-    the batch interval join of the same frames."""
-    from bgg_data_warehouse_spark.sources.tables import load_table
-    from bgg_data_warehouse_spark.streaming.windowed import (
-        interval_join_streams,
-    )
-
-    ev = load_table(spark, SF_SMALL, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    buys = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("buy_user"), F.col("ts").alias("buy_ts"),
-        F.col("event_id").alias("buy_id"),
-    )
-    lc, lb = str(tmp_path / "clicks"), str(tmp_path / "buys")
-    clicks.write.parquet(lc)
-    buys.write.parquet(lb)
-
-    sc = spark.readStream.schema(
-        "user_id long, click_ts timestamp, click_id long"
-    ).parquet(lc)
-    sb = spark.readStream.schema(
-        "buy_user long, buy_ts timestamp, buy_id long"
-    ).parquet(lb)
-    sb = sb.withColumnRenamed("buy_user", "user_id")
-    out = interval_join_streams(
-        sc, sb, key="user_id", left_ts="click_ts", right_ts="buy_ts"
-    ).select("click_id", "buy_id")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("attrib")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.click_id, r.buy_id) for r in spark.table("attrib").collect()
-    }
-    want = {
-        (r.click_id, r.buy_id)
-        for r in interval_join_streams(
-            clicks,
-            buys.withColumnRenamed("buy_user", "user_id"),
-            key="user_id",
-            left_ts="click_ts",
-            right_ts="buy_ts",
-        )
-        .select("click_id", "buy_id")
-        .collect()
-    }
-    assert got == want
-    assert len(want) > 0

@@ -9,9 +9,8 @@ Fixture: synthetic documents whose token sequences derive from the doc
 id, so distinct ids give (near-)disjoint shingle sets; 10% of each
 copy's ids alias back to copy-0 ids, so exactly that slice of the batch
 has true near-duplicates in the index — the realistic "some of the batch
-is dup" regime. The index is written to parquet and read back
-(``io.storage_pin`` discipline): the steady-state form where the index
-is a table, not an in-memory build.
+is dup" regime. The index is written to parquet and read back: the
+steady-state form where the index is a table, not an in-memory build.
 
 Run:  python tools/incremental_scaling.py [n_per_copy]
 Prints one JSON line per index size: {"index_rows": N, "batch_rows": B,

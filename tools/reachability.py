@@ -17,6 +17,9 @@ from a ``for name in ("a", "b")`` loop), because perfbench wraps engine
 layers by name. A module's top-level statements, and the decorators
 and default values of its definitions, run when the module is
 imported, so they are reached as soon as anything imports the module.
+A ``from … import`` inside the engine only binds a name: a package
+``__init__`` re-export or an unused import keeps nothing alive. In a
+root file an import counts as a use.
 
 It also reports *missing* names: an import, attribute or wrapped name
 that points into the engine at something the engine no longer defines.
@@ -37,14 +40,13 @@ REPO = Path(__file__).resolve().parents[1]
 PACKAGE = "bgg_data_warehouse_spark"
 
 # modules whose every definition is an entry point: the ingest
-# pipeline, the model DAG, the incremental refresh and the read path
+# pipeline, the model DAG and the read path
 ROOT_MODULES = (
     "pipeline",
     "plans",
     "readers",
     "service",
     "service_http",
-    "streaming.incremental",
 )
 ROOT_GLOBS = ("__spark_entry__.py", "bench.py", "perfbench/*.py", "tools/*.py")
 REGISTERING_DECORATORS = {"query"}
@@ -168,7 +170,9 @@ class Graph:
             return out
         return []
 
-    def _ref(self, target: tuple, where: Module) -> None:
+    def _ref(self, target: tuple, where: Module, use: bool = True) -> None:
+        """Reach what ``target`` names (only check it exists unless
+        ``use``); record it as missing when it is gone."""
         kind, m = target[0], target[1]
         if m.split(".")[0] != PACKAGE:
             return
@@ -196,11 +200,12 @@ class Graph:
             self._reach(m, name)
             return
         if name in owner.defs:
-            self._reach(m, name)
+            if use:
+                self._reach(m, name)
         elif name in owner.aliases:  # a re-export: follow it
             for t in owner.aliases[name]:
                 for r in self._target_refs(t):
-                    self._ref(r, owner)
+                    self._ref(r, owner, use)
         elif name not in owner.bound:
             self.missing.add(f"{where.name}: {m}.{name}")
 
@@ -249,10 +254,11 @@ class Graph:
                 for a in node.names:
                     self._ref(("mod", a.name), mod)
             elif isinstance(node, ast.ImportFrom):
-                # an import uses the name: it fails once the name is gone
+                # an import fails once the name is gone; in a root file it
+                # also uses the name, in the engine it only binds it
                 for target, _ in _import_targets(mod, node):
                     for r in self._target_refs(target):
-                        self._ref(r, mod)
+                        self._ref(r, mod, use=mod.name not in self.modules)
             elif isinstance(node, (ast.Name, ast.Attribute)) and isinstance(
                 getattr(node, "ctx", None), ast.Load
             ):

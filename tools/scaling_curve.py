@@ -761,8 +761,7 @@ def incremental_main() -> None:
         GENERATION — neither reading nor rewriting the snapshot — vs
         the full changelog replay a non-incremental consumer pays.
         Both its read and write volume should be delta-sized at any
-        base size (the floor apply_cdc_batch's snapshot rewrite
-        carries)."""
+        base size (a snapshot rewrite per epoch would be base-sized)."""
         from bgg_data_warehouse_spark.log_store import init_log_store
         from bgg_data_warehouse_spark.operators.merge import apply_changelog
         from bgg_data_warehouse_spark.streaming.cdc import apply_cdc_log_batch
