@@ -16,8 +16,6 @@ with a left-to-right sequential sum — the same evaluation order DuckDB's
 
 from __future__ import annotations
 
-from functools import reduce
-
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,59 +25,38 @@ def _as_double(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
 
 
-def _sum_terms(terms: list[Column]) -> Column:
-    # left-associated sum — the same IEEE association as a sequential fold
-    # and as DuckDB's list_dot_product, so results are bit-identical
-    return reduce(lambda x, y: x + y, terms)
-
-
-def dot_product(a: Column, b: Column, dim: int | None = None) -> Column:
+def dot_product(a: Column, b: Column) -> Column:
     """sum_i a_i * b_i  (sequential order, double precision).
 
-    With ``dim`` given, the sum unrolls into fixed getItem products.
-    MEASURED CAVEAT: at dim=64 the unrolled tree is SLOWER than the
-    zip_with/aggregate fold (the generated method blows past JIT/codegen
-    size limits); the fold is the right default. Hot pair tables are
-    scored on the driver or per Arrow batch with :func:`pair_scores`
-    (bit-identical results; ``operators/band_join.py``).
+    A ``zip_with``/``aggregate`` fold: an unrolled ``getItem`` sum was
+    measured slower at dim=64 (the generated method blows past JIT/codegen
+    size limits). Hot pair tables are scored on the driver or per Arrow
+    batch with :func:`pair_scores` (bit-identical results;
+    ``operators/band_join.py``).
     """
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    return _sum_terms(
-        [a.getItem(i).cast("double") * b.getItem(i).cast("double") for i in range(dim)]
+    return F.aggregate(
+        F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
     )
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    if dim is None:
-        return F.sqrt(
-            F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
+def l2_norm(a: Column) -> Column:
+    return F.sqrt(F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def cosine_similarity(a: Column, b: Column) -> Column:
+    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+
+
+def euclidean_distance(a: Column, b: Column) -> Column:
+    return F.sqrt(
+        F.aggregate(
+            F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
         )
-    sq = [a.getItem(i).cast("double") for i in range(dim)]
-    return F.sqrt(_sum_terms([x * x for x in sq]))
-
-
-def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot_product(a, b, dim) / (l2_norm(a, dim) * l2_norm(b, dim))
-
-
-def euclidean_distance(a: Column, b: Column, dim: int | None = None) -> Column:
-    if dim is None:
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(_as_double(a), _as_double(b), lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        )
-    diffs = [
-        a.getItem(i).cast("double") - b.getItem(i).cast("double") for i in range(dim)
-    ]
-    return F.sqrt(_sum_terms([d * d for d in diffs]))
+    )
 
 
 def pair_scores(a: np.ndarray, b: np.ndarray, metric: str = "cosine") -> np.ndarray:

@@ -468,8 +468,6 @@ def _touched_rows(
     stored: DataFrame,
     touched_keys: DataFrame,
     keys: list[str],
-    *,
-    cap: int | None = None,
 ) -> DataFrame:
     """Stored rows whose key appears in ``touched_keys``. For a
     single-column key under the collect cap the probe is a LITERAL
@@ -490,8 +488,6 @@ def _touched_rows(
     and evaluating giant In-lists; the broadcast-semi form runs the
     same epochs in ~10 s. Delta-bounded probes (the loader/CC shape,
     ~100 keys) stay literal and keep their measured 18x row prune."""
-    if cap is None:
-        cap = PROBE_COLLECT_MAX
     try:
         pushdown_max = int(
             stored.sparkSession.conf.get(
@@ -500,7 +496,7 @@ def _touched_rows(
         )
     except Exception:
         pushdown_max = 10  # Spark's default
-    cap = min(cap, pushdown_max)
+    cap = min(PROBE_COLLECT_MAX, pushdown_max)
     if len(keys) == 1:
         vals = [
             r[0]
@@ -593,8 +589,6 @@ def merge_insert_missing_logged(
     keys: list[str],
     *,
     auto_compact: bool = True,
-    max_generations: int = 16,
-    max_delta_fraction: float = 0.2,
 ) -> None:
     """S6's log-structured twin — dimension MERGE (insert keys never
     seen, never update) with a batch-sized write: the survivors of
@@ -631,8 +625,6 @@ def merge_insert_missing_logged(
                 root,
                 name,
                 keys,
-                max_generations=max_generations,
-                max_delta_fraction=max_delta_fraction,
                 layout=key_clustered_layout(
                     spark, keys, store=_log_store_path(root, name)
                 ),
@@ -647,8 +639,6 @@ def delete_insert_logged(
     keys: list[str],
     *,
     auto_compact: bool = True,
-    max_generations: int = 16,
-    max_delta_fraction: float = 0.2,
 ) -> None:
     """S7's log-structured twin — bridge/detail refresh (replace ALL
     rows for the incoming keys) as a bare generation append: the
@@ -676,11 +666,9 @@ def delete_insert_logged(
             root,
             name,
             keys,
-            max_generations=max_generations,
-            max_delta_fraction=max_delta_fraction,
             layout=key_clustered_layout(
-                    spark, keys, store=_log_store_path(root, name)
-                ),
+                spark, keys, store=_log_store_path(root, name)
+            ),
         )
 
 
@@ -704,8 +692,6 @@ def refresh_additive_mv_logged(
     *,
     count_cols: list[str] | None = None,
     auto_compact: bool = True,
-    max_generations: int = 16,
-    max_delta_fraction: float = 0.2,
 ) -> None:
     """Additive-MV maintenance with delta-sized IO — the logged twin of
     ``operators.merge.refresh_additive_mv`` (whose storage wrapper, like
@@ -748,11 +734,9 @@ def refresh_additive_mv_logged(
             root,
             name,
             keys,
-            max_generations=max_generations,
-            max_delta_fraction=max_delta_fraction,
             layout=key_clustered_layout(
-                    spark, keys, store=_log_store_path(root, name)
-                ),
+                spark, keys, store=_log_store_path(root, name)
+            ),
         )
 
 
@@ -908,10 +892,6 @@ def maintain_components_log(
     *,
     deleted: bool = False,
     auto_compact: bool = True,
-    max_generations: int = 16,
-    max_delta_fraction: float = 0.2,
-    max_delta_bytes: int | None = None,
-    annotate_on_compact: bool = False,
 ) -> int:
     """Log-structured CC maintenance (r13 VERDICT #5) — the delta-sized
     WRITE answer to a snapshot-sized staged rewrite of the label table
@@ -936,7 +916,6 @@ def maintain_components_log(
     (generational and compacted reads vs a full-recompute oracle) by
     ``cc_log_maintenance``."""
     from .log_store import (
-        BROADCAST_TOUCHED_MAX_BYTES,
         _delta_dirs,
         _store_path,
         append_pair_delta,
@@ -948,8 +927,6 @@ def maintain_components_log(
         incremental_components_update_delta,
     )
 
-    if max_delta_bytes is None:
-        max_delta_bytes = BROADCAST_TOUCHED_MAX_BYTES
     keys = {"labels": "node", "edges": [src, dst]}
     # maintenance evaluates each part's merged view 2-3 times per
     # epoch (probe, localization, change-set write) — pin the
@@ -995,18 +972,5 @@ def maintain_components_log(
         }
     append_pair_delta(root, name, parts)
     if auto_compact:
-        return compact_pair_if_needed(
-            spark,
-            root,
-            name,
-            keys,
-            max_generations=max_generations,
-            max_delta_fraction=max_delta_fraction,
-            max_delta_bytes=max_delta_bytes,
-            layouts=(
-                components_log_layouts(spark, root, name, src, dst)
-                if annotate_on_compact
-                else None
-            ),
-        )
+        return compact_pair_if_needed(spark, root, name, keys)
     return 0

@@ -44,7 +44,7 @@ compaction meant to fix it would be the call that dies. Two guards keep
 the invariant "the touched-key set handed to a broadcast hint is
 ≤ :data:`BROADCAST_TOUCHED_MAX_BYTES` of on-disk generation bytes"
 unconditional: (a) the compaction policy triggers on generation bytes >
-``max_delta_bytes`` (absolute, default = the broadcast bound) in
+:data:`MAX_DELTA_BYTES` (absolute, the broadcast bound) in
 addition to the count and relative-fraction triggers, so a steadily-fed
 store folds long before its delta outgrows a broadcast regardless of
 base size; (b) every merge call site measures the generations' bytes
@@ -121,6 +121,13 @@ BROADCAST_TOUCHED_MAX_BYTES = 128 * 1024 * 1024
 # generation rows + tombstones. 8M keys at ≤32 B each is ≤256 MB
 # in-memory — the same envelope the byte bound targets.
 BROADCAST_TOUCHED_MAX_ROWS = 8_000_000
+
+# The compaction policy (:func:`compact_if_needed`): fold when the
+# committed generations number more than MAX_GENERATIONS, or their
+# bytes exceed MAX_DELTA_FRACTION of base or MAX_DELTA_BYTES outright.
+MAX_GENERATIONS = 16
+MAX_DELTA_FRACTION = 0.2
+MAX_DELTA_BYTES = BROADCAST_TOUCHED_MAX_BYTES
 
 
 # Target bytes per generation output file (r16, VERDICT r15 #4): one
@@ -386,7 +393,7 @@ _TOUCHED_ISIN_MAX = 8192
 # footer+data reads, no Spark jobs) instead of through two delta-sized
 # shuffle stages per merged-read evaluation. 8 MiB of compressed delta
 # is a few hundred thousand narrow rows — the same bounded-subproblem
-# envelope as the maintainers' driver_solve_max — and far under the
+# envelope as operators.iterative.DRIVER_SOLVE_MAX — and far under the
 # 128 MiB broadcast bound, so the fast path only ever replaces merges
 # whose frames were already broadcast-sized.
 DRIVER_MERGE_MAX_BYTES = 8 * 1024 * 1024
@@ -743,8 +750,6 @@ def read_log_store(
     root: str,
     name: str,
     key_col: str,
-    *,
-    pin_touched: bool = False,
 ) -> DataFrame:
     """The store's current contents — base if compacted, the generational
     merge otherwise. Heals a mid-swap base first (cheap, idempotent),
@@ -772,7 +777,6 @@ def read_log_store(
         gens,
         key_col,
         hint_broadcast=_hint_broadcast(gens),
-        pin_touched=pin_touched,
     )
 
 
@@ -782,16 +786,13 @@ def compact_if_needed(
     name: str,
     key_col: str,
     *,
-    max_generations: int = 16,
-    max_delta_fraction: float = 0.2,
-    max_delta_bytes: int = BROADCAST_TOUCHED_MAX_BYTES,
     layout=None,
 ) -> int:
     """Compaction policy: fold when the generation COUNT exceeds
-    ``max_generations`` (read amplification: each generation is one
+    :data:`MAX_GENERATIONS` (read amplification: each generation is one
     extra scan per read), when the generations' total BYTES exceed
-    ``max_delta_fraction`` of base (merge-work amplification relative
-    to base), or when they exceed ``max_delta_bytes`` ABSOLUTELY —
+    :data:`MAX_DELTA_FRACTION` of base (merge-work amplification relative
+    to base), or when they exceed :data:`MAX_DELTA_BYTES` ABSOLUTELY —
     the invariant that keeps the merge's touched-key broadcast sound at
     any base size: a relative bound alone licenses a 20 TB delta on a
     100 TB base, which no executor can broadcast (r13 VERDICT #1). Call
@@ -799,31 +800,21 @@ def compact_if_needed(
     index-sized rewrite amortizes to 1/N of epochs while per-epoch
     writes stay delta-sized. Returns generations folded (0 = below all
     three thresholds)."""
-    if not _needs_compaction(
-        _store_path(root, name),
-        max_generations,
-        max_delta_fraction,
-        max_delta_bytes,
-    ):
+    if not _needs_compaction(_store_path(root, name)):
         return 0
     return compact_log_store(spark, root, name, key_col, layout=layout)
 
 
-def _needs_compaction(
-    store: str,
-    max_generations: int,
-    max_delta_fraction: float,
-    max_delta_bytes: int,
-) -> bool:
+def _needs_compaction(store: str) -> bool:
     gens = _delta_dirs(store, committed=True)
     if not gens:
         return False
     base_bytes = _dir_bytes(_base_path(store)) or 1
     delta_bytes = sum(_dir_bytes(g) for g in gens)
     return (
-        len(gens) > max_generations
-        or delta_bytes > max_delta_fraction * base_bytes
-        or delta_bytes > max_delta_bytes
+        len(gens) > MAX_GENERATIONS
+        or delta_bytes > MAX_DELTA_FRACTION * base_bytes
+        or delta_bytes > MAX_DELTA_BYTES
         # row co-trigger (r14 VERDICT #7): a tombstone-heavy delta can
         # cross the broadcast ROW bound long before the byte bound
         # (key-only rows compress hardest); folding at the same
@@ -838,23 +829,13 @@ def compact_pair_if_needed(
     root: str,
     name: str,
     keys: dict[str, str],
-    *,
-    max_generations: int = 16,
-    max_delta_fraction: float = 0.2,
-    max_delta_bytes: int = BROADCAST_TOUCHED_MAX_BYTES,
-    layouts: dict | None = None,
 ) -> int:
     """:func:`compact_if_needed` for the paired store (same thresholds,
     including the absolute byte bound, measured over the whole base —
     the parts fold together or not at all)."""
-    if not _needs_compaction(
-        _store_path(root, name),
-        max_generations,
-        max_delta_fraction,
-        max_delta_bytes,
-    ):
+    if not _needs_compaction(_store_path(root, name)):
         return 0
-    return compact_pair_store(spark, root, name, keys, layouts=layouts)
+    return compact_pair_store(spark, root, name, keys)
 
 
 def compact_log_store(
@@ -1100,9 +1081,9 @@ def compact_pair_store(
 
 
 def fold_store_copy(
-    spark: SparkSession, root: str, name: str, key_col, dest: str | None = None
+    spark: SparkSession, root: str, name: str, key_col
 ) -> str:
-    """Materialize ``<name>_compacted`` (or ``dest``) as a freshly
+    """Materialize ``<name>_compacted`` as a freshly
     COMPACTED sibling of the store: its base is the source's merged
     view, no generations — the source keeps its generations untouched.
 
@@ -1116,7 +1097,7 @@ def fold_store_copy(
     staged write's scan is never ripped out from under it. The folded
     content is bit-identical to ``compact_log_store`` on a copy: both
     are exactly ``_merge(base, generations)``."""
-    dest = dest or f"{name}_compacted"
+    dest = f"{name}_compacted"
     folded = read_log_store(spark, root, name, key_col)
     init_log_store(folded, root, dest)
     return dest
@@ -1127,13 +1108,12 @@ def fold_pair_store_copy(
     root: str,
     name: str,
     keys: dict,
-    dest: str | None = None,
 ) -> str:
     """:func:`fold_store_copy` for the paired store (``keys``: part ->
     key_col): every part's merged view lands in ONE staged swap, so the
     compacted twin can never exist half-built — the same pair-atomicity
     the copytree+compact path got from ``compact_pair_store``'s swap."""
-    dest = dest or f"{name}_compacted"
+    dest = f"{name}_compacted"
     parts = {
         part: read_pair_store(spark, root, name, part, key_col)
         for part, key_col in keys.items()

@@ -1,10 +1,9 @@
 """As-of (point-in-time) join — the operator Spark's join family lacks.
 
 For each left row, attach the latest right row whose timestamp is <= the
-left timestamp (direction='backward'; 'forward' takes the earliest >=),
-per join key. The classic uses: price-as-of-trade, feature-as-of-label
-(training-data pipelines must not leak the future into features), and
-slowly-changing-dimension lookups.
+left timestamp, per join key. The classic uses: price-as-of-trade,
+feature-as-of-label (training-data pipelines must not leak the future
+into features), and slowly-changing-dimension lookups.
 
 Spark-first plan — the UNION-window formulation, not a range join:
 
@@ -19,12 +18,11 @@ an equi-join — with no range-condition blowup: a naive
 key before the per-row max, which at 100 TB is the difference between a
 join and an outage. Ordering by (ts, side) makes the backward join
 inclusive (a right row AT the left timestamp sorts before the left row
-and is picked up); forward mirrors it with a descending frame.
+and is picked up).
 
-``tolerance`` bounds the staleness like pandas ``merge_asof``: a carried
-value older than the tolerance is nulled out. The right side must be
-unique per (key, ts) — as-of semantics are ill-defined otherwise; callers
-with duplicates dedupe first (operators/latest.py).
+The right side must be unique per (key, ts) — as-of semantics are
+ill-defined otherwise; callers with duplicates dedupe first
+(operators/latest.py).
 
 DuckDB expresses the same thing natively (``ASOF JOIN``), which is what
 the oracle gate runs.
@@ -32,8 +30,11 @@ the oracle gate runs.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# time-bucket width of :func:`asof_join_segmented`'s heavy pass (1 day)
+SEGMENT_MICROS = 86_400_000_000
 
 
 def asof_join(
@@ -44,78 +45,44 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    direction: str = "backward",
-    tolerance: Column | None = None,
 ) -> DataFrame:
     """Left as-of join: every left row, plus ``value_cols`` from the
-    matching right row (null when no match / outside tolerance)."""
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction!r}")
-
+    matching right row (null when no match)."""
     lcols = [c for c in left.columns]
     r = right.select(
         F.col(on).alias("_k"),
         F.col(right_ts).alias("_ts"),
         F.lit(0).alias("_side"),
-        F.col(right_ts).alias("_match_ts"),
         *[F.col(c).alias(f"_v_{c}") for c in value_cols],
     )
     l = left.select(
         F.col(on).alias("_k"),
         F.col(left_ts).alias("_ts"),
         F.lit(1).alias("_side"),
-        F.lit(None).cast(r.schema["_match_ts"].dataType).alias("_match_ts"),
         *[F.lit(None).cast(r.schema[f"_v_{c}"].dataType).alias(f"_v_{c}") for c in value_cols],
         *[F.col(c).alias(f"_l_{c}") for c in lcols],
     )
     r = r.select(
-        "_k", "_ts", "_side", "_match_ts",
+        "_k", "_ts", "_side",
         *[f"_v_{c}" for c in value_cols],
         *[F.lit(None).cast(left.schema[c].dataType).alias(f"_l_{c}") for c in lcols],
     )
     merged = r.unionByName(l)
 
-    if direction == "backward":
-        # right rows sort before left at equal ts → inclusive match
-        w = (
-            Window.partitionBy("_k")
-            .orderBy(F.col("_ts").asc(), F.col("_side").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
-        w = (
-            Window.partitionBy("_k")
-            .orderBy(F.col("_ts").desc(), F.col("_side").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-
+    # right rows sort before left at equal ts → inclusive match
+    w = (
+        Window.partitionBy("_k")
+        .orderBy(F.col("_ts").asc(), F.col("_side").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     carried = merged.select(
         "_side",
-        "_ts",
         *[F.col(f"_l_{c}") for c in lcols],
-        F.last("_match_ts", ignorenulls=True).over(w).alias("_m_ts"),
         *[F.last(f"_v_{c}", ignorenulls=True).over(w).alias(f"_o_{c}") for c in value_cols],
     ).where(F.col("_side") == 1)
-
-    if tolerance is not None:
-        gap_ok = (
-            F.col("_m_ts").isNotNull()
-            & (
-                F.abs(
-                    F.col("_ts").cast("double") - F.col("_m_ts").cast("double")
-                )
-                <= tolerance
-            )
-        )
-        out_vals = [
-            F.when(gap_ok, F.col(f"_o_{c}")).alias(c) for c in value_cols
-        ]
-    else:
-        out_vals = [F.col(f"_o_{c}").alias(c) for c in value_cols]
-
     return carried.select(
         *[F.col(f"_l_{c}").alias(c) for c in lcols],
-        *out_vals,
+        *[F.col(f"_o_{c}").alias(c) for c in value_cols],
     )
 
 
@@ -127,7 +94,6 @@ def asof_join_segmented(
     left_ts: str,
     right_ts: str,
     value_cols: list[str],
-    bucket_micros: int = 86_400_000_000,  # 1 day
 ) -> DataFrame:
     """Skew-resilient backward as-of join: identical rows to
     ``asof_join`` (backward, no tolerance), different partitioning.
@@ -151,7 +117,7 @@ def asof_join_segmented(
     oracle gates both variants.
     """
     lcols = list(left.columns)
-    bkt = lambda ts: F.floor(F.unix_micros(F.col(ts)) / F.lit(bucket_micros))  # noqa: E731
+    bkt = lambda ts: F.floor(F.unix_micros(F.col(ts)) / F.lit(SEGMENT_MICROS))  # noqa: E731
 
     r = right.select(
         F.col(on).alias("_k"),

@@ -27,7 +27,6 @@ def banded_cosine_pairs(
     band_col: str,
     vec_col: str,
     band: float,
-    probe_blocks: int = 16,
     probe_df: DataFrame | None = None,
 ) -> DataFrame:
     """(s_id, t_id, cos) for all band-eligible pairs — cogrouped matmul.
@@ -48,7 +47,7 @@ def banded_cosine_pairs(
     stay in one bucket, so each eligible pair appears in exactly one
     cogroup. The residual |Δband| <= band filter restores exact semantics.
 
-    ``probe_blocks`` salts the probe side so each cogroup is a bounded
+    The probe side is salted into 16 blocks so each cogroup is a bounded
     sub-block of the bucket's pair matrix. Without it, parallelism is
     capped by BAND CARDINALITY (a 10-bucket corpus uses 10 tasks no matter
     how many executors exist) and one bucket's full matrix must fit in a
@@ -63,7 +62,7 @@ def banded_cosine_pairs(
     reachable buckets first (one broadcast semi on the ≤3×|probe
     bands| bucket set — a candidate t must sit within ±1 bucket of
     some probe row, so rows outside can never pair): without it the
-    whole corpus ships through the cogroup exchange ``probe_blocks``
+    whole corpus ships through the cogroup exchange 16
     times even for a one-bucket delta — measured 7.2 MB -> delta-sized
     shuffle on the band-sparse epoch harness. Defaults to ``df`` (the
     self-join, where every bucket is reachable and scoping would be a
@@ -78,7 +77,7 @@ def banded_cosine_pairs(
         F.col(band_col).alias("s_band"),
         F.col(vec_col).alias("s_vec"),
         F.explode(F.array(*[(bucket + off) for off in (-1, 0, 1)])).alias("_bucket"),
-    ).withColumn("_block", F.pmod(F.xxhash64("s_id"), F.lit(probe_blocks)))
+    ).withColumn("_block", F.pmod(F.xxhash64("s_id"), F.lit(16)))
     build_src = df
     if probe_df is not None:
         reachable = probe_df.select(
@@ -100,7 +99,7 @@ def banded_cosine_pairs(
         # when the two sides' grouping key types differ (int sequence vs
         # long pmod lost ~80% of pairs) — it does not cast or error
         "_block",
-        F.explode(F.sequence(F.lit(0).cast("long"), F.lit(probe_blocks - 1).cast("long"))),
+        F.explode(F.sequence(F.lit(0).cast("long"), F.lit(15).cast("long"))),
     )
 
     def pair_block(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:

@@ -120,7 +120,6 @@ def bloom_pruned_join(
     build: DataFrame,
     on: str | list[str],
     *,
-    probe_key: str | None = None,
     num_bits: int = 4096,
     num_hashes: int = 3,
 ) -> DataFrame:
@@ -128,7 +127,7 @@ def bloom_pruned_join(
     exactly the plain inner join (false positives die in the join);
     only the shuffle volume changes."""
     keys = [on] if isinstance(on, str) else list(on)
-    key = probe_key or keys[0]
+    key = keys[0]
     bloom = bloom_build(build, key, num_bits=num_bits, num_hashes=num_hashes)
     pruned = bloom_prune(
         probe, key, bloom, num_bits=num_bits, num_hashes=num_hashes

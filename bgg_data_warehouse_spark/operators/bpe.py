@@ -23,12 +23,10 @@ Shape at 100 TB — the industrial-trainer decomposition:
   count and the next fold, so without hard lineage truncation the
   LOGICAL plan doubles per round — a 2^K analysis blowup (measured:
   K=8 un-pinned takes minutes of pure driver planning; pinned, the
-  whole train runs in seconds). The ``pin`` hook therefore defaults to
+  whole train runs in seconds). Each round's state is therefore a
   ``localCheckpoint(eager=True)`` — the same idiom as the other
   iterative operators (components.py, pagerank.py) — and each round
-  runs as a small eager job under an iteration-sized shuffle width;
-  at 100 TB, pass a pin that round-trips through storage for
-  fault-tolerant state.
+  runs as a small eager job under an iteration-sized shuffle width.
 - **Exact by construction**: merge choice is an argmax over INTEGER
   counts with a total deterministic tie-break (count DESC, pair ASC),
   and the greedy left-to-right merge application is a deterministic
@@ -48,12 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import word_tokens
-from .dedup import Pin
+from . import iterative
 from .iterative import iteration_shuffle_width
-
-
-def _checkpoint_pin(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
 
 
 def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
@@ -181,8 +175,6 @@ def learn_bpe(
     text_col: str,
     *,
     num_merges: int,
-    pin: Pin = _checkpoint_pin,
-    driver_solve_max: int = 200_000,
 ) -> tuple[DataFrame, DataFrame]:
     """Learn ``num_merges`` BPE merges over a corpus.
 
@@ -193,7 +185,7 @@ def learn_bpe(
     ``encode_bpe``). On a corpus with fewer distinct pairs than
     ``num_merges``, later rounds learn nothing and emit no merge row.
 
-    When the vocabulary fits ``driver_solve_max`` the merge loop runs
+    When the vocabulary fits ``iterative.DRIVER_SOLVE_MAX`` the merge loop runs
     entirely on the driver (``_learn_bpe_driver``): ONE distributed
     corpus pass (the word-count aggregate) instead of 2 tiny Spark
     jobs per merge round — measured 40 jobs -> 3 on the 8-merge gate
@@ -204,13 +196,14 @@ def learn_bpe(
         raise ValueError(
             f"learn_bpe: num_merges must be >= 1, got {num_merges}"
         )
-    probe = _word_counts(df, text_col).limit(driver_solve_max + 1).collect()
-    if len(probe) <= driver_solve_max:
+    solve_max = iterative.DRIVER_SOLVE_MAX
+    probe = _word_counts(df, text_col).limit(solve_max + 1).collect()
+    if len(probe) <= solve_max:
         return _learn_bpe_driver(df.sparkSession, probe, num_merges)
     base = _word_counts(df, text_col).select(
         "word", "freq", _char_syms(F.col("word")).alias("syms")
     )
-    words = pin(base)
+    words = base.localCheckpoint(eager=True)
     # every subsequent round is vocab-sized: shrink the per-round
     # shuffle width to the state's volume (iterative.py — the same
     # scheduling fix measured on CC/pagerank), then run each round as a
@@ -218,12 +211,13 @@ def learn_bpe(
     with iteration_shuffle_width(df.sparkSession, words.count()):
         merge_rounds: list[DataFrame] = []
         for k in range(num_merges):
-            top = pin(
+            top = (
                 _adjacent_pairs(words)
                 .orderBy(
                     F.col("cnt").desc(), F.col("a").asc(), F.col("b").asc()
                 )
                 .limit(1)
+                .localCheckpoint(eager=True)
             )
             merge_rounds.append(
                 top.select(F.lit(k).cast("long").alias("rank"), "a", "b", "cnt")
@@ -232,14 +226,16 @@ def learn_bpe(
             # (pair-less round) must leave words intact, never wipe
             # them (a crossJoin with an empty side would).
             sel = top.select(F.col("a").alias("_ma"), F.col("b").alias("_mb"))
-            words = pin(
-                words.join(F.broadcast(sel), F.lit(True), "left").select(
+            words = (
+                words.join(F.broadcast(sel), F.lit(True), "left")
+                .select(
                     "word",
                     "freq",
                     _apply_merge(
                         F.col("syms"), F.col("_ma"), F.col("_mb")
                     ).alias("syms"),
                 )
+                .localCheckpoint(eager=True)
             )
     merges = merge_rounds[0]
     for m in merge_rounds[1:]:

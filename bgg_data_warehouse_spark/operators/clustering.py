@@ -159,7 +159,7 @@ def kmeans_quantized(
     """
     # pinned: every Lloyd round re-scans the quantized corpus (map-only
     # assignment + one partial agg), and the final assignment scans it
-    # once more — executor-memory cache, the _default_pin convention
+    # once more — executor-memory cache
     vectors = df.select(
         F.col(id_col).alias("id"), _quantize(F.col(vec_col), scale).alias("qv")
     ).cache()
@@ -194,8 +194,6 @@ def semantic_dedup(
     iters: int = 2,
     scale: int = 1000,
     threshold: float = 0.95,
-    dim: int | None = None,
-    pin=None,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     embedding space, then near-duplicate ONLY within clusters — the
@@ -222,22 +220,22 @@ def semantic_dedup(
         df, id_col, vec_col, k=k, iters=iters, scale=scale
     ).select("id", "cluster")
     # `lab` embeds the whole k-means DAG and feeds THREE consumers (both
-    # pair sides + the output mark join): pin it so the clustering runs
+    # pair sides + the output mark join): cache it so the clustering runs
     # once. Norms are per-VECTOR, so they're computed here — the pair
     # stage then does only a dot per candidate. sqrt(dot(v,v)) is the
     # same IEEE fold the all-in-one cosine (and the SQL oracle) runs, so
     # dot/(na*nb) stays bit-identical to cosine_similarity per pair.
-    pin = pin if pin is not None else (lambda d: d.cache())
-    # repartition on id before pinning: the embedding fixture arrives as
+    # repartition on id before caching: the embedding fixture arrives as
     # ONE file → one partition, and the pair join below is a broadcast
     # hash join whose parallelism equals the STREAM side's partitioning —
     # unpartitioned, every within-cluster dot product lands in a single
     # task (measured 8.8 s for 500k pairs; spread, sub-second).
-    lab = pin(
+    lab = (
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
         .join(assign, "id")
-        .withColumn("_norm", l2_norm(F.col("vec"), dim))
+        .withColumn("_norm", l2_norm(F.col("vec")))
         .repartition("id")
+        .cache()
     )
     left = lab.select(
         "cluster",
@@ -255,7 +253,7 @@ def semantic_dedup(
         left.join(right, "cluster")
         .where(F.col("a") < F.col("b"))
         .where(
-            dot_product(F.col("va"), F.col("vb"), dim)
+            dot_product(F.col("va"), F.col("vb"))
             / (F.col("na") * F.col("nb"))
             >= threshold
         )

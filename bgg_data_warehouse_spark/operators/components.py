@@ -40,6 +40,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import iterative
 from .iterative import iteration_shuffle_width as _iteration_shuffle_width
 
 # Absolute ceiling on the affected-MEMBER frame the delete-localization
@@ -69,37 +70,26 @@ def connected_components(
     src: str,
     dst: str,
     *,
-    max_iter: int = 25,
     canonical_edges: bool = False,
-    pin=None,
 ) -> DataFrame:
     """Map every node of the undirected pair graph to its component min.
 
     Returns (node, canonical) for every node appearing in ``edges``;
     ``canonical`` is the smallest node id in the component. Raises if the
-    fixed point is not reached within ``max_iter`` rounds (dedup-cluster
-    graphs converge in a handful; hitting the cap means the input is not
-    a near-dup pair graph — see module docstring for the O(log² n)
-    alternative).
-
-    ``pin`` is the per-round materialization hook (same contract as
-    ``operators.dedup.Pin``): default ``localCheckpoint(eager=True)`` —
-    right for single-node runs — or pass a pin that writes the frame to
-    reliable storage and reads it back, so iteration state lives there
-    instead of in executor block managers, the swap a 100 TB cluster
-    run needs (state survives executor loss; lineage truncated
-    identically).
+    fixed point is not reached within 25 rounds (dedup-cluster graphs
+    converge in a handful; hitting the cap means the input is not a
+    near-dup pair graph — see module docstring for the O(log² n)
+    alternative). Each round's state is a ``localCheckpoint`` (lineage
+    truncated, state in the executors' block managers).
     """
-    default_pin = pin is None
-    if pin is None:
-        def pin(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
     # Materialize the DIRECTED pair set first: union branches are not
     # common-subexpression-eliminated, so orienting both ways off the raw
     # ``edges`` plan would run the (potentially expensive — minhash
     # pair-gen) upstream TWICE inside one job. Pinning before the union
     # makes the swap branch a cheap re-scan of the checkpoint.
-    base = pin(edges.select(F.col(src).alias("a"), F.col(dst).alias("b")))
+    base = edges.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).localCheckpoint(eager=True)
     # Undirect the edges; both orientations are needed so the min can
     # flow either way across a pair. ``canonical_edges=True`` (the pair
     # source already guarantees distinct a < b pairs — every dedup pair
@@ -109,14 +99,16 @@ def connected_components(
         base.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     if not canonical_edges:
-        # the dedup shuffle is real work — pin its result; the canonical
-        # case leaves ``und`` as a zero-cost double-scan of the checkpoint
-        und = pin(und.distinct())
+        # the dedup shuffle is real work — checkpoint its result; the
+        # canonical case leaves ``und`` as a zero-cost double-scan of the
+        # checkpoint
+        und = und.distinct().localCheckpoint(eager=True)
     with _iteration_shuffle_width(und.sparkSession, und.count()):
-        labels = pin(
+        labels = (
             und.select(F.col("a").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("canonical"))
+            .localCheckpoint(eager=True)
         )
         def _vote_round(lbl: DataFrame) -> DataFrame:
             # neighbor labels: for edge (a,b), a's current label is a
@@ -131,28 +123,21 @@ def connected_components(
             )
 
         prev_sum = None
-        for _ in range(max_iter):
-            # With the default pin the round state is a LAZY
-            # localCheckpoint whose FIRST action is the convergence
-            # aggregate, so one round costs ONE Spark job instead of
-            # two (eager checkpoint + sum — r15, guide §2.6; composing
-            # two vote rounds per materialization was ALSO measured and
-            # rejected: the stopping rule then overshoots by a full
-            # extra round of |E|-sized work, which cost more than the
-            # saved job floor on the fast-converging dup-blob graphs).
-            # A caller-supplied pin (a storage round-trip at 100 TB) is
-            # honored unchanged.
+        for _ in range(25):
+            # The round state is a LAZY localCheckpoint whose FIRST
+            # action is the convergence aggregate, so one round costs
+            # ONE Spark job instead of two (eager checkpoint + sum —
+            # r15, guide §2.6; composing two vote rounds per
+            # materialization was ALSO measured and rejected: the
+            # stopping rule then overshoots by a full extra round of
+            # |E|-sized work, which cost more than the saved job floor
+            # on the fast-converging dup-blob graphs).
             # labels are monotonically non-increasing, so the fixed
             # point is reached exactly when the label sum stops falling
             # — a scalar aggregate instead of a join-based diff.
             # decimal(38,0): ANSI mode would overflow-error a long sum
             # of 10⁹ node ids.
-            voted = _vote_round(labels)
-            new_labels = (
-                voted.localCheckpoint(eager=False)
-                if default_pin
-                else pin(voted)
-            )
+            new_labels = _vote_round(labels).localCheckpoint(eager=False)
             cur_sum = new_labels.agg(
                 F.sum(F.col("canonical").cast("decimal(38,0)"))
             ).collect()[0][0]
@@ -161,7 +146,7 @@ def connected_components(
                 return labels
             prev_sum = cur_sum
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds — "
+        "connected_components did not converge in 25 rounds — "
         "the input graph's diameter exceeds the hash-min budget"
     )
 
@@ -171,10 +156,7 @@ def connected_components_star(
     src: str,
     dst: str,
     *,
-    max_iter: int = 40,
     canonical_edges: bool = False,
-    confirm_fixed_point: bool = True,
-    contract_first: bool = True,
 ) -> DataFrame:
     """Large-star/small-star connected components (Kiveris et al.,
     SoCC'14) — the O(log² n)-round variant for graphs whose diameter is
@@ -193,7 +175,7 @@ def connected_components_star(
     component toward its minimum until the edge set is a star centered on
     it. Returns (node, canonical) like ``connected_components``.
 
-    ``contract_first`` (r8 VERDICT #4) runs a FOREST-CONTRACTION phase
+    A FOREST-CONTRACTION phase (r8 VERDICT #4) runs
     before any star rewrite: one min-aggregate builds parent pointers
     m(u) = min(Γ(u) ∪ {u}) — a forest, since every non-root points to a
     strictly smaller node — then pointer jumping (label ← label∘label,
@@ -215,7 +197,6 @@ def connected_components_star(
     ``components_star_chains`` oracle hash-checks this. Measured at
     sf0.1 (order chains, 135k edges, local[32], warm): pure star 8.2 s
     → contract-then-star 4.9 s, same output hash.
-    ``contract_first=False`` recovers the pure star loop.
     """
     # canonical undirected edge list, self-loops dropped.
     # ``canonical_edges=True`` lets callers whose pair source already
@@ -286,12 +267,11 @@ def connected_components_star(
             .distinct()
         )
 
-    def _star(e0: DataFrame, nodes0: DataFrame, sig0: tuple | None = None) -> DataFrame:
+    def _star(e0: DataFrame, nodes0: DataFrame) -> DataFrame:
         """The star loop proper: (node, canonical) for every node of
-        ``nodes0`` given the canonical edge set ``e0``. ``sig0`` lets a
-        caller that already signatured ``e0`` skip the duplicate scan."""
+        ``nodes0`` given the canonical edge set ``e0``."""
         ee = e0
-        sig = sig0 if sig0 is not None else _sig(ee)
+        sig = _sig(ee)
         if sig[0] == 0:
             # no edges: every node is its own component — the loop
             # would spend ~4 jobs (rewrite checkpoint, signature,
@@ -304,7 +284,7 @@ def connected_components_star(
             return nodes0.select(
                 "node", F.col("node").alias("canonical")
             )
-        for _ in range(max_iter):
+        for _ in range(40):
             # one rewrite per materialization: composing two rewrites per
             # checkpoint was measured SLOWER (12.8 s vs 9.5 s at sf0.1) —
             # the 6-shuffle composed job costs more than the saved stage
@@ -319,11 +299,10 @@ def connected_components_star(
             # over two DIFFERENT successive edge sets collides with
             # probability ~2⁻⁶⁴ — and the rewrite is a monotone
             # contraction, so a false stop needs exactly such a collision
-            # between adjacent rounds. ``confirm_fixed_point`` (default
-            # ON — ADVICE r03 #4) adds an exact exceptAll double-check:
-            # 4 extra full scans, but only ONCE, at the round the
-            # signature stops moving (~1 s at sf0.1). Perf-sensitive
-            # callers that accept the 2⁻⁶⁴ collision odds opt out.
+            # between adjacent rounds. An exact double-check (ADVICE
+            # r03 #4) confirms the stop: 4 extra full scans, but only
+            # ONCE, at the round the signature stops moving (~1 s at
+            # sf0.1).
             new_sig = _sig(new_e)
             # the exact confirm is ONE symmetric multiset-diff job
             # (signed counts sum to 0 per (u,v) iff both exceptAll
@@ -343,15 +322,13 @@ def connected_components_star(
                     == 0
                 )
 
-            if new_sig == sig and (
-                not confirm_fixed_point or _multiset_equal(new_e, ee)
-            ):
+            if new_sig == sig and _multiset_equal(new_e, ee):
                 ee = new_e
                 break
             ee, sig = new_e, new_sig
         else:
             raise RuntimeError(
-                f"connected_components_star did not converge in {max_iter} rounds"
+                "connected_components_star did not converge in 40 rounds"
             )
         # the fixed point is a star: every non-min node has exactly one
         # edge to its component min
@@ -364,21 +341,12 @@ def connected_components_star(
         return labels.union(mins)
 
     spark = edges.sparkSession
-    # ONE scan seeds both the shuffle-width sizing and (on the pure-star
-    # path) the loop's convergence baseline
+    # ONE scan sizes the shuffle width and spots an empty edge set
     sig_e = _sig(e)
     n_edges = sig_e[0]
     with _iteration_shuffle_width(spark, n_edges):
-        if not contract_first or n_edges == 0:
-            # built only on this path — the contract path derives its
-            # node universe from the parent-pointer map instead, and an
-            # eager |V| distinct+checkpoint here would be a wasted job
-            all_nodes = (
-                e.select(F.col("u").alias("node"))
-                .union(e.select(F.col("v").alias("node")))
-                .distinct()
-            )
-            return _star(e, all_nodes, sig_e)
+        if n_edges == 0:  # no edges, no nodes: the empty labeling
+            return e.select(F.col("u").alias("node"), F.col("u").alias("canonical"))
         # --- phase 1: forest contraction ---------------------------------
         # parent pointers: m(u) = min(Γ(u) ∪ {u}). Non-roots point to a
         # strictly smaller node, so m is a forest; ``und`` is a zero-cost
@@ -407,7 +375,7 @@ def connected_components_star(
         # discipline as connected_components; decimal — ANSI long sums
         # overflow).
         prev_sum = object()
-        for _ in range(max_iter):
+        for _ in range(40):
             hop = part
             for _hops in range(3):
                 hop = hop.join(
@@ -428,7 +396,7 @@ def connected_components_star(
             prev_sum = cur_sum
         else:
             raise RuntimeError(
-                f"pointer jumping did not converge in {max_iter} rounds"
+                "pointer jumping did not converge in 40 rounds"
             )
         # --- phase 2: star on the quotient graph -------------------------
         # supernodes = the roots; quotient edges = cross-root edges,
@@ -462,8 +430,6 @@ def collapse_clusters(
     docs: DataFrame,
     id_col: str,
     pairs: DataFrame,
-    pair_a: str = "doc_a",
-    pair_b: str = "doc_b",
     *,
     canonical_pairs: bool = False,
 ) -> DataFrame:
@@ -474,7 +440,7 @@ def collapse_clusters(
     which under heavy duplication approaches corpus size; the planner/AQE
     broadcasts it only when runtime stats show it is small."""
     comp = connected_components(
-        pairs, pair_a, pair_b, canonical_edges=canonical_pairs
+        pairs, "doc_a", "doc_b", canonical_edges=canonical_pairs
     )
     return docs.select(F.col(id_col).alias("doc")).join(
         comp.withColumnRenamed("node", "doc"), "doc", "left_outer"
@@ -490,9 +456,6 @@ def incremental_components_update(
     delta_edges: DataFrame,
     src: str,
     dst: str,
-    *,
-    max_iter: int = 40,
-    driver_solve_max: int = 200_000,
 ) -> DataFrame:
     """Absorb a batch of NEW edges into a stored CC labeling without
     touching the base edge set (r10 VERDICT #4 — the graph twin of
@@ -510,7 +473,7 @@ def incremental_components_update(
        canonicals (same-canonical edges are intra-component no-ops and
        drop out);
     3. run CC on the super-graph — |V| <= 2·|delta|, independent of base
-       graph size. Up to ``driver_solve_max`` super-edges this is a
+       graph size. Up to ``iterative.DRIVER_SOLVE_MAX`` super-edges this is a
        driver-side union-find: the super-map must be BROADCAST-sized
        for step 4 regardless, so collecting the same-bounded edge set
        adds no new constraint, and a few thousand merge edges resolve
@@ -544,8 +507,7 @@ def incremental_components_update(
     scans in the update plan.
     """
     new_nodes, super_map, _pairs = _update_super_map(
-        labels, delta_edges, src, dst,
-        max_iter=max_iter, driver_solve_max=driver_solve_max,
+        labels, delta_edges, src, dst
     )
     return (
         labels.unionByName(new_nodes)
@@ -562,9 +524,6 @@ def _update_super_map(
     delta_edges: DataFrame,
     src: str,
     dst: str,
-    *,
-    max_iter: int,
-    driver_solve_max: int,
 ):
     """Shared core of the addition maintainers: (new_nodes, super_map,
     local_pairs) where ``new_nodes`` are delta endpoints absent from
@@ -623,8 +582,8 @@ def _update_super_map(
     # pinned ep_canon broadcasts — are already stable); only the rare
     # over-bound path re-evaluates once into a checkpoint so the
     # distributed star's rounds don't replay the contraction joins.
-    rows = super_edges.limit(driver_solve_max + 1).collect()
-    if len(rows) <= driver_solve_max:
+    rows = super_edges.limit(iterative.DRIVER_SOLVE_MAX + 1).collect()
+    if len(rows) <= iterative.DRIVER_SOLVE_MAX:
         pairs = _union_find_pairs((r[0], r[1]) for r in rows)
         super_map = _driver_relation(
             labels.sparkSession, pairs, "canonical long, merged long"
@@ -632,7 +591,7 @@ def _update_super_map(
         return new_nodes, super_map, pairs
     super_map = connected_components_star(
         super_edges.localCheckpoint(eager=True),
-        "u", "v", max_iter=max_iter, canonical_edges=True
+        "u", "v", canonical_edges=True
     ).select(
         F.col("node").alias("canonical"), F.col("canonical").alias("merged")
     )
@@ -644,9 +603,6 @@ def incremental_components_update_delta(
     delta_edges: DataFrame,
     src: str,
     dst: str,
-    *,
-    max_iter: int = 40,
-    driver_solve_max: int = 200_000,
 ) -> DataFrame:
     """:func:`incremental_components_update`, emitting ONLY the label
     rows an edge-addition batch actually changes — the write-side twin
@@ -666,8 +622,7 @@ def incremental_components_update_delta(
     tests/test_components.py; the end-to-end store is hash-gated by
     ``cc_log_maintenance``."""
     new_nodes, super_map, local_pairs = _update_super_map(
-        labels, delta_edges, src, dst,
-        max_iter=max_iter, driver_solve_max=driver_solve_max,
+        labels, delta_edges, src, dst
     )
     if local_pairs is not None:
         # driver-solved epoch (the common delta shape): the changed map
@@ -714,7 +669,7 @@ def _driver_relation(spark, rows, schema: str) -> DataFrame:
     NOT ``coalesce(1)`` — that narrows the 32 slices into one task
     which then pays the 32 round-trips SEQUENTIALLY (measured 6 s,
     worse than either). The maps are delta-bounded by the
-    ``driver_solve_max`` contract, so one slice is the right width at
+    ``iterative.DRIVER_SOLVE_MAX`` contract, so one slice is the right width at
     any cluster size."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1) if rows else rows,
@@ -762,8 +717,6 @@ def incremental_components_delete(
     dst: str,
     *,
     canonical_col: str | None = None,
-    max_iter: int = 40,
-    driver_solve_max: int = 200_000,
 ) -> DataFrame:
     """Absorb a batch of edge DELETIONS into a stored CC labeling by
     recomputing ONLY the affected components (r10 VERDICT #4's
@@ -784,7 +737,7 @@ def incremental_components_delete(
        ``labels`` derives it;
     3. drop the deleted pairs (orientation-normalized anti-join);
     4. rerun CC on the surviving affected edges — driver union-find
-       under ``driver_solve_max`` (the affected subgraph is small when
+       under ``iterative.DRIVER_SOLVE_MAX`` (the affected subgraph is small when
        deltas touch few components), distributed star above it;
     5. union with the untouched components' labels, passed through
        unread.
@@ -799,8 +752,6 @@ def incremental_components_delete(
     res = _delete_affected_relabel(
         labels, edges, deleted_edges, src, dst,
         canonical_col=canonical_col,
-        max_iter=max_iter,
-        driver_solve_max=driver_solve_max,
     )
     untouched = labels.join(
         F.broadcast(res.affected), "canonical", "left_anti"
@@ -816,8 +767,6 @@ def _delete_affected_relabel(
     dst: str,
     *,
     canonical_col: str | None,
-    max_iter: int,
-    driver_solve_max: int,
 ):
     """Shared core of the deletion maintainers. Returns a
     :class:`_DeleteRelabel`: the delta-bounded ``affected`` canonical
@@ -851,9 +800,9 @@ def _delete_affected_relabel(
         # fall back to the broadcast-join probe, which is always
         # correct, merely unpruned.
         ep_vals = [
-            r[0] for r in endpoints.limit(driver_solve_max + 1).collect()
+            r[0] for r in endpoints.limit(iterative.DRIVER_SOLVE_MAX + 1).collect()
         ]
-        if len(ep_vals) <= driver_solve_max:
+        if len(ep_vals) <= iterative.DRIVER_SOLVE_MAX:
             endpoint_probe = labels.where(F.col("node").isin(ep_vals))
         else:
             endpoint_probe = labels.join(F.broadcast(endpoints), "node")
@@ -875,10 +824,10 @@ def _delete_affected_relabel(
     probe_rows = (
         endpoint_probe.select("node", "canonical")
         .repartition(1)
-        .limit(driver_solve_max + 1)
+        .limit(iterative.DRIVER_SOLVE_MAX + 1)
         .collect()
     )
-    if len(probe_rows) <= driver_solve_max:
+    if len(probe_rows) <= iterative.DRIVER_SOLVE_MAX:
         aff_set = sorted({r[1] for r in probe_rows})
         affected = _driver_relation(
             spark, [(c,) for c in aff_set], "canonical long"
@@ -958,8 +907,8 @@ def _delete_affected_relabel(
     # the bounded collect is the survivors frame's only evaluation on
     # the driver-solve path, so no eager checkpoint — the over-bound
     # star branch pins it below before its iterative rounds
-    surv_rows = survivors.limit(driver_solve_max + 1).collect()
-    if len(surv_rows) <= driver_solve_max:
+    surv_rows = survivors.limit(iterative.DRIVER_SOLVE_MAX + 1).collect()
+    if len(surv_rows) <= iterative.DRIVER_SOLVE_MAX:
         new_pairs = _union_find_pairs((r[0], r[1]) for r in surv_rows)
         new_aff = _driver_relation(
             spark, new_pairs, "node long, canonical long"
@@ -988,7 +937,7 @@ def _delete_affected_relabel(
         )
     new_aff = connected_components_star(
         survivors.localCheckpoint(eager=True),
-        "u", "v", max_iter=max_iter, canonical_edges=True
+        "u", "v", canonical_edges=True
     )
     return _DeleteRelabel(affected, new_aff, aff_vals, aff_nodes, None, None)
 
@@ -1001,8 +950,6 @@ def incremental_components_delete_delta(
     dst: str,
     *,
     canonical_col: str | None = None,
-    max_iter: int = 40,
-    driver_solve_max: int = 200_000,
 ):
     """:func:`incremental_components_delete` as a CHANGE SET — the
     write-side twin the log-structured store needs (r13 VERDICT #5).
@@ -1021,8 +968,6 @@ def incremental_components_delete_delta(
     res = _delete_affected_relabel(
         labels, edges, deleted_edges, src, dst,
         canonical_col=canonical_col,
-        max_iter=max_iter,
-        driver_solve_max=driver_solve_max,
     )
     if res.new_pairs is not None and res.member_set is not None:
         # fully driver-resolved epoch (r15): the surviving labeling AND

@@ -63,7 +63,7 @@ def md5_fold_sql(expr: str, n: int) -> str:
 
 
 def bucket_log_probs(
-    counts: DataFrame, *, num_buckets: int, micro: int = MICRO
+    counts: DataFrame, *, num_buckets: int
 ) -> DataFrame:
     """(bkt, l) — add-one-smoothed bucket log-probabilities in integer
     micro-nats, over the FULL bucket spine 0..num_buckets-1 (absent
@@ -88,7 +88,7 @@ def bucket_log_probs(
                     (F.col("n") + 1).cast("double")
                     / (F.col("_tot") + num_buckets).cast("double")
                 )
-                * micro
+                * MICRO
             )
             .cast("long")
             .alias("l"),

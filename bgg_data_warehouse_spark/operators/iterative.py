@@ -19,19 +19,24 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
+# Largest relation (super-graph edges, vocabulary, word table) an
+# iterative operator solves on the driver in one collect; past it the
+# distributed loop runs (components, bpe, wordpiece).
+DRIVER_SOLVE_MAX = 200_000
 
-def iteration_width(n_rows: int, rows_per_partition: int = 500_000) -> int:
+
+def iteration_width(n_rows: int) -> int:
     """Shuffle width sized to an iteration's actual data volume.
 
     Floor of 8 keeps local[32] busy enough on tiny fixtures; on a real
-    cluster the caller's ``rows_per_partition`` ties width to data, not
-    to whatever ``spark.sql.shuffle.partitions`` the session inherited.
+    cluster 500k rows per partition ties width to data, not to whatever
+    ``spark.sql.shuffle.partitions`` the session inherited.
     """
-    return max(8, n_rows // rows_per_partition + 1)
+    return max(8, n_rows // 500_000 + 1)
 
 
 @contextmanager
-def iteration_shuffle_width(spark, n_rows: int, rows_per_partition: int = 500_000):
+def iteration_shuffle_width(spark, n_rows: int):
     """Temporarily size ``spark.sql.shuffle.partitions`` to the loop's
     data volume. Only ever *shrinks* below the session width: sizing UP
     for 100 TB inputs is the session's job (tune_session / cluster
@@ -48,7 +53,7 @@ def iteration_shuffle_width(spark, n_rows: int, rows_per_partition: int = 500_00
     """
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    target = iteration_width(n_rows, rows_per_partition)
+    target = iteration_width(n_rows)
     try:
         if target < int(before):
             spark.conf.set(key, str(target))

@@ -38,6 +38,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# node count up to which an LPA round broadcasts the label table
+# (shuffle-hash join above it)
+BROADCAST_NODES_MAX = 2_000_000
+
 __all__ = [
     "basket_sets",
     "canonical_pairs",
@@ -146,7 +150,7 @@ def label_propagation(
     edges: DataFrame,
     *,
     iters: int = 3,
-    broadcast_nodes_max: int = 2_000_000,
+    broadcast_nodes_max: int = BROADCAST_NODES_MAX,
 ) -> DataFrame:
     """Run ``iters`` synchronous LPA rounds over (src, dst) edges;
     returns (v, label). Nodes are the distinct edge endpoints (for a
@@ -173,7 +177,6 @@ def label_propagation_from_baskets(
     baskets: DataFrame,
     *,
     iters: int = 3,
-    broadcast_nodes_max: int = 2_000_000,
 ) -> DataFrame:
     """:func:`label_propagation` fused with the edge-list build, for
     callers holding a :func:`basket_sets` frame: equivalent to
@@ -239,10 +242,10 @@ def label_propagation_from_baskets(
         # on the same input (lo/hi are NULL here, so the dense check
         # below would TypeError)
         return adj.select(F.col("src").alias("v"), F.col("src").alias("label"))
-    if stats.n <= broadcast_nodes_max and stats.hi - stats.lo + 1 == stats.n:
+    if stats.n <= BROADCAST_NODES_MAX and stats.hi - stats.lo + 1 == stats.n:
         return _lpa_rounds_dense(adj, int(stats.lo), iters)
     work = adj.select("src", F.explode("nbrs").alias("dst"))
-    return _lpa_rounds(work, nodes, iters, broadcast_nodes_max)
+    return _lpa_rounds(work, nodes, iters, BROADCAST_NODES_MAX)
 
 
 def _array_mode_smallest(labs) -> F.Column:

@@ -29,7 +29,6 @@ def latest_per_key(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[Column | str],
-    rank_col: str = "_rn",
 ) -> DataFrame:
     """Keep exactly one row per key tuple: the first under ``order_by``.
 
@@ -38,9 +37,9 @@ def latest_per_key(
     """
     w = Window.partitionBy(*keys).orderBy(*_cols(order_by))
     return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .where(F.col(rank_col) == 1)
-        .drop(rank_col)
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
     )
 
 
@@ -49,11 +48,10 @@ def topk_per_key(
     keys: Sequence[str],
     order_by: Sequence[Column | str],
     k: int,
-    rank_col: str = "rank",
 ) -> DataFrame:
     """Top-k rows per key tuple, ranked 1..k (rank column kept)."""
     w = Window.partitionBy(*keys).orderBy(*_cols(order_by))
-    return df.withColumn(rank_col, F.row_number().over(w)).where(F.col(rank_col) <= k)
+    return df.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def validity_intervals(
@@ -61,10 +59,6 @@ def validity_intervals(
     keys: Sequence[str],
     ts_col: str,
     order_by: Sequence[Column | str] | None = None,
-    *,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """SCD type-2 derivation: turn a change/snapshot log into validity
     intervals — each version valid from its own timestamp until the next
@@ -85,7 +79,7 @@ def validity_intervals(
     w = Window.partitionBy(*keys).orderBy(*order)
     nxt = F.lead(ts_col).over(w)
     return (
-        df.withColumn(valid_from, F.col(ts_col))
-        .withColumn(valid_to, nxt)
-        .withColumn(current_col, nxt.isNull())
+        df.withColumn("valid_from", F.col(ts_col))
+        .withColumn("valid_to", nxt)
+        .withColumn("is_current", nxt.isNull())
     )

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import word_tokens
-from .dedup import Pin, _default_pin
 
 MICRO = 1_000_000
 
@@ -133,9 +132,6 @@ def trigram_backoff_ppl(
     score_df: DataFrame,
     id_col: str,
     text_col: str,
-    *,
-    micro: int = MICRO,
-    pin: Pin = _default_pin,
 ) -> DataFrame:
     """(doc, n_trigrams, nll_micro, ppl) — trigram LM with STUPID
     BACKOFF (Brants et al., "Large Language Models in Machine
@@ -155,13 +151,13 @@ def trigram_backoff_ppl(
     their n-gram keys — AQE broadcasts the small ones; every join is a
     LEFT join so the CASE can select the deepest seen order.
     """
-    # tokenize the training corpus ONCE (pinned): the trigram, bigram
+    # tokenize the training corpus ONCE (cached): the trigram, bigram
     # and unigram model orders all derive from the same (doc, tokens)
     # frame instead of re-tokenizing the corpus three times — and the
     # tokenize itself runs wide via _tokens_wide when the source scan
     # is under-parallel (r15; was 3 serial ~0.9 s single-task jobs on
     # the one-row-group fixture).
-    tok_train = pin(_tokens_wide(train_df, id_col, text_col))
+    tok_train = _tokens_wide(train_df, id_col, text_col).cache()
     tri_m = (
         _trigram_counts_from_tokens(tok_train)
         .groupBy("w1", "w2", "w3")
@@ -173,7 +169,7 @@ def trigram_backoff_ppl(
     uni_m = toks.groupBy("tok").agg(F.count("*").alias("c1"))
     n_tok = toks.agg(F.count("*").alias("n"))
 
-    doc_tri = pin(doc_trigram_counts(score_df, id_col, text_col))
+    doc_tri = doc_trigram_counts(score_df, id_col, text_col).cache()
     joined = (
         doc_tri.join(tri_m, ["w1", "w2", "w3"], "left")
         .join(
@@ -211,7 +207,7 @@ def trigram_backoff_ppl(
         "  WHEN c3 IS NOT NULL THEN ln(c3 / CAST(c12 AS DOUBLE))"
         "  WHEN c23 IS NOT NULL THEN ln(0.4 * (c23 / CAST(cu2 AS DOUBLE)))"
         "  ELSE ln(0.16 * (coalesce(cu3, 1) / CAST(n AS DOUBLE)))"
-        f" END * {micro}) AS BIGINT)"
+        f" END * {MICRO}) AS BIGINT)"
     )
     scored = (
         joined.withColumn("_slog", slog)
@@ -229,7 +225,7 @@ def trigram_backoff_ppl(
             F.exp(
                 F.col("nll_micro").cast("double")
                 / F.col("n_trigrams")
-                / F.lit(float(micro))
+                / F.lit(float(MICRO))
             ),
             4,
         ).alias("ppl"),
@@ -240,9 +236,6 @@ def bigram_perplexity(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    *,
-    micro: int = MICRO,
-    pin: Pin = _default_pin,
 ) -> DataFrame:
     """(doc, n_bigrams, nll_micro, ppl) for every document with ≥1 bigram.
 
@@ -251,17 +244,15 @@ def bigram_perplexity(
     the bigram-participating vocabulary (distinct tokens appearing in any
     bigram — identical to the full vocabulary except for tokens that only
     ever occur in single-token documents). ``nll_micro`` is the exact
-    integer Σ m·round(−ln P · micro); ``ppl`` = exp(nll_micro / n / micro)
+    integer Σ m·round(−ln P · MICRO); ``ppl`` = exp(nll_micro / n / MICRO)
     rounded to 4dp.
     """
     doc_bi = doc_bigram_counts(df, id_col, text_col)
     # every model quantity derives from the PRE-AGGREGATED doc_bi table:
-    # pin it once; it feeds the model build and the scoring join. The
-    # Pin hook (same contract as dedup.py) keeps lifetime with the
-    # CALLER — the default cache() is released by clearCache()/unpersist
-    # or a storage round-trip pin, instead of a per-invocation persist() leak
-    # (ADVICE r04 #2).
-    doc_bi = pin(doc_bi)
+    # cache it once; it feeds the model build and the scoring join. The
+    # cache() is released by the caller's clearCache()/unpersist, not
+    # leaked by a per-invocation persist() (ADVICE r04 #2).
+    doc_bi = doc_bi.cache()
     model = doc_bi.groupBy("a", "b").agg(F.sum("m").alias("cnt"))
     uni = doc_bi.groupBy("a").agg(F.sum("m").alias("cn"))
     vocab = (
@@ -271,7 +262,7 @@ def bigram_perplexity(
         .agg(F.count("*").alias("v"))
     )
     slog = F.expr(
-        f"CAST(round(ln((cnt + 1) / CAST(cn + v AS DOUBLE)) * {micro}) AS BIGINT)"
+        f"CAST(round(ln((cnt + 1) / CAST(cn + v AS DOUBLE)) * {MICRO}) AS BIGINT)"
     )
     scored = (
         doc_bi.join(model, ["a", "b"])
@@ -292,7 +283,7 @@ def bigram_perplexity(
             F.exp(
                 F.col("nll_micro").cast("double")
                 / F.col("n_bigrams")
-                / F.lit(float(micro))
+                / F.lit(float(MICRO))
             ),
             4,
         ).alias("ppl"),

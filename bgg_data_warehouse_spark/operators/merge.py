@@ -32,14 +32,13 @@ def apply_changelog(
     changes: DataFrame,
     keys: Sequence[str],
     seq_cols: Sequence[str],
-    op_col: str = "op",
     tag_col: str | None = None,
 ) -> DataFrame:
     """Apply an ordered CDC change log to a base snapshot (LWW upsert+delete).
 
     ``changes`` carries the key columns, a total order within each key
     (``seq_cols`` — e.g. a commit timestamp plus a log offset tiebreak),
-    an ``op_col`` in {'U','D'} ('U' = full-row upsert state, 'D' =
+    an ``op`` column in {'U','D'} ('U' = full-row upsert state, 'D' =
     delete), and every non-key column of ``base`` (Debezium-style
     full-row images). The newest change per key wins; keys whose final
     op is 'D' are removed; unmatched base rows pass through.
@@ -67,13 +66,12 @@ def apply_changelog(
                 f"apply_changelog: {label} columns collide with internal "
                 f"names: {sorted(clash)}"
             )
-    if op_col in payload:
-        # a base payload column named op_col would alias to _chg_op twice
+    if "op" in payload:
+        # a base payload column named op would alias to _chg_op twice
         # (once as the op marker, once as the payload rename) — ambiguous
         # downstream, and never what the caller meant
         raise ValueError(
-            f"apply_changelog: op_col {op_col!r} collides with a base "
-            "payload column"
+            "apply_changelog: the op column collides with a base payload column"
         )
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c).desc() for c in seq_cols]
@@ -83,7 +81,7 @@ def apply_changelog(
         .where(F.col("_rn") == 1)
         .select(
             *keys,
-            F.col(op_col).alias("_chg_op"),
+            F.col("op").alias("_chg_op"),
             *[F.col(c).alias(f"_chg_{c}") for c in payload],
         )
     )

@@ -33,10 +33,6 @@ __all__ = ["merkle_tree", "merkle_update", "merkle_tree_oracle_sql"]
 def merkle_tree(
     leaves: DataFrame,
     n_leaves: int,
-    *,
-    idx_col: str = "bucket",
-    checksum_col: str = "checksum",
-    count_col: str = "n_rows",
 ) -> DataFrame:
     """(level, idx, h) for the full tree over ``n_leaves`` (a power of
     two) leaf slots. Missing buckets become empty leaves (checksum 0,
@@ -54,13 +50,13 @@ def merkle_tree(
     # make two DIFFERING tables commit to the same root — an integrity
     # primitive must refuse, so the join key itself raises per row.
     guarded_idx = F.when(
-        (F.col(idx_col) >= 0) & (F.col(idx_col) < n_leaves),
-        F.col(idx_col),
+        (F.col("bucket") >= 0) & (F.col("bucket") < n_leaves),
+        F.col("bucket"),
     ).otherwise(
         F.raise_error(
             F.concat(
                 F.lit(f"merkle_tree: bucket outside [0, {n_leaves}): "),
-                F.col(idx_col).cast("string"),
+                F.col("bucket").cast("string"),
             )
         )
     )
@@ -70,8 +66,8 @@ def merkle_tree(
     deduped = (
         leaves.select(
             guarded_idx.alias("idx"),
-            F.col(checksum_col).alias("_c"),
-            F.col(count_col).alias("_n"),
+            F.col("checksum").alias("_c"),
+            F.col("n_rows").alias("_n"),
         )
         .groupBy("idx")
         .agg(

@@ -53,8 +53,6 @@ def naive_bayes_train(
     id_col: str,
     text_col: str,
     label_col: str,
-    *,
-    micro: int = MICRO,
 ) -> tuple[DataFrame, DataFrame]:
     """Train add-one-smoothed multinomial NB.
 
@@ -82,7 +80,7 @@ def naive_bayes_train(
             "label",
             F.expr(
                 "CAST(round(ln((coalesce(cnt, 0) + 1) /"
-                f" CAST(ctot + v AS DOUBLE)) * {micro}) AS BIGINT)"
+                f" CAST(ctot + v AS DOUBLE)) * {MICRO}) AS BIGINT)"
             ).alias("lp_micro"),
         )
     )
@@ -93,7 +91,7 @@ def naive_bayes_train(
     priors = nd.crossJoin(F.broadcast(n)).select(
         "label",
         F.expr(
-            f"CAST(round(ln(nd / CAST(n AS DOUBLE)) * {micro}) AS BIGINT)"
+            f"CAST(round(ln(nd / CAST(n AS DOUBLE)) * {MICRO}) AS BIGINT)"
         ).alias("prior_micro"),
     )
     return dense, priors

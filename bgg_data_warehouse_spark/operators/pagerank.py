@@ -54,14 +54,13 @@ def pagerank_integer(
     *,
     rounds: int = 3,
     scale: int = 1_000_000,
-    damping_pct: int = 85,
     assume_distinct: bool = False,
     n_edges_hint: int | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list; returns (node, rank) longs.
 
     Nodes = every id appearing as src or dst. Initial rank = ``scale``.
-    ``damping_pct`` is the damping factor in percent so the update stays
+    The damping factor is 85 percent, kept in percent so the update stays
     in exact integer arithmetic. ``assume_distinct=True`` skips the
     defensive edge dedup (a full shuffle of the edge list) when the
     caller guarantees no duplicate (src, dst) pairs — e.g. a doubled
@@ -82,7 +81,7 @@ def pagerank_integer(
     # "What's wrong" #1).
     n_edges = n_edges_hint if n_edges_hint is not None else e.count()
     width = iteration_width(n_edges)
-    base = (100 - damping_pct) * scale // 100
+    base = 15 * scale // 100
     with iteration_shuffle_width(e.sparkSession, n_edges):
         if not assume_distinct:
             e = e.distinct()
@@ -135,7 +134,7 @@ def pagerank_integer(
                     "node",
                     (
                         F.lit(base).cast("long")
-                        + F.expr(f"coalesce(mass, 0L) * {damping_pct} DIV 100")
+                        + F.expr("coalesce(mass, 0L) * 85 DIV 100")
                     ).alias("rank"),
                 )
                 .localCheckpoint(eager=False)

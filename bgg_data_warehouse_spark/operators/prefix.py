@@ -76,39 +76,31 @@ def running_sum(
     bucket: Column,
     order_cols: list[str],
     *,
-    partition_cols: list[str] | None = None,
     out_col: str = "running_sum",
 ) -> DataFrame:
     """Inclusive running sum of ``value_col`` over the order
-    (*partition_cols, bucket, *order_cols) — two-pass: per-bucket
-    window + exclusive prefix offsets of the per-bucket totals. With
-    ``partition_cols`` the scan restarts per group (a grouped running
-    aggregate) and EVERY stage parallelizes over groups x buckets —
-    the skew-proof form when a group can be arbitrarily large.
+    (bucket, *order_cols) — two-pass: per-bucket window + exclusive
+    prefix offsets of the per-bucket totals (:func:`running_sums` is
+    the grouped, multi-column form).
 
     ``order_cols`` must make rows unique WITHIN a bucket so the scan is
     deterministic; ``bucket`` must be order-aligned (see module doc).
     """
     _check_reserved(df)
-    pc = partition_cols or []
     b = df.withColumn("_b", _guarded_bucket(bucket))
     w_in = (
-        Window.partitionBy(*pc, "_b")
+        Window.partitionBy("_b")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     local = b.withColumn(out_col, F.sum(value_col).over(w_in))
     offsets = (
-        b.groupBy(*pc, "_b")
+        b.groupBy("_b")
         .agg(F.sum(value_col).alias("_t"))
-        .select(
-            *pc,
-            "_b",
-            F.sum("_t").over(_offset_window(pc)).alias("_off"),
-        )
+        .select("_b", F.sum("_t").over(_offset_window([])).alias("_off"))
     )
     return (
-        local.join(F.broadcast(offsets), [*pc, "_b"])
+        local.join(F.broadcast(offsets), "_b")
         .withColumn(out_col, F.col(out_col) + F.coalesce(F.col("_off"), F.lit(0)))
         .drop("_b", "_off")
     )
@@ -182,7 +174,6 @@ def running_min_before(
     bucket: Column,
     order_cols: list[str],
     *,
-    partition_cols: list[str] | None = None,
     out_col: str = "min_before",
 ) -> DataFrame:
     """EXCLUSIVE running min of ``value_col`` over the global order
@@ -191,25 +182,20 @@ def running_min_before(
     dominance primitive. Same two-pass decomposition as
     :func:`running_sum` (min is associative)."""
     _check_reserved(df)
-    pc = partition_cols or []
     b = df.withColumn("_b", _guarded_bucket(bucket))
     w_in = (
-        Window.partitionBy(*pc, "_b")
+        Window.partitionBy("_b")
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local = b.withColumn(out_col, F.min(value_col).over(w_in))
     offsets = (
-        b.groupBy(*pc, "_b")
+        b.groupBy("_b")
         .agg(F.min(value_col).alias("_t"))
-        .select(
-            *pc,
-            "_b",
-            F.min("_t").over(_offset_window(pc)).alias("_off"),
-        )
+        .select("_b", F.min("_t").over(_offset_window([])).alias("_off"))
     )
     return (
-        local.join(F.broadcast(offsets), [*pc, "_b"])
+        local.join(F.broadcast(offsets), "_b")
         .withColumn(out_col, F.least(F.col(out_col), F.col("_off")))
         .drop("_b", "_off")
     )

@@ -28,13 +28,13 @@ from pyspark.sql import functions as F
 
 
 def quantize_embeddings(
-    df: DataFrame, id_col: str, vec_col: str, *, levels: int = 127
+    df: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, qv: array<long>, scale) — symmetric linear quantization.
 
     ``scale`` is the corpus max-|x| (a max-aggregate: deterministic
     under any partitioning, unlike a float sum); each component maps to
-    round(x / scale * levels) ∈ [-levels, levels]. With levels=127 the
+    round(x / scale * 127) ∈ [-127, 127], so the
     values fit int8 at rest — parquet's integer encodings store them in
     ~1 byte — while staying BIGINT in-flight for exact integer math.
     """
@@ -63,7 +63,7 @@ def quantize_embeddings(
         F.col(id_col).alias("id"),
         F.transform(
             F.col(vec_col),
-            lambda x: F.round(x / F.col("scale") * levels).cast("long"),
+            lambda x: F.round(x / F.col("scale") * 127).cast("long"),
         ).alias("qv"),
         "scale",
     )

@@ -66,7 +66,6 @@ def train_test_split(
     weights: dict[str, float],
     *,
     bucket_fn: Callable[[Column], Column] = default_bucket,
-    split_col: str = "split",
 ) -> DataFrame:
     """Assign every row to a named split by banding the hash range.
 
@@ -90,7 +89,7 @@ def train_test_split(
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
     last = F.lit(names[-1])
     out = last if expr is None else expr.otherwise(last)
-    return df.withColumn(split_col, out)
+    return df.withColumn("split", out)
 
 
 def mix_sources(
@@ -99,18 +98,17 @@ def mix_sources(
     source_col: str,
     rates: dict[str, float],
     *,
-    default_rate: float = 1.0,
     bucket_fn: Callable[[Column], Column] = default_bucket,
 ) -> DataFrame:
     """Weighted source mixing: keep a deterministic ``rates[source]``
     fraction of each source's rows (hash-banded, so the kept set is
     stable and nested: rate 0.2 ⊂ rate 0.5). Unlisted sources keep
-    ``default_rate``. Pure filter — zero shuffles."""
+    every row. Pure filter — zero shuffles."""
     for src, r in rates.items():
         if not 0.0 <= r <= 1.0:
             raise ValueError(f"rate for {src!r} must be in [0,1], got {r}")
     b = bucket_fn(F.col(id_col))
-    thresh = F.lit(int(round(default_rate * BUCKETS)))
+    thresh = F.lit(BUCKETS)
     for src, r in rates.items():
         thresh = F.when(F.col(source_col) == src, F.lit(int(round(r * BUCKETS)))).otherwise(
             thresh
@@ -209,14 +207,12 @@ def pack_sequences(
     budget: int,
     *,
     group_cols: Sequence[str] = (),
-    pack_col: str = "pack_id",
-    offset_col: str = "pack_offset",
 ) -> DataFrame:
     """Concatenation packing: documents are laid end-to-end in ``id_col``
     order (within each group) and the token stream is cut every ``budget``
     tokens — the standard "concat then chunk" LLM pretraining layout.
-    Each row gets the pack it STARTS in (``pack_col``) and its token
-    offset within the stream (``offset_col``).
+    Each row gets the pack it STARTS in (``pack_id``) and its token
+    offset within the stream (``pack_offset``).
 
     Shape at scale: one running-sum window per group — a single hash
     exchange on the group key. With no ``group_cols`` the window is
@@ -228,8 +224,8 @@ def pack_sequences(
         F.sum(token_count_col).over(w.rowsBetween(Window.unboundedPreceding, -1)),
         F.lit(0),
     ).cast("long")
-    return df.withColumn(offset_col, start).withColumn(
-        pack_col, (F.col(offset_col) / F.lit(budget)).cast("long")
+    return df.withColumn("pack_offset", start).withColumn(
+        "pack_id", (F.col("pack_offset") / F.lit(budget)).cast("long")
     )
 
 
@@ -327,8 +323,6 @@ def weighted_sample_per_stratum(
     weight_col: str,
     stratum_col: str,
     k: int,
-    *,
-    key_col: str = "sample_key",
 ) -> DataFrame:
     """A-ES weighted sampling without replacement, per stratum: the top
     ``k`` keys WITHIN each ``stratum_col`` group are that stratum's
@@ -342,10 +336,10 @@ def weighted_sample_per_stratum(
         F.col(id_col).alias("doc"),
         F.col(stratum_col).alias("stratum"),
         F.col(weight_col).cast("long").alias("weight"),
-        key.alias(key_col),
+        key.alias("sample_key"),
     )
     w = Window.partitionBy("stratum").orderBy(
-        F.col(key_col).desc(), F.col("doc").asc()
+        F.col("sample_key").desc(), F.col("doc").asc()
     )
     return (
         out.withColumn("rn", F.row_number().over(w))
@@ -358,8 +352,6 @@ def weighted_sample_topk(
     id_col: str,
     weight_col: str,
     k: int,
-    *,
-    key_col: str = "sample_key",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement — the
     Efraimidis–Spirakis A-ES scheme (IPL 2006): each row gets key
@@ -385,8 +377,8 @@ def weighted_sample_topk(
         df.select(
             F.col(id_col).alias("doc"),
             F.col(weight_col).cast("long").alias("weight"),
-            key.alias(key_col),
+            key.alias("sample_key"),
         )
-        .orderBy(F.col(key_col).desc(), F.col("doc").asc())
+        .orderBy(F.col("sample_key").desc(), F.col("doc").asc())
         .limit(k)
     )

@@ -31,15 +31,18 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import dot_product, l2_norm
 
+# seed of the random hyperplanes every LSH bucketing draws
+LSH_SEED = 42
 
-def _paired_cosine(q_vec: str, n_vec: str, q_norm: str, n_norm: str, dim):
+
+def _paired_cosine(q_vec: str, n_vec: str, q_norm: str, n_norm: str):
     """dot(q,n) / (|q| * |n|) with the norms HOISTED to per-vector columns.
 
     Bit-identical to ``cosine_similarity``: the norm is the exact same
     fold, just evaluated once per vector instead of once per PAIR. The
     per-pair expression drops from three interpreted 64-element HOF
     folds to one — measured ~3x on the brute-force path (r7)."""
-    return dot_product(F.col(q_vec), F.col(n_vec), dim) / (
+    return dot_product(F.col(q_vec), F.col(n_vec)) / (
         F.col(q_norm) * F.col(n_norm)
     )
 
@@ -50,8 +53,6 @@ def brute_force_topk(
     id_col: str,
     vec_col: str,
     k: int = 10,
-    query_prefix: str = "q_",
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k per query vector.
 
@@ -61,28 +62,28 @@ def brute_force_topk(
     scan, no shuffle of the big side at all.
     """
     q = queries.select(
-        F.col(id_col).alias(f"{query_prefix}id"), F.col(vec_col).alias(f"{query_prefix}vec")
-    ).withColumn("_qn", l2_norm(F.col(f"{query_prefix}vec"), dim))
+        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+    ).withColumn("_qn", l2_norm(F.col("q_vec")))
     c = corpus.select(
         F.col(id_col).alias("nbr_id"), F.col(vec_col).alias("nbr_vec")
-    ).withColumn("_nn", l2_norm(F.col("nbr_vec"), dim))
+    ).withColumn("_nn", l2_norm(F.col("nbr_vec")))
     pairs = (
         F.broadcast(q)
         .crossJoin(c)
-        .where(F.col(f"{query_prefix}id") != F.col("nbr_id"))
+        .where(F.col("q_id") != F.col("nbr_id"))
         .withColumn(
             "cosine_sim",
-            _paired_cosine(f"{query_prefix}vec", "nbr_vec", "_qn", "_nn", dim),
+            _paired_cosine("q_vec", "nbr_vec", "_qn", "_nn"),
         )
     )
-    w = Window.partitionBy(f"{query_prefix}id").orderBy(
+    w = Window.partitionBy("q_id").orderBy(
         F.col("cosine_sim").desc(), F.col("nbr_id").asc()
     )
     return (
         pairs.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            F.col(f"{query_prefix}id").alias("query_id"),
+            F.col("q_id").alias("query_id"),
             "nbr_id",
             F.round("cosine_sim", 6).alias("cosine_sim"),
             "rank",
@@ -90,7 +91,7 @@ def brute_force_topk(
     )
 
 
-def _hyperplane_buckets_udf(num_tables: int, bits_per_table: int, seed: int):
+def _hyperplane_buckets_udf(num_tables: int, bits_per_table: int):
     """Pandas UDF: embedding -> array of per-table LSH bucket ids.
 
     Random-hyperplane signatures are a dense matrix multiply
@@ -112,7 +113,7 @@ def _hyperplane_buckets_udf(num_tables: int, bits_per_table: int, seed: int):
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        planes = np.random.RandomState(seed).standard_normal((mat.shape[1], total_bits))
+        planes = np.random.RandomState(LSH_SEED).standard_normal((mat.shape[1], total_bits))
         signs = (mat @ planes) > 0
         per_table = signs.reshape(len(vecs), num_tables, bits_per_table)
         ids = (per_table * weights).sum(axis=2).astype(np.int64)
@@ -123,19 +124,19 @@ def _hyperplane_buckets_udf(num_tables: int, bits_per_table: int, seed: int):
 
 def _with_lsh_buckets(
     df, id_col: str, vec_col: str, idn: str, vecn: str,
-    num_tables: int, bits_per_table: int, seed: int,
-    norm_name: str | None = None, dim: int | None = None,
+    num_tables: int, bits_per_table: int,
+    norm_name: str | None = None,
 ):
     """Attach (table, bucket) rows: one per hash table per vector.
 
     With ``norm_name``, the vector's L2 norm is computed HERE — once per
     vector, before the per-table explode — so the candidate re-rank pays
     one dot product per pair instead of re-folding both norms."""
-    udf = _hyperplane_buckets_udf(num_tables, bits_per_table, seed)
+    udf = _hyperplane_buckets_udf(num_tables, bits_per_table)
     out = df.select(F.col(id_col).alias(idn), F.col(vec_col).alias(vecn))
     cols = [idn, vecn]
     if norm_name is not None:
-        out = out.withColumn(norm_name, l2_norm(F.col(vecn), dim))
+        out = out.withColumn(norm_name, l2_norm(F.col(vecn)))
         cols.append(norm_name)
     return out.select(
         *cols, F.posexplode(udf(F.col(vecn))).alias("table", "bucket")
@@ -151,8 +152,6 @@ def lsh_topk(
     *,
     num_tables: int = 8,
     bits_per_table: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: random-hyperplane LSH candidate join.
 
@@ -164,16 +163,16 @@ def lsh_topk(
     """
 
     qb = _with_lsh_buckets(queries, id_col, vec_col, "query_id", "q_vec",
-                           num_tables, bits_per_table, seed, "_qn", dim)
+                           num_tables, bits_per_table, "_qn")
     cb = _with_lsh_buckets(corpus, id_col, vec_col, "nbr_id", "nbr_vec",
-                           num_tables, bits_per_table, seed, "_nn", dim)
+                           num_tables, bits_per_table, "_nn")
 
     cand = (
         qb.join(cb, ["table", "bucket"])
         .where(F.col("query_id") != F.col("nbr_id"))
         .dropDuplicates(["query_id", "nbr_id"])
         .withColumn(
-            "cosine_sim", _paired_cosine("q_vec", "nbr_vec", "_qn", "_nn", dim)
+            "cosine_sim", _paired_cosine("q_vec", "nbr_vec", "_qn", "_nn")
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("nbr_id").asc())
@@ -193,7 +192,6 @@ def ivf_topk(
     *,
     num_cells: int = 16,
     nprobe: int = 2,
-    dim: int | None = None,
 ) -> DataFrame:
     """IVF-flat ANN: coarse-quantize the corpus into cells, probe a few.
 
@@ -212,7 +210,7 @@ def ivf_topk(
         corpus.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cent_vec"))
         .orderBy(F.col("cell").asc())
         .limit(num_cells)
-        .withColumn("_cn", l2_norm(F.col("cent_vec"), dim))
+        .withColumn("_cn", l2_norm(F.col("cent_vec")))
     )
 
     def assign(df: DataFrame, idn: str, vecn: str, normn: str, n_assign: int) -> DataFrame:
@@ -220,9 +218,9 @@ def ivf_topk(
             df.select(F.col(id_col).alias(idn), F.col(vec_col).alias(vecn))
             # norm once per vector — the centroid cross join would
             # otherwise re-fold it num_cells times per row
-            .withColumn(normn, l2_norm(F.col(vecn), dim))
+            .withColumn(normn, l2_norm(F.col(vecn)))
             .crossJoin(F.broadcast(centroids))
-            .withColumn("cent_sim", _paired_cosine(vecn, "cent_vec", normn, "_cn", dim))
+            .withColumn("cent_sim", _paired_cosine(vecn, "cent_vec", normn, "_cn"))
         )
         w = Window.partitionBy(idn).orderBy(F.col("cent_sim").desc(), F.col("cell").asc())
         return (
@@ -239,7 +237,7 @@ def ivf_topk(
         .where(F.col("query_id") != F.col("nbr_id"))
         .dropDuplicates(["query_id", "nbr_id"])
         .withColumn(
-            "cosine_sim", _paired_cosine("q_vec", "nbr_vec", "_qn", "_nn", dim)
+            "cosine_sim", _paired_cosine("q_vec", "nbr_vec", "_qn", "_nn")
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col("nbr_id").asc())
@@ -254,11 +252,6 @@ def embedding_exact_dup_pairs(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    *,
-    num_tables: int = 8,
-    bits_per_table: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Radius-0 embedding near-dup: the PRODUCTION LSH candidate join
     (bits > 0 — bucketed, never all-pairs) verified by exact vector
@@ -276,10 +269,7 @@ def embedding_exact_dup_pairs(
     # no norm column: the verifier is exact array equality, so unlike the
     # cosine tier there is nothing to re-rank — folding an L2 norm here
     # would be dead O(dim) work carried through the per-table explode
-    buckets = _with_lsh_buckets(
-        df, id_col, vec_col, "doc", "vec", num_tables, bits_per_table, seed,
-        None, dim
-    )
+    buckets = _with_lsh_buckets(df, id_col, vec_col, "doc", "vec", 8, 8)
     return (
         buckets.alias("l")
         .join(buckets.alias("r"), ["table", "bucket"])
@@ -298,13 +288,11 @@ def embedding_near_dup_pairs(
     threshold: float = 0.95,
     num_tables: int = 8,
     bits_per_table: int = 8,
-    seed: int = 42,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via the LSH candidate join."""
     buckets = _with_lsh_buckets(
-        df, id_col, vec_col, "doc", "vec", num_tables, bits_per_table, seed,
-        "_n2", dim
+        df, id_col, vec_col, "doc", "vec", num_tables, bits_per_table,
+        "_n2",
     )
     cand = (
         buckets.alias("l")
@@ -332,7 +320,7 @@ def embedding_near_dup_pairs(
         # per-pair compute is dim-bounded, while the avoided shuffle
         # was candidate-set-sized; at any scale the bytes win.
         .withColumn(
-            "cosine_sim", _paired_cosine("vec_a", "vec_b", "_na", "_nb", dim)
+            "cosine_sim", _paired_cosine("vec_a", "vec_b", "_na", "_nb")
         )
         .where(F.col("cosine_sim") >= threshold)
         .select("doc_a", "doc_b", "cosine_sim")

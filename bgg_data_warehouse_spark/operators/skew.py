@@ -41,19 +41,14 @@ def salted_join(
     on: str | list[str],
     *,
     salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join ``skewed`` ⋈ ``other`` on ``on`` with the skewed side
     salted into ``salts`` sub-keys and ``other`` replicated to match.
 
-    Row-identical to ``skewed.join(other, on, how)`` — the salt only
-    changes the partitioning. ``how`` is limited to the joins where
-    salting the left side preserves semantics exactly: ``inner`` and
-    ``left`` (each left row still meets every matching right row exactly
-    once, via its single salt replica).
+    Row-identical to the inner ``skewed.join(other, on)`` — the salt
+    only changes the partitioning (each left row still meets every
+    matching right row exactly once, via its single salt replica).
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"how must be inner|left, got {how!r}")
     if salts < 2:
         raise ValueError(f"salts must be >= 2, got {salts}")
     keys = [on] if isinstance(on, str) else list(on)
@@ -70,4 +65,4 @@ def salted_join(
     right = other.withColumn(
         SALT_COL, F.explode(F.sequence(F.lit(0), F.lit(salts - 1)))
     )
-    return left.join(right, on=[*keys, SALT_COL], how=how).drop(SALT_COL)
+    return left.join(right, on=[*keys, SALT_COL]).drop(SALT_COL)

@@ -46,8 +46,6 @@ def two_sample_cum_counts(
     a_flag: Column,
     b_flag: Column,
     bucket: Column,
-    *,
-    partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """Per distinct ``value_col``: both samples' at-value counts
     (``ca0``/``cb0``) and inclusive cumulative counts (``ca``/``cb``)
@@ -58,11 +56,10 @@ def two_sample_cum_counts(
     may belong to neither, e.g. an unrelated event type; values seen
     ONLY by neither-rows are dropped after the combine, so they emit no
     spine row and can never surface as a KS argmax). ``bucket`` must be order-aligned with
-    ``value_col`` (see :mod:`operators.prefix`); ``partition_cols``
-    restarts the scan per group for stratified variants.
+    ``value_col`` (see :mod:`operators.prefix`).
 
     One shuffle groups rows to distinct values (map-side combinable);
-    the two running sums ride the same (partition, bucket) layout —
+    the two running sums ride the same bucket layout —
     per-bucket windows plus a broadcast |buckets|-row exclusive prefix,
     never a single-task global sort. The grouped relation is pinned
     with a lazy localCheckpoint before the scans: each running sum
@@ -71,9 +68,8 @@ def two_sample_cum_counts(
     spine would re-read the raw table four times — the pin makes the
     whole spine exactly one source scan at any scale.
     """
-    pc = partition_cols or []
     g = (
-        df.groupBy(*pc, value_col)
+        df.groupBy(value_col)
         .agg(
             F.sum(a_flag).cast("long").alias("ca0"),
             F.sum(b_flag).cast("long").alias("cb0"),
@@ -81,14 +77,7 @@ def two_sample_cum_counts(
         .where((F.col("ca0") > 0) | (F.col("cb0") > 0))
         .localCheckpoint(eager=False)
     )
-    return running_sums(
-        g,
-        ["ca0", "cb0"],
-        bucket,
-        [value_col],
-        partition_cols=pc,
-        out_cols=["ca", "cb"],
-    )
+    return running_sums(g, ["ca0", "cb0"], bucket, [value_col], out_cols=["ca", "cb"])
 
 
 def ks_statistic(

@@ -23,7 +23,7 @@ aggregate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .prefix import running_sum
@@ -103,22 +103,19 @@ def interval_concurrency(
     start_col: str,
     end_col: str,
     id_col: str,
-    *,
-    bucket: Column | None = None,
 ) -> DataFrame:
     """Per-boundary concurrency: (t, delta, id, concurrency) where
     ``concurrency`` counts intervals open at instant t (inclusive of a
     +1 boundary's own interval, after any same-instant closes).
 
-    ``bucket`` is the prefix-scan bucket expression over ``t`` (must be
-    order-aligned; default: calendar hour). The boundary order is
-    (t, delta, id) — delta ascending puts -1 before +1 at equal t,
+    The prefix scan buckets ``t`` (a timestamp) by calendar hour. The
+    boundary order is (t, delta, id) — delta ascending puts -1 before +1 at equal t,
     which implements half-open intervals; id makes the scan
     deterministic row-for-row (peaks are tie-order-invariant, but the
     gate hashes every row).
     """
     b = interval_boundaries(df, start_col, end_col, id_col)
-    bucket = F.date_trunc("hour", F.col("t")) if bucket is None else bucket
+    bucket = F.date_trunc("hour", F.col("t"))
     return running_sum(
         b, "delta", bucket, ["t", "delta", "id"], out_col="concurrency"
     )

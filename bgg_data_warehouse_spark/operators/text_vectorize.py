@@ -108,7 +108,6 @@ def encode_token_ids(
     text_col: str,
     vocab: DataFrame,
     *,
-    oov_id: int = -1,
     vocab_size: int | None = None,
 ) -> DataFrame:
     """(doc, n_tokens, ids_json) — each document's token sequence mapped
@@ -134,7 +133,7 @@ def encode_token_ids(
         else vocab
     )
     enc = toks.join(build, "tok", "left").select(
-        "doc", "pos", F.coalesce("id", F.lit(oov_id)).alias("id")
+        "doc", "pos", F.coalesce("id", F.lit(-1)).alias("id")
     )
     return enc.groupBy("doc").agg(
         F.count("*").alias("n_tokens"),

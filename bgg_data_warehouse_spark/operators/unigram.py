@@ -5,7 +5,7 @@ WordPiece (wordpiece.py) matches greedily left-to-right; the unigram
 model scores every POSSIBLE segmentation of a word against a piece
 probability model and takes the best — the lattice view SentencePiece
 uses (Kudo 2018). Here the piece model is one frequency pass (counts of
-all substrings up to ``max_piece_len``) and inference is the exact
+all substrings up to ``MAX_PIECE_LEN``) and inference is the exact
 Viterbi DP over the word's segmentation lattice.
 
 Exactness discipline: piece costs are -ln(p) in ROUNDED micro-nat
@@ -20,7 +20,7 @@ the (min_cost, n_best_paths) pair is a pure function of the lattice.
 Spark-first shape: the lattice edges are one vocabulary-bounded
 equi-join (candidate spans x piece costs); the DP runs ENTIRELY
 map-side as a Catalyst higher-order ``aggregate`` over an array of at
-most ``max_len * max_piece_len`` edges per word — no per-position
+most ``MAX_LEN * MAX_PIECE_LEN`` edges per word — no per-position
 joins, no UDFs, no shuffle beyond the edge build. At 100 TB the work
 is linear in corpus tokens with a broadcastable cost table.
 
@@ -36,46 +36,41 @@ from pyspark.sql import functions as F
 __all__ = ["unigram_costs", "unigram_segment", "unigram_oracle_sql"]
 
 MICRO = 1_000_000
+MAX_PIECE_LEN = 4  # longest piece
+MAX_LEN = 16  # longest segmented word
+MIN_COUNT = 2  # corpus count a piece needs to enter the vocabulary
 INF = 1_000_000_000_000_000  # > any reachable path cost; never summed
 
 
-def unigram_costs(
-    words: DataFrame,
-    word_col: str = "word",
-    count_col: str = "c",
-    *,
-    max_piece_len: int = 4,
-    min_count: int = 2,
-    micro: int = MICRO,
-) -> DataFrame:
-    """(piece, pc, cost) — every substring of length 1..max_piece_len
-    of every word, weighted by word occurrence count, kept if its
-    corpus count reaches ``min_count``; cost = round(ln(total / pc) *
-    micro) micro-nats. Substring enumeration is map-side (nested
+def unigram_costs(words: DataFrame) -> DataFrame:
+    """(piece, pc, cost) — every substring of length 1..MAX_PIECE_LEN
+    of every ``word``, weighted by its occurrence count ``c``, kept if
+    its corpus count reaches ``MIN_COUNT``; cost = round(ln(total / pc)
+    * MICRO) micro-nats. Substring enumeration is map-side (nested
     ``transform`` over positions); the only shuffles are the piece
     count and the 1-row total broadcast."""
     pieces = (
         words.select(
             F.explode(
                 F.expr(
-                    f"""flatten(transform(sequence(1, length({word_col})), s ->
-                      transform(sequence(s, least(length({word_col}),
-                                                  s + {max_piece_len - 1})), e ->
-                        substring({word_col}, s, e - s + 1))))"""
+                    f"""flatten(transform(sequence(1, length(word)), s ->
+                      transform(sequence(s, least(length(word),
+                                                  s + {MAX_PIECE_LEN - 1})), e ->
+                        substring(word, s, e - s + 1))))"""
                 )
             ).alias("piece"),
-            F.col(count_col).alias("_c"),
+            F.col("c").alias("_c"),
         )
         .groupBy("piece")
         .agg(F.sum("_c").alias("pc"))
-        .where(F.col("pc") >= min_count)
+        .where(F.col("pc") >= MIN_COUNT)
     )
     total = pieces.agg(F.sum("pc").alias("tot"))
     return pieces.crossJoin(F.broadcast(total)).select(
         "piece",
         "pc",
         F.expr(
-            f"CAST(round(ln(CAST(tot AS DOUBLE) / pc) * {micro}) AS BIGINT)"
+            f"CAST(round(ln(CAST(tot AS DOUBLE) / pc) * {MICRO}) AS BIGINT)"
         ).alias("cost"),
     )
 
@@ -83,13 +78,9 @@ def unigram_costs(
 def unigram_segment(
     targets: DataFrame,
     costs: DataFrame,
-    word_col: str = "word",
-    *,
-    max_len: int = 16,
-    max_piece_len: int = 4,
 ) -> DataFrame:
     """(word, min_cost_micro, n_best_paths) for every DISTINCT target
-    word of length <= max_len that has at least one full segmentation
+    ``word`` of length <= MAX_LEN that has at least one full segmentation
     into vocabulary pieces (unreachable words are dropped, matching
     the oracle's absent-row semantics; duplicate target rows collapse
     to one output row).
@@ -103,10 +94,8 @@ def unigram_segment(
     # duplicated target row would duplicate every lattice edge in the
     # collected list and inflate n_best_paths 2^k-fold.
     w = (
-        targets.where(
-            (F.length(word_col) >= 1) & (F.length(word_col) <= max_len)
-        )
-        .select(F.col(word_col).alias("word"))
+        targets.where((F.length("word") >= 1) & (F.length("word") <= MAX_LEN))
+        .select("word")
         .distinct()
     )
     spans = w.select(
@@ -115,7 +104,7 @@ def unigram_segment(
             F.expr(
                 f"""flatten(transform(sequence(1, length(word)), s ->
                   transform(sequence(s, least(length(word),
-                                              s + {max_piece_len - 1})), e ->
+                                              s + {MAX_PIECE_LEN - 1})), e ->
                     struct(s, e, substring(word, s, e - s + 1) AS piece))))"""
             )
         ).alias("sp"),
@@ -164,38 +153,33 @@ def unigram_segment(
 def unigram_oracle_sql(
     words_cte: str,
     targets_cte: str,
-    *,
-    max_len: int = 16,
-    max_piece_len: int = 4,
-    min_count: int = 2,
-    micro: int = MICRO,
 ) -> str:
     """DuckDB replay of costs + Viterbi as an unrolled CTE chain (the
     kcore_oracle_sql discipline). The per-level dp tables are AS
     MATERIALIZED: each level is referenced twice (by the next level's
     union AND its candidate join), so DuckDB's default CTE inlining
-    would blow the plan up 2^max_len-fold. ``words_cte`` -> (word, c) for the
+    would blow the plan up 2^MAX_LEN-fold. ``words_cte`` -> (word, c) for the
     piece model, ``targets_cte`` -> (word) for segmentation (deduped
     here, mirroring unigram_segment's distinct — duplicate target rows
     would otherwise square the edge/dp row counts and inflate ways). Emits
     ``seg`` as (word, min_cost_micro, n_best_paths); the caller
     appends its own SELECT over it."""
-    m = max_piece_len - 1
+    m = MAX_PIECE_LEN - 1
     parts = [
         f"words0 AS ({words_cte})",
         f"targets0 AS (SELECT DISTINCT word FROM ({targets_cte}) "
-        f"WHERE length(word) BETWEEN 1 AND {max_len})",
+        f"WHERE length(word) BETWEEN 1 AND {MAX_LEN})",
         f"""pieces AS (
       SELECT substring(word, s, e - s + 1) AS piece,
              CAST(SUM(c) AS BIGINT) AS pc
       FROM words0,
            unnest(generate_series(1, length(word))) AS u1(s),
            unnest(generate_series(s, least(length(word), s + {m}))) AS u2(e)
-      GROUP BY 1 HAVING SUM(c) >= {min_count})""",
+      GROUP BY 1 HAVING SUM(c) >= {MIN_COUNT})""",
         "tot AS (SELECT CAST(SUM(pc) AS BIGINT) AS tot FROM pieces)",
         f"""costs AS (
       SELECT piece,
-             CAST(round(ln(CAST(tot AS DOUBLE) / pc) * {micro}) AS BIGINT)
+             CAST(round(ln(CAST(tot AS DOUBLE) / pc) * {MICRO}) AS BIGINT)
                AS cost
       FROM pieces, tot)""",
         f"""edges AS MATERIALIZED (
@@ -208,7 +192,7 @@ def unigram_oracle_sql(
         "dp0 AS MATERIALIZED (SELECT word, 0 AS i, CAST(0 AS BIGINT) AS"
         " best, CAST(1 AS BIGINT) AS ways FROM targets0)",
     ]
-    for i in range(1, max_len + 1):
+    for i in range(1, MAX_LEN + 1):
         parts.append(
             f"""c{i} AS (
       SELECT e.word, d.best + e.cost AS cand, d.ways
@@ -226,6 +210,6 @@ def unigram_oracle_sql(
         f"""seg AS (
       SELECT t.word, d.best AS min_cost_micro, d.ways AS n_best_paths
       FROM targets0 t
-      JOIN dp{max_len} d ON d.word = t.word AND d.i = length(t.word))"""
+      JOIN dp{MAX_LEN} d ON d.word = t.word AND d.i = length(t.word))"""
     )
     return "WITH " + ",\n    ".join(parts)

@@ -6,7 +6,7 @@ Two stages:
 
 1. ``build_piece_vocab`` — the piece inventory: every single character
    seen in the corpus (so segmentation can never dead-end) plus the
-   top-``n_multi`` multi-character substrings (length 2..``max_piece_len``)
+   top-``n_multi`` multi-character substrings (length 2..``MAX_PIECE_LEN``)
    by corpus-frequency-weighted occurrence count, deterministic
    (count DESC, piece ASC) tie-break.
 2. ``wordpiece_encode`` — greedy longest-match-first segmentation
@@ -19,7 +19,8 @@ vocabulary, never corpus row count (the same distinct-word trick as
 ``bpe.py``). The greedy loop is data-iterative: each round is four
 broadcast piece-lookup joins (the piece vocab is parameter-bounded:
 |chars| + n_multi rows, so the broadcast hint is safe by construction)
-plus a projection, with per-round lineage truncation through ``pin``.
+plus a projection, with per-round lineage truncation (a
+``localCheckpoint``).
 Rounds needed = longest word in symbols; every round advances every
 unfinished word by >= 1 char.
 
@@ -29,23 +30,19 @@ extension alongside bpe.py, cited from the same SURVEY §2.9 scope.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-Pin = Callable[[DataFrame], DataFrame]
+from . import iterative
 
-
-def _checkpoint_pin(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
+# longest piece the vocabulary may hold and the encoder tries first
+MAX_PIECE_LEN = 4
 
 
 def build_piece_vocab(
     words: DataFrame,
     *,
     n_multi: int = 12,
-    max_piece_len: int = 4,
 ) -> DataFrame:
     """(piece, cnt) from a (word, freq) relation.
 
@@ -68,7 +65,7 @@ def build_piece_vocab(
             "freq",
             "s",
             F.explode(
-                F.expr(f"sequence(1, {max_piece_len})")
+                F.expr(f"sequence(1, {MAX_PIECE_LEN})")
             ).alias("l"),
         )
         .where(F.expr("s + l - 1 <= length(word)"))
@@ -93,9 +90,6 @@ def wordpiece_encode(
     vocab: DataFrame,
     *,
     rounds: int,
-    max_piece_len: int = 4,
-    pin: Pin = _checkpoint_pin,
-    driver_solve_max: int = 200_000,
 ) -> DataFrame:
     """Greedy longest-match segmentation of every word.
 
@@ -111,14 +105,15 @@ def wordpiece_encode(
     # bounded-subproblem solve): segmentation is a pure per-word
     # function of (word, vocab); the vocab is parameter-bounded by the
     # operator contract (|charset| + n_multi rows) and the distinct-word
-    # relation is probed under ``driver_solve_max``. One collect of each
+    # relation is probed under ``iterative.DRIVER_SOLVE_MAX``. One collect of each
     # replaces ``rounds`` checkpoint jobs + the leftover count
     # (measured: 50 jobs -> 3 on the 8-round gate). The Python greedy
     # replicates the distributed semantics exactly, including the
     # no-piece-matches NULL poisoning (substr/length are code-point
     # based on both sides; set membership = the broadcast equi-lookup).
-    w_rows = words.limit(driver_solve_max + 1).collect()
-    if len(w_rows) <= driver_solve_max:
+    solve_max = iterative.DRIVER_SOLVE_MAX
+    w_rows = words.limit(solve_max + 1).collect()
+    if len(w_rows) <= solve_max:
         vset = {r["piece"] for r in vocab.select("piece").collect()}
         out_rows: list[tuple] = []
         n_leftover = 0
@@ -129,7 +124,7 @@ def wordpiece_encode(
             for _ in range(rounds):
                 if pos is None or pos >= len(word):
                     continue  # finished (or poisoned): row passes through
-                for length in range(max_piece_len, 0, -1):
+                for length in range(MAX_PIECE_LEN, 0, -1):
                     if pos + length <= len(word) and word[pos : pos + length] in vset:
                         toks.append(word[pos : pos + length])
                         pos += length
@@ -156,17 +151,17 @@ def wordpiece_encode(
             out_rows,
             "word string, freq long, toks array<string>",
         )
-    # pin the vocab FIRST: the per-length broadcast subsets re-scan it
+    # checkpoint the vocab FIRST: the per-length broadcast subsets re-scan it
     # 4x per round, which without materialization would re-run the
     # substring-count aggregate dozens of times inside one job
-    vocab = pin(vocab)
+    vocab = vocab.localCheckpoint(eager=True)
     piece_sets = {
         length: F.broadcast(
             vocab.where(F.length("piece") == length).select(
                 F.col("piece").alias(f"p{length}")
             )
         )
-        for length in range(1, max_piece_len + 1)
+        for length in range(1, MAX_PIECE_LEN + 1)
     }
     state = words.select(
         "word",
@@ -176,7 +171,7 @@ def wordpiece_encode(
     )
     for _ in range(rounds):
         st = state
-        for length in range(max_piece_len, 0, -1):
+        for length in range(MAX_PIECE_LEN, 0, -1):
             st = st.join(
                 piece_sets[length],
                 F.expr(
@@ -186,27 +181,25 @@ def wordpiece_encode(
                 "left",
             )
         pc = F.coalesce(
-            *[F.col(f"p{length}") for length in range(max_piece_len, 0, -1)]
+            *[F.col(f"p{length}") for length in range(MAX_PIECE_LEN, 0, -1)]
         )
         plen = F.coalesce(
             *[
                 F.when(F.col(f"p{length}").isNotNull(), F.lit(length))
-                for length in range(max_piece_len, 0, -1)
+                for length in range(MAX_PIECE_LEN, 0, -1)
             ]
         )
         unfinished = F.col("pos") < F.length("word")
-        state = pin(
-            st.select(
-                "word",
-                "freq",
-                F.when(unfinished, F.col("pos") + plen)
-                .otherwise(F.col("pos"))
-                .alias("pos"),
-                F.when(unfinished, F.concat("toks", F.array(pc)))
-                .otherwise(F.col("toks"))
-                .alias("toks"),
-            )
-        )
+        state = st.select(
+            "word",
+            "freq",
+            F.when(unfinished, F.col("pos") + plen)
+            .otherwise(F.col("pos"))
+            .alias("pos"),
+            F.when(unfinished, F.concat("toks", F.array(pc)))
+            .otherwise(F.col("toks"))
+            .alias("toks"),
+        ).localCheckpoint(eager=True)
     leftover = state.where(F.col("pos") < F.length("word")).count()
     if leftover:
         raise RuntimeError(

@@ -37,7 +37,7 @@ from .sources import bgg_xml
 from .sources.api_client import BGGApiClient, land_batch
 from .streaming import tracking
 
-DIM_TABLES = {name: [sch.fields[0].name] for name, sch in schemas.DIMENSIONS.items()}
+DIM_TABLES = {name: [col] for name, col in schemas.DIM_ID_COLS.items()}
 BRIDGE_TABLES = {name: ["game_id"] for name in schemas.BRIDGES}
 DETAIL_TABLES = {
     "player_counts": ["game_id"],
@@ -95,18 +95,16 @@ def fetch_stage(
     root: str,
     client: BGGApiClient,
     *,
-    batch: int = tracking.FETCH_BATCH,
-    max_loops: int = 100,
     now: datetime | None = None,
 ) -> int:
     """Loop fetch batches until no work remains; returns games fetched."""
     total = 0
-    for _ in range(max_loops):
+    for _ in range(100):
         thing_ids = _read_or_empty(spark, root, "thing_ids")
         fetched = _read_or_empty(spark, root, "fetched_responses")
         leases = _read_or_empty(spark, root, "fetch_in_progress")
         candidates = tracking.unfetched_ids(
-            thing_ids, fetched, tracking.expire_leases(leases, now=now), now=now, batch=batch
+            thing_ids, fetched, tracking.expire_leases(leases, now=now), now=now
         )
         # materialize the batch: downstream writes swap the very files the
         # lazy candidate plan scans, so later actions must not re-execute it
@@ -114,7 +112,7 @@ def fetch_stage(
         if not ids:
             break
         total += _fetch_id_batch(spark, root, client, ids, now=now)
-        if len(ids) < batch:  # the queue is drained
+        if len(ids) < tracking.FETCH_BATCH:  # the queue is drained
             break
     return total
 
@@ -123,17 +121,15 @@ def process_stage(
     spark: SparkSession,
     root: str,
     *,
-    batch: int = tracking.PROCESS_BATCH,
-    max_loops: int = 100,
     load_timestamp: datetime | None = None,
 ) -> int:
     """Loop process batches; returns records processed."""
     total = 0
-    for _ in range(max_loops):
+    for _ in range(100):
         raw = _read_or_empty(spark, root, "raw_responses")
         fetched = _read_or_empty(spark, root, "fetched_responses")
         processed = _read_or_empty(spark, root, "processed_responses")
-        pending = tracking.unprocessed_responses(raw, fetched, processed, batch=batch)
+        pending = tracking.unprocessed_responses(raw, fetched, processed)
         # the batch's one Spark action; the writes below swap files the
         # lazy plan scans, so nothing may re-execute it
         rows = pending.select("record_id", "game_id", "response_data").collect()
@@ -170,7 +166,7 @@ def process_stage(
         total += len(rows)
         # a short batch drained the queue, unless a parse_error record
         # is due for a retry
-        if len(rows) < batch and all(r.game_id in ok_ids for r in rows):
+        if len(rows) < tracking.PROCESS_BATCH and all(r.game_id in ok_ids for r in rows):
             break
     return total
 
@@ -212,24 +208,20 @@ def refresh_old_games(
     root: str,
     client: BGGApiClient,
     *,
-    batch: int = 1000,
-    max_loops: int = 10,
     now: datetime | None = None,
-    dry_run: bool = False,
 ) -> tuple[int, int]:
     """Staleness-band-driven refresh+process — the reference's
     `python -m src.pipeline.refresh_old_games`
     (src/pipeline/refresh_old_games.py + modules/response_refresher.py):
     pick games whose last successful fetch is staler than their
     publication-year band allows (streaming/refresher.py policy), refetch
-    them, process the responses. ``dry_run`` reports the candidate count
-    without fetching (reference --dry-run)."""
+    them, process the responses."""
     from .streaming.refresher import refresh_candidates
 
     if not io.table_exists(root, "games"):
         return 0, 0
     total_fetched = 0
-    for _ in range(max_loops):
+    for _ in range(10):
         games = (
             io.read_table(spark, root, "games")
             .select("game_id", "year_published")
@@ -239,13 +231,9 @@ def refresh_old_games(
         leases = tracking.expire_leases(
             _read_or_empty(spark, root, "fetch_in_progress"), now=now
         )
-        cand = refresh_candidates(
-            games, fetched, leases, now=now, batch=batch
-        )
+        cand = refresh_candidates(games, fetched, leases, now=now, batch=1000)
         ids = [r.game_id for r in cand.select("game_id").collect()]
-        if not ids or dry_run:
-            total_fetched += 0 if not dry_run else len(ids)
+        if not ids:
             break
         total_fetched += _fetch_id_batch(spark, root, client, ids, now=now)
-    processed = 0 if dry_run else process_stage(spark, root, load_timestamp=now)
-    return total_fetched, processed
+    return total_fetched, process_stage(spark, root, load_timestamp=now)

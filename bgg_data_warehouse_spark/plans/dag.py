@@ -140,8 +140,8 @@ def scope_to_changed(df: DataFrame, changed_keys: DataFrame | None) -> DataFrame
 class ModelDag:
     """Run the model DAG over a registry of source DataFrames."""
 
-    def __init__(self, registry: dict[str, tuple[tuple[str, ...], ModelFn, str]] | None = None):
-        self.registry = registry or REGISTRY
+    def __init__(self):
+        self.registry = REGISTRY
 
     def order(self, targets: list[str] | None = None) -> list[str]:
         """Topological execution order (optionally restricted to targets +

@@ -37,39 +37,6 @@ ENTITY_ARRAYS = {
 }
 
 
-# The reference's full games_active projection (`games_active.sqlx:13-38`),
-# in OUR column names (primary_name→name, bayes_average→geek_rating,
-# average_weight→complexity — the repo-wide aliases every downstream model
-# keys on). A test pins this list 1:1 against the reference's.
-GAMES_ACTIVE_COLUMNS = [
-    "game_id",
-    "name",
-    "type",
-    "year_published",
-    "min_players",
-    "max_players",
-    "playing_time",
-    "min_playtime",
-    "max_playtime",
-    "min_age",
-    "description",
-    "thumbnail",
-    "image",
-    "users_rated",
-    "average_rating",
-    "geek_rating",
-    "complexity",
-    "owned_count",
-    "trading_count",
-    "wanting_count",
-    "wishing_count",
-    "num_comments",
-    "num_weights",
-    "load_timestamp",
-    "last_updated",
-]
-
-
 def games_active(t: dict[str, DataFrame]) -> DataFrame:
     """Latest snapshot per game (`definitions/games_active.sqlx:7-43`):
     MAX(load_timestamp) per game_id joined back on the composite key (J1),
@@ -509,11 +476,7 @@ def _embedding_column(dims: int) -> str:
     return "embedding" if dims == 64 else f"embedding_{dims}"
 
 
-def game_neighbors(
-    t: dict[str, DataFrame],
-    *,
-    profiles: list[SimilarityProfile] | None = None,
-) -> DataFrame:
+def game_neighbors(t: dict[str, DataFrame]) -> DataFrame:
     """`definitions/game_neighbors.sqlx:16-93`: one block per profile —
     filter corpus (per-profile users_rated floor — BASELINE.md "filter
     BEFORE distance"), banded complexity self-join (J7) via the
@@ -526,7 +489,7 @@ def game_neighbors(
     from ..operators.band_join import banded_cosine_pairs
 
     parts = []
-    for p in profiles or PROFILES:
+    for p in PROFILES:
         corpus = (
             t["game_similarity_search"]
             .where(F.col("users_rated") >= p.min_users_rated)

@@ -199,9 +199,11 @@ class GameReader:
             raise ValueError(f"metric must be one of {ALLOWED_METRICS}")
         if dims is not None and dims not in ALLOWED_DIMS:
             raise ValueError(f"dims must be one of {ALLOWED_DIMS}")
+        if n is not None and n < 1:
+            raise ValueError("n must be >= 1")
         return self._similar_live(
             game_id,
-            n=n or 10,
+            n=n if n is not None else 10,
             metric=metric or "cosine",
             dims=dims,
             min_ratings=min_ratings if min_ratings is not None else 100,

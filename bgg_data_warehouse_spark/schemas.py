@@ -267,15 +267,6 @@ RAW_TABLES: dict[str, T.StructType] = {
     "request_log": REQUEST_LOG,
 }
 
-LANDING_TABLES: dict[str, T.StructType] = {
-    "ml_predictions_landing": ML_PREDICTIONS_LANDING,
-    "game_embeddings": GAME_EMBEDDINGS_LANDING,
-    "description_embeddings": GAME_EMBEDDINGS_LANDING,
-    "game_coordinates": GAME_COORDINATES_LANDING,
-    "collection_predictions_landing": COLLECTION_PREDICTIONS_LANDING,
-    "collection_models_registry": COLLECTION_MODELS_REGISTRY,
-}
-
 
 _ARROW_TYPES = {
     T.LongType: pa.int64(),

@@ -32,10 +32,10 @@ BACKOFF_BASE_SECONDS = 5.0
 
 
 class RateLimiter:
-    """Token bucket: ``rate`` requests/second, burst of 1."""
+    """Token bucket: ``REQUESTS_PER_SECOND`` requests/second, burst of 1."""
 
-    def __init__(self, rate: float = REQUESTS_PER_SECOND, clock=time.monotonic, sleep=time.sleep):
-        self.min_interval = 1.0 / rate
+    def __init__(self, clock=time.monotonic, sleep=time.sleep):
+        self.min_interval = 1.0 / REQUESTS_PER_SECOND
         self._clock = clock
         self._sleep = sleep
         self._last = None
@@ -69,16 +69,16 @@ class BGGApiClient:
     sleep: Callable[[float], None] = time.sleep
     request_log: list[RequestLogEntry] = field(default_factory=list)
 
-    def _url(self, game_ids: Sequence[int], stats: bool) -> str:
+    def _url(self, game_ids: Sequence[int]) -> str:
         ids = ",".join(str(g) for g in game_ids)
-        return f"{BASE_URL}?id={ids}&stats={1 if stats else 0}"
+        return f"{BASE_URL}?id={ids}&stats=1"
 
-    def get_thing(self, game_ids: Sequence[int], stats: bool = True) -> dict[int, str]:
+    def get_thing(self, game_ids: Sequence[int]) -> dict[int, str]:
         """Fetch one batch (≤20 ids) with retry/backoff; returns
         {game_id: payload_json} for ids present in the response."""
         if len(game_ids) > MAX_IDS_PER_REQUEST:
             raise ValueError(f"at most {MAX_IDS_PER_REQUEST} ids per request")
-        url = self._url(game_ids, stats)
+        url = self._url(game_ids)
         last_err: str | None = None
         for attempt in range(1, MAX_RETRIES + 1):
             self.rate_limiter.acquire()
@@ -101,12 +101,12 @@ class BGGApiClient:
             break  # non-retryable 4xx
         raise RuntimeError(f"fetch failed after {MAX_RETRIES} attempts: {last_err}")
 
-    def fetch_all(self, game_ids: Sequence[int], stats: bool = True) -> dict[int, str]:
+    def fetch_all(self, game_ids: Sequence[int]) -> dict[int, str]:
         """Chunk an arbitrary id list into ≤20-id batches (S1 chunking)."""
         out: dict[int, str] = {}
         ids = list(game_ids)
         for i in range(0, len(ids), MAX_IDS_PER_REQUEST):
-            out.update(self.get_thing(ids[i : i + MAX_IDS_PER_REQUEST], stats))
+            out.update(self.get_thing(ids[i : i + MAX_IDS_PER_REQUEST]))
         return out
 
     def _split(self, body: str, requested: Sequence[int]) -> dict[int, str]:

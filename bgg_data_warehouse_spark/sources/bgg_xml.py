@@ -93,12 +93,12 @@ def _safe_float(v: Any, default: float | None = 0.0) -> float | None:
         return default
 
 
-def _attr_int(d: Any, default: int | None = 0) -> int | None:
-    return _safe_int(d.get("@value") if isinstance(d, dict) else None, default)
+def _attr_int(d: Any) -> int | None:
+    return _safe_int(d.get("@value") if isinstance(d, dict) else None, 0)
 
 
-def _attr_float(d: Any, default: float | None = 0.0) -> float | None:
-    return _safe_float(d.get("@value") if isinstance(d, dict) else None, default)
+def _attr_float(d: Any) -> float | None:
+    return _safe_float(d.get("@value") if isinstance(d, dict) else None, 0.0)
 
 
 def _parse_year(d: Any) -> int | None:

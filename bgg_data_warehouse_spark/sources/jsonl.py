@@ -52,11 +52,9 @@ def read_jsonl_quarantined(
     spark: SparkSession,
     path: str,
     schema_ddl: str,
-    *,
-    max_bad_ratio: float = 0.5,
 ) -> JsonlBatch:
     """Read JSONL at ``path`` against ``schema_ddl``; split clean vs
-    corrupt. Raises if the corrupt share exceeds ``max_bad_ratio`` —
+    corrupt. Raises if more than half the records are corrupt —
     a mostly-bad drop is a producer bug, not data to quarantine.
 
     The corrupt capture column must be part of the read schema
@@ -76,10 +74,10 @@ def read_jsonl_quarantined(
     n_clean = clean.count()
     n_bad = quarantine.count()
     total = n_clean + n_bad
-    if total and n_bad / total > max_bad_ratio:
+    if total and n_bad / total > 0.5:
         raw.unpersist()  # refused drop: nobody will consume the batch
         raise ValueError(
             f"read_jsonl_quarantined: {n_bad}/{total} records corrupt "
-            f"(> {max_bad_ratio:.0%}) — refusing the drop"
+            "(> 50%) — refusing the drop"
         )
     return JsonlBatch(clean, quarantine, n_clean, n_bad, raw)

@@ -82,7 +82,7 @@ def ids_from_sitemap(content: str) -> list[dict]:
     ]
 
 
-def thing_ids_table(pages: DataFrame, content_col: str = "content") -> DataFrame:
+def thing_ids_table(pages: DataFrame) -> DataFrame:
     """The distributed id harvest: (url, content) sitemap pages →
     distinct (game_id, type) — the `thing_ids` table the rest of the
     engine consumes (tracking seeds, pipeline cold start).
@@ -102,7 +102,7 @@ def thing_ids_table(pages: DataFrame, content_col: str = "content") -> DataFrame
     entries = pages.select(
         F.explode(
             F.regexp_extract_all(
-                F.col(content_col),
+                F.col("content"),
                 F.lit(r"https://boardgamegeek\.com/boardgame"
                       r"(expansion|accessory|)/(\d+)"),
                 0,

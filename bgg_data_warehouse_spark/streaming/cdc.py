@@ -40,10 +40,7 @@ def apply_cdc_log_batch(
     *,
     keys: Sequence[str],
     seq_cols: Sequence[str],
-    op_col: str = "op",
     auto_compact: bool = True,
-    max_generations: int = 16,
-    max_delta_fraction: float = 0.2,
 ) -> None:
     """Apply one epoch of change rows: the epoch's surviving 'U' images
     (LWW-collapsed per key by ``seq_cols``) land as a generation's
@@ -72,22 +69,14 @@ def apply_cdc_log_batch(
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
-    drop = [op_col, *seq_cols]
-    upserts = latest.where(F.col(op_col) == "U").drop(*drop)
-    deletes = latest.where(F.col(op_col) == "D").select(*keys)
+    upserts = latest.where(F.col("op") == "U").drop("op", *seq_cols)
+    deletes = latest.where(F.col("op") == "D").select(*keys)
     if log_store_exists(root, name):
         append_log_delta(
             root, name, upserts, list(keys), tombstones=deletes
         )
         if auto_compact:
-            compact_if_needed(
-                batch_df.sparkSession,
-                root,
-                name,
-                list(keys),
-                max_generations=max_generations,
-                max_delta_fraction=max_delta_fraction,
-            )
+            compact_if_needed(batch_df.sparkSession, root, name, list(keys))
     else:
         # first epoch: state = the surviving images
         init_log_store(upserts, root, name)

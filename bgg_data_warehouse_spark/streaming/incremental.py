@@ -54,21 +54,16 @@ def incremental_dag_cycle(
     tables: dict[str, DataFrame],
     root: str,
     targets: Sequence[str] | None = None,
-    *,
-    source_name: str = "games",
-    ts_col: str = "load_timestamp",
-    key_cols: Sequence[str] = ("game_id",),
-    wm_model: str = "games_active",
 ) -> dict[str, DataFrame]:
     """One end-to-end incremental Dataform run (I1 + J6): derive the
     changed-key set from the landing source past the persisted watermark,
     then run the DAG with every incremental model's keyed inputs scoped
     to it (`games_features.sqlx:8-18`). First run (no watermark table
     yet) falls back to a full build."""
-    if not io.table_exists(root, wm_model):
+    if not io.table_exists(root, "games_active"):
         return dag.run_persisted(spark, tables, root, list(targets) if targets else None)
-    wm = high_watermark(io.read_table(spark, root, wm_model), ts_col)
-    changed = changed_key_set(tables[source_name], ts_col, wm, list(key_cols))
+    wm = high_watermark(io.read_table(spark, root, "games_active"), "load_timestamp")
+    changed = changed_key_set(tables["games"], "load_timestamp", wm, ["game_id"])
     return dag.run_persisted(
         spark, tables, root, list(targets) if targets else None, changed_keys=changed
     )

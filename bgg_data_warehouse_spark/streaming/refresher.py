@@ -61,7 +61,6 @@ def refresh_candidates(
     fetched_responses: DataFrame,
     fetch_in_progress: DataFrame,
     *,
-    policy: tuple[RefreshBand, ...] = DEFAULT_POLICY,
     now: datetime | None = None,
     batch: int = 1000,
 ) -> DataFrame:
@@ -81,7 +80,7 @@ def refresh_candidates(
     scoped = (
         games_active.select("game_id", "year_published")
         .join(last_fetch, "game_id", "left")
-        .withColumn("refresh_days", _band_days(policy))
+        .withColumn("refresh_days", _band_days(DEFAULT_POLICY))
         .where(F.col("refresh_days").isNotNull())
         .where(
             F.col("last_fetch").isNull()

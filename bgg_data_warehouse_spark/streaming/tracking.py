@@ -37,12 +37,11 @@ def unfetched_ids(
     fetch_in_progress: DataFrame,
     *,
     now=None,
-    batch: int = FETCH_BATCH,
 ) -> DataFrame:
     """Candidate ids to fetch (`response_fetcher.py:49-180`):
 
     thing_ids − successful fetches − live leases − capped/cooling retries,
-    LIMIT batch. Returns (game_id, type).
+    LIMIT FETCH_BATCH. Returns (game_id, type).
     """
     now_expr = F.lit(now).cast("timestamp") if now is not None else F.current_timestamp()
     success = fetched_responses.where(F.col("fetch_status") == "success").select("game_id")
@@ -69,7 +68,7 @@ def unfetched_ids(
         .join(live_leases, "game_id", "left_anti")
         .join(blocked, "game_id", "left_anti")
         .orderBy("game_id")
-        .limit(batch)
+        .limit(FETCH_BATCH)
     )
 
 
@@ -107,8 +106,6 @@ def unprocessed_responses(
     raw_responses: DataFrame,
     fetched_responses: DataFrame,
     processed_responses: DataFrame,
-    *,
-    batch: int = PROCESS_BATCH,
 ) -> DataFrame:
     """Pending process work (`response_processor.py:182-209`): latest
     response per game (W1), minus already-processed record_ids (J4),
@@ -116,7 +113,7 @@ def unprocessed_responses(
     reference's ResponseProcessor caps at max_retries=3, so a payload
     that fails to parse every time eventually leaves the queue instead
     of being re-selected forever), oldest-first priority (O3), LIMIT
-    batch."""
+    PROCESS_BATCH."""
     latest = (
         raw_responses.withColumn(
             "_rn",
@@ -144,7 +141,7 @@ def unprocessed_responses(
         .join(done, "record_id", "left_anti")
         .join(capped, "record_id", "left_anti")
         .orderBy(F.col("fetch_timestamp").asc(), F.col("record_id"))
-        .limit(batch)
+        .limit(PROCESS_BATCH)
     )
 
 

@@ -18,11 +18,6 @@ from pyspark.sql import functions as F
 
 def session_rollup(
     stream: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark_delay: str = "2 hours",
 ) -> DataFrame:
     """Event-time SESSION windows with a late-data watermark — the
     streaming twin of the batch ``sessionize`` query (lag-gap + running
@@ -37,17 +32,17 @@ def session_rollup(
     equivalence test runs all three formulations against each other).
     """
     return (
-        stream.withWatermark(ts_col, watermark_delay)
+        stream.withWatermark("ts", "2 hours")
         .groupBy(
-            F.session_window(F.col(ts_col), gap).alias("w"), key_col
+            F.session_window(F.col("ts"), "30 minutes").alias("w"), "user_id"
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
         )
         .select(
-            key_col,
+            "user_id",
             "n_events",
             "session_start",
             "session_end",

@@ -1,11 +1,9 @@
-"""asof_join — backward/forward/tolerance semantics and the one-shuffle
-plan contract."""
+"""asof_join — backward inclusive semantics and the one-shuffle plan
+contract."""
 
 from __future__ import annotations
 
 from datetime import datetime
-
-import pyspark.sql.functions as F
 
 from bgg_data_warehouse_spark.operators.asof import asof_join
 
@@ -46,41 +44,6 @@ def test_backward_inclusive_and_nulls(spark):
         ).collect()
     }
     assert got == {1: 100.0, 2: 110.0, 3: None, 4: 200.0, 5: None}
-
-
-def test_forward_direction(spark):
-    left, right = _frames(spark)
-    got = {
-        r.id: r.px
-        for r in asof_join(
-            left, right, on="k", left_ts="ts", right_ts="ts",
-            value_cols=["px"], direction="forward",
-        ).collect()
-    }
-    # forward: earliest right row at-or-after the left ts
-    assert got == {1: 100.0, 2: None, 3: 100.0, 4: 210.0, 5: None}
-
-
-def test_tolerance_nulls_stale_matches(spark):
-    left, right = _frames(spark)
-    got = {
-        r.id: r.px
-        for r in asof_join(
-            left, right, on="k", left_ts="ts", right_ts="ts",
-            value_cols=["px"], tolerance=F.lit(3600.0),  # 1 hour in seconds
-        ).collect()
-    }
-    # id=2 (12:00) last purchase at 11:00 — exactly 1h, kept; id=4 at
-    # 10:30 matches 10:00 (30 min) kept; id=3/5 no match stays null
-    assert got == {1: 100.0, 2: 110.0, 3: None, 4: 200.0, 5: None}
-    tight = {
-        r.id: r.px
-        for r in asof_join(
-            left, right, on="k", left_ts="ts", right_ts="ts",
-            value_cols=["px"], tolerance=F.lit(60.0),
-        ).collect()
-    }
-    assert tight == {1: 100.0, 2: None, 3: None, 4: None, 5: None}
 
 
 def test_left_columns_and_rowcount_preserved(spark):
@@ -139,8 +102,7 @@ def test_segmented_bucket_boundaries_exact(spark):
     got = {
         r.id: r.px
         for r in asof_join_segmented(
-            left, right, on="k", left_ts="ts", right_ts="ts",
-            value_cols=["px"], bucket_micros=86_400_000_000,
+            left, right, on="k", left_ts="ts", right_ts="ts", value_cols=["px"]
         ).collect()
     }
     assert got == {1: 1.0, 2: 1.0, 3: None}

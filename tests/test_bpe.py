@@ -154,11 +154,12 @@ def test_learn_bpe_rejects_zero_merges(spark):
         learn_bpe(df, "text", num_merges=0)
 
 
-def test_learn_bpe_driver_and_distributed_paths_agree(spark):
-    """The r15 driver fast path (vocab under ``driver_solve_max``) and
-    the distributed merge loop (forced via ``driver_solve_max=0``) must
+def test_learn_bpe_driver_and_distributed_paths_agree(spark, monkeypatch):
+    """The r15 driver fast path (vocab under ``DRIVER_SOLVE_MAX``) and
+    the distributed merge loop (forced via ``DRIVER_SOLVE_MAX=0``) must
     produce identical merges AND word states — the bit-identity claim
     the fast path ships on."""
+    from bgg_data_warehouse_spark.operators import iterative
     from bgg_data_warehouse_spark.operators.bpe import learn_bpe
 
     df = spark.createDataFrame(
@@ -166,7 +167,8 @@ def test_learn_bpe_driver_and_distributed_paths_agree(spark):
         "doc_id long, text string",
     )
     fast_m, fast_w = learn_bpe(df, "text", num_merges=6)
-    slow_m, slow_w = learn_bpe(df, "text", num_merges=6, driver_solve_max=0)
+    monkeypatch.setattr(iterative, "DRIVER_SOLVE_MAX", 0)
+    slow_m, slow_w = learn_bpe(df, "text", num_merges=6)
     assert [tuple(r) for r in fast_m.orderBy("rank").collect()] == [
         tuple(r) for r in slow_m.orderBy("rank").collect()
     ]
@@ -175,11 +177,12 @@ def test_learn_bpe_driver_and_distributed_paths_agree(spark):
     }
 
 
-def test_wordpiece_driver_and_distributed_paths_agree(spark):
+def test_wordpiece_driver_and_distributed_paths_agree(spark, monkeypatch):
     """Same dual-path pin for the wordpiece greedy segmentation,
     including the round-budget guard on BOTH paths."""
     import pytest
 
+    from bgg_data_warehouse_spark.operators import iterative
     from bgg_data_warehouse_spark.operators.wordpiece import wordpiece_encode
 
     words = spark.createDataFrame(
@@ -194,13 +197,13 @@ def test_wordpiece_driver_and_distributed_paths_agree(spark):
         r.word: (r.freq, r.toks)
         for r in wordpiece_encode(words, vocab, rounds=5).collect()
     }
+    monkeypatch.setattr(iterative, "DRIVER_SOLVE_MAX", 0)
     slow = {
         r.word: (r.freq, r.toks)
-        for r in wordpiece_encode(
-            words, vocab, rounds=5, driver_solve_max=0
-        ).collect()
+        for r in wordpiece_encode(words, vocab, rounds=5).collect()
     }
     assert fast == slow
     for cap in (0, 200_000):
+        monkeypatch.setattr(iterative, "DRIVER_SOLVE_MAX", cap)
         with pytest.raises(RuntimeError, match="unfinished"):
-            wordpiece_encode(words, vocab, rounds=1, driver_solve_max=cap)
+            wordpiece_encode(words, vocab, rounds=1)

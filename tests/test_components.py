@@ -7,6 +7,7 @@ import random
 
 import pytest
 
+from bgg_data_warehouse_spark.operators import iterative
 from bgg_data_warehouse_spark.operators.components import (
     collapse_clusters,
     connected_components,
@@ -90,30 +91,23 @@ def test_star_variant_matches_hash_min_on_chain_and_random(spark):
     for edges in (chain, rand, [(3, 3), (1, 2)]):
         df = spark.createDataFrame(edges, "src: long, dst: long")
         want = _uf_components([(a, b) for a, b in edges if a != b])
-        # both paths: forest-contraction + quotient star (default; the
-        # sorted chain drives its empty-quotient fast path, the random
-        # graph a non-trivial multi-root quotient) and the pure star
-        # loop — identical labels required.
-        for contract in (True, False):
-            # confirm_fixed_point: tests pay for the exact exceptAll
-            # double-check the graded path skips (signature-only stop)
-            got = {
-                r.node: r.canonical
-                for r in connected_components_star(
-                    df, "src", "dst",
-                    confirm_fixed_point=True, contract_first=contract,
-                ).collect()
-            }
-            # star variant also reports self-loop-only nodes as singletons
-            for n, c in want.items():
-                assert got[n] == c, (edges, n, contract)
+        # forest contraction + quotient star: the sorted chain drives
+        # its empty-quotient fast path, the random graph a non-trivial
+        # multi-root quotient
+        got = {
+            r.node: r.canonical
+            for r in connected_components_star(df, "src", "dst").collect()
+        }
+        # star variant also reports self-loop-only nodes as singletons
+        for n, c in want.items():
+            assert got[n] == c, (edges, n)
 
 
-def test_incremental_update_matches_full_recompute_both_solve_paths(spark):
+def test_incremental_update_matches_full_recompute_both_solve_paths(spark, monkeypatch):
     """incremental_components_update == CC(base ∪ delta) on a mixed
     delta: segment-merging edges, an intra-component no-op edge, and
     edges introducing brand-new nodes — under BOTH super-graph solvers
-    (driver union-find and, with driver_solve_max=0, distributed star).
+    (driver union-find and, with iterative.DRIVER_SOLVE_MAX=0, distributed star).
     Also pins that untouched components keep their stored labels."""
     from pyspark.sql import functions as F
 
@@ -139,10 +133,11 @@ def test_incremental_update_matches_full_recompute_both_solve_paths(spark):
     )
     want = {(r.node, r.canonical) for r in full.collect()}
     for solve_max in (2_000_000, 0):
+        monkeypatch.setattr(iterative, "DRIVER_SOLVE_MAX", solve_max)
         got = {
             (r.node, r.canonical)
             for r in incremental_components_update(
-                labels0, delta, "src", "dst", driver_solve_max=solve_max
+                labels0, delta, "src", "dst"
             ).collect()
         }
         assert got == want, solve_max
@@ -150,11 +145,11 @@ def test_incremental_update_matches_full_recompute_both_solve_paths(spark):
     assert (31, 30) in want and (30, 30) in want
 
 
-def test_incremental_delete_matches_full_recompute_and_splits(spark):
+def test_incremental_delete_matches_full_recompute_and_splits(spark, monkeypatch):
     """incremental_components_delete == CC(edges ∖ deleted) on a delta
     that SPLITS a chain, isolates a node entirely, and leaves one
     component untouched — under both super-solvers (driver union-find
-    and distributed star via driver_solve_max=0) and both localization
+    and distributed star via iterative.DRIVER_SOLVE_MAX=0) and both localization
     paths (labels semi-join and component-annotated canonical_col)."""
     from bgg_data_warehouse_spark.operators.components import (
         connected_components_star,
@@ -184,11 +179,11 @@ def test_incremental_delete_matches_full_recompute_and_splits(spark):
         labels0.withColumnRenamed("node", "src"), "src"
     ).withColumnRenamed("canonical", "comp")
     for solve_max in (2_000_000, 0):
+        monkeypatch.setattr(iterative, "DRIVER_SOLVE_MAX", solve_max)
         got = {
             (r.node, r.canonical)
             for r in incremental_components_delete(
                 labels0, edges, deleted, "src", "dst",
-                driver_solve_max=solve_max,
             ).collect()
         }
         assert got == want, solve_max
@@ -196,13 +191,13 @@ def test_incremental_delete_matches_full_recompute_and_splits(spark):
             (r.node, r.canonical)
             for r in incremental_components_delete(
                 labels0, annotated, deleted, "src", "dst",
-                canonical_col="comp", driver_solve_max=solve_max,
+                canonical_col="comp",
             ).collect()
         }
         assert got_ann == want, solve_max
 
 
-def test_update_delta_emits_exactly_the_change_set(spark):
+def test_update_delta_emits_exactly_the_change_set(spark, monkeypatch):
     """incremental_components_update_delta returns ONLY relabeled /
     new rows — applying them replace-by-key over the stored labels
     equals the full recompute, and no unchanged stored row rides along
@@ -230,10 +225,11 @@ def test_update_delta_emits_exactly_the_change_set(spark):
         ).collect()
     }
     for solve_max in (2_000_000, 0):
+        monkeypatch.setattr(iterative, "DRIVER_SOLVE_MAX", solve_max)
         changes = {
             r.node: r.canonical
             for r in incremental_components_update_delta(
-                labels0, delta, "src", "dst", driver_solve_max=solve_max
+                labels0, delta, "src", "dst"
             ).collect()
         }
         # replace-by-key application reproduces the full labeling
@@ -247,7 +243,7 @@ def test_update_delta_emits_exactly_the_change_set(spark):
         assert 30 not in changes and 31 not in changes
 
 
-def test_delete_delta_changes_and_tombstones(spark):
+def test_delete_delta_changes_and_tombstones(spark, monkeypatch):
     """incremental_components_delete_delta's (changed, tombstoned)
     applied replace-by-key + delete over the stored labels equals the
     full recompute; isolated nodes are tombstoned, untouched
@@ -272,8 +268,9 @@ def test_delete_delta_changes_and_tombstones(spark):
     }
     stored = {r.node: r.canonical for r in labels0.collect()}
     for solve_max in (2_000_000, 0):
+        monkeypatch.setattr(iterative, "DRIVER_SOLVE_MAX", solve_max)
         changed, tombs = incremental_components_delete_delta(
-            labels0, edges, deleted, "src", "dst", driver_solve_max=solve_max
+            labels0, edges, deleted, "src", "dst"
         )
         ch = {r.node: r.canonical for r in changed.collect()}
         tb = {r.node for r in tombs.collect()}

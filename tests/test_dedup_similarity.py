@@ -103,22 +103,6 @@ def test_ngram_jaccard_exact_pairs(spark, docs_with_dups):
     assert (1, 3) in pairs and pairs[(1, 3)] > 0.8
 
 
-def test_minhash_verify_tokens_reports_token_jaccard(spark, docs_with_dups):
-    """verify_tokens=True: candidates from shingle buckets, reported
-    jaccard computed on TOKEN sets (here 16/17 for the one-word swap)."""
-    from bgg_data_warehouse_spark.operators.dedup import minhash_lsh_pairs
-
-    jac = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_lsh_pairs(
-            docs_with_dups, "doc_id", "text",
-            shingle_k=3, jaccard_threshold=0.5, verify_tokens=True,
-        ).collect()
-    }
-    assert jac[(1, 2)] == 1.0
-    assert jac[(1, 3)] == round(16 / 17, 4)
-
-
 def test_minhash_pairs_sub_shingle_docs(spark):
     """Docs shorter than one shingle still pair when identical (whole-doc
     fallback shingle) and never pair when different."""
@@ -135,37 +119,6 @@ def test_minhash_pairs_sub_shingle_docs(spark):
         ).collect()
     }
     assert got == {(1, 2): 1.0}
-
-
-def test_pin_hook_replaces_cache(spark, docs_with_dups):
-    """The 100 TB materialization hook: a custom pin (here localCheckpoint,
-    standing in for a table write) is used for every multiply-read
-    intermediate instead of executor-memory cache, with identical results."""
-    from bgg_data_warehouse_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    calls = []
-
-    def pin(df):
-        calls.append(df)
-        return df.localCheckpoint()
-
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(
-            docs_with_dups, "doc_id", "text", jaccard_threshold=0.5, pin=pin
-        ).collect()
-    }
-    assert len(calls) == 1 and (1, 2) in got
-    got2 = {
-        (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(
-            docs_with_dups, "doc_id", "text", threshold=0.5, pin=pin
-        ).collect()
-    }
-    assert len(calls) == 3 and (1, 2) in got2
 
 
 def test_lsh_recall_against_bruteforce(spark):

@@ -146,7 +146,7 @@ def test_fetch_games_on_demand_refetches(spark, root):
 def test_refresh_old_games_band_driven(spark, root):
     """refresh_old_games (reference src/pipeline/refresh_old_games.py):
     staleness bands pick the refetch set; a fresh fetch is NOT re-fetched,
-    a stale one is; dry_run only counts."""
+    a stale one is."""
     client = _client({13: CATAN, 99: EDGE_MINIMAL, 404: None})
 
     # CATAN year=1995 → 180-day band; EDGE_MINIMAL year=0 → 180-day band
@@ -154,14 +154,8 @@ def test_refresh_old_games_band_driven(spark, root):
     soon = datetime(2026, 4, 2, 12, 0, 0)
     assert pipeline.refresh_old_games(spark, root, client, now=soon) == (0, 0)
 
-    # 200 days later both are stale; dry_run reports without fetching
+    # 200 days later both are stale
     later = datetime(2026, 10, 20, 12, 0, 0)
-    dry_fetched, dry_processed = pipeline.refresh_old_games(
-        spark, root, client, now=later, dry_run=True
-    )
-    assert (dry_fetched, dry_processed) == (2, 0)
-    assert io.read_table(spark, root, "games").count() == 2  # untouched
-
     fetched, processed = pipeline.refresh_old_games(spark, root, client, now=later)
     assert (fetched, processed) == (2, 2)
     # refreshed games got new success rows → a rerun finds nothing stale

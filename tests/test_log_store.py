@@ -223,30 +223,19 @@ def _store_want():
     return {(1, "x", 9), (2, "y", 7), (4, "e", 1), (5, "z", 1)}
 
 
-def test_absolute_delta_bytes_triggers_compaction(spark, tmp_path):
+def test_absolute_delta_bytes_triggers_compaction(spark, tmp_path, monkeypatch):
     """The compaction policy's ABSOLUTE byte trigger (r13 VERDICT #1):
-    generations whose bytes exceed max_delta_bytes fold even when the
+    generations whose bytes exceed MAX_DELTA_BYTES fold even when the
     count and relative-fraction triggers are nowhere near firing."""
     from bgg_data_warehouse_spark.log_store import compact_if_needed
 
     root = str(tmp_path)
     want = _store(spark, root)  # 2 generations, tiny but nonzero bytes
-    assert (
-        compact_if_needed(
-            spark, root, "idx", "doc",
-            max_generations=16, max_delta_fraction=1e9,
-            max_delta_bytes=1 << 40,
-        )
-        == 0
-    )
-    assert (
-        compact_if_needed(
-            spark, root, "idx", "doc",
-            max_generations=16, max_delta_fraction=1e9,
-            max_delta_bytes=1,
-        )
-        == 2
-    )
+    monkeypatch.setattr(log_store, "MAX_DELTA_FRACTION", 1e9)
+    monkeypatch.setattr(log_store, "MAX_DELTA_BYTES", 1 << 40)
+    assert compact_if_needed(spark, root, "idx", "doc") == 0
+    monkeypatch.setattr(log_store, "MAX_DELTA_BYTES", 1)
+    assert compact_if_needed(spark, root, "idx", "doc") == 2
     assert _delta_dirs(_store_path(root, "idx"), committed=True) == []
     assert _contents(read_log_store(spark, root, "idx", "doc")) == want
 
@@ -303,27 +292,17 @@ def test_delta_only_first_epoch_then_exists(spark, tmp_path):
     assert log_store_exists(root, "idx")
 
 
-def test_compact_if_needed_policy(spark, tmp_path):
+def test_compact_if_needed_policy(spark, tmp_path, monkeypatch):
     """Below both thresholds: no fold (per-epoch cost stays delta-sized);
     past the generation-count threshold: folds."""
     from bgg_data_warehouse_spark.log_store import compact_if_needed
 
     root = str(tmp_path)
     _store(spark, root)  # 2 generations
-    assert (
-        compact_if_needed(
-            spark, root, "idx", "doc",
-            max_generations=16, max_delta_fraction=10.0,
-        )
-        == 0
-    )
-    assert (
-        compact_if_needed(
-            spark, root, "idx", "doc",
-            max_generations=1, max_delta_fraction=10.0,
-        )
-        == 2
-    )
+    monkeypatch.setattr(log_store, "MAX_DELTA_FRACTION", 10.0)
+    assert compact_if_needed(spark, root, "idx", "doc") == 0
+    monkeypatch.setattr(log_store, "MAX_GENERATIONS", 1)
+    assert compact_if_needed(spark, root, "idx", "doc") == 2
     assert _delta_dirs(_store_path(root, "idx"), committed=True) == []
 
 
@@ -846,10 +825,11 @@ def test_row_cotrigger_fires_compaction(spark, tmp_path, monkeypatch):
 
     root = str(tmp_path)
     want = _store(spark, root)
-    kw = dict(max_generations=16, max_delta_fraction=1e9, max_delta_bytes=1 << 40)
-    assert compact_if_needed(spark, root, "idx", "doc", **kw) == 0
+    monkeypatch.setattr(ls, "MAX_DELTA_FRACTION", 1e9)
+    monkeypatch.setattr(ls, "MAX_DELTA_BYTES", 1 << 40)
+    assert compact_if_needed(spark, root, "idx", "doc") == 0
     monkeypatch.setattr(ls, "BROADCAST_TOUCHED_MAX_ROWS", 0)
-    assert compact_if_needed(spark, root, "idx", "doc", **kw) == 2
+    assert compact_if_needed(spark, root, "idx", "doc") == 2
     assert _contents(read_log_store(spark, root, "idx", "doc")) == want
 
 

@@ -162,9 +162,34 @@ def test_games_active_column_parity_with_reference(built):
     (primary_name→name, bayes_average→geek_rating,
     average_weight→complexity — the repo-wide names every downstream
     model keys on)."""
-    from bgg_data_warehouse_spark.plans.models import GAMES_ACTIVE_COLUMNS
-
-    assert built["games_active"].columns == GAMES_ACTIVE_COLUMNS
+    want = [
+        "game_id",
+        "name",
+        "type",
+        "year_published",
+        "min_players",
+        "max_players",
+        "playing_time",
+        "min_playtime",
+        "max_playtime",
+        "min_age",
+        "description",
+        "thumbnail",
+        "image",
+        "users_rated",
+        "average_rating",
+        "geek_rating",
+        "complexity",
+        "owned_count",
+        "trading_count",
+        "wanting_count",
+        "wishing_count",
+        "num_comments",
+        "num_weights",
+        "load_timestamp",
+        "last_updated",
+    ]
+    assert built["games_active"].columns == want
     reference_select_list = [  # verbatim order from games_active.sqlx
         "game_id", "type", "name", "year_published", "average_rating",
         "average_weight", "bayes_average", "users_rated", "owned_count",
@@ -174,12 +199,10 @@ def test_games_active_column_parity_with_reference(built):
         "thumbnail", "image", "load_timestamp", "last_updated",
     ]
     alias = {"average_weight": "complexity", "bayes_average": "geek_rating"}
-    assert sorted(alias.get(c, c) for c in reference_select_list) == sorted(
-        GAMES_ACTIVE_COLUMNS
-    )
+    assert sorted(alias.get(c, c) for c in reference_select_list) == sorted(want)
 
 
-def test_game_neighbors_profiles_side_by_side(built):
+def test_game_neighbors_profiles_side_by_side(built, monkeypatch):
     """`game_neighbors.sqlx:6-8,19-35,78-93`: profiles build as UNION'd
     blocks keyed (profile, game_id), each row carrying its own tuning
     parameters, so a new profile ships alongside `default` and the API
@@ -193,9 +216,9 @@ def test_game_neighbors_profiles_side_by_side(built):
             dims=16, top_k=3,
         ),
     ]
+    monkeypatch.setattr(M, "PROFILES", profs)
     nbrs = M.game_neighbors(
-        {"game_similarity_search": built["game_similarity_search"]},
-        profiles=profs,
+        {"game_similarity_search": built["game_similarity_search"]}
     ).cache()
     assert {r.profile for r in nbrs.select("profile").distinct().collect()} == {
         "default", "loose_16",

@@ -87,15 +87,6 @@ def test_salted_join_row_identical_to_plain_join(spark):
     }
     assert salted_inner == plain_inner and len(plain_inner) == 401
 
-    plain_left = {
-        (r.k, r.lv, r.rv) for r in left.join(right, "k", "left").collect()
-    }
-    salted_left = {
-        (r.k, r.lv, r.rv)
-        for r in salted_join(left, right, "k", salts=4, how="left").collect()
-    }
-    assert salted_left == plain_left  # unmatched keys 3/4 kept exactly once
-
 
 def test_salted_join_spreads_hot_key_and_keys_join_on_salt(spark):
     from bgg_data_warehouse_spark.operators.skew import salted_join

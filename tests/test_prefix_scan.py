@@ -10,6 +10,7 @@ textbook form."""
 from __future__ import annotations
 
 import random
+from datetime import datetime, timedelta
 
 import pytest
 from pyspark.sql import Window
@@ -120,27 +121,31 @@ def test_interval_boundaries_emit_one_pair_per_interval(spark):
     assert rows == {(10, 1, 1), (20, -1, 1), (20, 1, 2), (30, -1, 2)}
 
 
+def _intervals(spark, rows):
+    """(id, s, e) with s/e given in 10-minute steps, so intervals cross
+    the scan's hour buckets."""
+    def ts(step):
+        return datetime(2024, 1, 1) + timedelta(minutes=10 * step)
+
+    return spark.createDataFrame(
+        [(i, ts(s), ts(e)) for i, s, e in rows],
+        "id long, s timestamp, e timestamp",
+    )
+
+
 def test_interval_concurrency_half_open_back_to_back_never_overlaps(spark):
     # [10,20) then [20,30): the close at 20 precedes the open at 20,
     # so concurrency never exceeds 1
-    df = spark.createDataFrame(
-        [(1, 10, 20), (2, 20, 30)], "id long, s long, e long"
-    )
-    conc = interval_concurrency(
-        df, "s", "e", "id", bucket=(F.col("t") / 100).cast("long")
-    )
+    df = _intervals(spark, [(1, 10, 20), (2, 20, 30)])
+    conc = interval_concurrency(df, "s", "e", "id")
     peaks = [r["concurrency"] for r in conc.where("delta = 1").collect()]
     assert max(peaks) == 1
 
 
 def test_interval_concurrency_counts_true_overlap(spark):
     # [10,25) overlaps [20,30): peak 2; [40,50) is alone again
-    df = spark.createDataFrame(
-        [(1, 10, 25), (2, 20, 30), (3, 40, 50)], "id long, s long, e long"
-    )
-    conc = interval_concurrency(
-        df, "s", "e", "id", bucket=(F.col("t") / 100).cast("long")
-    )
+    df = _intervals(spark, [(1, 10, 25), (2, 20, 30), (3, 40, 50)])
+    conc = interval_concurrency(df, "s", "e", "id")
     got = {
         r["id"]: r["concurrency"] for r in conc.where("delta = 1").collect()
     }

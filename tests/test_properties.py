@@ -122,6 +122,9 @@ def test_asof_join_matches_pandas_merge_asof(spark, left, right):
 
     import pandas as pd
 
+    from unittest import mock
+
+    from bgg_data_warehouse_spark.operators import asof
     from bgg_data_warehouse_spark.operators.asof import (
         asof_join,
         asof_join_segmented,
@@ -147,13 +150,14 @@ def test_asof_join_matches_pandas_merge_asof(spark, left, right):
             ldf, rdf, on="k", left_ts="ts", right_ts="ts", value_cols=["px"]
         ).collect()
     }
-    got_s = {
-        r.id: r.px
-        for r in asof_join_segmented(
-            ldf, rdf, on="k", left_ts="ts", right_ts="ts",
-            value_cols=["px"], bucket_micros=1_000_000_000,  # ~17 min buckets
-        ).collect()
-    }
+    # ~17 min buckets, so the random timestamps cross bucket boundaries
+    with mock.patch.object(asof, "SEGMENT_MICROS", 1_000_000_000):
+        got_s = {
+            r.id: r.px
+            for r in asof_join_segmented(
+                ldf, rdf, on="k", left_ts="ts", right_ts="ts", value_cols=["px"]
+            ).collect()
+        }
 
     lp = pd.DataFrame(
         {"id": pd.array(range(len(left)), dtype="int64"),
@@ -545,7 +549,7 @@ def test_unigram_dp_matches_python_reference(spark, vocab, targets):
 
 # ---------------------------------------------------------------------------
 # Grouped prefix scans (partition_cols): for ANY data and bucketing, the
-# two-pass scan must equal the per-group global window bit-for-bit.
+# two-pass scans must equal the per-group global window bit-for-bit.
 # ---------------------------------------------------------------------------
 
 
@@ -567,7 +571,7 @@ def test_grouped_prefix_scan_matches_per_group_window(spark, rows, width):
 
     from bgg_data_warehouse_spark.operators.prefix import (
         global_row_number,
-        running_sum,
+        running_sums,
     )
 
     df = spark.createDataFrame(
@@ -579,9 +583,9 @@ def test_grouped_prefix_scan_matches_per_group_window(spark, rows, width):
     got = {
         (r["g"], r["id"]): (r["rs"], r["rn"])
         for r in global_row_number(
-            running_sum(
-                df, "val", bucket, ["key", "id"],
-                partition_cols=["g"], out_col="rs",
+            running_sums(
+                df, ["val"], bucket, ["key", "id"],
+                partition_cols=["g"], out_cols=["rs"],
             ),
             bucket,
             ["key", "id"],

@@ -296,7 +296,7 @@ def test_top_user_paths_shape(spark):
 
 
 def test_apply_changelog_rejects_op_col_payload_collision(spark):
-    """A base payload column named op_col would silently alias to
+    """A base payload column named op would silently alias to
     _chg_op twice — must raise instead."""
     import pytest
 
@@ -306,8 +306,8 @@ def test_apply_changelog_rejects_op_col_payload_collision(spark):
     changes = spark.createDataFrame(
         [(1, "U", 2.0, 1)], "id long, op string, v double, seq long"
     )
-    with pytest.raises(ValueError, match="op_col"):
-        apply_changelog(base, changes, ["id"], ["seq"], op_col="op")
+    with pytest.raises(ValueError, match="op column"):
+        apply_changelog(base, changes, ["id"], ["seq"])
 
 
 def test_hll_alpha_covers_tabulated_and_closed_form():

@@ -491,34 +491,6 @@ def test_ks_and_mwu_summaries_are_broadcast_only(spark):
         assert "CartesianProduct" not in plan, (name, plan)
 
 
-def test_two_sample_cum_counts_grouped_restarts_per_partition(spark):
-    """partition_cols restarts the cumulative counts per group — the
-    stratified-test path (and the same machinery decision_stump uses
-    per feature)."""
-    from bgg_data_warehouse_spark.operators.stats_tests import (
-        two_sample_cum_counts,
-    )
-
-    rows = [
-        ("g1", 1.0, 1, 0), ("g1", 2.0, 0, 1), ("g1", 2.0, 1, 0),
-        ("g2", 1.0, 0, 1), ("g2", 5.0, 1, 0),
-    ]
-    df = spark.createDataFrame(rows, "grp string, value double, ia long, ib long")
-    out = {
-        (r["grp"], r["value"]): (r["ca"], r["cb"])
-        for r in two_sample_cum_counts(
-            df, "value", F.col("ia"), F.col("ib"), F.floor("value"),
-            partition_cols=["grp"],
-        ).collect()
-    }
-    assert out == {
-        ("g1", 1.0): (1, 0),
-        ("g1", 2.0): (2, 1),
-        ("g2", 1.0): (0, 1),
-        ("g2", 5.0): (1, 1),  # restarted: g1 counts never leak in
-    }
-
-
 def test_ks_permyriad_survives_past_int64_product(spark):
     """d_permyriad's 10000*dm product runs in DECIMAL(38,0): with 3e9
     rows per side (d_num's own documented headroom bound) the plain

@@ -152,3 +152,12 @@ def test_real_similar_tuned_vs_precomputed(real_reader):
     assert len(live) <= 3
     assert handle(real_reader, "GET", "/games/1/similar", {"metric": "manhattan"})[0] == 400
     assert handle(real_reader, "GET", "/games/1/similar", {"dims": "7"})[0] == 400
+
+
+def test_real_similar_n_below_one_is_400(real_reader):
+    """n=-1 would slice all but one corpus row and n=0 used to fall
+    back to 10: both are caller errors."""
+    for n in ("-1", "0"):
+        status, body = handle(real_reader, "GET", "/games/1/similar", {"n": n})
+        assert status == 400 and "n must be" in body["detail"], n
+    assert len(handle(real_reader, "GET", "/games/1/similar", {"n": "1"})[1]) <= 1

@@ -156,14 +156,18 @@ def test_components_epoch_replay_is_noop_and_add_replay_writes_no_labels(
     assert add_gen_labels.count() == 0
 
 
-def test_components_stream_with_compaction_every_epoch(spark, tmp_path):
-    """auto-compacting on every epoch (max_generations=0) folds the pair
+def test_components_stream_with_compaction_every_epoch(
+    spark, tmp_path, monkeypatch
+):
+    """auto-compacting on every epoch (MAX_GENERATIONS=0) folds the pair
     after each batch and converges to the same labeling."""
+    from bgg_data_warehouse_spark import log_store
     from bgg_data_warehouse_spark.log_store import _delta_dirs, _store_path
 
+    monkeypatch.setattr(log_store, "MAX_GENERATIONS", 0)
     root = str(tmp_path)
     for epoch in EPOCHS:
-        _apply_epoch(spark, root, epoch, auto_compact=True, max_generations=0)
+        _apply_epoch(spark, root, epoch, auto_compact=True)
     assert _labels(spark, root, "cc") == _want(spark, _final_edges(EPOCHS))
     assert _delta_dirs(_store_path(root, "cc"), committed=True) == []
 

@@ -20,12 +20,12 @@ def _words(spark, pairs):
     return spark.createDataFrame([Row(word=w, c=c) for w, c in pairs])
 
 
-def _seg(spark, vocab_pairs, targets, **kw):
+def _seg(spark, vocab_pairs, targets):
     costs = unigram_costs(_words(spark, vocab_pairs))
     t = spark.createDataFrame([Row(word=w) for w in targets])
     return {
         r["word"]: (r["min_cost_micro"], r["n_best_paths"])
-        for r in unigram_segment(t, costs, **kw).collect()
+        for r in unigram_segment(t, costs).collect()
     }
 
 
@@ -82,7 +82,7 @@ def test_counts_all_co_optimal_paths(spark):
 
 
 def test_max_len_cap_drops_long_targets(spark):
-    out = _seg(spark, [("ab", 4)], ["ab" * 10], max_len=16)
+    out = _seg(spark, [("ab", 4)], ["ab" * 10])
     assert out == {}
 
 

@@ -24,9 +24,22 @@ root file an import counts as a use.
 It also reports *missing* names: an import, attribute or wrapped name
 that points into the engine at something the engine no longer defines.
 
+It also checks the values a caller can set: each defaulted parameter of
+a reached function, method or ``__init__`` must be passed by some call
+in code that can run (by position, keyword, or a ``*``/``**`` splat; a
+method call on an object it cannot resolve matches every engine method
+of that name), and each module-level constant must be read there. Code
+that can run is a root file, or in an imported engine module its
+top-level statements and its reached definitions. Calls and reads in
+tests, or inside an unreached definition, do not count.
+
 Usage:
-    python tools/reachability.py        # prints unreached defs and
-                                        # missing names; exit 1 if any
+    python tools/reachability.py    # prints unreached definitions, unset
+                                    # parameters, unread constants and
+                                    # missing names not listed in the
+                                    # KEEP tables of
+                                    # tests/test_reachability.py; exit 1
+                                    # if any
 """
 
 from __future__ import annotations
@@ -60,6 +73,7 @@ class Module:
     is_package: bool = False
     defs: dict[str, ast.AST] = field(default_factory=dict)
     bound: set[str] = field(default_factory=set)
+    constants: set[str] = field(default_factory=set)
     # alias -> targets: ("mod", module) or ("attr", module, name)
     aliases: dict[str, set[tuple]] = field(default_factory=dict)
 
@@ -99,6 +113,7 @@ def _load(path: Path, name: str, is_package: bool = False) -> Module:
             for target, alias in _import_targets(mod, node):
                 mod.aliases.setdefault(alias, set()).add(target)
     mod.bound = _bindings(mod, tree.body)
+    mod.constants = _constants(tree) - set(mod.defs)
     return mod
 
 
@@ -299,14 +314,214 @@ class Graph:
             self._visit(*self._todo.pop())
         return self
 
+    # -- parameters and constants -----------------------------------------
+    def _all_units(self):
+        """Every engine module and root file: the code whose calls and
+        reads count (tests do not)."""
+        return list(self.modules.values()) + self.roots
+
+    def _run_code(self, mod: Module) -> list[ast.AST]:
+        """The parts of ``mod`` that can run: a whole root file; in an
+        engine module that is imported, its top-level statements, the
+        decorators and defaults of every definition, and the bodies of
+        the reached definitions."""
+        if mod.name not in self.modules:
+            return [mod.tree]
+        if mod.name not in self.loaded:
+            return []
+        out = []
+        for node in mod.tree.body:
+            if not isinstance(node, DEF_NODES) or (mod.name, node.name) in self.reached:
+                out.append(node)
+                continue
+            out += node.decorator_list
+            if not isinstance(node, ast.ClassDef):
+                out += [d for d in node.args.defaults + node.args.kw_defaults if d]
+        return out
+
+    def _call_targets(self, mod: Module, fn, methods: dict) -> list[tuple[ast.AST, int]]:
+        """(def node, bound leading args) a call of ``fn`` may run.
+        Resolved names are exact; a method call on an unresolved object
+        matches every engine method of that name (``methods``: name ->
+        method nodes)."""
+        out = []
+        for t in self._resolve(mod, fn):
+            if t[0] == "attr" and t[1] in self.modules:
+                node = self.modules[t[1]].defs.get(t[2])
+                if isinstance(node, ast.ClassDef):
+                    init = _methods(node).get("__init__")
+                    if init is not None:
+                        out.append((init, 1))
+                elif node is not None:
+                    out.append((node, 0))
+            elif t[0] == "member" and t[1] in self.modules:
+                cls = self.modules[t[1]].defs.get(t[2])
+                meth = _methods(cls).get(t[3]) if isinstance(cls, ast.ClassDef) else None
+                if meth is not None:
+                    out.append((meth, 1 if _decorated(meth, "classmethod") else 0))
+        if out or not isinstance(fn, ast.Attribute):
+            return out
+        for meth in methods.get(fn.attr, ()):
+            out.append((meth, 0 if _decorated(meth, "staticmethod") else 1))
+        return out
+
+    def _passed(self) -> dict[int, set[str]]:
+        """id(def node) -> names of the parameters some call in reached
+        engine code or a root passes (by position, keyword or a
+        ``*``/``**`` splat). A call inside an unreached definition never
+        runs, so it sets nothing."""
+        methods: dict[str, list[ast.AST]] = {}
+        for mod in self.modules.values():
+            for node in mod.defs.values():
+                if isinstance(node, ast.ClassDef):
+                    for name, meth in _methods(node).items():
+                        methods.setdefault(name, []).append(meth)
+        passed: dict[int, set[str]] = {}
+        for mod in self._all_units():
+            for unit in self._run_code(mod):
+                for call in ast.walk(unit):
+                    if isinstance(call, ast.Call):
+                        self._record_call(mod, call, methods, passed)
+        return passed
+
+    def _record_call(self, mod: Module, call: ast.Call, methods, passed) -> None:
+        fn, args = call.func, call.args
+        if _is_partial(fn) and args:  # partial(f, ...) binds f's args
+            fn, args = args[0], args[1:]
+        for node, bound in self._call_targets(mod, fn, methods):
+            a = node.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            out = passed.setdefault(id(node), set())
+            if any(isinstance(x, ast.Starred) for x in args):
+                out.update(positional[bound:])
+            else:
+                out.update(positional[bound : bound + len(args)])
+            for kw in call.keywords:
+                if kw.arg is None:  # **splat
+                    out.update(p.arg for p in a.args + a.kwonlyargs)
+                else:
+                    out.add(kw.arg)
+
+    def unset_params(self) -> list[str]:
+        """``module.def(param)`` for each defaulted parameter of a reached
+        function or method (of a reached class) no call passes."""
+        passed = self._passed()
+        out = []
+        for m, name in self.reached:
+            node = self.modules[m].defs[name]
+            if isinstance(node, ast.ClassDef):
+                funcs = [(f"{name}.{k}", v) for k, v in _methods(node).items()]
+            else:
+                funcs = [(name, node)]
+            for qual, fn in funcs:
+                got = passed.get(id(fn), set())
+                for p in _defaulted(fn):
+                    if p not in got:
+                        out.append(f"{_qual(m, qual)}({p})")
+        return sorted(out)
+
+    def _const_refs(self, m: str, name: str, seen=()) -> list[tuple[str, str]]:
+        """Follow package re-exports of ``m.name`` to where it is bound."""
+        owner = self.modules.get(m)
+        if owner is None or (m, name) in seen:
+            return []
+        if name in owner.aliases and name not in owner.constants:
+            return [
+                r
+                for t in owner.aliases[name]
+                for tr in self._target_refs(t)
+                if tr[0] == "attr"
+                for r in self._const_refs(tr[1], tr[2], seen + ((m, name),))
+            ]
+        return [(m, name)]
+
+    def unread_constants(self) -> list[str]:
+        """``module.NAME`` for each module-level constant of the engine no
+        code that can run reads (a root's import of it is a read)."""
+        read: set[tuple[str, str]] = set()
+        for mod in self._all_units():
+            own = self.modules.get(mod.name)
+            for node in (n for unit in self._run_code(mod) for n in ast.walk(unit)):
+                refs = []
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    if own is not None and node.id in own.constants:
+                        read.add((mod.name, node.id))
+                        continue
+                    refs = self._resolve(mod, node)
+                elif isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                    refs = self._resolve(mod, node)
+                elif isinstance(node, ast.ImportFrom) and own is None:
+                    refs = [
+                        r
+                        for t, _ in _import_targets(mod, node)
+                        for r in self._target_refs(t)
+                    ]
+                for r in refs:
+                    if r[0] == "attr":
+                        read.update(self._const_refs(r[1], r[2]))
+        return sorted(
+            _qual(m, name)
+            for m, mod in self.modules.items()
+            for name in mod.constants
+            if (m, name) not in read
+        )
+
     def unreached(self) -> list[str]:
         """``module.def`` names (package prefix dropped) nothing reaches."""
         out = []
         for m, mod in self.modules.items():
             for d in mod.defs:
                 if (m, d) not in self.reached:
-                    out.append(f"{m[len(PACKAGE) + 1:]}.{d}" if m != PACKAGE else d)
+                    out.append(_qual(m, d))
         return sorted(out)
+
+
+def _qual(module: str, name: str) -> str:
+    """``module.name`` without the package prefix."""
+    return f"{module[len(PACKAGE) + 1:]}.{name}" if module != PACKAGE else name
+
+
+def _methods(node: ast.ClassDef) -> dict[str, ast.AST]:
+    return {
+        n.name: n
+        for n in node.body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
+def _decorated(node: ast.AST, name: str) -> bool:
+    return any(_decorator_name(d) == name for d in node.decorator_list)
+
+
+def _is_partial(fn: ast.AST) -> bool:
+    return (isinstance(fn, ast.Name) and fn.id == "partial") or (
+        isinstance(fn, ast.Attribute) and fn.attr == "partial"
+    )
+
+
+def _defaulted(fn: ast.AST) -> list[str]:
+    """Names of the parameters of ``fn`` that have a default."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    out = [p.arg for p in positional[len(positional) - len(a.defaults) :]]
+    out += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+    return out
+
+
+def _assigned(node: ast.AST) -> list[str]:
+    """Plain names a module-level (annotated) assignment binds."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign):
+        targets = [node.target]
+    else:
+        return []
+    return [t.id for t in targets if isinstance(t, ast.Name)]
+
+
+def _constants(tree: ast.Module) -> set[str]:
+    """Module-level names bound by a plain assignment (dunders aside)."""
+    return {n for node in tree.body for n in _assigned(node) if not n.startswith("__")}
 
 
 def _class_members(node: ast.ClassDef) -> set[str]:
@@ -330,15 +545,36 @@ def _decorator_name(d: ast.AST) -> str | None:
     return None
 
 
+def _kept(root: Path = REPO) -> dict[str, dict[str, str]]:
+    """The ``KEEP``/``KEEP_PARAMS``/``KEEP_CONSTANTS`` tables of
+    ``tests/test_reachability.py`` (read as literals, not imported)."""
+    out: dict[str, dict[str, str]] = {}
+    path = root / "tests" / "test_reachability.py"
+    if path.exists():
+        for node in ast.parse(path.read_text()).body:
+            for name in _assigned(node):
+                if name.startswith("KEEP"):
+                    out[name] = ast.literal_eval(node.value)
+    return out
+
+
 def main() -> int:
     g = Graph().run()
-    unreached = g.unreached()
-    for name in unreached:
-        print(f"unreached {name}")
-    for name in sorted(g.missing):
-        print(f"missing   {name}")
-    print(f"{len(unreached)} unreached, {len(g.missing)} missing")
-    return 1 if unreached or g.missing else 0
+    kept = _kept()
+    sections = {
+        "unreached definitions": (g.unreached(), kept.get("KEEP", {})),
+        "unset parameters": (g.unset_params(), kept.get("KEEP_PARAMS", {})),
+        "unread constants": (g.unread_constants(), kept.get("KEEP_CONSTANTS", {})),
+        "missing names": (sorted(g.missing), {}),
+    }
+    failed = False
+    for title, (names, keep) in sections.items():
+        unlisted = [n for n in names if n not in keep]
+        failed |= bool(unlisted)
+        print(f"{title}: {len(unlisted)} unlisted, {len(names) - len(unlisted)} kept")
+        for name in unlisted:
+            print(f"  {name}")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
